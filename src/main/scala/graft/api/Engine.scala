@@ -501,9 +501,9 @@ class Engine(
         // evict by generation STEM, not exact path: a rebuild flips to a
         // `_g<n+1>` dir, so same-path eviction alone would strand one
         // handle (with its full file listing) per rebuild per tier
-        val stem = path.replaceAll("_g\\d+$", "")
+        val stem = graft.operators.LocalCellCache.genStem(path)
         layoutFrameCache.keys.filter(k =>
-            k._1.replaceAll("_g\\d+$", "") == stem && k != ((path, stamp)))
+            graft.operators.LocalCellCache.genStem(k._1) == stem && k != ((path, stamp)))
           .foreach(layoutFrameCache.remove)
         spark.read.parquet(path)
       })

@@ -49,6 +49,10 @@ class Server(engine: Engine, port: Int = 0) {
     val method = ex.getRequestMethod
     val segs = path.split("/").filter(_.nonEmpty).toList
     try {
+      // a declared oversized body is refused before any of it is read
+      val declared = ex.getRequestHeaders.getFirst("Content-Length")
+      if (declared != null && declared.toLongOption.exists(_ > Server.MaxBodyBytes))
+        throw new Server.BodyTooLarge
       (method, segs) match {
         case ("GET", Nil) => reply(ex, 200, Obj.of("status" -> Str("ok")))
         case ("POST", List("v1", "collections")) => createCollection(ex)
@@ -93,6 +97,7 @@ class Server(engine: Engine, port: Int = 0) {
         case _ => reply(ex, 404, err("route not found"))
       }
     } catch {
+      case e: Server.BodyTooLarge => reply(ex, 413, err(e.getMessage))
       case e: NoSuchElementException => reply(ex, 404, err(e.getMessage))
       case e: IllegalArgumentException => reply(ex, 400, err(e.getMessage))
       case e: Exception => reply(ex, 500, err(String.valueOf(e.getMessage)))
@@ -110,7 +115,11 @@ class Server(engine: Engine, port: Int = 0) {
       throw new IllegalArgumentException(s"missing required field '$key'"))
 
   private def body(ex: HttpExchange): Value = {
-    val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+    // bounded read (a chunked body declares no length): one byte past the
+    // cap is enough to refuse it without buffering the rest
+    val bytes = ex.getRequestBody.readNBytes(Server.MaxBodyBytes + 1)
+    if (bytes.length > Server.MaxBodyBytes) throw new Server.BodyTooLarge
+    val raw = new String(bytes, StandardCharsets.UTF_8)
     try parse(raw)
     catch { case e: Exception =>
       throw new IllegalArgumentException(s"invalid json: ${e.getMessage}")
@@ -334,6 +343,15 @@ class Server(engine: Engine, port: Int = 0) {
 }
 
 object Server {
+  /** Request-body cap, bytes: far above a 1,000-document batchupsert
+    * (~1 MB at 64 dims); a larger body gets a 413 instead of being
+    * buffered whole on the heap.
+    */
+  val MaxBodyBytes: Int = 64 << 20
+
+  private[api] final class BodyTooLarge
+      extends Exception(s"request body exceeds $MaxBodyBytes bytes")
+
   /** `sun.net.httpserver.nodelay` is read ONCE at the HttpServer
     * implementation's class initialization — set it before any server in
     * this JVM is created. Without it, the two-write response (headers,

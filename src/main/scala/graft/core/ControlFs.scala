@@ -137,6 +137,28 @@ object ControlFs {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
+  // memoized only once a SESSION is present — newHadoopConf() copies the
+  // whole conf (too hot for per-request serving paths), but a plain lazy
+  // val would freeze a session-less bare Configuration forever if the
+  // first read raced session startup, splitting control reads from the
+  // data plane (ADVICE r11)
+  @volatile private var servingConfMemo: Configuration = null
+
+  /** `hadoopConf()` memoized for the serving hot paths (point reads, cell
+    * loads). Shared: callers that need to set keys copy it first.
+    */
+  def servingConf(): Configuration = {
+    val c = servingConfMemo
+    if (c != null) c
+    else {
+      val fresh = hadoopConf()
+      if (org.apache.spark.sql.SparkSession.getActiveSession
+          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).isDefined)
+        servingConfMemo = fresh
+      fresh
+    }
+  }
+
   /** The control filesystem for a root. The Hadoop side resolves scheme
     * implementations through the standard `FileSystem` ServiceLoader +
     * core-site mechanism AND the Spark session's `spark.hadoop.*` settings.

@@ -394,17 +394,21 @@ class DocStore(spark: SparkSession, root: String) {
     rows.headOption.map(fromRow)
   }
 
-  /** Point lookup on the SERVING path: driver-local footer-pruned parquet
-    * reads (zero Spark jobs — `LocalPointReader`), falling back to the
-    * always-correct Spark plan on any IO race (e.g. a concurrent
-    * `compact()` swapping the directory mid-read). Result ≡ `get`.
+  /** Point lookup on the SERVING path: hash probes into the driver-resident
+    * copies of the store's runs (zero Spark jobs, no file opened once a run
+    * is resident — `LocalPointReader`), falling back to the always-correct
+    * Spark plan on any IO race (e.g. a concurrent `compact()` swapping the
+    * directory mid-read). Result ≡ `get`.
     */
   def getFast(name: String, id: String): Option[Document] =
     getMany(name, Seq(id)).get(id)
 
   /** Batch point lookup (the documents/search metadata-fetch shape): one
-    * local pass over the runs resolves every id, LWW semantics identical to
-    * `read`. Absent and tombstoned ids are omitted.
+    * local pass over the visible runs resolves every id — resident runs by
+    * hash probe, a run too large to hold resident by a bloom-pruned,
+    * footer-pruned filtered read — LWW semantics identical to `read`.
+    * Absent and tombstoned ids are omitted. The returned documents share
+    * the resident arrays: read-only.
     */
   def getMany(name: String, ids: Seq[String]): Map[String, Document] =
     getManyAt(name, ids, currentVersion(name))
@@ -426,10 +430,10 @@ class DocStore(spark: SparkSession, root: String) {
     }
 
   /** Which of `ids` are live (LWW winner not a tombstone) — the existence
-    * probe the maintained write path runs per batch: a PROJECTED
+    * probe the maintained write path runs per batch: hash probes into the
+    * resident runs, and for a run too large to hold resident a PROJECTED
     * driver-local read (no vector/params page decode — the bulk of the
-    * bytes `getMany` pays for), same LWW semantics, same strict-mode
-    * Spark fallback.
+    * bytes); same LWW semantics, same strict-mode Spark fallback.
     */
   def liveIds(name: String, ids: Seq[String]): Set[String] =
     if (ids.isEmpty) Set.empty

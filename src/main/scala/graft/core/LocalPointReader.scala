@@ -7,67 +7,73 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageType
 
 /** Driver-local LWW point lookups over a DocStore data directory — NO Spark
-  * job. The serving-path complement to `DocStore.get`: a REST
-  * `documents/search` or `GET .../documents/{id}` request should cost
-  * row-group-pruned local parquet reads (µs–ms), not a Spark scan job
-  * (~100–300 ms of scheduling floor even on a warm local[32]).
+  * job. The serving-path complement to `DocStore.get`: a REST GET, the
+  * metadata fetch of `documents/search`, the quantized tiers' exact
+  * re-rank and the maintained-write existence probe resolve ids with hash
+  * probes into driver-resident runs (µs), not a Spark scan job (~100–300 ms
+  * of scheduling floor even on a warm local[32]).
   *
-  * Reads go through parquet-mr's filter2 machinery with an `in(id, …)`
-  * predicate, so row groups are pruned by footer min/max stats (and
-  * dictionary pages) before any record materializes — on a store compacted
-  * with `clusterById = true` (disjoint per-file id ranges, the sorted-SSTable
-  * shape) a point read touches exactly one file's one row group. This is the
-  * reference's skiplist point-Get re-expressed against immutable columnar
-  * runs (`internal/storage/tree/tree.go` Get; SURVEY §2.1 S3).
+  * RESIDENT RUNS. Store runs are immutable, so each one is decoded ONCE
+  * into a driver-resident copy: an id → slot map plus per-slot version,
+  * seq, is_deleted, vector and params arrays (`ResidentRun`). A run enters
+  * residency either straight from the rows its writer holds
+  * (`LocalRunWriter.writeStoreRun` → `registerRun`, no decode at all) or on
+  * its first touch by a lookup (one full read). After that a lookup opens
+  * no file. Residency is bounded by `ResidentMaxBytes` with least-recently-
+  * used eviction; an evicted run leaves an id bloom behind, so a later
+  * probe that misses it still skips the run without opening it.
+  *
+  * FALLBACK. A run too large to admit (its footer's uncompressed size, or
+  * its measured decoded size, above a quarter of the bound — compaction
+  * output at scale) keeps the bloom + filtered read: parquet-mr's filter2
+  * with an `in(id, …)` predicate prunes row groups by footer min/max stats
+  * (and dictionary pages) before any record materializes — on a store
+  * compacted with `clusterById = true` (disjoint per-file id ranges, the
+  * sorted-SSTable shape) a point read touches one file's one row group.
+  * This is the reference's skiplist point-Get re-expressed against
+  * immutable columnar runs (`internal/storage/tree/tree.go` Get; SURVEY
+  * §2.1 S3).
+  *
+  * VISIBILITY. Iteration is always driven by the on-disk listing
+  * (`listRuns(dir, maxVersion)`): a resident copy is consulted only for a
+  * run the listing returns, so uncommitted, crashed and other-process runs
+  * are exactly as visible as their files — residency is a decode cache,
+  * never a source of runs.
   *
   * LWW semantics are IDENTICAL to `DocStore.latestWins`: max (version, seq)
   * row per id wins, tombstone winners read as absent. (version, seq) pairs
   * are unique per row by construction — version is the per-batch counter,
   * seq the in-batch order — so the max is well-defined and both paths agree
-  * on every interleaving.
+  * on every interleaving. A resident run keeps only its own per-id max, so
+  * the max over runs is unchanged.
   *
   * Concurrency: batch files are immutable once committed, so a read races
   * only `compact()`'s directory swap. Any IO failure (file deleted under us)
   * propagates — callers (`DocStore.getMany`) fall back to the always-correct
-  * Spark path. At real cluster scale the same reads run against the object
-  * store through a manifest; the footer-stat pruning story is unchanged.
+  * Spark path. Returned documents share the resident arrays: callers treat
+  * them as read-only.
   */
 object LocalPointReader {
 
   // resolved from the active session so spark.hadoop.* settings
-  // (object-store credentials/endpoints) reach the driver-direct reads;
-  // memoized only once a SESSION is present — newHadoopConf() copies the
-  // whole conf (too hot for the point path), but a plain lazy val would
-  // freeze a session-less bare Configuration forever if the first read
-  // raced session startup, splitting control reads from the data plane
-  // (ADVICE r11)
-  @volatile private var cachedConf: Configuration = null
-  private def conf: Configuration = {
-    val c = cachedConf
-    if (c != null) c
-    else {
-      val fresh = ControlFs.hadoopConf()
-      if (org.apache.spark.sql.SparkSession.getActiveSession
-          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).isDefined)
-        cachedConf = fresh
-      fresh
-    }
-  }
+  // (object-store credentials/endpoints) reach the driver-direct reads
+  private def conf: Configuration = ControlFs.servingConf()
 
   // java.nio parquet reads for plain local runs — the read-side twin of
   // LocalRunWriter's LocalOutputFile: opening a run through the Hadoop
   // LocalFileSystem stack (FS resolution + ChecksumFileSystem stream +
-  // crc verification) costs 10-45 ms of fixed setup per reader, which IS
-  // the probe cost on a maintained update (the existing id's bloom hits,
-  // so the big run must actually be opened). Scheme'd paths keep the
-  // Hadoop reader — that stack IS the remote store.
+  // crc verification) costs 10-45 ms of fixed setup per reader. Scheme'd
+  // paths keep the Hadoop reader — that stack IS the remote store.
   private class GroupReaderBuilder(in: org.apache.parquet.io.InputFile)
       extends ParquetReader.Builder[Group](in) {
     override protected def getReadSupport()
@@ -75,86 +81,85 @@ object LocalPointReader {
       new GroupReadSupport()
   }
 
+  private def inputFile(f: String): org.apache.parquet.io.InputFile =
+    if (ControlFs.isLocalRoot(f)) new org.apache.parquet.io.LocalInputFile(Paths.get(f))
+    else org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf)
+
   private def readerBuilder(f: String): ParquetReader.Builder[Group] =
-    if (ControlFs.isLocalRoot(f))
-      new GroupReaderBuilder(
-        new org.apache.parquet.io.LocalInputFile(Paths.get(f)))
+    if (ControlFs.isLocalRoot(f)) new GroupReaderBuilder(inputFile(f))
     else ParquetReader.builder(new GroupReadSupport(), new Path(f))
 
-  /** LWW winners for `ids` (absent / tombstoned ids omitted). Runs are
-    * bloom-pruned (see below): only files that might contain one of `ids`
-    * are opened — a point GET on a many-run store opens 1-2 files, not
-    * all of them.
-    */
+  /** LWW winners for `ids` (absent / tombstoned ids omitted). */
   def readDocs(dataDir: String, ids: Set[String],
       maxVersion: Long = Long.MaxValue): Map[String, Document] = {
-    if (ids.isEmpty) return Map.empty
-    val files = listRuns(dataDir, maxVersion)
-    if (files.isEmpty) return Map.empty
-    val pred = FilterApi.in(
-      FilterApi.binaryColumn("id"),
-      ids.map(Binary.fromString).asJava.asInstanceOf[java.util.Set[Binary]])
-    // (version, seq) max per id across every run — the LWW resolution
-    val best = scala.collection.mutable.HashMap
-      .empty[String, (Long, Long, Document, Boolean)]
-    val hashes = idHashes(ids)
-    files.withFilter(f => mightContainAny(f, hashes)).foreach { f =>
-      val reader: ParquetReader[Group] = readerBuilder(f)
-        .withConf(conf)
-        .withFilter(FilterCompat.get(pred))
-        .build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val id = g.getString("id", 0)
-          val version = g.getLong("version", 0)
-          val seq = g.getLong("seq", 0)
-          val better = best.get(id).forall { case (v, s, _, _) =>
-            version > v || (version == v && seq > s)
-          }
-          if (better) {
-            val deleted = g.getBoolean("is_deleted", 0)
-            val doc =
-              if (deleted) Document(id, null)
-              else Document(id, readVector(g), readParams(g))
-            best(id) = (version, seq, doc, deleted)
-          }
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    best.collect { case (id, (_, _, doc, deleted)) if !deleted => id -> doc }.toMap
+    val best = resolve(dataDir, ids, maxVersion, projected = false)
+    best.collect { case (id, w) if !w.deleted => id -> w.doc }.toMap
   }
 
   /** Which of `ids` are LIVE (LWW winner is not a tombstone) — the
-    * existence probe behind the maintained write path. Same LWW
-    * resolution as `readDocs`, but the scan is bloom-pruned (below) and
-    * the read schema is PROJECTED to (id, version, seq, is_deleted) —
-    * the vector/params pages, the overwhelming majority of the bytes,
-    * are never decoded.
+    * existence probe behind the maintained write path. Same LWW resolution
+    * as `readDocs`; a run read from disk is read PROJECTED to (id, version,
+    * seq, is_deleted) — the vector/params pages, the overwhelming majority
+    * of the bytes, are never decoded.
     */
   def liveIds(dataDir: String, ids: Set[String],
-      maxVersion: Long = Long.MaxValue): Set[String] = {
-    if (ids.isEmpty) return Set.empty
+      maxVersion: Long = Long.MaxValue): Set[String] =
+    resolve(dataDir, ids, maxVersion, projected = true)
+      .collect { case (id, w) if !w.deleted => id }.toSet
+
+  private final class Winner(val version: Long, val seq: Long,
+      val deleted: Boolean, val doc: Document)
+
+  /** The (version, seq)-max row per id of `ids` across every visible run.
+    * Per listed run, in order of cost: its resident copy (hash probes, no
+    * file); a bloom that rules it out (no file); a first-touch decode that
+    * makes it resident (one read, once per run); a filtered read of a run
+    * too large to admit (`projected`: id/version/seq/is_deleted only).
+    */
+  private def resolve(dataDir: String, ids: Set[String], maxVersion: Long,
+      projected: Boolean): scala.collection.Map[String, Winner] = {
+    val best = scala.collection.mutable.HashMap.empty[String, Winner]
+    if (ids.isEmpty) return best
     val files = listRuns(dataDir, maxVersion)
-    if (files.isEmpty) return Set.empty
-    val pred = FilterApi.in(
+    if (files.isEmpty) return best
+    def offer(id: String, version: Long, seq: Long, deleted: Boolean,
+        doc: => Document): Unit = {
+      val better = best.get(id).forall(w =>
+        version > w.version || (version == w.version && seq > w.seq))
+      if (better) best(id) = new Winner(version, seq, deleted,
+        if (deleted || projected) null else doc)
+    }
+    def probe(run: ResidentRun): Unit = ids.foreach { id =>
+      val s = run.slot(id)
+      if (s >= 0) offer(id, run.versions(s), run.seqs(s), run.deleted(s),
+        Document(id, run.vectors(s), run.params(s)))
+    }
+    lazy val hashes = idHashes(ids)
+    lazy val pred = FilterApi.in(
       FilterApi.binaryColumn("id"),
       ids.map(Binary.fromString).asJava.asInstanceOf[java.util.Set[Binary]])
-    val best = scala.collection.mutable.HashMap.empty[String, (Long, Long, Boolean)]
-    val hashes = idHashes(ids)
-    files.withFilter(f => mightContainAny(f, hashes)).foreach { f =>
-      scanProjected(f, pred) { g =>
-        val id = g.getString("id", 0)
-        val version = g.getLong("version", 0)
-        val seq = g.getLong("seq", 0)
-        val better = best.get(id).forall { case (v, s, _) =>
-          version > v || (version == v && seq > s)
+    files.foreach { f =>
+      val held = residentGet(f)
+      if (held != null) { residentHits.incrementAndGet(); probe(held) }
+      else if (blooms.get(f).exists(b => !b.mightContainAny(hashes)))
+        runsBloomPruned.incrementAndGet() // an evicted run's bloom
+      else {
+        val decoded = decodeIfAdmissible(f)
+        if (decoded != null) probe(decoded)
+        else if (!bloomFor(f).mightContainAny(hashes))
+          runsBloomPruned.incrementAndGet()
+        else {
+          runOpens.incrementAndGet()
+          val each: Group => Unit = g => offer(g.getString("id", 0),
+            g.getLong("version", 0), g.getLong("seq", 0),
+            g.getBoolean("is_deleted", 0),
+            Document(g.getString("id", 0), readVector(g), readParams(g)))
+          if (projected) scanWith(f, pred, probeSchema(f))(each)
+          else scanWith(f, pred, null)(each)
         }
-        if (better) best(id) = (version, seq, g.getBoolean("is_deleted", 0))
       }
     }
-    best.collect { case (id, (_, _, deleted)) if !deleted => id }.toSet
+    best
   }
 
   /** Data files of a run directory (Spark's listing convention) — THE
@@ -189,20 +194,189 @@ object LocalPointReader {
     }
   }
 
+  /** The key a run is memoized under: the listing's form of its path
+    * (`listRuns` yields java.nio-normalized strings for local dirs, so a
+    * writer's `dir//name` or `dir/./name` must match the same entry).
+    */
+  private def runKey(f: String): String =
+    if (f.nonEmpty && ControlFs.isLocalRoot(f)) {
+      val k = Paths.get(f).toString
+      if (f.endsWith("/") && !k.endsWith("/")) k + "/" else k
+    } else f
+
+  // ---- resident runs (the decoded SSTable, driver-side) -----------------
+
+  /** One immutable store run, decoded: `slot(id)` indexes the per-slot
+    * arrays, one slot per distinct id holding that id's (version, seq)-max
+    * row within the run (in-batch duplicates resolve here, exactly as the
+    * cross-run merge would). Tombstone slots carry null vector/params.
+    */
+  private final class ResidentRun(ids: java.util.HashMap[String, Integer],
+      val versions: Array[Long], val seqs: Array[Long],
+      val deleted: Array[Boolean], val vectors: Array[Array[Float]],
+      val params: Array[Map[String, String]]) {
+    def slot(id: String): Int = { val s = ids.get(id); if (s == null) -1 else s }
+    def idSet: Iterable[String] = ids.keySet.asScala
+    /** Estimated heap held: per-slot map node, id string and array cells,
+      * float payloads, and params entries with their strings.
+      */
+    val bytes: Long = {
+      def str(s: String) = if (s == null) 0L else 48L + 2L * s.length
+      var b = 64L
+      ids.forEach { (id, s) =>
+        b += 96L + str(id)
+        val v = vectors(s)
+        if (v != null) b += 16L + 4L * v.length
+        params(s).foreach { case (k, x) => b += 48L + str(k) + str(x) }
+      }
+      b
+    }
+  }
+
+  /** Accumulates rows in any order into a `ResidentRun`. */
+  private final class RunBuilder {
+    private val ids = new java.util.HashMap[String, Integer]()
+    private val versions = scala.collection.mutable.ArrayBuffer.empty[Long]
+    private val seqs = scala.collection.mutable.ArrayBuffer.empty[Long]
+    private val deleted = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+    private val vectors = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
+    private val params = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
+    def add(id: String, version: Long, seq: Long, isDeleted: Boolean,
+        vector: => Array[Float], ps: => Map[String, String]): Unit = {
+      // vector/params decode only for the row a slot keeps
+      def set(slot: Int): Unit = {
+        versions(slot) = version; seqs(slot) = seq; deleted(slot) = isDeleted
+        vectors(slot) = if (isDeleted) null else vector
+        params(slot) = if (isDeleted) Map.empty else ps
+      }
+      val s = ids.get(id)
+      if (s == null) {
+        ids.put(id, versions.length)
+        versions += 0L; seqs += 0L; deleted += false; vectors += null; params += null
+        set(versions.length - 1)
+      } else if (version > versions(s) || (version == versions(s) && seq > seqs(s)))
+        set(s)
+    }
+    def result(): ResidentRun = new ResidentRun(ids, versions.toArray,
+      seqs.toArray, deleted.toArray, vectors.toArray, params.toArray)
+  }
+
+  /** Residency bound, BYTES — a fixed budget in the style of
+    * `BloomMaxBytes`, not a config key. A single run may take at most
+    * `1 / AdmitShare` of it, so one large run cannot flush the working set.
+    */
+  private val ResidentMaxBytes = 256L * 1024 * 1024
+  private val AdmitShare = 4
+  @volatile private var residentMax = ResidentMaxBytes
+  // access-ordered: iteration starts at the least recently used run
+  private val resident =
+    new java.util.LinkedHashMap[String, ResidentRun](64, 0.75f, true)
+  private var residentBytes = 0L // guarded by `resident`
+  private val residentHits = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  private def residentGet(f: String): ResidentRun =
+    resident.synchronized(resident.get(f))
+
+  private def admissible(bytes: Long): Boolean = bytes <= residentMax / AdmitShare
+
+  /** Make `run` resident under `f`, evicting least-recently-used runs to
+    * stay within the bound. Evicted runs leave an id bloom behind (built
+    * outside the lock from ids already in memory), so the runs a probe
+    * cannot contain are still skipped without a decode.
+    */
+  private def admit(f: String, run: ResidentRun): Unit = {
+    val evicted = scala.collection.mutable.ArrayBuffer.empty[(String, ResidentRun)]
+    resident.synchronized {
+      if (admissible(run.bytes)) {
+        val prev = resident.put(f, run)
+        if (prev != null) residentBytes -= prev.bytes
+        residentBytes += run.bytes
+      } else evicted += f -> run
+      evictOver(residentMax, evicted)
+    }
+    evicted.foreach { case (k, r) => registerBloom(k, r.idSet) }
+  }
+
+  // caller holds the `resident` lock
+  private def evictOver(bound: Long,
+      into: scala.collection.mutable.ArrayBuffer[(String, ResidentRun)]): Unit = {
+    val it = resident.entrySet.iterator
+    while (residentBytes > bound && it.hasNext) {
+      val e = it.next()
+      residentBytes -= e.getValue.bytes
+      into += e.getKey -> e.getValue
+      it.remove()
+    }
+  }
+
+  /** Register a JUST-WRITTEN run from the rows its writer already holds —
+    * the write path's half of residency: the next point read serves this
+    * run from memory instead of decoding what the writer already knew.
+    * Rows are (id, vector|null, params|null, is_deleted), all stamped
+    * `version`, seq = position (`LocalRunWriter.writeStoreRun`'s rows).
+    */
+  private[core] def registerRun(f: String,
+      rows: Seq[(String, Seq[Float], Map[String, String], Boolean)],
+      version: Long): Unit = {
+    val b = new RunBuilder
+    rows.iterator.zipWithIndex.foreach { case ((id, vec, ps, del), i) =>
+      b.add(id, version, i.toLong, del,
+        if (vec == null) null else vec.toArray,
+        if (ps == null) Map.empty else ps)
+    }
+    admit(runKey(f), b.result())
+  }
+
+  /** The resident copy of `f`, decoded now if its size admits it; null when
+    * the run is too large (its footer's uncompressed size, or its decoded
+    * size measured on an earlier touch, exceeds the admission share). The
+    * decoded copy serves the caller even if admission then declines it.
+    */
+  private def decodeIfAdmissible(f: String): ResidentRun = {
+    if (runMeta.get(f).exists(m => !admissible(m.sizeHint))) return null
+    val r = ParquetFileReader.open(inputFile(f))
+    try {
+      val schema = r.getFileMetaData.getSchema
+      // remembered only for a declined run — the fallback path reads it,
+      // and an admitted run's footer is not needed again
+      val meta = metaOf(r)
+      if (!admissible(meta.rawBytes)) { runMeta.putIfAbsent(f, meta); return null }
+      runOpens.incrementAndGet()
+      val b = new RunBuilder
+      val io = new ColumnIOFactory().getColumnIO(schema)
+      var pages = r.readNextRowGroup()
+      while (pages != null) {
+        val rows = io.getRecordReader(pages, new GroupRecordConverter(schema))
+        var i = 0L
+        while (i < pages.getRowCount) {
+          val g = rows.read()
+          b.add(g.getString("id", 0), g.getLong("version", 0), g.getLong("seq", 0),
+            g.getBoolean("is_deleted", 0), readVector(g), readParams(g))
+          i += 1
+        }
+        pages = r.readNextRowGroup()
+      }
+      val run = b.result()
+      if (!admissible(run.bytes)) runMeta.put(f, meta.copy(decodedBytes = run.bytes))
+      admit(f, run)
+      run
+    } finally r.close()
+  }
+
   // ---- per-run id blooms (the SSTable bloom, driver-side) ---------------
   //
-  // The dominant point-read cost is OPENING each run (footer parse +
-  // reader setup, ~10 ms/file) — random ids defeat min/max row-group
-  // pruning, so every run is opened even though at most a couple contain
-  // the probed ids. Classic LSM answer: a bloom per immutable run, built
-  // once from a projected id-column pass and memoized forever (runs never
+  // Runs that are not resident — too large to admit, or evicted — are the
+  // ones a probe may have to OPEN (footer parse + reader setup, ~10 ms per
+  // file; random ids defeat min/max row-group pruning). Classic LSM
+  // answer: a bloom per immutable run, memoized forever (runs never
   // change; deleted runs simply stop being listed). No false negatives ⇒
-  // skipping a bloom-negative run can never change the LWW outcome. A
-  // fresh-id existence probe (the common maintained-insert case) then
-  // opens ZERO files. Runs beyond `BloomMaxRows` don't get a bloom (an
-  // unbounded driver-side build; such runs come from compaction, where
-  // clusterById gives them disjoint id ranges the min/max stats prune
-  // instead) — at object-store scale the same bits live in a manifest.
+  // skipping a bloom-negative run can never change the LWW outcome. An
+  // evicted run's bloom comes from its resident ids; an oversized run's
+  // from a projected id-column pass. Runs beyond `BloomMaxRows` don't get
+  // a bloom (an unbounded driver-side build; such runs come from
+  // compaction, where clusterById gives them disjoint id ranges the
+  // min/max stats prune instead) — at object-store scale the same bits
+  // live in a manifest.
 
   private val BloomMaxRows = 4L * 1024 * 1024
   private val BloomBitsPerId = 10
@@ -212,20 +386,27 @@ object LocalPointReader {
   private val bloomBytes = new java.util.concurrent.atomic.AtomicLong(0L)
   private val blooms = scala.collection.concurrent.TrieMap.empty[String, IdBloom]
 
-  // serving observability: run opens vs bloom-pruned skips — the counter
-  // pair that tells an operator the per-run blooms are actually pruning
-  // (opens ≈ runs-touched would mean the blooms never fire). Exposed with
-  // the bloom residency/budget gauges over GET /v1/metrics.
+  // serving observability: real run opens (first-touch decodes and
+  // filtered reads) vs bloom-pruned skips vs resident hits — the counters
+  // that tell an operator whether point reads are served from memory.
+  // Exposed with the residency and bloom gauges over GET /v1/metrics.
   private val runOpens = new java.util.concurrent.atomic.AtomicLong(0L)
   private val runsBloomPruned = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Point-serve reader gauges/counters (process-lifetime). */
-  def metrics: Map[String, Long] = Map(
-    "point_run_opens" -> runOpens.get(),
-    "point_runs_bloom_pruned" -> runsBloomPruned.get(),
-    "point_blooms" -> blooms.size.toLong,
-    "point_bloom_bytes" -> bloomBytes.get(),
-    "point_bloom_max_bytes" -> BloomMaxBytes)
+  def metrics: Map[String, Long] = {
+    val (runs, bytes) = resident.synchronized((resident.size.toLong, residentBytes))
+    Map(
+      "point_run_opens" -> runOpens.get(),
+      "point_runs_bloom_pruned" -> runsBloomPruned.get(),
+      "point_blooms" -> blooms.size.toLong,
+      "point_bloom_bytes" -> bloomBytes.get(),
+      "point_bloom_max_bytes" -> BloomMaxBytes,
+      "point_runs_resident" -> runs,
+      "point_resident_bytes" -> bytes,
+      "point_resident_max_bytes" -> residentMax,
+      "point_resident_hits" -> residentHits.get())
+  }
 
   private class IdBloom(nBits: Int) {
     val words = new Array[Long]((nBits + 63) / 64)
@@ -250,6 +431,8 @@ object LocalPointReader {
       }
       true
     }
+    def mightContainAny(hashes: Array[Long]): Boolean =
+      hashes.exists(h => mightContainHashed((h >>> 32).toInt, h.toInt))
   }
   private def hash1(id: String): Int =
     scala.util.hashing.MurmurHash3.stringHash(id, 0x9747b28c)
@@ -263,62 +446,44 @@ object LocalPointReader {
     ids.iterator.map(id =>
       (hash1(id).toLong << 32) | (hash2(id) & 0xffffffffL)).toArray
 
-  private def mightContainAny(f: String, hashes: Array[Long]): Boolean = {
-    val b = bloomFor(f)
-    var i = 0
-    while (i < hashes.length) {
-      if (b.mightContainHashed((hashes(i) >>> 32).toInt, hashes(i).toInt)) {
-        runOpens.incrementAndGet()
-        return true
-      }
-      i += 1
-    }
-    runsBloomPruned.incrementAndGet()
-    false
-  }
-
-  /** Footer-derived per-run metadata, read once per immutable run: row
-    * count, the id-only bloom-build projection, and (when the run has the
-    * store probe columns) the (id, version, seq, is_deleted) projection
-    * used by `liveIds` — so neither the bloom decision nor the projected
-    * probe re-opens a footer it has already seen.
+  /** Footer-derived metadata of a run that takes the bloom + filtered read
+    * path, memoized (runs are immutable): row count, the id-only
+    * bloom-build projection, the (id, version, seq, is_deleted) projection
+    * `liveIds` reads it with (when the run has those columns), and why
+    * residency declined it — the footer's uncompressed bytes and, when it
+    * was decoded, the measured resident bytes.
     */
-  private val runMeta = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, org.apache.parquet.schema.MessageType)]
-  private val projSchemas = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.parquet.schema.MessageType]
+  private final case class RunMeta(rows: Long, idOnly: MessageType,
+      probe: Option[MessageType], rawBytes: Long, decodedBytes: Long = -1L) {
+    // the decoded size once known, else the footer's lower bound on it
+    def sizeHint: Long = if (decodedBytes >= 0) decodedBytes else rawBytes
+  }
+  private val runMeta = scala.collection.concurrent.TrieMap.empty[String, RunMeta]
   private val ProbeCols = Array("id", "version", "seq", "is_deleted")
 
-  private def metaFor(f: String): (Long, org.apache.parquet.schema.MessageType) =
-    runMeta.get(f).getOrElse {
-      val (rows, fileSchema) = {
-        val in: org.apache.parquet.io.InputFile =
-          if (ControlFs.isLocalRoot(f))
-            new org.apache.parquet.io.LocalInputFile(Paths.get(f))
-          else org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try (r.getRecordCount, r.getFileMetaData.getSchema) finally r.close()
-      }
-      if (ProbeCols.forall(fileSchema.containsField))
-        projSchemas.putIfAbsent(f, new org.apache.parquet.schema.MessageType(
-          fileSchema.getName,
-          ProbeCols.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*))
-      val meta = (rows, new org.apache.parquet.schema.MessageType(
-        fileSchema.getName, fileSchema.getType(fileSchema.getFieldIndex("id"))))
-      runMeta.putIfAbsent(f, meta)
-      meta
-    }
+  private def metaOf(r: ParquetFileReader): RunMeta = {
+    val fileSchema = r.getFileMetaData.getSchema
+    val probe =
+      if (!ProbeCols.forall(fileSchema.containsField)) None
+      else Some(new MessageType(fileSchema.getName,
+        ProbeCols.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*))
+    RunMeta(r.getRecordCount, new MessageType(fileSchema.getName,
+      fileSchema.getType(fileSchema.getFieldIndex("id"))), probe,
+      r.getFooter.getBlocks.asScala.map(_.getTotalByteSize).sum)
+  }
 
-  /** Pre-populate the bloom for a JUST-WRITTEN run from the ids the writer
-    * already holds — the write path's half of the bloom discipline: without
-    * this, the NEXT point probe pays a projected id-column scan to build
-    * the new run's bloom (~10-20 ms of parquet reader setup), i.e. every
-    * maintained point write taxes its successor. Sizing/accounting
+  private def metaFor(f: String): RunMeta = runMeta.get(f).getOrElse {
+    val r = ParquetFileReader.open(inputFile(f))
+    val meta = try metaOf(r) finally r.close()
+    runMeta.putIfAbsent(f, meta).getOrElse(meta)
+  }
+
+  /** Pre-populate the bloom for a run from ids already in memory (an
+    * evicted or admission-declined resident run). Sizing/accounting
     * identical to `bloomFor`; runs are immutable so the two can never
     * disagree on content.
     */
-  private[core] def registerBloom(f: String, ids: Iterable[String]): Unit = {
+  private def registerBloom(f: String, ids: Iterable[String]): Unit = {
     if (blooms.contains(f)) return
     if (bloomBytes.get() > BloomMaxBytes) sweepDeadBlooms()
     if (bloomBytes.get() > BloomMaxBytes) return // admission-denied: bloomFor retries later
@@ -332,7 +497,7 @@ object LocalPointReader {
   }
 
   private def bloomFor(f: String): IdBloom = blooms.get(f).getOrElse {
-    val (rows, idOnly) = metaFor(f)
+    val meta = metaFor(f)
     // ADMISSION bound, never a wholesale clear: a clear would make a
     // store whose total bloom footprint exceeds the budget rebuild
     // hundreds of MB of bitsets on every probe (worse than no blooms at
@@ -340,7 +505,7 @@ object LocalPointReader {
     // (compaction replaces run sets, and dead files' bytes must not pin
     // the budget forever).
     if (bloomBytes.get() > BloomMaxBytes) sweepDeadBlooms()
-    if (rows > BloomMaxRows) {
+    if (meta.rows > BloomMaxRows) {
       // permanently oversized: an unbounded driver-side build — memoize
       // the never-prune answer (such runs come from compaction, where
       // clusterById's disjoint id ranges prune via min/max instead)
@@ -354,9 +519,9 @@ object LocalPointReader {
       AlwaysMight
     } else {
       val nBits = math.max(1024,
-        Integer.highestOneBit(rows.toInt * BloomBitsPerId) * 2)
+        Integer.highestOneBit(meta.rows.toInt * BloomBitsPerId) * 2)
       val b = new IdBloom(nBits)
-      scanWith(f, null, idOnly)(g => b.add(g.getString("id", 0)))
+      scanWith(f, null, meta.idOnly)(g => b.add(g.getString("id", 0)))
       blooms.putIfAbsent(f, b) match {
         case Some(winner) => winner // a racing builder landed first
         case None => bloomBytes.addAndGet(8L * b.words.length); b
@@ -376,16 +541,11 @@ object LocalPointReader {
         blooms.remove(k).foreach { b =>
           if (b ne AlwaysMight) bloomBytes.addAndGet(-8L * b.words.length)
         }
-        runMeta.remove(k); projSchemas.remove(k)
+        runMeta.remove(k)
       }
     }
   }
 
-  /** Drop every memoized per-run structure under a path prefix — called on
-    * collection drop: the version counter resets there, and a recreated
-    * collection may reuse run paths, so bitsets and schemas keyed on the
-    * old incarnation must not survive (nor pin the byte budget).
-    */
   // test hook: resident bloom count under a prefix + the bytes they pin in
   // the global budget ledger (prefix-scoped so concurrent suites' entries
   // don't race the assertion)
@@ -395,42 +555,67 @@ object LocalPointReader {
       .map(b => if (b eq AlwaysMight) 0L else 8L * b.words.length).sum)
   }
 
+  // test hook: resident run count under a prefix + the bytes they hold
+  private[graft] def residentStats(prefix: String): (Int, Long) =
+    resident.synchronized {
+      val mine = resident.asScala.filter(_._1.startsWith(runKey(prefix)))
+      (mine.size, mine.valuesIterator.map(_.bytes).sum)
+    }
+
+  // test hook: run `body` under a different residency bound (evicting down
+  // to it first), then restore the bound it replaced. A bound of 0 admits
+  // nothing — every lookup takes the bloom + filtered read path.
+  private[graft] def withResidentMaxBytes[T](bound: Long)(body: => T): T = {
+    def setBound(b: Long): Unit = {
+      val evicted = scala.collection.mutable.ArrayBuffer.empty[(String, ResidentRun)]
+      resident.synchronized { residentMax = b; evictOver(b, evicted) }
+      evicted.foreach { case (k, r) => registerBloom(k, r.idSet) }
+    }
+    val prev = residentMax
+    setBound(bound)
+    try body finally setBound(prev)
+  }
+
+  /** Drop every memoized per-run structure under a path prefix — resident
+    * runs, blooms, footer metadata. Called on collection drop (the version
+    * counter resets there, and a recreated collection may reuse run paths,
+    * so nothing keyed on the old incarnation may survive, nor pin a byte
+    * budget) and by a cold reopen, whose reads must come from disk.
+    */
   private[graft] def invalidateUnder(prefix: String): Unit = {
-    blooms.keys.filter(_.startsWith(prefix)).foreach { k =>
+    val p = runKey(prefix)
+    resident.synchronized {
+      val it = resident.entrySet.iterator
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getKey.startsWith(p)) { residentBytes -= e.getValue.bytes; it.remove() }
+      }
+    }
+    blooms.keys.filter(_.startsWith(p)).foreach { k =>
       blooms.remove(k).foreach { b =>
         if (b ne AlwaysMight) bloomBytes.addAndGet(-8L * b.words.length)
       }
     }
-    runMeta.keys.filter(_.startsWith(prefix)).foreach(runMeta.remove)
-    projSchemas.keys.filter(_.startsWith(prefix)).foreach(projSchemas.remove)
+    runMeta.keys.filter(_.startsWith(p)).foreach(runMeta.remove)
   }
 
-  /** Filtered scan of one run projected to (id, version, seq, is_deleted)
-    * — no vector/params page decode. The projection is clipped from the
-    * file's own footer schema so repetition/type always match its writer.
-    */
-  private def scanProjected(f: String,
-      pred: org.apache.parquet.filter2.predicate.FilterPredicate)(
-      each: Group => Unit): Unit = {
-    // the projection is memoized per immutable run (populated by the bloom
-    // path's footer read, or here on first touch) — the hot maintained-
-    // write probe must not pay a second footer open per file
-    val projected = projSchemas.get(f).orElse { metaFor(f); projSchemas.get(f) }
-      .getOrElse(throw new IllegalStateException(
-        s"run $f lacks the store probe columns (id/version/seq/is_deleted)"))
-    scanWith(f, pred, projected)(each)
-  }
+  private def probeSchema(f: String): MessageType =
+    metaFor(f).probe.getOrElse(throw new IllegalStateException(
+      s"run $f lacks the store probe columns (id/version/seq/is_deleted)"))
 
-  /** Filtered scan of one run under an explicit projected schema (clipped
-    * from the file's own footer by the caller).
+  /** Scan of one run, filtered by `pred` when non-null, under an explicit
+    * projected schema (clipped from the file's own footer so repetition
+    * and types match its writer) when non-null, else every column.
     */
   private def scanWith(f: String,
       pred: org.apache.parquet.filter2.predicate.FilterPredicate,
-      projected: org.apache.parquet.schema.MessageType)(
-      each: Group => Unit): Unit = {
-    val fconf = new Configuration(conf)
-    fconf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projected.toString)
+      projected: MessageType)(each: Group => Unit): Unit = {
+    val fconf = if (projected == null) conf else {
+      val c = new Configuration(conf)
+      c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
+        projected.toString)
+      c
+    }
     var builder = readerBuilder(f).withConf(fconf)
     if (pred != null) builder = builder.withFilter(FilterCompat.get(pred))
     val reader = builder.build()

@@ -14,7 +14,7 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   * delete) lands as one immutable run file with NO Spark job (~5 ms vs the
   * ~100 ms per-job floor). The files are ordinary parquet with Spark's
   * standard logical types (3-level LIST, key_value MAP), so every existing
-  * reader — Spark scans, the driver-local point reader, the bloom builder,
+  * reader — Spark scans, the driver-local point reader's first-touch decode,
   * the delta/tombstone aggregations — consumes them exactly like
   * Spark-written runs; `LocalRunWriterSpec` asserts byte-level read
   * equivalence against a Spark-written twin.
@@ -118,9 +118,9 @@ object LocalRunWriter {
         }
       }
     }
-    // write-side bloom: the next point probe prunes this run from memory
-    // instead of paying a projected scan to learn what we already know
-    LocalPointReader.registerBloom(path, rows.map(_._1))
+    // write-side residency: the next point read serves this run from the
+    // rows we already hold instead of decoding the file we just wrote
+    LocalPointReader.registerRun(path, rows, version)
     path
   }
 

@@ -596,7 +596,7 @@ object GraphAnn {
       localIdTypes.putIfAbsent((layoutId, version), idTypeOpt.get)
     }
     val (held, oversized) = LocalCellResolve.resolveSplit[NswIndex](
-      localCellCache, spark, layoutId, version, path, "part",
+      localCellCache, layoutId, version, path, "part",
       graphAll, needed, maxLocalServeBytes,
       df => df, rs => reconstructCell(rs, space))
     // per-query hits from cells too big to collect (filled below)

@@ -47,8 +47,8 @@ private[graft] final class LocalCellCache[C](maxCells: Int,
       // eviction alone would strand the whole dead generation's cells in
       // the byte budget until capacity pressure aged them out (the same
       // stranding `Engine.currentLayout` fixes for its frame handles)
-      val stem = key._1.replaceAll("_g\\d+$", "")
-      cells.keys.filter(kk => kk._1.replaceAll("_g\\d+$", "") == stem &&
+      val stem = LocalCellCache.genStem(key._1)
+      cells.keys.filter(kk => (kk._1 == key._1 || LocalCellCache.genStem(kk._1) == stem) &&
           (kk._1 != key._1 || kk._2 != key._2))
         .foreach { kk => remove(kk); evictions.incrementAndGet() }
       var evicting = cells.size > maxCells || bytes.get() > maxBytes()
@@ -80,4 +80,14 @@ private[graft] final class LocalCellCache[C](maxCells: Int,
     s"${prefix}_misses" -> misses.get(),
     s"${prefix}_evictions" -> evictions.get(),
     s"${prefix}_oversized_declines" -> oversizedDeclines.get())
+}
+
+private[graft] object LocalCellCache {
+  private val GenSuffix = java.util.regex.Pattern.compile("_g\\d+$")
+
+  /** A layout path without its `_g<n>` generation suffix — the key that
+    * ties every rebuild of one layout together. Compiled once: stems are
+    * taken per cached key on every insert.
+    */
+  def genStem(path: String): String = GenSuffix.matcher(path).replaceFirst("")
 }

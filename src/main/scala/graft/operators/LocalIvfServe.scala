@@ -36,10 +36,12 @@ private[graft] object LocalCellResolve {
     * a cell whose estimated RESIDENT size exceeds the whole byte budget
     * must never be collected to the driver.
     */
-  private def splitOversized(spark: SparkSession, fsPath: String,
+  private def splitOversized(fsPath: String,
       partCol: String, missing: Seq[Int], maxBytes: Long): (Seq[Int], Seq[Int]) = {
     val fsBase = new org.apache.hadoop.fs.Path(fsPath)
-    val fsys = fsBase.getFileSystem(spark.sessionState.newHadoopConf())
+    // the memoized serving conf: newHadoopConf() copies the whole conf,
+    // once per cell miss
+    val fsys = fsBase.getFileSystem(graft.core.ControlFs.servingConf())
     missing.partition { c =>
       val dir = new org.apache.hadoop.fs.Path(fsBase, s"$partCol=$c")
       val disk = if (fsys.exists(dir)) fsys.getContentSummary(dir).getLength else 0L
@@ -69,14 +71,14 @@ private[graft] object LocalCellResolve {
     * the caller declines the REQUEST to the distributed plan (nothing is
     * collected on the decline path).
     */
-  def resolve[C](cache: LocalCellCache[C], spark: SparkSession, path: String,
+  def resolve[C](cache: LocalCellCache[C], path: String,
       stamp: Long, layoutFrame: => DataFrame, needed: Seq[Int], maxBytes: Long,
       select: DataFrame => DataFrame,
       build: Array[Row] => C): Option[collection.Map[Int, Option[C]]] = {
     val (held, missing) = probe(cache, path, stamp, needed)
     if (missing.nonEmpty) {
       val (oversized, loadable) =
-        splitOversized(spark, path, "cluster_id", missing, maxBytes)
+        splitOversized(path, "cluster_id", missing, maxBytes)
       if (oversized.nonEmpty) {
         cache.oversizedDeclines.incrementAndGet(); return None
       }
@@ -93,7 +95,7 @@ private[graft] object LocalCellResolve {
     * (a layout id, possibly ephemeral); `fsPath` locates the partition
     * dirs on disk; `partCol` is the layout's partition column name.
     */
-  def resolveSplit[C](cache: LocalCellCache[C], spark: SparkSession,
+  def resolveSplit[C](cache: LocalCellCache[C],
       keyPath: String, stamp: Long, fsPath: String, partCol: String,
       layoutFrame: => DataFrame, needed: Seq[Int], maxBytes: Long,
       select: DataFrame => DataFrame, build: Array[Row] => C)
@@ -101,7 +103,7 @@ private[graft] object LocalCellResolve {
     val (held, missing) = probe(cache, keyPath, stamp, needed)
     if (missing.isEmpty) return (held, Nil)
     val (oversized, loadable) =
-      splitOversized(spark, fsPath, partCol, missing, maxBytes)
+      splitOversized(fsPath, partCol, missing, maxBytes)
     if (loadable.nonEmpty)
       load(cache, keyPath, stamp, partCol, layoutFrame, loadable,
         select, build, held)
@@ -256,7 +258,7 @@ object LocalIvfServe {
     val probed: Array[Seq[Int]] =
       queries.toArray.map(q => model.probe(q._2, nprobe))
     val needed = probed.flatten.distinct.sorted
-    val heldOpt = LocalCellResolve.resolve[Cell](cache, spark, path, stamp,
+    val heldOpt = LocalCellResolve.resolve[Cell](cache, path, stamp,
       layoutFrame, needed, maxLocalIvfBytes,
       // try_element_at: null-safe under ANSI (plain element_at throws on
       // a missing key); single-vector rows read -1
@@ -368,7 +370,7 @@ object LocalPqServe {
     val probed: Array[Seq[Int]] =
       qvs.map(q => model.coarse.probe(q._2, nprobe))
     val needed = probed.flatten.distinct.sorted
-    val heldOpt = LocalCellResolve.resolve[Cell](cache, spark, path, stamp,
+    val heldOpt = LocalCellResolve.resolve[Cell](cache, path, stamp,
       layoutFrame, needed, maxLocalPqBytes,
       df => df.select(col("cluster_id").cast("int"), col("id"),
         col("codes").cast("array<int>")),

@@ -837,8 +837,11 @@ object CorpusStatsQueries {
     val wordIds = bpeWordIdsAux(spark, dir).collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     val bc = spark.sparkContext.broadcast(wordIds)
+    // null text emits zero tokens — the row set of the posexplode(split)
+    // formulation this replaced (split(NULL) is NULL, exploding to nothing)
     val enc = udf((text: String) =>
-      text.split(" ", -1).toSeq.flatMap(w => bc.value.getOrElse(w, Seq.empty)))
+      if (text == null) Seq.empty[Long]
+      else text.split(" ", -1).toSeq.flatMap(w => bc.value.getOrElse(w, Seq.empty)))
     docs(spark, dir)
       .select(col("doc_id"), posexplode(enc(col("text"))).as(Seq("pos", "token_id")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),

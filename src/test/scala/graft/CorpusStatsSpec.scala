@@ -315,4 +315,23 @@ class CorpusStatsSpec extends SparkSpec {
       .as[(Int, Int, Long)].collect().toSet
     assert(one === many)
   }
+
+  test("bpe_encode_ids ≡ word-by-word re-assembly; null text emits zero tokens") {
+    val dir = java.nio.file.Files.createTempDirectory("bpe-ids").toString
+    val docs = Seq[(Long, String)]((1L, "low lower newest"), (2L, null),
+      (3L, "widest low low"), (4L, ""), (5L, "new  est"))
+    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val got = CorpusStatsQueries.bpeEncodeIds(spark, dir)
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    // the oracle's assembly: each document's words in order, each word's
+    // ids in order, positions counted across the document from 0
+    val wordIds = CorpusStatsQueries.bpeWordIdsAux(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+    val want = docs.filter(_._2 != null).flatMap { case (d, text) =>
+      text.split(" ", -1).toSeq.flatMap(wordIds).zipWithIndex
+        .map { case (tok, pos) => (d, pos.toLong, tok) }
+    }.sorted
+    assert(got === want)
+    assert(!got.exists(_._1 == 2L), "a null-text document must emit no tokens")
+  }
 }

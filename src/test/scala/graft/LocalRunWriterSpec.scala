@@ -54,14 +54,22 @@ class LocalRunWriterSpec extends SparkSpec {
         r.getLong(3), r.getLong(4), r.getBoolean(5))).sortBy(_._1)
     assert(canon(a) === canon(b), "local run rows diverged from the Spark twin")
 
-    // the driver-local reader consumes local runs like any other
-    val got = LocalPointReader.readDocs(localDir,
+    // the driver-local reader consumes local runs like any other — served
+    // from the rows the writer registered, decoded from the file on first
+    // touch, and by a filtered read, all three alike
+    def readAll() = LocalPointReader.readDocs(localDir,
       Set("a", "béta💡", "tomb", "empty", "nullval", "absent"))
-    assert(got.keySet === Set("a", "béta💡", "empty", "nullval"))
-    assert(got("a").vector.toSeq === Seq(1f, 2.5f, -3f))
-    assert(got("a").params === Map("k" -> "v", "k2" -> "v2"))
-    assert(got("empty").vector.toSeq === Seq.empty)
-    assert(got("nullval").params === Map("k" -> null))
+    val registered = readAll()
+    LocalPointReader.invalidateUnder(localDir)
+    val decoded = readAll()
+    val filtered = LocalPointReader.withResidentMaxBytes(0L)(readAll())
+    for (got <- Seq(registered, decoded, filtered)) {
+      assert(got.keySet === Set("a", "béta💡", "empty", "nullval"))
+      assert(got("a").vector.toSeq === Seq(1f, 2.5f, -3f))
+      assert(got("a").params === Map("k" -> "v", "k2" -> "v2"))
+      assert(got("empty").vector.toSeq === Seq.empty)
+      assert(got("nullval").params === Map("k" -> null))
+    }
 
     // a MIXED dir reads as the union (Spark samples one footer; both
     // writers' schemas must agree)

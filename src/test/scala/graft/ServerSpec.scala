@@ -15,11 +15,11 @@ import graft.core.{IndexType, SpaceType}
   */
 class ServerSpec extends SparkSpec {
 
-  private lazy val (server, port) = {
+  private lazy val (server, port, root) = {
     val root = Files.createTempDirectory("server").toString
     val s = new Server(new Engine(spark, root))
     val p = s.start()
-    (s, p)
+    (s, p, root)
   }
   private val client = HttpClient.newHttpClient()
 
@@ -176,20 +176,56 @@ class ServerSpec extends SparkSpec {
       assert(o.contains(k), s"metrics missing $k: $o")
     assert(o("local_serve_max_bytes").asDouble > 0)
     assert(o("point_bloom_max_bytes").asDouble > 0)
-    // drive point reads: each upsert writes an immutable run, each GET
-    // bloom-probes the run set — opens and bloom residency must move
-    val opens0 = o("point_run_opens").asDouble
+    for (k <- Seq("point_runs_resident", "point_resident_bytes",
+        "point_resident_max_bytes", "point_resident_hits"))
+      assert(o.contains(k), s"metrics missing $k: $o")
+    assert(o("point_resident_max_bytes").asDouble > 0)
+    // each upsert writes an immutable run and registers it resident, so
+    // warm GETs open no file; a COLD read (the reader's memo dropped, as
+    // a restarted server has it) must open the runs from disk
     req("POST", "/v1/collections", """{"name":"met","dimension":2,"index_type":"flat"}""")
     for (i <- 0 until 3)
       req("POST", "/v1/collections/met/documents",
         s"""{"id":"m$i","vector":[$i,0]}""")
-    for (i <- 0 until 3)
-      assert(req("GET", s"/v1/collections/met/documents/m$i")._1 === 200)
+    graft.core.LocalPointReader.invalidateUnder(s"$root/met/")
+    val opens0 = req("GET", "/v1/metrics")._2.asObj("point_run_opens").asDouble
+    assert(req("GET", "/v1/collections/met/documents/m0")._1 === 200)
     val o2 = req("GET", "/v1/metrics")._2.asObj
     assert(o2("point_run_opens").asDouble > opens0,
-      s"point reads must move the run-open counter: $o2")
-    assert(o2("point_blooms").asDouble > 0 && o2("point_bloom_bytes").asDouble > 0,
-      s"bloom ledger must show residency after point reads: $o2")
+      s"a cold point read must move the run-open counter: $o2")
+    for (i <- 0 until 3)
+      assert(req("GET", s"/v1/collections/met/documents/m$i")._1 === 200)
+    val o3 = req("GET", "/v1/metrics")._2.asObj
+    assert(o3("point_resident_hits").asDouble > o2("point_resident_hits").asDouble,
+      s"warm point reads must be resident hits: $o3")
+    assert(o3("point_run_opens").asDouble === o2("point_run_opens").asDouble,
+      s"warm point reads must open no file: $o3")
+    assert(o3("point_runs_resident").asDouble > 0 && o3("point_resident_bytes").asDouble > 0,
+      s"the residency ledger must show the runs read: $o3")
+    assert(o3("point_resident_bytes").asDouble <= o3("point_resident_max_bytes").asDouble)
+  }
+
+  test("an oversized request body gets 413 without being read") {
+    // a raw socket declares a body one byte over the cap and sends none of
+    // it: the server must answer from the header alone
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(30000)
+      val out = sock.getOutputStream
+      out.write(("POST /v1/collections/big/documents/batchupsert HTTP/1.1\r\n" +
+        "Host: 127.0.0.1\r\nContent-Type: application/json\r\n" +
+        s"Content-Length: ${Server.MaxBodyBytes.toLong + 1}\r\n\r\n")
+        .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      out.flush()
+      val status = new java.io.BufferedReader(new java.io.InputStreamReader(
+        sock.getInputStream, java.nio.charset.StandardCharsets.US_ASCII)).readLine()
+      assert(status != null && status.startsWith("HTTP/1.1 413"), s"got: $status")
+    } finally sock.close()
+    assert(Server.MaxBodyBytes >= (64 << 20), "the cap must stay far above batch bodies")
+    // the server keeps serving, and a body under the cap is accepted
+    assert(req("GET", "/")._1 === 200)
+    assert(req("POST", "/v1/collections",
+      """{"name":"capok","dimension":2,"index_type":"flat"}""")._1 === 200)
   }
 
   test("multivector routes over the wire: upsert / batch / maxsim search / delete") {
