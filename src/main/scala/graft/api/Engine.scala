@@ -202,14 +202,14 @@ class Engine(
       // retire path-keyed caches with the dir (they would otherwise pin
       // persisted frames for dirs that no longer exist)
       GraphAnn.GraphCache.invalidate(oldPath)
+      graft.operators.LocalIvfServe.dropCells(oldPath)
+      graft.operators.LocalPqServe.dropCells(oldPath)
       deltaCache.keys.filter(_._1.startsWith(oldPath)).foreach { k =>
         deltaCache.remove(k).foreach(_.unpersist(false))
       }
-      deltaRowsCache.keys.filter(_._1.startsWith(oldPath)).foreach(deltaRowsCache.remove)
       tombCache.keys.filter(_._1.startsWith(oldPath)).foreach { k =>
         tombCache.remove(k).foreach(_.foreach(_.unpersist(false)))
       }
-      tombMapCache.keys.filter(_._1.startsWith(oldPath)).foreach(tombMapCache.remove)
       versionedDeltaMemo.keys.filter(_.startsWith(oldPath))
         .foreach(versionedDeltaMemo.remove)
       old += 1
@@ -257,24 +257,12 @@ class Engine(
     * the stamp only after its commit, so every stamp-keyed cache re-reads
     * once the rows are real.
     */
-  private def sidecarDataFiles(dir: String): Vector[String] = {
-    // Hadoop FS (like flipLayoutGen/compactLayout), not java.nio: sidecars
-    // live WITH the layout, so a non-local root must list the real store.
-    // A dir deleted between existence probe and listing (a generation fold
-    // racing this read) is the same snapshot case as zero committed files —
-    // catch-and-empty, never a serving error.
-    val p = new org.apache.hadoop.fs.Path(dir)
-    try {
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) Vector.empty
-      else fs.listStatus(p).iterator.filter { s =>
-        val n = s.getPath.getName
-        s.isFile && n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-      }.map(_.getPath.toString).toVector
-    } catch {
-      case _: java.io.FileNotFoundException => Vector.empty
-    }
-  }
+  private def sidecarDataFiles(dir: String): Vector[String] =
+    // scheme-aware (sidecars live WITH the layout, so a non-local root
+    // lists the real store); a dir deleted between existence probe and
+    // listing (a generation fold racing this read) is the same snapshot
+    // case as zero committed files — empty, never a serving error
+    graft.core.LayoutFiles.listSidecar(dir)
 
   private def cachedDelta(path: String, stamp: Long): Option[DataFrame] = {
     val files = sidecarDataFiles(path)
@@ -286,7 +274,6 @@ class Engine(
       deltaCache.keys.filter(_._1 == path).foreach { k =>
         deltaCache.remove(k).foreach(_.unpersist(false))
       }
-      deltaRowsCache.keys.filter(_._1 == path).foreach(deltaRowsCache.remove)
       None
     }
     else Some(deltaCache.getOrElseUpdate((path, stamp), {
@@ -313,26 +300,6 @@ class Engine(
       layoutPath: String): Option[DataFrame] =
     cachedDelta(path, stamp).map(d =>
       applyTombstones(layoutPath, stamp)(d).select(col("id"), col("vector")))
-
-  /** The delta as driver-resident rows for the zero-job local-serve path
-    * (micro-batch-sized by construction; collected once per ingest batch).
-    * Rows carry their write version; the caller filters tombstone-shadowed
-    * ones with the driver tomb map.
-    */
-  private val deltaRowsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Array[(Any, Array[Float], Long)]]
-
-  private def cachedDeltaRows(path: String, stamp: Long): Array[(Any, Array[Float], Long)] =
-    // route the emptiness probe through cachedDelta so ITS eviction (incl.
-    // the fold-without-stamp-advance case above) runs on this path too
-    if (cachedDelta(path, stamp).isEmpty) Array.empty
-    else deltaRowsCache.getOrElseUpdate((path, stamp), {
-      deltaRowsCache.keys.filter(k => k._1 == path && k._2 != stamp)
-        .foreach(deltaRowsCache.remove)
-      cachedDelta(path, stamp).map(_.collect().map(r =>
-        (r.get(0): Any, r.getAs[scala.collection.Seq[Float]](1).toArray, r.getLong(2))))
-        .getOrElse(Array.empty)
-    })
 
   /** Tombstone sidecar of an index layout: `(id, ver)` rows appended by
     * update/delete batches, underscore-prefixed so the layout readers never
@@ -369,7 +336,6 @@ class Engine(
       tombCache.keys.filter(_._1 == tp).foreach { k =>
         tombCache.remove(k).foreach(_.foreach(_.unpersist(false)))
       }
-      tombMapCache.keys.filter(_._1 == tp).foreach(tombMapCache.remove)
       return None
     }
     tombCache.getOrElseUpdate((tp, stamp), {
@@ -397,29 +363,6 @@ class Engine(
           .filter(col("__tomb_ver").isNull || col("version") >= col("__tomb_ver"))
           .drop("__tomb_ver")
     }
-
-  /** Driver-resident (id -> max ver) tombstone map for the graph tier's
-    * hit filtering and the zero-job local-serve path; cached per stamp.
-    */
-  private val tombMapCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Map[Any, Long]]
-
-  private def cachedTombMap(layoutPath: String, stamp: Long): Map[Any, Long] = {
-    val tp = tombstonesPath(layoutPath)
-    // same every-call existence rule as cachedTombstones (which also clears
-    // this cache when the sidecar is gone)
-    if (!cfs.exists(tp)) {
-      tombMapCache.keys.filter(_._1 == tp).foreach(tombMapCache.remove)
-      return Map.empty
-    }
-    tombMapCache.getOrElseUpdate((tp, stamp), {
-      tombMapCache.keys.filter(k => k._1 == tp && k._2 != stamp)
-        .foreach(tombMapCache.remove)
-      cachedTombstones(layoutPath, stamp)
-        .map(_.collect().map(r => (r.get(0): Any, r.getLong(1))).toMap)
-        .getOrElse(Map.empty)
-    })
-  }
 
   /** Driver-resident eligible-id sets for the zero-job FILTERED point serve,
     * cached per (collection, layout stamp, canonical predicate text). The
@@ -491,24 +434,30 @@ class Engine(
     .empty[(String, Long), DataFrame]
 
   private def currentLayout(coll: String, path: String): Option[(DataFrame, Long)] =
-    // the returned stamp identifies the LAYOUT BUILD the frame reads — cache
-    // keys derive from it, never from a re-read of the live store version
-    // (a write racing the search must not poison the cache under a new key).
-    // Tombstone exclusion applies here, centrally: every quantized tier's
-    // layout-served search sees only live rows
-    currentLayoutStamp(coll, path).map { stamp =>
-      val frame = layoutFrameCache.getOrElseUpdate((path, stamp), {
-        // evict by generation STEM, not exact path: a rebuild flips to a
-        // `_g<n+1>` dir, so same-path eviction alone would strand one
-        // handle (with its full file listing) per rebuild per tier
-        val stem = graft.operators.LocalCellCache.genStem(path)
-        layoutFrameCache.keys.filter(k =>
-            graft.operators.LocalCellCache.genStem(k._1) == stem && k != ((path, stamp)))
-          .foreach(layoutFrameCache.remove)
-        spark.read.parquet(path)
-      })
-      (applyTombstones(path, stamp)(frame), stamp)
-    }
+    currentLayoutStamp(coll, path).map(stamp => (layoutFrame(path, stamp), stamp))
+
+  /** The tombstone-applied frame of the layout at `path` as of `stamp`:
+    * the stamp identifies the LAYOUT BUILD the frame reads — cache keys
+    * derive from it, never from a re-read of the live store version (a
+    * write racing the search must not poison the cache under a new key).
+    * Tombstone exclusion applies here, centrally: every quantized tier's
+    * layout-served search sees only live rows. Built only when a request
+    * runs a Spark plan over the layout — the zero-job local serves need
+    * the stamp alone.
+    */
+  private def layoutFrame(path: String, stamp: Long): DataFrame = {
+    val frame = layoutFrameCache.getOrElseUpdate((path, stamp), {
+      // evict by generation STEM, not exact path: a rebuild flips to a
+      // `_g<n+1>` dir, so same-path eviction alone would strand one
+      // handle (with its full file listing) per rebuild per tier
+      val stem = graft.operators.LocalCellCache.genStem(path)
+      layoutFrameCache.keys.filter(k =>
+          graft.operators.LocalCellCache.genStem(k._1) == stem && k != ((path, stamp)))
+        .foreach(layoutFrameCache.remove)
+      spark.read.parquet(path)
+    })
+    applyTombstones(path, stamp)(frame)
+  }
 
   /** Currency check WITHOUT constructing the layout DataFrame:
     * `spark.read.parquet` eagerly lists files and reads footers for schema
@@ -563,13 +512,9 @@ class Engine(
     deltaCache.keys.filter(_._1.startsWith(s"$root/$name/")).foreach { k =>
       deltaCache.remove(k).foreach(_.unpersist(false))
     }
-    deltaRowsCache.keys.filter(_._1.startsWith(s"$root/$name/"))
-      .foreach(deltaRowsCache.remove)
     tombCache.keys.filter(_._1.startsWith(s"$root/$name/")).foreach { k =>
       tombCache.remove(k).foreach(_.foreach(_.unpersist(false)))
     }
-    tombMapCache.keys.filter(_._1.startsWith(s"$root/$name/"))
-      .foreach(tombMapCache.remove)
     versionedDeltaMemo.keys.filter(_.startsWith(s"$root/$name/"))
       .foreach(versionedDeltaMemo.remove)
     eligSetCache.keys.filter(_._1 == name).foreach(eligSetCache.remove)
@@ -1707,16 +1652,17 @@ class Engine(
     * size (chunk-split up to `maxLocalServeBatch`), unique qids (the window
     * plans merge a duplicated id's rows into ONE k-row group; a per-query
     * local loop would emit k rows per entry — the knnAggFused rule),
-    * current layout, and driver-budget eligibility. `serve` runs once per
-    * ≤`LocalServeChunk` chunk only when every precondition holds; a None
-    * anywhere falls back to the distributed plan for the WHOLE request.
+    * current layout (its stamp), and driver-budget eligibility. `serve`
+    * runs once per ≤`LocalServeChunk` chunk only when every precondition
+    * holds; a None anywhere falls back to the distributed plan for the
+    * WHOLE request.
     */
-  private def localRoute(layout: Option[(DataFrame, Long)], coll: String,
+  private def localRoute(stamp: Option[Long], coll: String,
       queries: Seq[(String, Array[Float])], eligible: Option[Column],
       corpus: => DataFrame)(
-      serve: (DataFrame, Long, Seq[(String, Array[Float])], Option[Set[Any]]) => Option[DataFrame]): Option[DataFrame] =
-    layout match {
-      case Some((frame, stamp)) if queries.size <= maxLocalServeBatch &&
+      serve: (Long, Seq[(String, Array[Float])], Option[Set[Any]]) => Option[DataFrame]): Option[DataFrame] =
+    stamp match {
+      case Some(stamp) if queries.size <= maxLocalServeBatch &&
           queries.map(_._1).distinct.size == queries.size =>
         lazy val localElig: Option[Set[Any]] =
           if (eligible.isEmpty) None
@@ -1727,7 +1673,7 @@ class Engine(
           // concatenation is row-identical to one oversized call (and to
           // the distributed plan); the first chunk warms the probed cells,
           // later chunks serve job-free from the same held references
-          serveChunked(queries)(chunk => serve(frame, stamp, chunk, localElig))
+          serveChunked(queries)(chunk => serve(stamp, chunk, localElig))
       case _ => None
     }
 
@@ -1742,7 +1688,7 @@ class Engine(
     * cell or a shortlisted id the point reads cannot resolve (a concurrent
     * delete racing the request; the distributed plan re-plans instead).
     */
-  private def localPqSearch(coll: String, path: String, frame: DataFrame,
+  private def localPqSearch(coll: String, path: String,
       stamp: Long, pq: IvfPq.Model, queries: Seq[(String, Array[Float])],
       k: Int, nprobe: Int, eligible: Option[Set[Any]],
       shortQueries: Seq[(String, Array[Float])] = Seq.empty): Option[DataFrame] = {
@@ -1752,7 +1698,7 @@ class Engine(
     // re-rank space (OPQ shortlists in rotated space, re-ranks original)
     val sq = if (shortQueries.nonEmpty) shortQueries else queries
     val short = graft.operators.LocalPqServe.adcShortlistLocalRows(spark, path,
-      stamp, frame, pq, sq.map { case (q, v) => (q: Any, v) },
+      stamp, pq, sq.map { case (q, v) => (q: Any, v) },
       k * IvfPq.DefaultRerankFactor, nprobe, eligible)
     if (short.isEmpty) return None
     val ids = short.get.map(r => String.valueOf(r._2)).distinct
@@ -2020,15 +1966,15 @@ class Engine(
         val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, pq.nlist))
         // prefer the encoded layout materialized at buildIndex (partition-
         // pruned, no per-search re-encoding); re-encode only when stale
-        val layout = if (corpusIsFull) currentLayout(coll, pqLayoutPath(coll)) else None
+        val stamp = if (corpusIsFull) currentLayoutStamp(coll, pqLayoutPath(coll)) else None
         // point requests serve zero-job from driver-cached CODE cells
         // (LocalPqServe ADC shortlist + exact re-rank through the local
         // point reads) — same preconditions and fallback ladder as ivf_flat
-        localRoute(layout, coll, queries, eligible, corpus) { (frame, stamp, chunk, elig) =>
-          localPqSearch(coll, pqLayoutPath(coll), frame, stamp, pq,
+        localRoute(stamp, coll, queries, eligible, corpus) { (stamp, chunk, elig) =>
+          localPqSearch(coll, pqLayoutPath(coll), stamp, pq,
             chunk, k, nprobe, elig)
         }.getOrElse {
-          val encoded = layout.map(l => restrict(l._1))
+          val encoded = stamp.map(s => restrict(layoutFrame(pqLayoutPath(coll), s)))
             .getOrElse(IvfPq.encode(corpusEff, "vector", pq))
           IvfPq.search(encoded, qDf, pq, k, nprobe, rerankVecCol = Some("vector"))
         }
@@ -2037,23 +1983,24 @@ class Engine(
         val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, model.nlist))
         // prefer the materialized partition-pruned layout; fall back when
         // the corpus changed since buildIndex
-        val layout = if (corpusIsFull) currentLayout(coll, ivfLayoutPath(coll)) else None
+        val stamp = if (corpusIsFull) currentLayoutStamp(coll, ivfLayoutPath(coll)) else None
         // TRUE point requests over a current layout serve from driver-cached
-        // cells — ZERO Spark jobs warm (the graph tier's searchPointLocal
-        // architecture on the ivf tier; results ≡ IvfIndex.search by
-        // construction: same probe, same kernels, same (distance, id)
-        // order, cells collected from the SAME tombstone-applied frame).
+        // cells — ZERO Spark jobs, warm or cold (the graph tier's
+        // searchPointLocal architecture on the ivf tier; results ≡
+        // IvfIndex.search by construction: same probe, same kernels, same
+        // (distance, id) order, cells holding the rows of the SAME
+        // tombstone-applied frame, decoded on the driver at the stamp).
         // Filtered requests serve locally too when the predicate's survivor
         // set fits the driver budget (cached per (coll, stamp, predicate));
         // an over-budget set — or an oversized probed cell — falls back to
         // the distributed pruned plan, never truncates.
-        localRoute(layout, coll, queries, eligible, corpus) { (frame, stamp, chunk, elig) =>
+        localRoute(stamp, coll, queries, eligible, corpus) { (stamp, chunk, elig) =>
           graft.operators.LocalIvfServe.searchPointLocal(spark,
-            ivfLayoutPath(coll), stamp, frame, model,
+            ivfLayoutPath(coll), stamp, model,
             chunk.map { case (qid, v) => (qid: Any, v) }, k, nprobe,
             org.apache.spark.sql.types.StringType, elig)
         }.getOrElse {
-          val assigned = layout.map(l => restrict(l._1))
+          val assigned = stamp.map(s => restrict(layoutFrame(ivfLayoutPath(coll), s)))
             .getOrElse(IvfIndex.assign(corpusEff, "vector", model))
           IvfIndex.search(assigned, qDf, model, k, nprobe)
         }
@@ -2089,7 +2036,7 @@ class Engine(
         // the next fold instead (correct, unpruned — the pre-change
         // behavior for ALL mutations).
         val tombMap = layout.map(stamp =>
-          cachedTombMap(hnswLayoutPath(coll), stamp)).getOrElse(Map.empty)
+          GraphAnn.localTombstones(hnswLayoutPath(coll), stamp)).getOrElse(Map.empty)
         layout match {
           case Some(_) if tombMap.size > maxServedTombstones =>
             liveGraphSearch()
@@ -2142,7 +2089,7 @@ class Engine(
               // knobs: same reconstruction, same beams, same (distance, id)
               // merge; delta rows exact-scanned with the kernels' exact
               // arithmetic and merged the same way.
-              val delta = cachedDeltaRows(hnswDeltaPath(coll), stamp)
+              val delta = GraphAnn.localDeltaRows(hnswDeltaPath(coll), stamp)
                 .filter { case (id, _, ver) => tombMap.get(id).forall(_ <= ver) }
                 .filter { case (id, _, _) => localElig.forall(_.contains(id)) }
                 .map { case (id, vec, _) => (id, vec) }
@@ -2212,18 +2159,18 @@ class Engine(
       case IndexType.Opq =>
         val opq = loadedOpq(coll)
         val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, opq.pq.nlist))
-        val layout = if (corpusIsFull) currentLayout(coll, opqLayoutPath(coll)) else None
+        val stamp = if (corpusIsFull) currentLayoutStamp(coll, opqLayoutPath(coll)) else None
         // zero-job point serve: rotate the query with the gated
         // LocalEncode.matVecMul twin of the codegen MatVecMul, shortlist in
         // rotated space through the PQ code-cell cache, exact re-rank in
         // ORIGINAL space (the distributed Opq.search shape exactly)
-        localRoute(layout, coll, queries, eligible, corpus) { (frame, stamp, chunk, elig) =>
-          localPqSearch(coll, opqLayoutPath(coll), frame, stamp, opq.pq,
+        localRoute(stamp, coll, queries, eligible, corpus) { (stamp, chunk, elig) =>
+          localPqSearch(coll, opqLayoutPath(coll), stamp, opq.pq,
             chunk, k, nprobe, elig,
             shortQueries = chunk.map { case (qid, v) =>
               (qid, graft.operators.LocalEncode.matVecMul(v, opq.rotation)) })
         }.getOrElse {
-          val encoded = layout.map(l => restrict(l._1))
+          val encoded = stamp.map(s => restrict(layoutFrame(opqLayoutPath(coll), s)))
             .getOrElse(Opq.encode(corpusEff, "vector", opq))
           Opq.search(encoded, qDf, opq, k, nprobe)
         }
@@ -2541,15 +2488,13 @@ class Engine(
       tMark = now
     }
     val lp = ivfLayoutPath(coll)
-    val layout = currentLayout(coll, lp)
-    if (layout.isEmpty) return None
-    val (frame, stamp) = layout.get
+    val stamp = currentLayoutStamp(coll, lp).getOrElse(return None)
     val model = loadedIvfOpt(coll).getOrElse(return None)
     val m = getParams(coll).getOrElse("maxsimCandM", 16)
     val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, model.nlist))
     lap("layout+model")
     val short = graft.operators.LocalIvfServe.searchPointLocalRowsNtok(spark,
-      lp, stamp, frame, model, tokQs, m, nprobe, maxQueries = 256)
+      lp, stamp, model, tokQs, m, nprobe, maxQueries = 256)
     if (short.isEmpty) return None
     lap("shortlists")
     def before(s: String): String = {

@@ -6,12 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
@@ -74,20 +74,49 @@ object LocalPointReader {
   // LocalFileSystem stack (FS resolution + ChecksumFileSystem stream +
   // crc verification) costs 10-45 ms of fixed setup per reader. Scheme'd
   // paths keep the Hadoop reader — that stack IS the remote store.
-  private class GroupReaderBuilder(in: org.apache.parquet.io.InputFile)
-      extends ParquetReader.Builder[Group](in) {
-    override protected def getReadSupport()
-        : org.apache.parquet.hadoop.api.ReadSupport[Group] =
-      new GroupReadSupport()
-  }
-
-  private def inputFile(f: String): org.apache.parquet.io.InputFile =
+  private[core] def inputFile(f: String): org.apache.parquet.io.InputFile =
     if (ControlFs.isLocalRoot(f)) new org.apache.parquet.io.LocalInputFile(Paths.get(f))
     else org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf)
 
-  private def readerBuilder(f: String): ParquetReader.Builder[Group] =
-    if (ControlFs.isLocalRoot(f)) new GroupReaderBuilder(inputFile(f))
-    else ParquetReader.builder(new GroupReadSupport(), new Path(f))
+  /** Read options over the ONE parsed serving configuration.
+    * `ParquetFileReader.open(InputFile)` without options builds (and on
+    * first use parses) a fresh Hadoop `Configuration` per open — measured
+    * as the dominant cost of a cold small-file decode. The options object
+    * itself is per reader: `ParquetFileReader.close` releases the options'
+    * codec factory, so readers on different threads must not share one.
+    */
+  private def readOptions(filter: FilterCompat.Filter): ParquetReadOptions =
+    HadoopReadOptions.builder(conf).withRecordFilter(filter).build()
+
+  /** An open reader of `f` — every driver-direct open goes through here. */
+  private[core] def open(f: String,
+      filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetFileReader =
+    new ParquetFileReader(inputFile(f), readOptions(filter))
+
+  /** Every record of an open reader, under `projected` (clipped from the
+    * file's own footer so repetition and types match its writer) when
+    * non-null, else every column. Row groups the reader's filter rules out
+    * by footer stats or dictionaries are never read; within a row group,
+    * records the filter rejects are skipped.
+    */
+  private[core] def records(r: ParquetFileReader, projected: MessageType,
+      filter: FilterCompat.Filter = FilterCompat.NOOP)(each: Group => Unit): Unit = {
+    val fileSchema = r.getFileMetaData.getSchema
+    val schema = if (projected == null) fileSchema else projected
+    if (projected != null) r.setRequestedSchema(projected)
+    val io = new ColumnIOFactory().getColumnIO(schema, fileSchema)
+    var pages = r.readNextRowGroup()
+    while (pages != null) {
+      val rows = io.getRecordReader(pages, new GroupRecordConverter(schema), filter)
+      var i = 0L
+      while (i < pages.getRowCount) {
+        val g = rows.read()
+        if (g != null && !rows.shouldSkipCurrentRecord) each(g)
+        i += 1
+      }
+      pages = r.readNextRowGroup()
+    }
+  }
 
   /** LWW winners for `ids` (absent / tombstoned ids omitted). */
   def readDocs(dataDir: String, ids: Set[String],
@@ -153,7 +182,7 @@ object LocalPointReader {
           val each: Group => Unit = g => offer(g.getString("id", 0),
             g.getLong("version", 0), g.getLong("seq", 0),
             g.getBoolean("is_deleted", 0),
-            Document(g.getString("id", 0), readVector(g), readParams(g)))
+            Document(g.getString("id", 0), readFloats(g, "vector"), readParams(g)))
           if (projected) scanWith(f, pred, probeSchema(f))(each)
           else scanWith(f, pred, null)(each)
         }
@@ -172,7 +201,17 @@ object LocalPointReader {
     * An absent dir reads as "no runs".
     */
   private[graft] def listRuns(dirStr: String,
-      maxVersion: Long = Long.MaxValue): Vector[String] = {
+      maxVersion: Long = Long.MaxValue): Vector[String] =
+    listing(dirStr, maxVersion)(_.toString, _.getPath.toString)
+
+  /** `listRuns` with each data file's length in bytes. */
+  private[graft] def listRunSizes(dirStr: String): Vector[(String, Long)] =
+    listing(dirStr, Long.MaxValue)(p => (p.toString, Files.size(p)),
+      s => (s.getPath.toString, s.getLen))
+
+  private def listing[T](dirStr: String, maxVersion: Long)(
+      local: java.nio.file.Path => T,
+      remote: org.apache.hadoop.fs.FileStatus => T): Vector[T] = {
     // visibility: a name-versioned run ABOVE the committed counter is an
     // uncommitted in-flight/crashed batch — never readable (RunNames)
     def isRun(n: String) = RunNames.isRun(n) &&
@@ -181,8 +220,8 @@ object LocalPointReader {
       val dir = Paths.get(dirStr)
       if (!Files.exists(dir)) return Vector.empty
       val s = Files.list(dir)
-      try s.iterator().asScala.map(_.toString)
-        .filter(p => isRun(p.substring(p.lastIndexOf('/') + 1))).toVector
+      try s.iterator().asScala
+        .filter(p => isRun(p.getFileName.toString)).map(local).toVector
       finally s.close()
     } else {
       val p = new Path(dirStr)
@@ -190,7 +229,7 @@ object LocalPointReader {
       if (!fs.exists(p)) return Vector.empty
       fs.listStatus(p).iterator
         .filter(s => s.isFile && isRun(s.getPath.getName))
-        .map(_.getPath.toString).toVector
+        .map(remote).toVector
     }
   }
 
@@ -334,27 +373,17 @@ object LocalPointReader {
     */
   private def decodeIfAdmissible(f: String): ResidentRun = {
     if (runMeta.get(f).exists(m => !admissible(m.sizeHint))) return null
-    val r = ParquetFileReader.open(inputFile(f))
+    val r = open(f)
     try {
-      val schema = r.getFileMetaData.getSchema
       // remembered only for a declined run — the fallback path reads it,
       // and an admitted run's footer is not needed again
       val meta = metaOf(r)
       if (!admissible(meta.rawBytes)) { runMeta.putIfAbsent(f, meta); return null }
       runOpens.incrementAndGet()
       val b = new RunBuilder
-      val io = new ColumnIOFactory().getColumnIO(schema)
-      var pages = r.readNextRowGroup()
-      while (pages != null) {
-        val rows = io.getRecordReader(pages, new GroupRecordConverter(schema))
-        var i = 0L
-        while (i < pages.getRowCount) {
-          val g = rows.read()
-          b.add(g.getString("id", 0), g.getLong("version", 0), g.getLong("seq", 0),
-            g.getBoolean("is_deleted", 0), readVector(g), readParams(g))
-          i += 1
-        }
-        pages = r.readNextRowGroup()
+      records(r, null) { g =>
+        b.add(g.getString("id", 0), g.getLong("version", 0), g.getLong("seq", 0),
+          g.getBoolean("is_deleted", 0), readFloats(g, "vector"), readParams(g))
       }
       val run = b.result()
       if (!admissible(run.bytes)) runMeta.put(f, meta.copy(decodedBytes = run.bytes))
@@ -473,7 +502,7 @@ object LocalPointReader {
   }
 
   private def metaFor(f: String): RunMeta = runMeta.get(f).getOrElse {
-    val r = ParquetFileReader.open(inputFile(f))
+    val r = open(f)
     val meta = try metaOf(r) finally r.close()
     runMeta.putIfAbsent(f, meta).getOrElse(meta)
   }
@@ -604,46 +633,57 @@ object LocalPointReader {
       s"run $f lacks the store probe columns (id/version/seq/is_deleted)"))
 
   /** Scan of one run, filtered by `pred` when non-null, under an explicit
-    * projected schema (clipped from the file's own footer so repetition
-    * and types match its writer) when non-null, else every column.
+    * projected schema when non-null, else every column (`records`).
     */
   private def scanWith(f: String,
       pred: org.apache.parquet.filter2.predicate.FilterPredicate,
       projected: MessageType)(each: Group => Unit): Unit = {
-    val fconf = if (projected == null) conf else {
-      val c = new Configuration(conf)
-      c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-        projected.toString)
-      c
-    }
-    var builder = readerBuilder(f).withConf(fconf)
-    if (pred != null) builder = builder.withFilter(FilterCompat.get(pred))
-    val reader = builder.build()
-    try {
-      var g = reader.read()
-      while (g != null) { each(g); g = reader.read() }
-    } finally reader.close()
+    val filter = if (pred == null) FilterCompat.NOOP else FilterCompat.get(pred)
+    val r = open(f, filter)
+    try records(r, projected, filter)(each)
+    finally r.close()
   }
 
-  /** `ARRAY<FLOAT>` from the parquet list encoding (3-level standard shape
-    * `vector.list.element`; tolerate a 2-level repeated-primitive writer).
+  /** A primitive LIST group's elements, through `get(container, i)`: the
+    * standard 3-level shape (`f.list.element`; Spark's writer) or a
+    * 2-level repeated-primitive writer's.
     */
-  private def readVector(g: Group): Array[Float] = {
-    if (g.getFieldRepetitionCount("vector") == 0) return null
-    val vg = g.getGroup("vector", 0)
-    val n = vg.getFieldRepetitionCount(0)
-    val out = new Array[Float](n)
-    val threeLevel = !vg.getType.getType(0).isPrimitive
+  private def listElems[A: scala.reflect.ClassTag](lg: Group)(
+      get: (Group, Int, Int) => A): Array[A] = {
+    val n = lg.getFieldRepetitionCount(0)
+    val threeLevel = !lg.getType.getType(0).isPrimitive
+    val out = new Array[A](n)
     var i = 0
     while (i < n) {
-      out(i) = if (threeLevel) vg.getGroup(0, i).getFloat(0, 0) else vg.getFloat(0, i)
+      out(i) = if (threeLevel) get(lg.getGroup(0, i), 0, 0) else get(lg, 0, i)
       i += 1
     }
     out
   }
 
+  /** `ARRAY<FLOAT>` (null when the field is null). */
+  private[core] def readFloats(g: Group, field: String): Array[Float] =
+    if (g.getFieldRepetitionCount(field) == 0) null
+    else listElems(g.getGroup(field, 0))((c, f, i) => c.getFloat(f, i))
+
+  /** `ARRAY<INT>` (null when the field is null). */
+  private[core] def readInts(g: Group, field: String): Array[Int] =
+    if (g.getFieldRepetitionCount(field) == 0) null
+    else listElems(g.getGroup(field, 0))((c, f, i) => c.getInteger(f, i))
+
+  /** `ARRAY<ARRAY<INT>>` in the standard 3-level shape (null when the
+    * field is null).
+    */
+  private[core] def readIntLists(g: Group, field: String): Array[Array[Int]] =
+    if (g.getFieldRepetitionCount(field) == 0) null
+    else {
+      val lg = g.getGroup(field, 0)
+      Array.tabulate(lg.getFieldRepetitionCount(0))(i =>
+        readInts(lg.getGroup(0, i), "element"))
+    }
+
   /** `MAP<STRING,STRING>` from the parquet key_value encoding. */
-  private def readParams(g: Group): Map[String, String] = {
+  private[core] def readParams(g: Group): Map[String, String] = {
     if (g.getFieldRepetitionCount("params") == 0) return Map.empty
     val pg = g.getGroup("params", 0)
     val n = pg.getFieldRepetitionCount(0)

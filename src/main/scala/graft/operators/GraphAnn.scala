@@ -463,9 +463,27 @@ object GraphAnn {
     _.residentBytes, () => maxLocalServeBytes)
   private val localIdTypes = scala.collection.concurrent.TrieMap
     .empty[(String, Long), org.apache.spark.sql.types.DataType]
+  // the driver-side decode of cell files and of the serving collection's
+  // `_tombstones`/`_delta` sidecars, under the same byte budget
+  private val localFiles = new graft.core.LayoutFiles(() => maxLocalServeBytes)
+  private val CellCols = Seq("id", "ord", "vector", "links")
+
+  /** A graph layout's `_tombstones` sidecar as id → max ver at `stamp`,
+    * read on the driver (no job; re-listed per call).
+    */
+  private[graft] def localTombstones(layoutPath: String, stamp: Long): Map[Any, Long] =
+    localFiles.tombstones(s"$layoutPath/_tombstones", stamp)
+
+  /** A graph layout's `_delta` sidecar rows (id, vector, version) at
+    * `stamp`, read on the driver (no job; re-listed per call).
+    */
+  private[graft] def localDeltaRows(deltaPath: String,
+      stamp: Long): Array[(Any, Array[Float], Long)] =
+    localFiles.deltaRows(deltaPath, stamp)
 
   private[operators] def dropLocalCells(layoutIdPrefix: String): Unit = {
     localCellCache.drop(layoutIdPrefix)
+    localFiles.drop(layoutIdPrefix)
     localIdTypes.keys.filter(_._1.startsWith(layoutIdPrefix))
       .foreach(localIdTypes.remove)
   }
@@ -476,7 +494,7 @@ object GraphAnn {
     localIdTypes.remove((layoutId, version))
 
   private[operators] def clearLocalCells(): Unit = {
-    localCellCache.clear(); localIdTypes.clear()
+    localCellCache.clear(); localFiles.clear(); localIdTypes.clear()
   }
 
   // test/ops hooks (stable names; backed by the shared cache's counters):
@@ -486,14 +504,14 @@ object GraphAnn {
   def localCellHits: java.util.concurrent.atomic.AtomicLong = localCellCache.hits
   def localCellMisses: java.util.concurrent.atomic.AtomicLong = localCellCache.misses
   def localCellEvictions: java.util.concurrent.atomic.AtomicLong = localCellCache.evictions
-  // schema re-inferences after an idType eviction (driver-side footer read,
-  // no job) — kept distinct from loads so loads == "requests that collected
-  // cell rows" stays reconcilable with misses
+  // id-type refreshes after an idType eviction (driver-side footer read,
+  // no job) — kept distinct from loads so loads == "requests that built
+  // cells" stays reconcilable with misses
   val localIdTypeRefreshes = new java.util.concurrent.atomic.AtomicLong(0)
   // probed cells served via the distributed fallback because their
   // estimated resident size exceeds the whole local byte budget
   val localCellOversized = new java.util.concurrent.atomic.AtomicLong(0)
-  // parquet bytes → resident-heap expansion guess for the pre-collect size
+  // parquet bytes → resident-heap expansion guess for the pre-decode size
   // check: float vectors and int adjacency compress modestly, and JVM
   // object/array headers add more — 2× is deliberately conservative (errs
   // toward the safe distributed path for borderline cells)
@@ -513,20 +531,23 @@ object GraphAnn {
     "local_serve_misses" -> localCellMisses.get(),
     "local_serve_evictions" -> localCellEvictions.get(),
     "local_serve_idtype_refreshes" -> localIdTypeRefreshes.get(),
-    "local_serve_oversized" -> localCellOversized.get())
+    "local_serve_oversized" -> localCellOversized.get()) ++
+    localFiles.metrics("local_serve")
 
   /** ZERO-SPARK-JOB point serving over a routed layout: beams run on the
     * DRIVER against cached cell graphs, so a warm single-query request
     * launches no job at all — the ~100–300 ms Spark job-scheduling floor
     * the latency harness measures on the pruned path disappears, leaving
     * in-memory beam cost (µs–ms). Cold cells load once per (layout,
-    * version) via ONE partition-pruned job covering every missing probed
-    * cell. This is the architecture serving deployments actually run:
-    * Spark builds/maintains the layout, a thin reader serves points from
-    * it. Results are IDENTICAL to `searchRoutedPruned` at equal knobs
-    * (same reconstruction, same beams, same (distance, id) merge order);
-    * `deltaRows` (streaming inserts since buildIndex, collected + cached
-    * by the caller) are exact-scanned with the codegen kernels' exact
+    * version), decoded on the driver from the probed cells' partition dirs
+    * (`LayoutFiles`; no job either) — only a cell too large for the byte
+    * budget is served by a bounded distributed job. This is the
+    * architecture serving deployments actually run: Spark
+    * builds/maintains the layout, a thin reader serves points from it.
+    * Results are IDENTICAL to `searchRoutedPruned` at equal knobs (same
+    * reconstruction, same beams, same (distance, id) merge order);
+    * `deltaRows` (streaming inserts since buildIndex, read by the caller —
+    * `localDeltaRows`) are exact-scanned with the codegen kernels' exact
     * arithmetic and merged, mirroring the distributed delta union.
     */
   def searchPointLocal(
@@ -547,7 +568,7 @@ object GraphAnn {
       eligible: Option[Set[Any]] = None): DataFrame = {
     require(routeNprobe >= 1, s"routeNprobe must be >= 1, got $routeNprobe")
     val (layoutId, version) = cacheKey.getOrElse((path, 0L))
-    val cents = loadRouteCentroids(spark, path, cacheKey)
+    val cents = loadRouteCentroids(path, cacheKey)
     val effNprobe = math.min(routeNprobe, cents.length)
     val mdl = IvfIndex.Model(cents, space)
     val qRows = queries.select(col(queryId), col(queryVec)).collect()
@@ -575,31 +596,36 @@ object GraphAnn {
     // makes eviction a pure reload cost, never a correctness event.
     //
     // Resolution is the SHARED LocalCellResolve.resolveSplit (one probe /
-    // oversized-pre-check / pruned-collect implementation across all
-    // zero-job tiers) in its per-cell mode: loadable misses collect and
-    // cache in ONE pruned job; a cell whose estimated resident bytes
-    // exceed the whole budget is never collected — its hits come from a
-    // bounded distributed pruned job below instead (≤ queries × k rows
-    // back, same reconstruction + beam, executor GraphCache amortizes the
-    // rebuild).
+    // oversized-pre-check / driver-decode implementation across all
+    // zero-job tiers) in its per-cell mode: loadable misses are decoded
+    // from their partition dirs and cached, with no job; a cell whose
+    // estimated resident bytes exceed the whole budget is never decoded —
+    // its hits come from a bounded distributed pruned job below instead
+    // (≤ queries × k rows back, same reconstruction + beam, executor
+    // GraphCache amortizes the rebuild).
     lazy val graphAll = readLayoutGraph(spark, path)
     var idTypeOpt = localIdTypes.get((layoutId, version))
     if (idTypeOpt.isEmpty) {
-      // schema refresh is DRIVER-SIDE footer inference, not a job — and
-      // it is counted separately so loads/misses stay reconcilable
-      // (previously an all-hits request with an evicted idType ran a
-      // no-row load job that grew local_serve_loads with misses flat)
+      // the id type comes from a data file's footer on the driver, not a
+      // job — and it is counted separately so loads/misses stay
+      // reconcilable
       localIdTypeRefreshes.incrementAndGet()
-      idTypeOpt = Some(graphAll.schema("id").dataType)
+      idTypeOpt = Some(try localFiles.idType(path) catch {
+        case _: graft.core.LayoutFiles.UnsupportedIdType => graphAll.schema("id").dataType
+      })
       localIdTypes.keys.filter(kk => kk._1 == layoutId && kk._2 != version)
         .foreach(localIdTypes.remove) // superseded epochs must not pile up
       localIdTypes.putIfAbsent((layoutId, version), idTypeOpt.get)
     }
     val (held, oversized) = LocalCellResolve.resolveSplit[NswIndex](
-      localCellCache, layoutId, version, path, "part",
-      graphAll, needed, maxLocalServeBytes,
-      df => df, rs => reconstructCell(rs, space))
-    // per-query hits from cells too big to collect (filled below)
+      localCellCache, localFiles, layoutId, version, path, "part",
+      needed, maxLocalServeBytes, CellCols, parts => {
+        val rows = parts.flatMap { case (f, rs) =>
+          rs.iterator.map(i => (f.ords(i), f.ids(i), f.vectors(i), f.links(i)))
+        }
+        reconstruct(rows, space)
+      })
+    // per-query hits from cells too big to decode locally (filled below)
     var oversizedHits = Map.empty[Int, Array[(Any, Double)]]
     if (oversized.nonEmpty) {
         localCellOversized.addAndGet(oversized.length.toLong)
@@ -735,21 +761,20 @@ object GraphAnn {
       col("vector"), links.as("links"))
   }
 
-  /** Centroids of a routed layout's `_route` sidecar, id-sorted; cached per
-    * (layout id, version) when a cacheKey is given. A layout without the
+  /** Centroids of a routed layout's `_route` sidecar, id-sorted and read on
+    * the driver (no job); cached per (layout id, version) when a cacheKey
+    * is given. A layout without the
     * sidecar (plain `buildLayout`) fails with an actionable message rather
     * than a raw missing-path error.
     */
-  private def loadRouteCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String, cacheKey: Option[(String, Long)]): Array[Array[Float]] = {
+  private def loadRouteCentroids(path: String,
+      cacheKey: Option[(String, Long)]): Array[Array[Float]] = {
     def load(): Array[Array[Float]] = {
       val side = new org.apache.hadoop.fs.Path(s"$path/_route")
-      val fs = side.getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = side.getFileSystem(graft.core.ControlFs.servingConf())
       require(fs.exists(side), s"$path has no _route sidecar " +
         "(write the layout with buildRoutedLayout to use routeNprobe)")
-      val cents = spark.read.parquet(s"$path/_route").collect()
-        .sortBy(_.getInt(0))
-        .map(_.getAs[scala.collection.Seq[Float]](1).toArray)
+      val cents = graft.core.LayoutFiles.routeCentroids(s"$path/_route")
       require(cents.nonEmpty, s"$path/_route exists but holds no centroids")
       cents
     }
@@ -1370,7 +1395,7 @@ object GraphAnn {
     // a recall superset, never an error on the serving path.
     val routeModel = routeNprobe.map { p =>
       require(p >= 1, s"routeNprobe must be >= 1, got $p")
-      IvfIndex.Model(loadRouteCentroids(spark, path, cacheKey), space)
+      IvfIndex.Model(loadRouteCentroids(path, cacheKey), space)
     }
     val effNprobe = routeModel.map(m => math.min(routeNprobe.get, m.nlist))
     // the executor cache key must name the CELL STRUCTURE, not the observed
@@ -1459,15 +1484,21 @@ object GraphAnn {
     * Shared by the batch and point-serve reload paths, so their executor
     * cache entries are interchangeable.
     */
-  private def reconstructCell(rs: Array[Row], space: SpaceType): NswIndex = {
-    val sorted = rs.sortBy(_.getInt(1))
-    val dim = sorted(0).getAs[scala.collection.Seq[Float]](3).length
-    val index = new NswIndex(dim, 16, 200, space) // reconstruction never inserts
-    sorted.foreach { r =>
-      index.loadRaw(r.get(2), r.getAs[scala.collection.Seq[Float]](3).toArray,
-        r.getAs[scala.collection.Seq[scala.collection.Seq[Int]]](4)
-          .map(_.toArray).toArray)
-    }
+  private def reconstructCell(rs: Array[Row], space: SpaceType): NswIndex =
+    reconstruct(rs.toSeq.map(r => (r.getInt(1), r.get(2),
+      r.getAs[scala.collection.Seq[Float]](3).toArray,
+      r.getAs[scala.collection.Seq[scala.collection.Seq[Int]]](4)
+        .map(_.toArray).toArray)), space)
+
+  /** The graph of (ord, id, vector, per-layer links) rows, replayed in
+    * ord order — the one reconstruction the executor (`reconstructCell`)
+    * and driver-decoded cells share.
+    */
+  private def reconstruct(rows: Seq[(Int, Any, Array[Float], Array[Array[Int]])],
+      space: SpaceType): NswIndex = {
+    val sorted = rows.sortBy(_._1)
+    val index = new NswIndex(sorted.head._3.length, 16, 200, space) // never inserts
+    sorted.foreach { case (_, id, v, links) => index.loadRaw(id, v, links) }
     index
   }
 
@@ -1499,7 +1530,7 @@ object GraphAnn {
       excludeIds: Set[Any] = Set.empty): DataFrame = {
     import graft.functions.vfn
     require(routeNprobe >= 1, s"routeNprobe must be >= 1, got $routeNprobe")
-    val cents = loadRouteCentroids(spark, path, cacheKey)
+    val cents = loadRouteCentroids(path, cacheKey)
     // clamp like the batch path: nprobe beyond the trained cell count is
     // full fan-out, not an error (trained count < configured nlist happens
     // whenever k-means saw fewer points than k)

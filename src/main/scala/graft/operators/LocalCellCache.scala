@@ -1,14 +1,16 @@
 package graft.operators
 
 /** Driver-resident cell cache shared by the zero-job serving tiers
-  * (`LocalIvfServe` vectors, `LocalPqServe` codes; the graph tier keeps its
-  * own — it additionally tracks id types and ephemeral builds): entries
-  * keyed (layout path, stamp, cell), bounded by resident BYTES and entry
-  * count with insertion-order eviction, superseded stamps of a layout
-  * evicted on insert. `None` entries cache "the layout holds no rows for
-  * this cell" so probing an empty cell never re-collects. In-flight
-  * requests hold direct references to the cells they use, so concurrent
-  * eviction is a reload cost, never a correctness event.
+  * (`LocalIvfServe` vectors, `LocalPqServe` codes, `GraphAnn` cell graphs;
+  * the graph tier also tracks id types and ephemeral builds): entries keyed
+  * (layout path, stamp, cell), bounded by resident BYTES and entry count
+  * with insertion-order eviction, superseded stamps of a layout evicted on
+  * insert. Cells are built on the driver from the tier's `LayoutFiles`
+  * (decoded parquet, no Spark job), so a re-stamp's reloads cost a listing
+  * plus the decode of the files it added. `None` entries cache "the layout
+  * holds no rows for this cell" so probing an empty cell never re-lists.
+  * In-flight requests hold direct references to the cells they use, so
+  * concurrent eviction is a reload cost, never a correctness event.
   */
 private[graft] final class LocalCellCache[C](maxCells: Int,
     bytesOf: C => Long, maxBytes: () => Long) {

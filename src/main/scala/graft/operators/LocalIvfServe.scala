@@ -1,18 +1,19 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.SpaceType
+import graft.core.{LayoutFile, LayoutFiles, SpaceType}
 import graft.kernels.VecKernels
 
 /** Shared plumbing of the zero-job cell-serving tiers: resolve a request's
-  * probed cells against a `LocalCellCache` — cache hits held by direct
-  * reference, the oversized pre-check from the parquet listing (driver-side,
-  * no job), and ONE partition-pruned collect for all misses from the
-  * caller's tombstone-applied layout frame (shadowing semantics shared with
-  * the distributed plan by construction, not re-derived).
+  * probed cells against a `LocalCellCache`. Cache hits are held by direct
+  * reference. Misses are listed (driver-side, no job), checked against the
+  * byte budget by their parquet footprint, and built from the tier's
+  * `LayoutFiles` reader: each cell is its partition dir's rows at the
+  * layout stamp, decoded on the driver from immutable files that are
+  * memoized across stamps — a re-stamp after a write re-reads only the
+  * files the write added, and no cell load launches a Spark job.
   */
 private[graft] object LocalCellResolve {
 
@@ -31,83 +32,90 @@ private[graft] object LocalCellResolve {
     (held, missing)
   }
 
-  /** Partition `missing` into (oversized, loadable) by the parquet disk
-    * footprint of each cell's partition dir (driver-side listing, no job):
-    * a cell whose estimated RESIDENT size exceeds the whole byte budget
-    * must never be collected to the driver.
+  /** The data files of each missing cell's partition dir, split into
+    * (oversized, loadable) by their parquet footprint: a cell whose
+    * estimated RESIDENT size exceeds the whole byte budget must never be
+    * decoded on the driver.
     */
-  private def splitOversized(fsPath: String,
-      partCol: String, missing: Seq[Int], maxBytes: Long): (Seq[Int], Seq[Int]) = {
-    val fsBase = new org.apache.hadoop.fs.Path(fsPath)
-    // the memoized serving conf: newHadoopConf() copies the whole conf,
-    // once per cell miss
-    val fsys = fsBase.getFileSystem(graft.core.ControlFs.servingConf())
-    missing.partition { c =>
-      val dir = new org.apache.hadoop.fs.Path(fsBase, s"$partCol=$c")
-      val disk = if (fsys.exists(dir)) fsys.getContentSummary(dir).getLength else 0L
-      disk * GraphAnn.LocalServeDiskExpansion > maxBytes
+  private def listCells(fsPath: String, partCol: String, missing: Seq[Int],
+      maxBytes: Long): (Seq[Int], Seq[(Int, Vector[String])]) = {
+    val listed = missing.map { c =>
+      (c, graft.core.LocalPointReader.listRunSizes(s"$fsPath/$partCol=$c"))
     }
+    val (over, ok) = listed.partition { case (_, files) =>
+      files.map(_._2).sum * GraphAnn.LocalServeDiskExpansion > maxBytes
+    }
+    (over.map(_._1), ok.map { case (c, files) => (c, files.map(_._1)) })
   }
 
-  /** ONE partition-pruned collect for every cell in `toLoad`, built and
-    * inserted under (keyPath, stamp, cell); absent cells cache as None.
+  /** Build and insert every cell of `toLoad` under (keyPath, stamp, cell)
+    * from its files' rows visible in `snapshot`; cells without rows cache
+    * as None. One load per request with misses.
     */
-  private def load[C](cache: LocalCellCache[C], keyPath: String, stamp: Long,
-      partCol: String, layoutFrame: DataFrame, toLoad: Seq[Int],
-      select: DataFrame => DataFrame, build: Array[Row] => C,
+  private def load[C](cache: LocalCellCache[C], files: LayoutFiles,
+      keyPath: String, stamp: Long, toLoad: Seq[(Int, Vector[String])],
+      columns: Seq[String], snapshot: Option[(Long, Map[Any, Long])],
+      build: Seq[(LayoutFile, Array[Int])] => C,
       held: scala.collection.mutable.Map[Int, Option[C]]): Unit = {
-    val byCell = select(layoutFrame
-        .filter(col(partCol).isin(toLoad.map(Int.box): _*)))
-      .collect().groupBy(_.getInt(0))
+    val built = toLoad.map { case (c, fs) =>
+      val rows = files.cellRows(fs, columns, snapshot)
+      c -> (if (rows.isEmpty) None else Some(build(rows)))
+    }
     cache.loads.incrementAndGet()
-    toLoad.foreach { c =>
-      val cell = byCell.get(c).map(build)
+    built.foreach { case (c, cell) =>
       held(c) = cell
       cache.insert((keyPath, stamp, c), cell)
     }
   }
 
-  /** None = a probed cell's disk footprint exceeds the whole byte budget —
-    * the caller declines the REQUEST to the distributed plan (nothing is
-    * collected on the decline path).
+  /** The probed cells of the layout at `path` as of `stamp`: its
+    * `cluster_id=N` dirs, rows with `version ≤ stamp` less those its
+    * `_tombstones` sidecar shadows at that stamp. None = a probed cell's
+    * disk footprint exceeds the whole byte budget, or its ids are of a type
+    * the driver decode does not map — the caller declines the REQUEST to
+    * the distributed plan (nothing is decoded on the decline path).
     */
-  def resolve[C](cache: LocalCellCache[C], path: String,
-      stamp: Long, layoutFrame: => DataFrame, needed: Seq[Int], maxBytes: Long,
-      select: DataFrame => DataFrame,
-      build: Array[Row] => C): Option[collection.Map[Int, Option[C]]] = {
+  def resolve[C](cache: LocalCellCache[C], files: LayoutFiles, path: String,
+      stamp: Long, needed: Seq[Int], maxBytes: Long, columns: Seq[String],
+      build: Seq[(LayoutFile, Array[Int])] => C): Option[collection.Map[Int, Option[C]]] = {
     val (held, missing) = probe(cache, path, stamp, needed)
     if (missing.nonEmpty) {
-      val (oversized, loadable) =
-        splitOversized(path, "cluster_id", missing, maxBytes)
+      val (oversized, loadable) = listCells(path, "cluster_id", missing, maxBytes)
       if (oversized.nonEmpty) {
         cache.oversizedDeclines.incrementAndGet(); return None
       }
-      load(cache, path, stamp, "cluster_id", layoutFrame, loadable,
-        select, build, held)
+      try {
+        val tombs = files.tombstones(s"$path/_tombstones", stamp)
+        load(cache, files, path, stamp, loadable, columns,
+          Some((stamp, tombs)), build, held)
+      } catch { case _: LayoutFiles.UnsupportedIdType => return None }
     }
     Some(held)
   }
 
-  /** The graph tier's PER-CELL variant: loadable misses are collected and
-    * cached, oversized ones are returned for the caller to serve through a
+  /** The graph tier's PER-CELL variant: loadable misses are built and
+    * cached, the rest are returned for the caller to serve through a
     * bounded distributed job instead (the request proceeds either way —
-    * the graph tier never declines wholesale). `keyPath` keys the cache
-    * (a layout id, possibly ephemeral); `fsPath` locates the partition
-    * dirs on disk; `partCol` is the layout's partition column name.
+    * the graph tier never declines wholesale): oversized cells, and every
+    * miss when the layout's ids are of a type the driver decode does not
+    * map. Graph adjacency is versionless (the caller excludes tombstoned
+    * hits), so every row of a cell's files is kept. `keyPath` keys the
+    * cache (a layout id, possibly ephemeral); `fsPath` locates the
+    * partition dirs on disk; `partCol` is the layout's partition column.
     */
-  def resolveSplit[C](cache: LocalCellCache[C],
+  def resolveSplit[C](cache: LocalCellCache[C], files: LayoutFiles,
       keyPath: String, stamp: Long, fsPath: String, partCol: String,
-      layoutFrame: => DataFrame, needed: Seq[Int], maxBytes: Long,
-      select: DataFrame => DataFrame, build: Array[Row] => C)
+      needed: Seq[Int], maxBytes: Long, columns: Seq[String],
+      build: Seq[(LayoutFile, Array[Int])] => C)
       : (scala.collection.mutable.Map[Int, Option[C]], Seq[Int]) = {
     val (held, missing) = probe(cache, keyPath, stamp, needed)
     if (missing.isEmpty) return (held, Nil)
-    val (oversized, loadable) =
-      splitOversized(fsPath, partCol, missing, maxBytes)
-    if (loadable.nonEmpty)
-      load(cache, keyPath, stamp, partCol, layoutFrame, loadable,
-        select, build, held)
-    (held, oversized)
+    val (oversized, loadable) = listCells(fsPath, partCol, missing, maxBytes)
+    try {
+      if (loadable.nonEmpty)
+        load(cache, files, keyPath, stamp, loadable, columns, None, build, held)
+      (held, oversized)
+    } catch { case _: LayoutFiles.UnsupportedIdType => (held, missing) }
   }
 }
 
@@ -115,30 +123,34 @@ private[graft] object LocalCellResolve {
   * `GraphAnn.searchPointLocal` architecture applied to the ivf_flat tier
   * (reference `internal/index/ivf.go` Search semantics, served like the
   * driver-local tiers): probe lists come from the driver-resident coarse
-  * centroids, probed CELLS are collected once per (layout, stamp) into a
-  * budget-bounded driver cache, and warm single/few-query requests rank
-  * entirely in-JVM — the ~100–300 ms per-request Spark stage-scheduling
-  * floor the latency harness measures on the distributed pruned path
-  * disappears.
+  * centroids, probed CELLS are built once per (layout, stamp) into a
+  * budget-bounded driver cache, and single/few-query requests rank
+  * entirely in-JVM. Neither a warm request nor a cold cell launches a
+  * Spark job: cells are decoded on the driver from the layout's parquet
+  * files (`LayoutFiles`), so the first search after a maintained write
+  * costs a directory listing and the decode of the files that write added,
+  * not the ~100–300 ms per-job scheduling floor of the distributed plan.
   *
   * Results are IDENTICAL to `IvfIndex.search`/`searchDistributed` at equal
   * knobs, by construction: the same `Model.probe` (same coarse metric and
   * (distance, index) centroid tie-break), distances through the SAME
   * `VecKernels` arithmetic the codegen expressions inline, ranking by
   * (distance asc, id asc) with the UTF-8-byte id order the distributed
-  * ties use (`GraphAnn.idLt`), and cells loaded from the SAME
-  * tombstone-applied layout frame the distributed plan scans — so
-  * tombstone/version shadowing semantics are literally the one Catalyst
-  * plan, not a re-implementation (`LocalIvfParitySpec` gates equality,
-  * including ties, deletes, and filtered serving).
+  * ties use (`GraphAnn.idLt`), and cells holding exactly the rows of the
+  * tombstone-applied frame the distributed plan scans — a cell at stamp
+  * `s` is its partition dir's rows with `version ≤ s`, less those a
+  * tombstone with `ver ≤ s` shadows (`applyTombstones`' rule).
+  * `LocalIvfParitySpec` gates equality, including ties, maintained
+  * upserts, overwrites, deletes, and filtered serving.
   *
   * Scale: the cache holds probed cells only, bounded by resident BYTES
-  * (dim-aware) and entry count with insertion-order eviction; a cell whose
-  * parquet footprint says it cannot fit the whole budget is never
-  * collected — the request declines (returns None) and the caller serves
-  * it through the distributed partition-pruned plan instead. In-flight
-  * requests hold direct references, so concurrent eviction is a reload
-  * cost, never a correctness event.
+  * (dim-aware) and entry count with insertion-order eviction, and the
+  * decoded-file memo under the same byte budget; a cell whose parquet
+  * footprint says it cannot fit the whole budget is never decoded — the
+  * request declines (returns None) and the caller serves it through the
+  * distributed partition-pruned plan instead. In-flight requests hold
+  * direct references, so concurrent eviction is a reload cost, never a
+  * correctness event.
   */
 object LocalIvfServe {
 
@@ -157,32 +169,47 @@ object LocalIvfServe {
     }
   }
 
+  private def cellOf(parts: Seq[(LayoutFile, Array[Int])]): Cell = {
+    val n = parts.map(_._2.length).sum
+    val ids = new Array[Any](n)
+    val vecs = new Array[Array[Float]](n)
+    val ntoks = new Array[Int](n)
+    var j = 0
+    parts.foreach { case (f, rows) =>
+      rows.foreach { i =>
+        ids(j) = f.ids(i); vecs(j) = f.vectors(i)
+        ntoks(j) = if (f.ntoks == null) -1 else f.ntoks(i)
+        j += 1
+      }
+    }
+    Cell(ids, vecs, ntoks)
+  }
+
   /** Driver-heap bound in resident BYTES (the same reasoning as
-    * `GraphAnn.maxLocalServeBytes`); operable knob, default 1 GiB.
+    * `GraphAnn.maxLocalServeBytes`); operable knob, default 1 GiB. Bounds
+    * the cell cache and the decoded-file memo each.
     */
   @volatile var maxLocalIvfBytes: Long = 1L << 30
 
   private val cache = new LocalCellCache[Cell](256, _.residentBytes,
     () => maxLocalIvfBytes)
-  private val idTypes = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), DataType]
+  private val files = new LayoutFiles(() => maxLocalIvfBytes)
+  private val CellCols = Seq("id", "version", "vector", "params")
 
-  def metrics: Map[String, Long] = cache.metrics("ivf_local", maxLocalIvfBytes)
+  def metrics: Map[String, Long] =
+    cache.metrics("ivf_local", maxLocalIvfBytes) ++ files.metrics("ivf_local")
 
   private[graft] def dropCells(layoutIdPrefix: String): Unit = {
-    cache.drop(layoutIdPrefix)
-    idTypes.keys.filter(_._1.startsWith(layoutIdPrefix)).foreach(idTypes.remove)
+    cache.drop(layoutIdPrefix); files.drop(layoutIdPrefix)
   }
 
-  private[graft] def clearCells(): Unit = { cache.clear(); idTypes.clear() }
+  private[graft] def clearCells(): Unit = { cache.clear(); files.clear() }
 
   /** Serve `queries` (driver pairs of (qid, vector)) from driver-cached
-    * cells of the layout at `path`/`stamp`. `layoutFrame` is the
-    * TOMBSTONE-APPLIED layout frame the distributed plan would scan (the
-    * caller's stamp-keyed handle) — cold cells load from it with ONE
-    * partition-pruned collect; warm requests launch no job. `eligible`
-    * mirrors the distributed semi-join restriction (probe lists stay
-    * geometry-pruned, rows filter by id — the ivf tier's filtered
+    * cells of the layout at `path` as of `stamp` — cold cells are decoded
+    * from the layout's files, warm ones are held; neither launches a job.
+    * `eligible` mirrors the distributed semi-join restriction (probe lists
+    * stay geometry-pruned, rows filter by id — the ivf tier's filtered
     * semantics, unlike the graph tier's full fan-out). Returns None —
     * caller falls back to the distributed plan — when a probed cell's disk
     * footprint says it cannot fit the byte budget.
@@ -191,29 +218,25 @@ object LocalIvfServe {
       spark: SparkSession,
       path: String,
       stamp: Long,
-      layoutFrame: => DataFrame,
       model: IvfIndex.Model,
       queries: Seq[(Any, Array[Float])],
       k: Int,
       nprobe: Int,
       qidType: DataType,
       eligible: Option[Set[Any]] = None,
-      maxQueries: Int = 64): Option[DataFrame] =
-    searchPointLocalRows(spark, path, stamp, layoutFrame, model, queries, k,
-      nprobe, eligible, maxQueries).map { rows =>
-      val idType = idTypes.getOrElseUpdate((path, stamp), {
-        idTypes.keys.filter(kk => kk._1 == path && kk._2 != stamp)
-          .foreach(idTypes.remove)
-        layoutFrame.schema("id").dataType
-      })
-      val schema = StructType(Seq(
-        StructField("query_id", qidType),
-        StructField("id", idType),
-        StructField("distance", DoubleType),
-        StructField("rnk", LongType)))
-      spark.createDataFrame(java.util.Arrays.asList(
-        rows.map(r => Row(r._1, r._2, r._3, r._4)): _*), schema)
-    }
+      maxQueries: Int = 64): Option[DataFrame] = {
+    val rows = searchPointLocalRows(spark, path, stamp, model, queries, k,
+      nprobe, eligible, maxQueries).getOrElse(return None)
+    val idType = try files.idType(path)
+      catch { case _: LayoutFiles.UnsupportedIdType => return None }
+    val schema = StructType(Seq(
+      StructField("query_id", qidType),
+      StructField("id", idType),
+      StructField("distance", DoubleType),
+      StructField("rnk", LongType)))
+    Some(spark.createDataFrame(java.util.Arrays.asList(
+      rows.map(r => Row(r._1, r._2, r._3, r._4)): _*), schema))
+  }
 
   /** Driver-rows twin of `searchPointLocal` — (qid, id, distance, rnk)
     * tuples with no DataFrame wrapper, for driver-side consumers (the local
@@ -224,14 +247,13 @@ object LocalIvfServe {
       spark: SparkSession,
       path: String,
       stamp: Long,
-      layoutFrame: => DataFrame,
       model: IvfIndex.Model,
       queries: Seq[(Any, Array[Float])],
       k: Int,
       nprobe: Int,
       eligible: Option[Set[Any]] = None,
       maxQueries: Int = 64): Option[Seq[(Any, Any, Double, Long)]] =
-    searchPointLocalRowsNtok(spark, path, stamp, layoutFrame, model, queries,
+    searchPointLocalRowsNtok(spark, path, stamp, model, queries,
       k, nprobe, eligible, maxQueries)
       .map(_.map(t => (t._1, t._2, t._3, t._4)))
 
@@ -242,7 +264,6 @@ object LocalIvfServe {
       spark: SparkSession,
       path: String,
       stamp: Long,
-      layoutFrame: => DataFrame,
       model: IvfIndex.Model,
       queries: Seq[(Any, Array[Float])],
       k: Int,
@@ -258,17 +279,8 @@ object LocalIvfServe {
     val probed: Array[Seq[Int]] =
       queries.toArray.map(q => model.probe(q._2, nprobe))
     val needed = probed.flatten.distinct.sorted
-    val heldOpt = LocalCellResolve.resolve[Cell](cache, path, stamp,
-      layoutFrame, needed, maxLocalIvfBytes,
-      // try_element_at: null-safe under ANSI (plain element_at throws on
-      // a missing key); single-vector rows read -1
-      df => df.select(col("cluster_id").cast("int"), col("id"),
-        col("vector").cast("array<float>"),
-        coalesce(expr("try_element_at(params, '__ntok')").cast("int"),
-          lit(-1))),
-      rs => Cell(rs.map(_.get(1): Any),
-        rs.map(r => r.getAs[scala.collection.Seq[Float]](2).toArray),
-        rs.map(_.getInt(3))))
+    val heldOpt = LocalCellResolve.resolve[Cell](cache, files, path, stamp,
+      needed, maxLocalIvfBytes, CellCols, cellOf)
     if (heldOpt.isEmpty) return None
     val held = heldOpt.get
     val out = Seq.newBuilder[(Any, Any, Double, Long, Int)]
@@ -316,7 +328,9 @@ object LocalIvfServe {
   * codegen `AdcLookupSum`, and rank (distance asc, id asc UTF-8). The
   * caller (Engine) re-ranks the tiny shortlist exactly against true vectors
   * fetched through the zero-job point reads — `LocalPqParitySpec` gates the
-  * end-to-end equality with `IvfPq.search`.
+  * end-to-end equality with `IvfPq.search`. Code cells are decoded on the
+  * driver from the layout's files at the layout stamp, exactly like
+  * `LocalIvfServe`'s vector cells: no cell load launches a Spark job.
   */
 object LocalPqServe {
 
@@ -329,18 +343,29 @@ object LocalPqServe {
     }
   }
 
-  /** Byte budget knob (codes are tiny — the default holds ~100M rows). */
+  private def cellOf(parts: Seq[(LayoutFile, Array[Int])]): Cell = {
+    val rows = parts.flatMap { case (f, rs) => rs.iterator.map(i => (f.ids(i), f.codes(i))) }
+    Cell(rows.map(_._1).toArray, rows.map(_._2).toArray)
+  }
+
+  /** Byte budget knob (codes are tiny — the default holds ~100M rows).
+    * Bounds the cell cache and the decoded-file memo each.
+    */
   @volatile var maxLocalPqBytes: Long = 1L << 30
 
   private val cache = new LocalCellCache[Cell](256, _.residentBytes,
     () => maxLocalPqBytes)
+  private val files = new LayoutFiles(() => maxLocalPqBytes)
+  private val CellCols = Seq("id", "version", "codes")
 
-  def metrics: Map[String, Long] = cache.metrics("pq_local", maxLocalPqBytes)
+  def metrics: Map[String, Long] =
+    cache.metrics("pq_local", maxLocalPqBytes) ++ files.metrics("pq_local")
 
-  private[graft] def dropCells(layoutIdPrefix: String): Unit =
-    cache.drop(layoutIdPrefix)
+  private[graft] def dropCells(layoutIdPrefix: String): Unit = {
+    cache.drop(layoutIdPrefix); files.drop(layoutIdPrefix)
+  }
 
-  private[graft] def clearCells(): Unit = cache.clear()
+  private[graft] def clearCells(): Unit = { cache.clear(); files.clear() }
 
   /** The ADC SHORTLIST — (qid, id, adcDistance, rnk) rows, `shortlistK` per
     * query — from driver-cached code cells. The exact re-rank (and with it
@@ -352,7 +377,6 @@ object LocalPqServe {
       spark: SparkSession,
       path: String,
       stamp: Long,
-      layoutFrame: => DataFrame,
       model: IvfPq.Model,
       queries: Seq[(Any, Array[Float])],
       shortlistK: Int,
@@ -370,12 +394,8 @@ object LocalPqServe {
     val probed: Array[Seq[Int]] =
       qvs.map(q => model.coarse.probe(q._2, nprobe))
     val needed = probed.flatten.distinct.sorted
-    val heldOpt = LocalCellResolve.resolve[Cell](cache, path, stamp,
-      layoutFrame, needed, maxLocalPqBytes,
-      df => df.select(col("cluster_id").cast("int"), col("id"),
-        col("codes").cast("array<int>")),
-      rs => Cell(rs.map(_.get(1): Any),
-        rs.map(r => r.getAs[scala.collection.Seq[Int]](2).toArray)))
+    val heldOpt = LocalCellResolve.resolve[Cell](cache, files, path, stamp,
+      needed, maxLocalPqBytes, CellCols, cellOf)
     if (heldOpt.isEmpty) return None
     val held = heldOpt.get
     val out = Seq.newBuilder[(Any, Any, Double, Long)]

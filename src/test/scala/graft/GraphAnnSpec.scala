@@ -382,6 +382,55 @@ class GraphAnnSpec extends SparkSpec {
     intercept[IllegalArgumentException](e.setParams("flat", Map("routeNprobe" -> 1)))
   }
 
+  test("engine routed hnsw: first search after a maintained upsert, overwrite and delete launches zero Spark jobs; local ≡ distributed; a fold serves nothing stale") {
+    import graft.api.Engine
+    import graft.core._
+    val root = java.nio.file.Files.createTempDirectory("routed-writes").toString
+    val e = new Engine(spark, root)
+    e.createCollection(CollectionConfig("g", 4, IndexType.Hnsw,
+      params = Map("routeNlist" -> "4")))
+    val rnd = new scala.util.Random(17)
+    val docs = (0 until 80).map(i => Document(s"d$i", Array.fill(4)(rnd.nextFloat())))
+    e.batchUpsertDocuments("g", docs)
+    e.buildIndex("g")
+    e.setParams("g", Map("routeNprobe" -> 2))
+    val probe = docs(5).vector
+    def rowsOf(df: org.apache.spark.sql.DataFrame, qid: String) =
+      df.filter(col("query_id") === qid)
+        .select(col("id").cast("string"), col("distance"), col("rnk"))
+        .as[(String, Double, Long)].collect().sortBy(_._3).toSeq
+    def local(qid: String) = rowsOf(e.searchVectors("g", Seq((qid, probe)), 6), qid)
+    // a duplicated qid declines the driver-local serve: the distributed
+    // pruned plan answers the same query
+    def distributed(qid: String) = rowsOf(e.searchVectors("g",
+      Seq(("__pad", probe), ("__pad", probe), (qid, probe)), 6), qid)
+    local("warm")
+    val writes = Seq[(String, () => Unit)](
+      "maintained upsert" -> (() => e.upsertDocument("g", Document("fresh", probe.clone()))),
+      "overwrite" -> (() => e.upsertDocument("g", Document("d9", probe.clone()))),
+      "delete" -> (() => e.deleteDocument("g", "d5")))
+    for ((what, write) <- writes) {
+      write()
+      val (l, jobs) = jobsDuring(local("q"))
+      assert(jobs === 0, s"first search after the $what launched $jobs Spark job(s)")
+      assert(l === distributed("q"), s"local ≢ distributed after the $what")
+    }
+    def live(hits: Seq[(String, Double, Long)]): Unit = {
+      assert(hits.take(2).map(_._1).toSet === Set("fresh", "d9"), s"writes not served: $hits")
+      assert(!hits.exists(_._1 == "d5"), s"deleted id served: $hits")
+      assert(hits.map(_._1).distinct.size === hits.size, s"an id served twice: $hits")
+    }
+    live(local("q"))
+    // a buildIndex fold moves the delta rows into the adjacency and retires
+    // both sidecars: a stale delta would serve fresh/d9 twice, a stale
+    // tombstone would hide the rebuilt d9
+    e.buildIndex("g")
+    val (folded, foldJobs) = jobsDuring(local("q"))
+    assert(foldJobs === 0, s"first search after the fold launched $foldJobs Spark job(s)")
+    live(folded)
+    assert(folded === distributed("q"))
+  }
+
   test("legacy single-layer layout (flat ARRAY<INT> links) still searches after the multi-layer schema change") {
     // pre-hierarchy builders persisted links as ARRAY<INT>; the reader must
     // reconstruct those as the one-layer graphs they are, not crash with a

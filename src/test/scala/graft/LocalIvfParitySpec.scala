@@ -178,4 +178,53 @@ class LocalIvfParitySpec extends SparkSpec {
     assert(local2 === dist2)
     assert(local2.count(r => r._1 == "d7") === 1)
   }
+
+  test("first search after a maintained upsert, overwrite and delete launches zero Spark jobs; cold cells too; local ≡ distributed") {
+    val dir = testRoot("ivflocal5")
+    val e = new Engine(spark, dir)
+    val dim = 4
+    val rnd = new scala.util.Random(37)
+    val docs = (0 until 60).map(i =>
+      Document(s"d$i", Array.fill(dim)(rnd.nextFloat())))
+    e.createCollection(CollectionConfig("c", dim, IndexType.IvfFlat, SpaceType.L2))
+    e.batchUpsertDocuments("c", docs)
+    e.buildIndex("c", nlist = 4)
+    e.setParams("c", Map("nprobe" -> 2))
+    val probe = docs(5).vector
+    def search(qid: String) = rowsOf(e.searchVectors("c", Seq((qid, probe)), 6), qid)
+    search("warm")
+    val writes = Seq[(String, () => Unit)](
+      "maintained upsert" -> (() => e.upsertDocument("c", Document("fresh", probe.clone()))),
+      "overwrite" -> (() => e.upsertDocument("c", Document("d9", probe.clone()))),
+      "delete" -> (() => e.deleteDocument("c", "d5")))
+    for ((what, write) <- writes) {
+      write()
+      val (local, jobs) = jobsDuring(search("q"))
+      assert(jobs === 0, s"first search after the $what launched $jobs Spark job(s)")
+      val (_, dist) = bothPaths(e, "c", "q", probe, 6)
+      assert(local === dist, s"local ≢ distributed after the $what")
+    }
+    val last = search("q")
+    assert(last.map(_._1).take(2).toSet === Set("fresh", "d9") && !last.exists(_._1 == "d5"),
+      s"writes not reflected: $last")
+    assert(last.count(_._1 == "d9") === 1, s"overwritten id served twice: $last")
+    // cold cells: the cache and the decoded files dropped, as a restarted
+    // server has them — the reload decodes from disk and launches no job
+    graft.operators.LocalIvfServe.clearCells()
+    val decodes0 = graft.operators.LocalIvfServe.metrics("ivf_local_file_decodes")
+    val (cold, coldJobs) = jobsDuring(search("q"))
+    assert(coldJobs === 0, s"a cold cell load launched $coldJobs Spark job(s)")
+    assert(cold === last)
+    assert(graft.operators.LocalIvfServe.metrics("ivf_local_file_decodes") > decodes0,
+      "cold cells must be decoded from the layout files")
+    // a buildIndex fold retires the sidecar with its generation: the next
+    // search serves the rebuilt layout, nothing from the decoded memo
+    e.buildIndex("c", nlist = 4)
+    val (folded, foldJobs) = jobsDuring(search("q"))
+    assert(foldJobs === 0, s"first search after the fold launched $foldJobs Spark job(s)")
+    val (_, foldedDist) = bothPaths(e, "c", "q", probe, 6)
+    assert(folded === foldedDist)
+    assert(folded.map(_._1).take(2).toSet === Set("fresh", "d9") &&
+      !folded.exists(_._1 == "d5"), s"fold changed the live rows: $folded")
+  }
 }

@@ -158,4 +158,41 @@ class LocalPqParitySpec extends SparkSpec {
     val hits = e.searchDocuments("c", qv, 5, filter = Some(pred))
     assert(hits.map(_.id) === baseline.map(_._1))
   }
+
+  test("first search after a maintained upsert, overwrite and delete launches zero Spark jobs; cold cells too; local ≡ distributed") {
+    val (e, docs) = freshPq(8, 60, SpaceType.L2, seed = 47)
+    e.setParams("c", Map("nprobe" -> 2))
+    val probe = docs(4).vector
+    def search(qid: String) = rowsOf(e.searchVectors("c", Seq((qid, probe)), 6), qid)
+    search("warm")
+    val writes = Seq[(String, () => Unit)](
+      "maintained upsert" -> (() => e.upsertDocument("c", Document("fresh", probe.clone()))),
+      "overwrite" -> (() => e.upsertDocument("c", Document("d9", probe.clone()))),
+      "delete" -> (() => e.deleteDocument("c", "d4")))
+    for ((what, write) <- writes) {
+      write()
+      val (local, jobs) = jobsDuring(search("q"))
+      assert(jobs === 0, s"first search after the $what launched $jobs Spark job(s)")
+      val (_, dist) = bothPaths(e, "q", probe, 6)
+      assert(local === dist, s"local ≢ distributed after the $what")
+    }
+    val last = search("q")
+    assert(last.map(_._1).take(2).toSet === Set("fresh", "d9") && !last.exists(_._1 == "d4"),
+      s"writes not reflected: $last")
+    assert(last.count(_._1 == "d9") === 1, s"overwritten id served twice: $last")
+    graft.operators.LocalPqServe.clearCells()
+    val decodes0 = graft.operators.LocalPqServe.metrics("pq_local_file_decodes")
+    val (cold, coldJobs) = jobsDuring(search("q"))
+    assert(coldJobs === 0, s"a cold code-cell load launched $coldJobs Spark job(s)")
+    assert(cold === last)
+    assert(graft.operators.LocalPqServe.metrics("pq_local_file_decodes") > decodes0,
+      "cold cells must be decoded from the layout files")
+    e.buildIndex("c", nlist = 4)
+    val (folded, foldJobs) = jobsDuring(search("q"))
+    assert(foldJobs === 0, s"first search after the fold launched $foldJobs Spark job(s)")
+    val (_, foldedDist) = bothPaths(e, "q", probe, 6)
+    assert(folded === foldedDist)
+    assert(folded.map(_._1).take(2).toSet === Set("fresh", "d9") &&
+      !folded.exists(_._1 == "d4"), s"fold changed the live rows: $folded")
+  }
 }

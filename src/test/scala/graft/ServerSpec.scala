@@ -203,6 +203,33 @@ class ServerSpec extends SparkSpec {
     assert(o3("point_runs_resident").asDouble > 0 && o3("point_resident_bytes").asDouble > 0,
       s"the residency ledger must show the runs read: $o3")
     assert(o3("point_resident_bytes").asDouble <= o3("point_resident_max_bytes").asDouble)
+    // a search right after a maintained write reloads its cells (the
+    // `*_loads` count moves) from layout files decoded on the driver, and
+    // launches no Spark job
+    for (k <- Seq("ivf_local_file_decodes", "ivf_local_file_bytes",
+        "pq_local_file_decodes", "pq_local_file_bytes",
+        "local_serve_file_decodes", "local_serve_file_bytes"))
+      assert(o3.contains(k), s"metrics missing $k: $o3")
+    req("POST", "/v1/collections", """{"name":"metivf","dimension":2,"index_type":"ivf_flat"}""")
+    val ivfDocs = (0 until 24).map(i => s"""{"id":"v$i","vector":[${i % 6},${i / 6}]}""")
+      .mkString("[", ",", "]")
+    assert(req("POST", "/v1/collections/metivf/buildindex", s"""{"documents":$ivfDocs}""")._1 === 200)
+    val search = """{"vector":[1.2,1.1],"limit":3}"""
+    assert(req("POST", "/v1/collections/metivf/vectors/search", search)._1 === 200)
+    assert(req("POST", "/v1/collections/metivf/documents",
+      """{"id":"w","vector":[1.2,1.1]}""")._1 === 200)
+    val o4 = req("GET", "/v1/metrics")._2.asObj
+    val ((cs, vs), jobs) = jobsDuring(
+      req("POST", "/v1/collections/metivf/vectors/search", search))
+    assert(cs === 200 && vs.asObj("ids").asArr.head.asStr === "w",
+      s"the written doc must be the top hit: $vs")
+    assert(jobs === 0, s"the search after a write launched $jobs Spark job(s)")
+    val o5 = req("GET", "/v1/metrics")._2.asObj
+    assert(o5("ivf_local_loads").asDouble > o4("ivf_local_loads").asDouble,
+      s"the search after a write must load cells: $o5")
+    assert(o5("ivf_local_file_decodes").asDouble > o4("ivf_local_file_decodes").asDouble,
+      s"the written run must be decoded: $o5")
+    assert(o5("ivf_local_file_bytes").asDouble <= o5("ivf_local_max_bytes").asDouble)
   }
 
   test("an oversized request body gets 413 without being read") {
@@ -226,6 +253,39 @@ class ServerSpec extends SparkSpec {
     assert(req("GET", "/")._1 === 200)
     assert(req("POST", "/v1/collections",
       """{"name":"capok","dimension":2,"index_type":"flat"}""")._1 === 200)
+  }
+
+  test("a chunked request body over the cap gets 413") {
+    // no Content-Length: the server finds the size only by reading, and
+    // must refuse one byte past the cap. The body is exactly one byte over,
+    // so the server drains the chunk terminator and answers on an intact
+    // connection.
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(60000)
+      val ascii = java.nio.charset.StandardCharsets.US_ASCII
+      val out = new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16)
+      out.write(("POST /v1/collections/big/documents/batchupsert HTTP/1.1\r\n" +
+        "Host: 127.0.0.1\r\nContent-Type: application/json\r\n" +
+        "Transfer-Encoding: chunked\r\n\r\n").getBytes(ascii))
+      val chunk = Array.fill[Byte](1 << 20)(' '.toByte)
+      def send(n: Int): Unit = {
+        out.write(f"$n%x\r\n".getBytes(ascii))
+        out.write(chunk, 0, n)
+        out.write("\r\n".getBytes(ascii))
+      }
+      var left = Server.MaxBodyBytes.toLong + 1
+      while (left > 0) {
+        val n = math.min(left, chunk.length.toLong).toInt
+        send(n); left -= n
+      }
+      out.write("0\r\n\r\n".getBytes(ascii))
+      out.flush()
+      val status = new java.io.BufferedReader(new java.io.InputStreamReader(
+        sock.getInputStream, ascii)).readLine()
+      assert(status != null && status.startsWith("HTTP/1.1 413"), s"got: $status")
+    } finally sock.close()
+    assert(req("GET", "/")._1 === 200)
   }
 
   test("multivector routes over the wire: upsert / batch / maxsim search / delete") {

@@ -25,6 +25,25 @@ trait SparkSpec extends AnyFunSuite {
     */
   def cfsOf(path: String): graft.core.ControlFs =
     graft.core.ControlFs.forRoot(path)
+
+  /** `body`'s result and the number of Spark jobs started while it ran
+    * (the listener bus is drained before and after, so earlier jobs'
+    * events are not counted and the body's own are).
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.Bridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.Bridge.waitListenerBus(spark)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
