@@ -2160,15 +2160,15 @@ class Engine(
         val opq = loadedOpq(coll)
         val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, opq.pq.nlist))
         val stamp = if (corpusIsFull) currentLayoutStamp(coll, opqLayoutPath(coll)) else None
-        // zero-job point serve: rotate the query with the gated
-        // LocalEncode.matVecMul twin of the codegen MatVecMul, shortlist in
+        // zero-job point serve: rotate the query with QuantKernels.matVecMul
+        // (the kernel the codegen MatVecMul calls), shortlist in
         // rotated space through the PQ code-cell cache, exact re-rank in
         // ORIGINAL space (the distributed Opq.search shape exactly)
         localRoute(stamp, coll, queries, eligible, corpus) { (stamp, chunk, elig) =>
           localPqSearch(coll, opqLayoutPath(coll), stamp, opq.pq,
             chunk, k, nprobe, elig,
             shortQueries = chunk.map { case (qid, v) =>
-              (qid, graft.operators.LocalEncode.matVecMul(v, opq.rotation)) })
+              (qid, graft.kernels.QuantKernels.matVecMul(v, opq.rotation)) })
         }.getOrElse {
           val encoded = stamp.map(s => restrict(layoutFrame(opqLayoutPath(coll), s)))
             .getOrElse(Opq.encode(corpusEff, "vector", opq))

@@ -1,9 +1,11 @@
 package graft.kernels
 
-/** Primitive distance kernels shared by the Catalyst expressions' interpreted
-  * eval AND generated code (`VectorExpressions` emits a static call to these
-  * from `doGenCode`, so both paths run literally the same JVM method —
-  * bit-identical by construction).
+/** Primitive distance kernels: the one definition of each distance loop.
+  * The Catalyst distance expressions (`VectorExpressions`) call them from
+  * both `doGenCode` (a static call) and `nullSafeEval`, the fused top-k
+  * aggregate and the driver-local serves rank with the same methods, and
+  * `QuantKernels` builds the quantizer kernels on them — so every path runs
+  * literally the same JVM method and agrees bit for bit by construction.
   *
   * Why static methods instead of inlining the loop into the generated Java:
   * whole-stage-generated classes are compiled FRESH per query (new class,
@@ -18,8 +20,7 @@ package graft.kernels
   * `toFloatArray()` extractions plus one call.
   *
   * Accumulation is double over float32 inputs, left-to-right, matching the
-  * DuckDB oracle's list_distance/list_inner_product fold exactly (the same
-  * contract the inline loops had).
+  * DuckDB oracle's list_distance/list_inner_product fold exactly.
   */
 object VecKernels {
 
@@ -58,8 +59,9 @@ object VecKernels {
   }
 
   /** Space → kernel dispatch, the ONE definition the driver-local serving
-    * paths rank with (`vfn.distance`'s JVM twin — same kernels the codegen
-    * expressions inline, so local and distributed ranks agree bit-for-bit).
+    * paths rank with (`vfn.distance`'s JVM twin — the same kernels the
+    * codegen expressions call, so local and distributed ranks agree
+    * bit-for-bit).
     */
   def dist(x: Array[Float], y: Array[Float], space: graft.core.SpaceType): Double =
     space match {

@@ -655,11 +655,11 @@ object Dedup {
       textCol: String, shingleN: Int, numHashes: Int): DataFrame = {
     val sig = graft.functions.vfn.minhashSig(
       split(col(textCol), " "), shingleN, numHashes)
-    // null-text docs emit NO signature row — the row set of the explode +
-    // aggregation formulation this kernel replaced (a null text yields no
-    // shingles, so such docs can never verify into a pair either way); a
-    // NULL-sig row would otherwise band to one degenerate all-nulls bucket
-    // shared by every null doc
+    // null-text docs emit NO signature row, on purpose: the explode +
+    // aggregation formulation this kernel replaced falls back to one null
+    // shingle (`shingles`' `array(text)`) and emits a degenerate `__n = 1`
+    // row, which would band every null doc into one shared bucket. A null
+    // text has no content to match, so dropping it loses no pair.
     widened(df.where(col(textCol).isNotNull))
       .select(col(idCol).as("__did"), sig.as("__s"))
       .select(col("__did") +:

@@ -35,26 +35,15 @@ object IvfIndex {
     def nlist: Int = centroids.length
 
     /** Nearest `nprobe` centroid ids for one query (driver-side; mirrors
-      * `ivf.go:186-201`).
+      * `ivf.go:186-201`): ip ranks by negative inner product, every other
+      * space by squared L2 — `QuantKernels.nearestCentroids`, the kernel
+      * the distributed `nearest_centroids` probe calls.
       */
     def probe(q: Array[Float], nprobe: Int): Seq[Int] = {
       require(nprobe >= 1 && nprobe <= nlist,
         s"nprobe must be in [1, $nlist], got $nprobe") // ivf.go:407-413
-      centroids.zipWithIndex
-        .map { case (c, i) => (i, dist(q, c)) }
-        .sortBy { case (i, d) => (d, i) }
-        .take(nprobe).map(_._1).toSeq
-    }
-
-    private def dist(a: Array[Float], b: Array[Float]): Double = space match {
-      case SpaceType.Ip =>
-        var s = 0.0; var i = 0
-        while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-        -s
-      case _ => // l2 assignment for l2/cos/hamming coarse quantization
-        var s = 0.0; var i = 0
-        while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-        s
+      graft.kernels.QuantKernels.nearestCentroids(q, centroids, nprobe,
+        ip = space == SpaceType.Ip).toSeq
     }
   }
 

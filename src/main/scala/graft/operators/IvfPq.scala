@@ -41,6 +41,15 @@ object IvfPq {
     def nlist: Int = coarse.nlist
     def k: Int = codebooks(0).length
     def space: graft.core.SpaceType = coarse.space
+
+    /** `QuantKernels.adcTable`'s mode for this space (0 l2, 1 ip, 2 cos) —
+      * shared by `search`, `searchDistributed` and the zero-job local serve.
+      */
+    def adcMode: Int = space match {
+      case graft.core.SpaceType.Ip => 1
+      case graft.core.SpaceType.Cos => 2
+      case _ => 0
+    }
   }
 
   /** Add `outCol` = unit-normalized `vecCol` (zero vectors pass through
@@ -117,15 +126,7 @@ object IvfPq {
     val k = math.min(1 << nbits, sample.length)
 
     val resid = sample.map { v =>
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < coarse.nlist) {
-        val ct = coarse.centroids(c)
-        var s = 0.0; var i = 0
-        while (i < v.length) { val d = v(i).toDouble - ct(i); s += d * d; i += 1 }
-        if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      val ct = coarse.centroids(best)
+      val ct = coarse.centroids(graft.kernels.QuantKernels.nearestCentroid(v, coarse.centroids))
       Array.tabulate(v.length)(i => v(i).toDouble - ct(i))
     }
     // the m per-subspace fits are independent — run them in parallel (each
@@ -164,49 +165,6 @@ object IvfPq {
     if (isCos) coded.drop("__nvec") else coded
   }
 
-  /** The m×k ADC table for ONE (query, probed-list) pair — driver math
-    * shared verbatim by `search` and the zero-job local PQ serve (bit
-    * equality by being the same code; the executor twin is `PqAdcTable`).
-    * l2: ||r_q − codeword||² per subspace. ip: −⟨q_j, codeword⟩ per
-    * subspace, with the per-list constant −⟨q, cent⟩ folded into subspace 0
-    * so cross-list rankings stay comparable (`ivfpq.go:259-277`'s table
-    * shape, ip-extended). cos: the l2 table over unit-normalized
-    * query/index, halved — ||q̂−x̂||²/2 = 1−⟨q̂,x̂⟩ is EXACTLY the cosine
-    * distance. `qv` arrives already cos-normalized when the space is cos.
-    */
-  private[graft] def adcTableLocal(model: Model, qv: Array[Float], cid: Int): Array[Float] = {
-    val isIp = model.space == graft.core.SpaceType.Ip
-    val isCos = model.space == graft.core.SpaceType.Cos
-    val cent = model.coarse.centroids(cid)
-    val tab = new Array[Float](model.m * model.k)
-    var qDotCent = 0.0
-    if (isIp) {
-      var i = 0
-      while (i < qv.length) { qDotCent += qv(i).toDouble * cent(i).toDouble; i += 1 }
-    }
-    var j = 0
-    while (j < model.m) {
-      var c = 0
-      while (c < model.codebooks(j).length) {
-        var s = 0.0; var t = 0
-        while (t < model.subDim) {
-          val i = j * model.subDim + t
-          if (isIp) s -= qv(i).toDouble * model.codebooks(j)(c)(t)
-          else {
-            val d = (qv(i) - cent(i)).toDouble - model.codebooks(j)(c)(t)
-            s += d * d
-          }
-          t += 1
-        }
-        if (isIp && j == 0) s -= qDotCent
-        tab(j * model.k + c) = (if (isCos) s * 0.5 else s).toFloat
-        c += 1
-      }
-      j += 1
-    }
-    tab
-  }
-
   /** ADC search over an encoded corpus: per (query, probed-list) distance
     * tables built driver-side and broadcast; candidate score is a pure
     * table-lookup sum over the m codes (`ivfpq.go:259-285`).
@@ -238,7 +196,8 @@ object IvfPq {
       val qid = r.getString(0)
       val qvRaw = r.getAs[scala.collection.Seq[Float]](1).toArray
       val qv = if (isCos) l2NormalizeLocal(qvRaw) else qvRaw
-      model.coarse.probe(qv, nprobe).map(cid => (qid, cid) -> adcTableLocal(model, qv, cid))
+      model.coarse.probe(qv, nprobe).map(cid => (qid, cid) -> graft.kernels.QuantKernels
+        .adcTable(qv, model.coarse.centroids(cid), model.codebooks, model.adcMode))
     }.toMap
     // each probe row CARRIES its m×k distance table; after the broadcast
     // join the ADC score is the codegen `AdcLookupSum` kernel — no UDF, no
@@ -323,7 +282,6 @@ object IvfPq {
       s"nprobe must be in [1, ${model.nlist}], got $nprobe")
     val isIp = model.space == graft.core.SpaceType.Ip
     val isCos = model.space == graft.core.SpaceType.Cos
-    val mode = if (isIp) 1 else if (isCos) 2 else 0
     val centsLit = Literal.create(
       model.coarse.centroids.map(_.toSeq).toSeq, ArrayType(ArrayType(FloatType)))
     val cbLit = Literal.create(
@@ -335,7 +293,7 @@ object IvfPq {
         Bridge.expression(col("__qv")), centsLit, Literal(nprobe), ip = isIp))))
       .withColumn("__tab", Bridge.column(PqAdcTable(
         Bridge.expression(col("__qv")), Bridge.expression(col("__cid")),
-        centsLit, cbLit, mode)))
+        centsLit, cbLit, model.adcMode)))
       .select(col(queryId), col("__cid"), col("__tab"))
     val shortlistK = rerankVecCol.fold(kTop)(_ => kTop * rerankFactor)
     // equi-join on the cluster id (corpus stays partitioned by cluster_id,

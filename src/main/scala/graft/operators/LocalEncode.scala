@@ -1,13 +1,14 @@
 package graft.operators
 
-/** Driver-side twins of the codegen encode kernels — BIT-IDENTICAL to the
-  * distributed encode paths, so a driver-sized maintained point write (the
-  * REST upsert) can append exactly the layout rows a Spark encode job would
-  * have produced, without paying the ~100 ms per-job floor. Each mirror
-  * replicates its kernel's arithmetic exactly: the same float-vs-double
-  * widening points, the same accumulation order, the same first-minimum
-  * tie-breaks (`LocalEncodeSpec` asserts equality against the executed
-  * kernels to the last bit).
+import graft.kernels.QuantKernels
+
+/** Driver-side layout-row encoders for a driver-sized maintained point
+  * write (the REST upsert): each appends exactly the layout rows a Spark
+  * encode job would have produced, without paying the ~100 ms per-job
+  * floor. They call the same `graft.kernels.QuantKernels` methods the
+  * codegen encode expressions call, so the rows are bit-identical by
+  * construction (`LocalEncodeSpec` checks them against the executed
+  * DataFrame encodes to the last bit).
   *
   * The models involved are tiny (centroids, codebooks, a d×d rotation,
   * per-dim thresholds) and already loaded on the driver for probe routing,
@@ -16,125 +17,9 @@ package graft.operators
   */
 object LocalEncode {
 
-  /** Mirrors `NearestCentroid.nullSafeEval`/`doGenCode`
-    * (`PqExpressions.scala:181`): squared-L2 accumulated in double over
-    * float inputs widened per element, first minimum wins ties.
-    */
-  def nearestCentroid(v: Array[Float], cents: Array[Array[Float]]): Int = {
-    val dim = v.length
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < cents.length) {
-      val ct = cents(c)
-      var s = 0.0
-      var i = 0
-      while (i < dim) {
-        val d = v(i).toDouble - ct(i).toDouble
-        s += d * d
-        i += 1
-      }
-      if (s < bestD) { bestD = s; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** Mirrors `PqEncodeCodes.nullSafeEval` (`LshPqKernels.scala:214`): the
-    * residual subtraction happens in FLOAT first, then widens to double
-    * before the codeword subtraction — the exact widening order matters for
-    * bit identity with the kernel.
-    */
-  def pqCodes(v: Array[Float], clusterId: Int, cents: Array[Array[Float]],
-      codebooks: Array[Array[Array[Float]]]): Array[Int] = {
-    val cent = cents(clusterId)
-    val m = codebooks.length
-    val subDim = codebooks(0)(0).length
-    val k = codebooks(0).length
-    val out = new Array[Int](m)
-    var j = 0
-    while (j < m) {
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < k) {
-        val cb = codebooks(j)(c)
-        var s = 0.0
-        var t = 0
-        while (t < subDim) {
-          val i = j * subDim + t
-          val d = (v(i) - cent(i)).toDouble - cb(t)
-          s += d * d
-          t += 1
-        }
-        if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      out(j) = best
-      j += 1
-    }
-    out
-  }
-
-  /** Mirrors `MatVecMul.nullSafeEval` (`LshPqKernels.scala:297`): per-row
-    * double-accumulated dot product, narrowed to float.
-    */
-  def matVecMul(v: Array[Float], mat: Array[Array[Float]]): Array[Float] = {
-    val dim = v.length
-    require(mat.length == 0 || mat(0).length == dim,
-      s"vector dimension $dim != matrix row width ${mat(0).length}")
-    val out = new Array[Float](mat.length)
-    var r = 0
-    while (r < mat.length) {
-      val row = mat(r)
-      var s = 0.0
-      var i = 0
-      while (i < dim) { s += row(i).toDouble * v(i).toDouble; i += 1 }
-      out(r) = s.toFloat
-      r += 1
-    }
-    out
-  }
-
-  /** Mirrors `SqEncode.nullSafeEval` (`SqKernels.scala:26`): float subtract,
-    * widen to double, multiply by the float scale, round, clamp to [0,255].
-    */
-  def sqEncode(v: Array[Float], mins: Array[Float], scales: Array[Float]): Array[Byte] = {
-    require(mins.length == v.length,
-      s"vector dimension ${v.length} != model dimension ${mins.length}")
-    val out = new Array[Byte](v.length)
-    var i = 0
-    while (i < v.length) {
-      val q = Math.round((v(i) - mins(i)).toDouble * scales(i))
-      out(i) = Math.max(0L, Math.min(255L, q)).toByte
-      i += 1
-    }
-    out
-  }
-
-  /** Mirrors `BqEncode.nullSafeEval` (`BqKernels.scala:28`): sign bit per
-    * dim against the threshold, LSB-first packing, zero pad bits.
-    */
-  def bqEncode(v: Array[Float], thresholds: Array[Float]): Array[Byte] = {
-    val dim = v.length
-    require(thresholds.length == dim,
-      s"vector dimension $dim != model dimension ${thresholds.length}")
-    val out = new Array[Byte]((dim + 7) / 8)
-    var i = 0
-    while (i < dim) {
-      if (v(i) > thresholds(i))
-        out(i >> 3) = (out(i >> 3) | (1 << (i & 7))).toByte
-      i += 1
-    }
-    out
-  }
-
-  // ---- per-tier layout-row encoders (the driver twins of the DataFrame
-  //      encode functions used by the maintained-ingest Spark branch) ----
-
   /** Twin of `IvfIndex.assign`: the layout's cluster id. */
   def ivfAssign(v: Array[Float], m: IvfIndex.Model): Int =
-    nearestCentroid(v, m.centroids)
+    QuantKernels.nearestCentroid(v, m.centroids)
 
   /** Twin of `IvfPq.encode` for one row: cos normalizes first (via the
     * shared `l2NormalizeLocal`, the documented bit-identical twin of the
@@ -143,8 +28,8 @@ object LocalEncode {
     */
   def pqRow(v: Array[Float], m: IvfPq.Model): (Int, Array[Int]) = {
     val enc = if (m.space == graft.core.SpaceType.Cos) IvfPq.l2NormalizeLocal(v) else v
-    val cid = nearestCentroid(enc, m.coarse.centroids)
-    (cid, pqCodes(enc, cid, m.coarse.centroids, m.codebooks))
+    val cid = QuantKernels.nearestCentroid(enc, m.coarse.centroids)
+    (cid, QuantKernels.pqCodes(enc, m.coarse.centroids(cid), m.codebooks))
   }
 
   /** Twin of `Opq.encode` for one row: rotate, then the stock PQ row over
@@ -152,16 +37,16 @@ object LocalEncode {
     * column stays on the layout exactly as the DataFrame path keeps it.
     */
   def opqRow(v: Array[Float], m: Opq.Model): (Array[Float], Int, Array[Int]) = {
-    val rvec = matVecMul(v, m.rotation)
+    val rvec = QuantKernels.matVecMul(v, m.rotation)
     val (cid, codes) = pqRow(rvec, m.pq)
     (rvec, cid, codes)
   }
 
   /** Twin of `ScalarQuant.encode` for one row. */
   def sqRow(v: Array[Float], m: ScalarQuant.Model): Array[Byte] =
-    sqEncode(v, m.mins, m.scales)
+    QuantKernels.sqEncode(v, m.mins, m.scales)
 
   /** Twin of `BinaryQuant.encode` for one row. */
   def bqRow(v: Array[Float], m: BinaryQuant.Model): Array[Byte] =
-    bqEncode(v, m.thresholds)
+    QuantKernels.bqEncode(v, m.thresholds)
 }

@@ -134,7 +134,7 @@ private[graft] object LocalCellResolve {
   * Results are IDENTICAL to `IvfIndex.search`/`searchDistributed` at equal
   * knobs, by construction: the same `Model.probe` (same coarse metric and
   * (distance, index) centroid tie-break), distances through the SAME
-  * `VecKernels` arithmetic the codegen expressions inline, ranking by
+  * `VecKernels` methods the codegen expressions call, ranking by
   * (distance asc, id asc) with the UTF-8-byte id order the distributed
   * ties use (`GraphAnn.idLt`), and cells holding exactly the rows of the
   * tombstone-applied frame the distributed plan scans — a cell at stamp
@@ -323,7 +323,7 @@ object LocalIvfServe {
   * corpus resident. Per query: probe via the driver-resident coarse
   * centroids (`Model.coarse.probe`, cos-normalizing the query exactly like
   * `IvfPq.search`), build the m×k ADC table with the SAME
-  * `IvfPq.adcTableLocal` driver math `search` broadcasts, score each cached
+  * `QuantKernels.adcTable` kernel `search` broadcasts, score each cached
   * code row with the same double-accumulated table-lookup sum as the
   * codegen `AdcLookupSum`, and rank (distance asc, id asc UTF-8). The
   * caller (Engine) re-ranks the tiny shortlist exactly against true vectors
@@ -405,7 +405,8 @@ object LocalPqServe {
       val hits = scala.collection.mutable.ArrayBuffer.empty[(Any, Double)]
       probed(qi).foreach { c =>
         held.getOrElse(c, None).foreach { cell =>
-          val tab = IvfPq.adcTableLocal(model, qv, c)
+          val tab = graft.kernels.QuantKernels.adcTable(qv, model.coarse.centroids(c),
+            model.codebooks, model.adcMode)
           val k = model.k
           var i = 0
           while (i < cell.ids.length) {

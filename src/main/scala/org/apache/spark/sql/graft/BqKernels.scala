@@ -5,6 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+import graft.kernels.QuantKernels
+import QuantExpression.Kernels
+
 /** Codegen kernels for the binary-quantization (BQ) tier: 1 BIT per
   * dimension — 32× smaller than float32 (the most aggressive recall-per-byte
   * point of the quantizer family; faiss `IndexBinaryFlat` is the public
@@ -15,50 +18,27 @@ import org.apache.spark.sql.types._
 
 /** `bq_encode(vector ARRAY<FLOAT>, thresholds ARRAY<FLOAT>)` → BINARY of
   * ceil(dim/8) bytes: bit i (byte i/8, mask 1<<(i%8)) is set iff
-  * v[i] > thr[i]. Dimension mismatch is a loud error (P3 validation, same
-  * contract as the SQ/PQ encoders).
+  * v[i] > thr[i] (`QuantKernels.bqEncode`). Dimension mismatch is a loud
+  * error (P3 validation, same contract as the SQ/PQ encoders).
   */
 case class BqEncode(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryExpression with QuantExpression {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = BinaryType
   override def prettyName: String = "bq_encode"
+  override protected def modelArgs: Seq[(String, Expression)] = Seq("thresholds" -> right)
 
-  override protected def nullSafeEval(v: Any, th: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val thr = th.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    if (thr.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"vector dimension $dim != model dimension ${thr.numElements()}")
-    val out = new Array[Byte]((dim + 7) / 8)
-    var i = 0
-    while (i < dim) {
-      if (vec.getFloat(i) > thr.getFloat(i))
-        out(i >> 3) = (out(i >> 3) | (1 << (i & 7))).toByte
-      i += 1
-    }
-    out
+  @transient private lazy val thresholds = floats(right)
+
+  override protected def nullSafeEval(v: Any, th: Any): Any =
+    QuantKernels.bqEncode(v.asInstanceOf[ArrayData].toFloatArray(), thresholds)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val th = ctx.addReferenceObj("thresholds", thresholds, "float[]")
+    nullSafeCodeGen(ctx, ev, (v, _) =>
+      s"${ev.value} = $Kernels.bqEncode($v.toFloatArray(), $th);")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, th) => {
-      val dim = ctx.freshName("dim"); val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      s"""int $dim = $v.numElements();
-         |if ($th.numElements() != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "vector dimension " + $dim + " != model dimension " + $th.numElements());
-         |}
-         |byte[] $out = new byte[($dim + 7) / 8];
-         |for (int $i = 0; $i < $dim; $i++) {
-         |  if ($v.getFloat($i) > $th.getFloat($i)) {
-         |    $out[$i >> 3] = (byte) ($out[$i >> 3] | (1 << ($i & 7)));
-         |  }
-         |}
-         |${ev.value} = $out;""".stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)
@@ -67,7 +47,7 @@ case class BqEncode(left: Expression, right: Expression)
 /** `bq_hamming(a BINARY, b BINARY)` → INT: popcount of the byte-wise XOR —
   * the symmetric Hamming distance between two packed sign codes (both sides
   * encode; there is no useful asymmetric form for 1-bit codes). Length
-  * mismatch is a loud error.
+  * mismatch is a loud error. `QuantKernels.bqHamming`.
   */
 case class BqHamming(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
@@ -75,33 +55,11 @@ case class BqHamming(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "bq_hamming"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
-    if (x.length != y.length)
-      throw new IllegalArgumentException(
-        s"code length ${x.length} != ${y.length}")
-    var s = 0; var i = 0
-    while (i < x.length) {
-      s += java.lang.Integer.bitCount((x(i) ^ y(i)) & 0xFF)
-      i += 1
-    }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    QuantKernels.bqHamming(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val s = ctx.freshName("s"); val i = ctx.freshName("i")
-      s"""if ($a.length != $b.length) {
-         |  throw new IllegalArgumentException(
-         |    "code length " + $a.length + " != " + $b.length);
-         |}
-         |int $s = 0;
-         |for (int $i = 0; $i < $a.length; $i++) {
-         |  $s += java.lang.Integer.bitCount(($a[$i] ^ $b[$i]) & 0xFF);
-         |}
-         |${ev.value} = $s;""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $Kernels.bqHamming($a, $b);")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)

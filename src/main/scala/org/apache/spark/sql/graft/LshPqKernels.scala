@@ -1,82 +1,49 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, QuaternaryExpression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+import graft.kernels.QuantKernels
+import QuantExpression.{GenericArray, Kernels}
+
 /** Codegen kernels for the LSH-signature and PQ-encode build paths — the two
   * per-row hot loops of index build (SURVEY F6, §7.2 step 7) that previously
-  * ran as Scala UDFs. As native expressions the m×k / tables×nbits×dim
-  * arithmetic stays inside whole-stage codegen with no serialization
-  * boundary — at 100 TB build scale the UDF encode/serialize tax is the
-  * dominant cost, not the arithmetic.
+  * ran as Scala UDFs. As native expressions calling the static
+  * `QuantKernels`, the m×k / tables×nbits×dim arithmetic stays inside
+  * whole-stage codegen with no serialization boundary — at 100 TB build
+  * scale the UDF encode/serialize tax is the dominant cost, not the
+  * arithmetic.
   */
 
 /** `lsh_signatures(vector ARRAY<FLOAT>, planes ARRAY<ARRAY<FLOAT>>, nbits INT)`
   * → ARRAY<LONG>: one sign-bit signature per table. `planes` is the
   * numTables×nbits hyperplane set flattened row-major (plane for table t,
   * bit b at index t·nbits+b), carried as a plan literal. Bit b of signature
-  * t is set iff ⟨vector, plane⟩ > 0. Accumulation is float-multiply /
-  * double-add, matching the original UDF bit-for-bit so bucket layouts are
-  * stable across the migration.
+  * t is set iff ⟨vector, plane⟩ > 0 (`QuantKernels.lshSignatures`:
+  * float-multiply / double-add, matching the original UDF bit-for-bit so
+  * bucket layouts are stable across the migration).
   */
 case class LshSignatures(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    extends TernaryExpression with QuantExpression {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(ArrayType(FloatType)), IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "lsh_signatures"
+  override protected def modelArgs: Seq[(String, Expression)] = Seq("planes" -> second)
 
-  override protected def nullSafeEval(v: Any, p: Any, nb: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val planes = p.asInstanceOf[ArrayData]
-    val nbits = nb.asInstanceOf[Int]
-    val dim = vec.numElements()
-    val numTables = planes.numElements() / nbits
-    val out = new Array[Long](numTables)
-    var t = 0
-    while (t < numTables) {
-      var sig = 0L
-      var b = 0
-      while (b < nbits) {
-        val plane = planes.getArray(t * nbits + b)
-        var s = 0.0
-        var i = 0
-        while (i < dim) { s += vec.getFloat(i) * plane.getFloat(i); i += 1 }
-        if (s > 0) sig |= (1L << b)
-        b += 1
-      }
-      out(t) = sig
-      t += 1
-    }
-    new GenericArrayData(out)
+  @transient private lazy val planes = rows(second)
+
+  override protected def nullSafeEval(v: Any, p: Any, nb: Any): Any =
+    new GenericArrayData(QuantKernels.lshSignatures(
+      v.asInstanceOf[ArrayData].toFloatArray(), planes, nb.asInstanceOf[Int]))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val pl = ctx.addReferenceObj("planes", planes, "float[][]")
+    nullSafeCodeGen(ctx, ev, (v, _, nb) =>
+      s"${ev.value} = new $GenericArray($Kernels.lshSignatures($v.toFloatArray(), $pl, $nb));")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, p, nb) => {
-      val dim = ctx.freshName("dim"); val nt = ctx.freshName("nt")
-      val out = ctx.freshName("out"); val t = ctx.freshName("t")
-      val sig = ctx.freshName("sig"); val b = ctx.freshName("b")
-      val pl = ctx.freshName("pl"); val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""int $dim = $v.numElements();
-         |int $nt = $p.numElements() / $nb;
-         |long[] $out = new long[$nt];
-         |for (int $t = 0; $t < $nt; $t++) {
-         |  long $sig = 0L;
-         |  for (int $b = 0; $b < $nb; $b++) {
-         |    org.apache.spark.sql.catalyst.util.ArrayData $pl = $p.getArray($t * $nb + $b);
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $dim; $i++) {
-         |      $s += (double) ($v.getFloat($i) * $pl.getFloat($i));
-         |    }
-         |    if ($s > 0) $sig |= (1L << $b);
-         |  }
-         |  $out[$t] = $sig;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);""".stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): Expression =
@@ -85,106 +52,35 @@ case class LshSignatures(first: Expression, second: Expression, third: Expressio
 
 /** `nearest_centroids(vector ARRAY<FLOAT>, centroids ARRAY<ARRAY<FLOAT>>,
   * nprobe INT)` → ARRAY<INT>: the nprobe nearest centroid indices in
-  * ascending-distance order (ties → lowest index) — the distributed probe
-  * kernel: query sets too large to collect driver-side compute their probe
-  * lists row-by-row inside codegen, with the centroid table riding in the
-  * plan as a literal. `ip = true` ranks by negative inner product (the ip
-  * space's coarse metric, `ivf.go:186-201`); otherwise squared L2.
-  * Selection is O(nprobe·nlist) — nprobe is small by construction.
+  * ascending-distance order — the distributed probe kernel: query sets too
+  * large to collect driver-side compute their probe lists row-by-row inside
+  * codegen, with the centroid table riding in the plan as a literal.
+  * `ip = true` ranks by negative inner product (the ip space's coarse
+  * metric, `ivf.go:186-201`); otherwise squared L2. It is
+  * `QuantKernels.nearestCentroids`, the same method (and so the same
+  * `Double.compare` order, ties → lowest index) as the driver
+  * `IvfIndex.Model.probe`.
   */
 case class NearestCentroids(first: Expression, second: Expression,
     third: Expression, ip: Boolean = false)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    extends TernaryExpression with QuantExpression {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(ArrayType(FloatType)), IntegerType)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "nearest_centroids"
+  override protected def modelArgs: Seq[(String, Expression)] = Seq("centroids" -> second)
 
-  override protected def nullSafeEval(v: Any, cs: Any, np: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val cents = cs.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    val n = cents.numElements()
-    // P3 dimension guard: the loops below index raw array storage, so a
-    // mismatched query vector must error, not read out of bounds
-    if (n > 0 && cents.getArray(0).numElements() != dim)
-      throw new IllegalArgumentException(
-        s"query dimension $dim != centroid dimension ${cents.getArray(0).numElements()}")
-    val nprobe = math.min(np.asInstanceOf[Int], n)
-    val d = new Array[Double](n)
-    var c = 0
-    while (c < n) {
-      val ct = cents.getArray(c)
-      var s = 0.0; var i = 0
-      if (ip) {
-        while (i < dim) { s -= vec.getFloat(i).toDouble * ct.getFloat(i).toDouble; i += 1 }
-      } else {
-        while (i < dim) {
-          val x = vec.getFloat(i).toDouble - ct.getFloat(i).toDouble
-          s += x * x; i += 1
-        }
-      }
-      d(c) = s
-      c += 1
-    }
-    val out = new Array[Int](nprobe)
-    val taken = new Array[Boolean](n)
-    var j = 0
-    while (j < nprobe) {
-      var best = -1; var bestD = Double.MaxValue
-      var t = 0
-      while (t < n) {
-        if (!taken(t) && d(t) < bestD) { bestD = d(t); best = t }
-        t += 1
-      }
-      taken(best) = true; out(j) = best
-      j += 1
-    }
-    new GenericArrayData(out)
+  @transient private lazy val cents = rows(second)
+
+  override protected def nullSafeEval(v: Any, cs: Any, np: Any): Any =
+    new GenericArrayData(QuantKernels.nearestCentroids(
+      v.asInstanceOf[ArrayData].toFloatArray(), cents, np.asInstanceOf[Int], ip))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cs = ctx.addReferenceObj("cents", cents, "float[][]")
+    nullSafeCodeGen(ctx, ev, (v, _, np) =>
+      s"${ev.value} = new $GenericArray($Kernels.nearestCentroids($v.toFloatArray(), $cs, $np, $ip));")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, cs, np) => {
-      val dim = ctx.freshName("dim"); val n = ctx.freshName("n")
-      val nprobe = ctx.freshName("nprobe"); val d = ctx.freshName("d")
-      val c = ctx.freshName("c"); val ct = ctx.freshName("ct")
-      val s = ctx.freshName("s"); val i = ctx.freshName("i")
-      val x = ctx.freshName("x"); val out = ctx.freshName("out")
-      val taken = ctx.freshName("taken"); val j = ctx.freshName("j")
-      val best = ctx.freshName("best"); val bestD = ctx.freshName("bestD")
-      val t = ctx.freshName("t")
-      val distLoop = if (ip)
-        s"for (int $i = 0; $i < $dim; $i++) { $s -= (double) $v.getFloat($i) * (double) $ct.getFloat($i); }"
-      else
-        s"""for (int $i = 0; $i < $dim; $i++) {
-           |  double $x = (double) $v.getFloat($i) - (double) $ct.getFloat($i);
-           |  $s += $x * $x;
-           |}""".stripMargin
-      s"""int $dim = $v.numElements();
-         |int $n = $cs.numElements();
-         |if ($n > 0 && $cs.getArray(0).numElements() != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "query dimension " + $dim + " != centroid dimension " + $cs.getArray(0).numElements());
-         |}
-         |int $nprobe = Math.min($np, $n);
-         |double[] $d = new double[$n];
-         |for (int $c = 0; $c < $n; $c++) {
-         |  org.apache.spark.sql.catalyst.util.ArrayData $ct = $cs.getArray($c);
-         |  double $s = 0.0;
-         |  $distLoop
-         |  $d[$c] = $s;
-         |}
-         |int[] $out = new int[$nprobe];
-         |boolean[] $taken = new boolean[$n];
-         |for (int $j = 0; $j < $nprobe; $j++) {
-         |  int $best = -1; double $bestD = Double.MAX_VALUE;
-         |  for (int $t = 0; $t < $n; $t++) {
-         |    if (!$taken[$t] && $d[$t] < $bestD) { $bestD = $d[$t]; $best = $t; }
-         |  }
-         |  $taken[$best] = true; $out[$j] = $best;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);""".stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): Expression =
@@ -196,83 +92,35 @@ case class NearestCentroids(first: Expression, second: Expression,
   * → ARRAY<INT>: the m residual sub-space codes of SURVEY F6
   * (`ivfpq.go:178-231`'s encode loop as one codegen pass). `codebooks` is
   * the [m][k][subDim] table flattened row-major (codeword c of subspace j at
-  * index j·k+c); m, k, subDim are all derived from the array shapes
-  * (subDim = |codebooks[0]|, m = dim/subDim, k = |codebooks|/m). Residual =
+  * index j·k+c; m = centroid width / subDim). Residual =
   * vector − centroids[cluster_id]; per subspace the code is the argmin of
-  * squared-L2 to the codewords (ties → lowest index, matching LocalKMeans
-  * assignment).
+  * squared-L2 to the codewords (`QuantKernels.pqCodes`, ties → lowest
+  * index).
   */
 case class PqEncodeCodes(first: Expression, second: Expression,
     third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
+    extends QuaternaryExpression with QuantExpression {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), IntegerType,
       ArrayType(ArrayType(FloatType)), ArrayType(ArrayType(FloatType)))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
+  override protected def modelArgs: Seq[(String, Expression)] =
+    Seq("centroids" -> third, "codebooks" -> fourth)
 
-  override protected def nullSafeEval(v: Any, cid: Any, cents: Any, cbs: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val cent = cents.asInstanceOf[ArrayData].getArray(cid.asInstanceOf[Int])
-    val books = cbs.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    val subDim = books.getArray(0).numElements()
-    val m = dim / subDim
-    val k = books.numElements() / m
-    val out = new Array[Int](m)
-    var j = 0
-    while (j < m) {
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < k) {
-        val cb = books.getArray(j * k + c)
-        var s = 0.0; var t = 0
-        while (t < subDim) {
-          val i = j * subDim + t
-          val d = (vec.getFloat(i) - cent.getFloat(i)).toDouble - cb.getFloat(t)
-          s += d * d; t += 1
-        }
-        if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      out(j) = best
-      j += 1
-    }
-    new GenericArrayData(out)
+  @transient private lazy val cents = rows(third)
+  @transient private lazy val books = QuantExpression.codebooks(cents, rows(fourth))
+
+  override protected def nullSafeEval(v: Any, cid: Any, cs: Any, cbs: Any): Any =
+    new GenericArrayData(QuantKernels.pqCodes(
+      v.asInstanceOf[ArrayData].toFloatArray(), cents(cid.asInstanceOf[Int]), books))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cs = ctx.addReferenceObj("cents", cents, "float[][]")
+    val bs = ctx.addReferenceObj("books", books, "float[][][]")
+    nullSafeCodeGen(ctx, ev, (v, cid, _, _) =>
+      s"${ev.value} = new $GenericArray($Kernels.pqCodes($v.toFloatArray(), $cs[$cid], $bs));")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, cid, cents, cbs) => {
-      val cent = ctx.freshName("cent"); val dim = ctx.freshName("dim")
-      val subDim = ctx.freshName("subDim"); val m = ctx.freshName("m")
-      val k = ctx.freshName("k"); val out = ctx.freshName("out")
-      val j = ctx.freshName("j"); val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD"); val c = ctx.freshName("c")
-      val cb = ctx.freshName("cb"); val s = ctx.freshName("s")
-      val t = ctx.freshName("t"); val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      s"""org.apache.spark.sql.catalyst.util.ArrayData $cent = $cents.getArray($cid);
-         |int $dim = $v.numElements();
-         |int $subDim = $cbs.getArray(0).numElements();
-         |int $m = $dim / $subDim;
-         |int $k = $cbs.numElements() / $m;
-         |int[] $out = new int[$m];
-         |for (int $j = 0; $j < $m; $j++) {
-         |  int $best = 0; double $bestD = Double.MAX_VALUE;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    org.apache.spark.sql.catalyst.util.ArrayData $cb = $cbs.getArray($j * $k + $c);
-         |    double $s = 0.0;
-         |    for (int $t = 0; $t < $subDim; $t++) {
-         |      int $i = $j * $subDim + $t;
-         |      double $d = (double) ($v.getFloat($i) - $cent.getFloat($i)) - (double) $cb.getFloat($t);
-         |      $s += $d * $d;
-         |    }
-         |    if ($s < $bestD) { $bestD = $s; $best = $c; }
-         |  }
-         |  $out[$j] = $best;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);""".stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): Expression =
@@ -282,61 +130,28 @@ case class PqEncodeCodes(first: Expression, second: Expression,
 /** `mat_vec_mul(vector ARRAY<FLOAT>, mat ARRAY<ARRAY<FLOAT>>)` →
   * ARRAY<FLOAT>: out[r] = ⟨mat[r], vector⟩ — the per-row rotation kernel of
   * the OPQ pre-transform (mat = R, row-major, carried as a plan literal).
-  * Accumulation is double, result cast to float, matching the driver-side
-  * trainer's arithmetic so rotated corpora and rotated queries agree
-  * bit-for-bit.
+  * `QuantKernels.matVecMul` (double accumulation, narrowed to float) is
+  * also what rotates the driver-side queries and point writes, so rotated
+  * corpora and rotated queries agree bit-for-bit.
   */
 case class MatVecMul(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ImplicitCastInputTypes {
+    extends BinaryExpression with QuantExpression {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(ArrayType(FloatType)))
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def prettyName: String = "mat_vec_mul"
+  override protected def modelArgs: Seq[(String, Expression)] = Seq("mat" -> right)
 
-  override protected def nullSafeEval(v: Any, mt: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val mat = mt.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    val rows = mat.numElements()
-    if (rows > 0 && mat.getArray(0).numElements() != dim)
-      throw new IllegalArgumentException(
-        s"vector dimension $dim != matrix row width ${mat.getArray(0).numElements()}")
-    val out = new Array[Float](rows)
-    var r = 0
-    while (r < rows) {
-      val row = mat.getArray(r)
-      var s = 0.0; var i = 0
-      while (i < dim) { s += row.getFloat(i).toDouble * vec.getFloat(i).toDouble; i += 1 }
-      out(r) = s.toFloat
-      r += 1
-    }
-    new GenericArrayData(out)
+  @transient private lazy val mat = rows(right)
+
+  override protected def nullSafeEval(v: Any, mt: Any): Any =
+    new GenericArrayData(QuantKernels.matVecMul(v.asInstanceOf[ArrayData].toFloatArray(), mat))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val mt = ctx.addReferenceObj("mat", mat, "float[][]")
+    nullSafeCodeGen(ctx, ev, (v, _) =>
+      s"${ev.value} = new $GenericArray($Kernels.matVecMul($v.toFloatArray(), $mt));")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, mt) => {
-      val dim = ctx.freshName("dim"); val rows = ctx.freshName("rows")
-      val out = ctx.freshName("out"); val r = ctx.freshName("r")
-      val row = ctx.freshName("row"); val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""int $dim = $v.numElements();
-         |int $rows = $mt.numElements();
-         |if ($rows > 0 && $mt.getArray(0).numElements() != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "vector dimension " + $dim + " != matrix row width " + $mt.getArray(0).numElements());
-         |}
-         |float[] $out = new float[$rows];
-         |for (int $r = 0; $r < $rows; $r++) {
-         |  org.apache.spark.sql.catalyst.util.ArrayData $row = $mt.getArray($r);
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    $s += (double) $row.getFloat($i) * (double) $v.getFloat($i);
-         |  }
-         |  $out[$r] = (float) $s;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);""".stripMargin
-    })
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

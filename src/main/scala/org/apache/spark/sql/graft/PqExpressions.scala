@@ -5,6 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+import graft.kernels.QuantKernels
+import QuantExpression.{GenericArray, Kernels}
+
 /** Codegen kernels for the IVF/PQ scan paths (SURVEY A4/J3) — native
   * expressions instead of UDFs, so the per-row work stays inside
   * whole-stage codegen with no serialization boundary.
@@ -52,114 +55,37 @@ case class AdcLookupSum(left: Expression, right: Expression)
   *               centroids ARRAY<ARRAY<FLOAT>>, codebooks ARRAY<ARRAY<FLOAT>>)`
   * → ARRAY<FLOAT>: the m×k ADC distance table for one (query, probed-list)
   * pair, computed EXECUTOR-side — the kernel that makes the PQ query path
-  * collect-free (the driver-loop analog lives in `IvfPq.search`; both produce
-  * bit-identical tables, asserted by `IvfPqDistributedSpec`). `codebooks` is
-  * the [m][k][subDim] table flattened row-major like `PqEncodeCodes`; shapes
-  * are derived (subDim = |codebooks[0]|, m = dim/subDim, k = |codebooks|/m).
+  * collect-free. It is `QuantKernels.adcTable`, the same method the driver
+  * `IvfPq.search` and the zero-job local PQ serve call. `codebooks` is the
+  * [m][k][subDim] table flattened row-major like `PqEncodeCodes`.
   *
-  * `mode`: 0 = l2 (table entry = ||r_q − codeword||² over the subspace),
-  * 1 = ip (−⟨q_j, codeword⟩, with the per-list constant −⟨q, cent⟩ folded
-  * into subspace 0 so cross-list rankings stay comparable), 2 = cos (the l2
-  * entry halved — over unit-normalized query/index, ||q̂−x̂||²/2 is exactly
-  * the cosine distance; the caller normalizes the query column).
+  * `mode`: 0 = l2, 1 = ip, 2 = cos (see `QuantKernels.adcTable`; the caller
+  * normalizes the query column for cos).
   */
 case class PqAdcTable(first: Expression, second: Expression,
     third: Expression, fourth: Expression, mode: Int)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
+    extends QuaternaryExpression with QuantExpression {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), IntegerType,
       ArrayType(ArrayType(FloatType)), ArrayType(ArrayType(FloatType)))
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def prettyName: String = "pq_adc_table"
+  override protected def modelArgs: Seq[(String, Expression)] =
+    Seq("centroids" -> third, "codebooks" -> fourth)
 
-  override protected def nullSafeEval(v: Any, cid: Any, cents: Any, cbs: Any): Any = {
-    val qv = v.asInstanceOf[ArrayData]
-    val cent = cents.asInstanceOf[ArrayData].getArray(cid.asInstanceOf[Int])
-    val books = cbs.asInstanceOf[ArrayData]
-    val dim = qv.numElements()
-    // P3 dimension guard: a mismatched query must error, not mis-slice
-    if (cent.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"query dimension $dim != centroid dimension ${cent.numElements()}")
-    val subDim = books.getArray(0).numElements()
-    val m = dim / subDim
-    val k = books.numElements() / m
-    val out = new Array[Float](m * k)
-    var qDotCent = 0.0
-    if (mode == 1) {
-      var i = 0
-      while (i < dim) { qDotCent += qv.getFloat(i).toDouble * cent.getFloat(i).toDouble; i += 1 }
-    }
-    var j = 0
-    while (j < m) {
-      var c = 0
-      while (c < k) {
-        val cb = books.getArray(j * k + c)
-        var s = 0.0; var t = 0
-        while (t < subDim) {
-          val i = j * subDim + t
-          if (mode == 1) s -= qv.getFloat(i).toDouble * cb.getFloat(t)
-          else {
-            val d = (qv.getFloat(i) - cent.getFloat(i)).toDouble - cb.getFloat(t)
-            s += d * d
-          }
-          t += 1
-        }
-        if (mode == 1 && j == 0) s -= qDotCent
-        out(j * k + c) = (if (mode == 2) s * 0.5 else s).toFloat
-        c += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
+  @transient private lazy val cents = rows(third)
+  @transient private lazy val books = QuantExpression.codebooks(cents, rows(fourth))
+
+  override protected def nullSafeEval(v: Any, cid: Any, cs: Any, cbs: Any): Any =
+    new GenericArrayData(QuantKernels.adcTable(
+      v.asInstanceOf[ArrayData].toFloatArray(), cents(cid.asInstanceOf[Int]), books, mode))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cs = ctx.addReferenceObj("cents", cents, "float[][]")
+    val bs = ctx.addReferenceObj("books", books, "float[][][]")
+    nullSafeCodeGen(ctx, ev, (v, cid, _, _) =>
+      s"${ev.value} = new $GenericArray($Kernels.adcTable($v.toFloatArray(), $cs[$cid], $bs, $mode));")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, cid, cents, cbs) => {
-      val cent = ctx.freshName("cent"); val dim = ctx.freshName("dim")
-      val subDim = ctx.freshName("subDim"); val m = ctx.freshName("m")
-      val k = ctx.freshName("k"); val out = ctx.freshName("out")
-      val qdc = ctx.freshName("qdc"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val cb = ctx.freshName("cb")
-      val s = ctx.freshName("s"); val t = ctx.freshName("t")
-      val i = ctx.freshName("i"); val d = ctx.freshName("d")
-      val qdcInit = if (mode == 1)
-        s"for (int $i = 0; $i < $dim; $i++) { $qdc += (double) $v.getFloat($i) * (double) $cent.getFloat($i); }"
-      else ""
-      val inner = if (mode == 1)
-        s"$s -= (double) $v.getFloat($i) * (double) $cb.getFloat($t);"
-      else
-        s"""double $d = (double) ($v.getFloat($i) - $cent.getFloat($i)) - (double) $cb.getFloat($t);
-           |$s += $d * $d;""".stripMargin
-      val fold = if (mode == 1) s"if ($j == 0) $s -= $qdc;" else ""
-      val store = if (mode == 2) s"$out[$j * $k + $c] = (float) ($s * 0.5);"
-        else s"$out[$j * $k + $c] = (float) $s;"
-      s"""org.apache.spark.sql.catalyst.util.ArrayData $cent = $cents.getArray($cid);
-         |int $dim = $v.numElements();
-         |if ($cent.numElements() != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "query dimension " + $dim + " != centroid dimension " + $cent.numElements());
-         |}
-         |int $subDim = $cbs.getArray(0).numElements();
-         |int $m = $dim / $subDim;
-         |int $k = $cbs.numElements() / $m;
-         |float[] $out = new float[$m * $k];
-         |double $qdc = 0.0;
-         |$qdcInit
-         |for (int $j = 0; $j < $m; $j++) {
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    org.apache.spark.sql.catalyst.util.ArrayData $cb = $cbs.getArray($j * $k + $c);
-         |    double $s = 0.0;
-         |    for (int $t = 0; $t < $subDim; $t++) {
-         |      int $i = $j * $subDim + $t;
-         |      $inner
-         |    }
-         |    $fold
-         |    $store
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);""".stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): Expression =
@@ -169,54 +95,26 @@ case class PqAdcTable(first: Expression, second: Expression,
 /** `nearest_centroid(vector ARRAY<FLOAT>, centroids ARRAY<ARRAY<FLOAT>>)` →
   * INT: argmin of squared-L2 distance (ties → lowest index) — the
   * centroid-assignment join J3 as a broadcast-free codegen kernel; the
-  * centroid table rides in as a literal.
+  * centroid table rides in as a literal. `QuantKernels.nearestCentroid`.
   */
 case class NearestCentroid(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryExpression with QuantExpression {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(ArrayType(FloatType)))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "nearest_centroid"
+  override protected def modelArgs: Seq[(String, Expression)] = Seq("centroids" -> right)
 
-  override protected def nullSafeEval(v: Any, cs: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]; val cents = cs.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    var best = 0; var bestD = Double.MaxValue
-    var c = 0
-    val n = cents.numElements()
-    while (c < n) {
-      val ct = cents.getArray(c)
-      var s = 0.0; var i = 0
-      while (i < dim) {
-        val d = vec.getFloat(i).toDouble - ct.getFloat(i).toDouble
-        s += d * d; i += 1
-      }
-      if (s < bestD) { bestD = s; best = c }
-      c += 1
-    }
-    best
+  @transient private lazy val cents = rows(right)
+
+  override protected def nullSafeEval(v: Any, cs: Any): Any =
+    QuantKernels.nearestCentroid(v.asInstanceOf[ArrayData].toFloatArray(), cents)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cs = ctx.addReferenceObj("cents", cents, "float[][]")
+    nullSafeCodeGen(ctx, ev, (v, _) =>
+      s"${ev.value} = $Kernels.nearestCentroid($v.toFloatArray(), $cs);")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, cs) => {
-      val dim = ctx.freshName("dim"); val n = ctx.freshName("n")
-      val best = ctx.freshName("best"); val bestD = ctx.freshName("bestD")
-      val c = ctx.freshName("c"); val i = ctx.freshName("i")
-      val s = ctx.freshName("s"); val d = ctx.freshName("d"); val ct = ctx.freshName("ct")
-      s"""int $dim = $v.numElements();
-         |int $n = $cs.numElements();
-         |int $best = 0; double $bestD = Double.MAX_VALUE;
-         |for (int $c = 0; $c < $n; $c++) {
-         |  org.apache.spark.sql.catalyst.util.ArrayData $ct = $cs.getArray($c);
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    double $d = (double) $v.getFloat($i) - (double) $ct.getFloat($i);
-         |    $s += $d * $d;
-         |  }
-         |  if ($s < $bestD) { $bestD = $s; $best = $c; }
-         |}
-         |${ev.value} = $best;""".stripMargin
-    })
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

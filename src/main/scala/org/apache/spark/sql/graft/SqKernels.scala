@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, QuaternaryExpression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+
+import graft.kernels.QuantKernels
+import QuantExpression.Kernels
 
 /** Codegen kernels for the scalar-quantization (SQ8) tier: 1 byte per
   * dimension (4× smaller than float32) with per-dimension affine
@@ -15,48 +18,29 @@ import org.apache.spark.sql.types._
 /** `sq_encode(vector ARRAY<FLOAT>, mins ARRAY<FLOAT>, scales ARRAY<FLOAT>)`
   * → BINARY: byte i = clamp(round((v[i] − mins[i]) · scales[i]), 0, 255),
   * scales[i] = 255/(max−min) (0 for constant dimensions → code 0).
+  * `QuantKernels.sqEncode`.
   */
 case class SqEncode(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    extends TernaryExpression with QuantExpression {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = BinaryType
   override def prettyName: String = "sq_encode"
+  override protected def modelArgs: Seq[(String, Expression)] =
+    Seq("mins" -> second, "scales" -> third)
 
-  override protected def nullSafeEval(v: Any, mn: Any, sc: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val mins = mn.asInstanceOf[ArrayData]
-    val scales = sc.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    if (mins.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"vector dimension $dim != model dimension ${mins.numElements()}")
-    val out = new Array[Byte](dim)
-    var i = 0
-    while (i < dim) {
-      val q = Math.round((vec.getFloat(i) - mins.getFloat(i)).toDouble * scales.getFloat(i))
-      out(i) = Math.max(0L, Math.min(255L, q)).toByte
-      i += 1
-    }
-    out
+  @transient private lazy val mins = floats(second)
+  @transient private lazy val scales = floats(third)
+
+  override protected def nullSafeEval(v: Any, mn: Any, sc: Any): Any =
+    QuantKernels.sqEncode(v.asInstanceOf[ArrayData].toFloatArray(), mins, scales)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val mn = ctx.addReferenceObj("mins", mins, "float[]")
+    val sc = ctx.addReferenceObj("scales", scales, "float[]")
+    nullSafeCodeGen(ctx, ev, (v, _, _) =>
+      s"${ev.value} = $Kernels.sqEncode($v.toFloatArray(), $mn, $sc);")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, mn, sc) => {
-      val dim = ctx.freshName("dim"); val out = ctx.freshName("out")
-      val i = ctx.freshName("i"); val q = ctx.freshName("q")
-      s"""int $dim = $v.numElements();
-         |if ($mn.numElements() != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "vector dimension " + $dim + " != model dimension " + $mn.numElements());
-         |}
-         |byte[] $out = new byte[$dim];
-         |for (int $i = 0; $i < $dim; $i++) {
-         |  long $q = Math.round((double) ($v.getFloat($i) - $mn.getFloat($i)) * $sc.getFloat($i));
-         |  $out[$i] = (byte) Math.max(0L, Math.min(255L, $q));
-         |}
-         |${ev.value} = $out;""".stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): Expression =
@@ -68,53 +52,31 @@ case class SqEncode(first: Expression, second: Expression, third: Expression)
   * between a full-precision query and a dequantized code —
   * Σ (q[i] − (mins[i] + (code[i] & 0xFF) · invScales[i]))², with
   * invScales[i] = (max−min)/255. The query side never quantizes (same
-  * asymmetric-distance argument as PQ's ADC).
+  * asymmetric-distance argument as PQ's ADC). `QuantKernels.sqAdcL2`.
   */
 case class SqAdcL2(first: Expression, second: Expression,
     third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
+    extends QuaternaryExpression with QuantExpression {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), BinaryType, ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "sq_adc_l2"
+  override protected def modelArgs: Seq[(String, Expression)] =
+    Seq("mins" -> third, "invScales" -> fourth)
 
-  override protected def nullSafeEval(qv: Any, cd: Any, mn: Any, iv: Any): Any = {
-    val q = qv.asInstanceOf[ArrayData]
-    val code = cd.asInstanceOf[Array[Byte]]
-    val mins = mn.asInstanceOf[ArrayData]
-    val invs = iv.asInstanceOf[ArrayData]
-    val dim = q.numElements()
-    if (code.length != dim)
-      throw new IllegalArgumentException(
-        s"query dimension $dim != code dimension ${code.length}")
-    var s = 0.0; var i = 0
-    while (i < dim) {
-      val deq = mins.getFloat(i).toDouble + (code(i) & 0xFF).toDouble * invs.getFloat(i)
-      val d = q.getFloat(i) - deq
-      s += d * d
-      i += 1
-    }
-    s
+  @transient private lazy val mins = floats(third)
+  @transient private lazy val invScales = floats(fourth)
+
+  override protected def nullSafeEval(q: Any, cd: Any, mn: Any, iv: Any): Any =
+    QuantKernels.sqAdcL2(q.asInstanceOf[ArrayData].toFloatArray(),
+      cd.asInstanceOf[Array[Byte]], mins, invScales)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val mn = ctx.addReferenceObj("mins", mins, "float[]")
+    val iv = ctx.addReferenceObj("invScales", invScales, "float[]")
+    nullSafeCodeGen(ctx, ev, (q, cd, _, _) =>
+      s"${ev.value} = $Kernels.sqAdcL2($q.toFloatArray(), $cd, $mn, $iv);")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, cd, mn, iv) => {
-      val dim = ctx.freshName("dim"); val s = ctx.freshName("s")
-      val i = ctx.freshName("i"); val deq = ctx.freshName("deq")
-      val d = ctx.freshName("d")
-      s"""int $dim = $q.numElements();
-         |if ($cd.length != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "query dimension " + $dim + " != code dimension " + $cd.length);
-         |}
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $dim; $i++) {
-         |  double $deq = (double) $mn.getFloat($i) + (double) ($cd[$i] & 0xFF) * (double) $iv.getFloat($i);
-         |  double $d = (double) $q.getFloat($i) - $deq;
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = $s;""".stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): Expression =

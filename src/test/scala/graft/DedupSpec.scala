@@ -427,7 +427,8 @@ class DedupSpec extends SparkSpec {
       (5L, "a  b c"),                        // double space = empty token
       (6L, "emoji 😃 café 中文 tokens here"),
       (7L, "trailing space "),
-      (8L, "alpha beta gamma delta epsilon zeta")) // exact dup of 1
+      (8L, "alpha beta gamma delta epsilon zeta"), // exact dup of 1
+      (9L, null))                            // null text
       .toDF("doc_id", "text")
     val corpora = Seq(tricky, docs.limit(300))
     corpora.foreach { d =>
@@ -435,8 +436,18 @@ class DedupSpec extends SparkSpec {
       val want = Dedup.minHashSignatures(Dedup.shingles(d, "doc_id", "text", n), k)
       val got = Dedup.minHashSigRows(d, "doc_id", "text", n, k)
       val cols = col("__did") +: (0 until k).map(i => col(s"h$i")) :+ col("__n")
-      assert(got.select(cols: _*).collect().map(_.toSeq).toSet ===
-        want.select(cols: _*).collect().map(_.toSeq).toSet)
+      val nullDocs: Set[Any] = d.filter(col("text").isNull).select("doc_id").collect()
+        .map(_.get(0)).toSet
+      val gotRows = got.select(cols: _*).collect().map(_.toSeq)
+      val wantRows = want.select(cols: _*).collect().map(_.toSeq)
+      // a null text: the reference falls back to one null shingle and emits
+      // a degenerate __n = 1 row; the kernel drops that doc on purpose
+      nullDocs.foreach { id =>
+        assert(wantRows.filter(_.head == id).map(_.last) === Seq(1L), s"reference row of doc $id")
+      }
+      assert(!gotRows.exists(r => nullDocs(r.head)),
+        s"kernel emitted a row for a null-text doc ($nullDocs)")
+      assert(gotRows.toSet === wantRows.filterNot(r => nullDocs(r.head)).toSet)
     }
   }
 

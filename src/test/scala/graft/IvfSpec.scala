@@ -189,4 +189,35 @@ class IvfSpec extends SparkSpec {
     assert(sweep == sweep.sorted, s"recall not monotone over nprobe: $sweep")
     assert(sweep.last === 1.0, s"nprobe=nlist must be exact, got ${sweep.last}")
   }
+
+  /** One probe order: the driver `Model.probe` and the distributed
+    * `nearest_centroids` column are the same kernel, so a query with a NaN
+    * component (every distance NaN) gets the same order on both — and on
+    * both evaluation paths of the expression — instead of an
+    * out-of-bounds crash.
+    */
+  test("NaN query: model.probe ≡ nearest_centroids (codegen and interpreted), l2 and ip") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graft.{Bridge, NearestCentroids}
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val cents = Array(Array(0f, 0f), Array(3f, 1f), Array(-1f, 2f), Array(3f, 1f))
+    val qs = Seq(Array(Float.NaN, 0f), Array(0.5f, Float.NaN), Array(Float.NaN, Float.NaN),
+      Array(2.9f, 1.1f))
+    val df = qs.zipWithIndex.map { case (q, i) => (i, q.toSeq) }.toDF("i", "q").cache()
+    val centsLit = Literal.create(cents.map(_.toSeq).toSeq, ArrayType(ArrayType(FloatType)))
+    for (space <- Seq(SpaceType.L2, SpaceType.Ip); nprobe <- Seq(1, 3, 4)) {
+      val model = IvfIndex.Model(cents, space)
+      val (generated, interpreted) = codegenAndInterpreted {
+        df.select(col("i"), Bridge.column(NearestCentroids(Bridge.expression(col("q")),
+            centsLit, Literal(nprobe), ip = space == SpaceType.Ip)))
+          .as[(Int, Seq[Int])].collect().toMap
+      }
+      qs.zipWithIndex.foreach { case (q, i) =>
+        val want = model.probe(q, nprobe)
+        assert(generated(i) === want, s"[$space nprobe=$nprobe] codegen, query $i")
+        assert(interpreted(i) === want, s"[$space nprobe=$nprobe] interpreted, query $i")
+      }
+    }
+    df.unpersist()
+  }
 }

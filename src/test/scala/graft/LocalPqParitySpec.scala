@@ -10,7 +10,7 @@ import graft.core.{CollectionConfig, Document, IndexType, SpaceType}
 /** Zero-job IVFPQ point serving (`LocalPqServe` ADC shortlist + the
   * engine's local exact re-rank) must be row-identical to the distributed
   * `IvfPq.search(rerankVecCol = vector)` plan: same probe, same ADC table
-  * (literally `IvfPq.adcTableLocal` on both paths), same double-accumulated
+  * (literally `QuantKernels.adcTable` on both paths), same double-accumulated
   * lookup sum, same shortlist depth (shared `DefaultRerankFactor`), same
   * exact re-rank arithmetic and (distance, id UTF-8) ties. The single-query
   * engine path routes local; padding past 16 queries forces distributed.

@@ -93,6 +93,20 @@ class PlanSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(p.contains("pq_encode"), s"expected the codegen kernel in:\n$p")
     assert(!p.contains("UDF("), s"encode plan must not contain a Scala UDF:\n$p")
+    import graft.operators.{BinaryQuant, IvfIndex, Opq, ScalarQuant}
+    val dim = model.m * model.subDim
+    val identity = Array.tabulate(dim, dim)((r, c) => if (r == c) 1f else 0f)
+    val encodes = Seq(
+      "sq_encode" -> ScalarQuant.encode(c, "embedding",
+        ScalarQuant.Model(Array.fill(dim)(-1f), Array.fill(dim)(1f))),
+      "bq_encode" -> BinaryQuant.encode(c, "embedding", BinaryQuant.Model(Array.fill(dim)(0f))),
+      "mat_vec_mul" -> Opq.encode(c, "embedding", Opq.Model(identity, model, Array.empty)),
+      "nearest_centroid" -> IvfIndex.assign(c, "embedding", model.coarse))
+    for ((kernel, df) <- encodes) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains(kernel), s"expected the codegen kernel $kernel in:\n$plan")
+      assert(!plan.contains("UDF("), s"$kernel plan must not contain a Scala UDF:\n$plan")
+    }
   }
 
   test("range joins plan as equi-joins — never cartesian/nested-loop") {

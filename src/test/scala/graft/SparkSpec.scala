@@ -44,6 +44,27 @@ trait SparkSpec extends AnyFunSuite {
       (out, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** `body` run twice: under whole-stage codegen with generated code only
+    * (a compile failure fails instead of falling back to interpreted eval),
+    * then interpreted (`NO_CODEGEN`). Callers feed a non-local input (e.g. a
+    * cached frame): a projection over a `LocalRelation` is folded on the
+    * driver by the interpreted evaluator whatever the settings.
+    */
+  def codegenAndInterpreted[T](body: => T): (T, T) = {
+    val conf = spark.conf
+    def under(settings: (String, String)*): T = {
+      val saved = settings.map { case (k, _) => k -> conf.getOption(k) }
+      settings.foreach { case (k, v) => conf.set(k, v) }
+      try body
+      finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
+    (under("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false"),
+      under("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+  }
 }
 
 object SparkSpec {
