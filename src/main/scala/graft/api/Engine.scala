@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.core.ModelStore
-import graft.operators.{BinaryQuant, ExactKnn, GraphAnn, IvfIndex, IvfPq, Matryoshka, Opq, ScalarQuant}
+import graft.operators.{ExactKnn, GraphAnn}
 import graft.sources.EmbeddingProvider
 
 /** Engine facade — the reference's REST verb set (SURVEY §2.9) as a Scala
@@ -40,22 +40,12 @@ class Engine(
 
   private val catalog = new Catalog(root)
   private val store = new DocStore(spark, root)
-  // per-collection runtime state: search params + trained IVF model
+  // per-collection runtime state: search params + the built tier index
   private val runtime = collection.concurrent.TrieMap.empty[String, Map[String, Int]]
-  private val ivfModels = collection.concurrent.TrieMap.empty[String, IvfIndex.Model]
-  private val pqModels = collection.concurrent.TrieMap.empty[String, IvfPq.Model]
-  private val opqModels = collection.concurrent.TrieMap.empty[String, Opq.Model]
-  private val sqModels = collection.concurrent.TrieMap.empty[String, ScalarQuant.Model]
-  private val bqModels = collection.concurrent.TrieMap.empty[String, BinaryQuant.Model]
+  private val indexes = collection.concurrent.TrieMap.empty[String, LayoutEncoder]
   private val cache = new ResultCache(capacity = 128)
   // params epoch: bumped on setParams so cached results keyed on old params miss
   private val paramsEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def ivfSnapshotPath(coll: String) = s"$root/$coll/index/ivf.snapshot"
-  private def pqSnapshotPath(coll: String) = s"$root/$coll/index/pq.snapshot"
-  private def opqSnapshotPath(coll: String) = s"$root/$coll/index/opq.snapshot"
-  private def sqSnapshotPath(coll: String) = s"$root/$coll/index/sq.snapshot"
-  private def bqSnapshotPath(coll: String) = s"$root/$coll/index/bq.snapshot"
 
   // Index-layout directories are GENERATION-VERSIONED (the same snapshot
   // isolation the DocStore gives its data dir): full-layout rewrites
@@ -84,7 +74,11 @@ class Engine(
     if (g == 0L) s"$root/$coll/index/${tier}_layout"
     else s"$root/$coll/index/${tier}_layout_g$g"
 
-  private def ivfLayoutPath(coll: String) = tierGenPath(coll, "ivf", layoutGen(coll))
+  /** The collection's CURRENT layout dir for tier `t` (generation-resolved);
+    * None = flat, no layout.
+    */
+  private def tierLayout(coll: String, t: Tier[_]): Option[String] =
+    t.key.map(tierGenPath(coll, _, layoutGen(coll)))
   // bucketed data dirs ride the SAME generation counter (writeBucketedLayout
   // runs after the flip, so a rebuild lands in a fresh dir and in-flight
   // scans of the previous table keep their files; the meta records the
@@ -175,13 +169,6 @@ class Engine(
       (scheme, Option(u.getAuthority).getOrElse(""),
         java.nio.file.Paths.get(p).normalize.toString)
     }.getOrElse(("", "", s))
-  private def pqLayoutPath(coll: String) = tierGenPath(coll, "pq", layoutGen(coll))
-  private def opqLayoutPath(coll: String) = tierGenPath(coll, "opq", layoutGen(coll))
-  private def sqLayoutPath(coll: String) = tierGenPath(coll, "sq", layoutGen(coll))
-  private def bqLayoutPath(coll: String) = tierGenPath(coll, "bq", layoutGen(coll))
-  private def hnswLayoutPath(coll: String) = tierGenPath(coll, "hnsw", layoutGen(coll))
-  private def mrlLayoutPath(coll: String) = tierGenPath(coll, "mrl", layoutGen(coll))
-
   /** Flip to generation `gen + 1` of `tier`'s layout (the new dir must be
     * fully written first), GC generations older than the superseded one,
     * and drop path-keyed driver/executor caches of retired dirs. Returns
@@ -217,20 +204,9 @@ class Engine(
     tierGenPath(coll, tier, gen + 1)
   }
 
-  /** The tier key of a collection's layout dirs (None = flat, no layout). */
-  private def tierKey(it: IndexType): Option[String] = it match {
-    case IndexType.IvfFlat => Some("ivf")
-    case IndexType.IvfPq => Some("pq")
-    case IndexType.Opq => Some("opq")
-    case IndexType.Sq => Some("sq")
-    case IndexType.Bq => Some("bq")
-    case IndexType.Hnsw => Some("hnsw")
-    case IndexType.Mrl => Some("mrl")
-    case _ => None
-  }
   // streaming-insert sidecar of the graph layout: underscore-prefixed, so
   // the graph reader's listing never sees it (same convention as `_route`)
-  private def hnswDeltaPath(coll: String) = s"${hnswLayoutPath(coll)}/_delta"
+  private def hnswDeltaPath(coll: String) = s"${tierLayout(coll, Tier.Hnsw).get}/_delta"
   // the version at which the ADJACENCY was last built — delta appends keep
   // layout_version current without touching this, so executor graph caches
   // and the co-located layout RDD stay hot across streaming batches
@@ -483,8 +459,7 @@ class Engine(
   def listCollections(): Seq[String] = catalog.list()
 
   def dropCollection(name: String): Boolean = {
-    runtime.remove(name); ivfModels.remove(name); pqModels.remove(name)
-    opqModels.remove(name); sqModels.remove(name); bqModels.remove(name)
+    runtime.remove(name); indexes.remove(name)
     // unregister the collection's bucketed table (external — dropping the
     // table leaves the files; they go with the collection dir). Only drop a
     // table that still points at THIS collection's files: another collection
@@ -562,19 +537,7 @@ class Engine(
     * path untaken). The probe is version-fenced inside `ingestBatchIndexed`
     * against writers racing between probe and commit.
     */
-  // phase timers (maintained write profiling): -Dgraft.profile.write=true
-  private val profWrite = java.lang.Boolean.getBoolean("graft.profile.write")
-  private val profT = new ThreadLocal[java.lang.Long]()
-  private def wlap(tag: String): Unit = if (profWrite) {
-    val now = System.nanoTime()
-    val prev = profT.get()
-    if (prev != null)
-      System.err.println(f"[write-prof] $tag ${(now - prev) / 1e6}%.2f ms")
-    profT.set(now)
-  }
-
   def batchUpsertDocuments(coll: String, docs: Seq[Document]): Unit = {
-    if (profWrite) profT.set(System.nanoTime())
     val cfg = configOf(coll)
     require(docs.nonEmpty, "empty batch")
     // a multivector collection's rows MUST carry the doc-key param — a plain
@@ -583,9 +546,8 @@ class Engine(
     require(!isMultiVector(cfg) || docs.forall(_.params.contains(MultiVectorDocKey)),
       s"'$coll' is a multivector collection — write through " +
         "upsertMultiVector/batchUpsertMultiVector")
-    val maintained = tierLayoutPath(coll)
+    val maintained = tierLayout(coll, Tier(cfg.indexType))
       .exists(p => currentLayoutStamp(coll, p).isDefined)
-    wlap("cfg+stamp")
     if (!maintained) { store.upsert(coll, docs, cfg.dimension); return }
     // all-or-nothing dimension validation (document.go:280-285) — the
     // DataFrame commit below bypasses the store's Seq-side check
@@ -601,9 +563,7 @@ class Engine(
     // between this read and the point reads below. Projected existence
     // probe — no vector/params decode, ~10× cheaper than getMany.
     val v0 = store.currentVersion(coll)
-    wlap("v0")
     val overlap = store.liveIds(coll, collapsed.map(_.id)).nonEmpty
-    wlap("liveIds probe")
     import spark.implicits._
     // by-name: the driver-sized path never materializes this plan
     ingestBatchIndexed(coll, spark.createDataset(collapsed).toDF(),
@@ -660,7 +620,7 @@ class Engine(
   def deleteDocuments(coll: String, ids: Seq[String]): Unit = {
     val cfg = configOf(coll)
     val genAtStart = layoutGen(coll) // fence: see the stamp condition below
-    val layoutOpt = tierLayoutPath(coll)
+    val layoutOpt = tierLayout(coll, Tier(cfg.indexType))
     val wasCurrent = layoutOpt.exists(p => currentLayoutStamp(coll, p).isDefined)
     // delete-through-delta needs versioned delta rows (see ingest's guard)
     val versionedDelta = cfg.indexType != IndexType.Hnsw || hasVersionedDelta(coll)
@@ -790,11 +750,10 @@ class Engine(
     // whole batch (store commit included) already landed — replay is a no-op
     if (batchId.exists(bid => readLedger(ledgerPath)
         .exists { case (sid, last) => sid == streamId && last >= bid })) return
-    // (batch → layout rows, currency-check path, append path,
-    // cluster-partitioned?) per index family. The quantized flat tiers
-    // (sq/bq) maintain too: their models are FIXED at buildIndex, so
-    // encoding the batch with the loaded model appends exactly the rows a
-    // full re-encode would produce — searches keep scanning codes instead
+    // Every tier with a layout maintains it through its built index's
+    // encoder (`Tier`). The quantized flat tiers (sq/bq) maintain too:
+    // their models are FIXED at buildIndex, so encoding the batch with the
+    // loaded model appends exactly the rows a full re-encode would produce — searches keep scanning codes instead
     // of falling back to re-encoding the whole live corpus after every
     // ingest batch. The GRAPH tier maintains via a DELTA SIDECAR: new rows
     // can't be appended into persisted adjacency, so they land as plain
@@ -827,43 +786,14 @@ class Engine(
       // an append that raced into a superseded generation stales (fallback)
       // instead of certifying a row-missing layout
       val genAtStart = layoutGen(coll)
-      wlap("ingest: toDF+cache+gen")
-      val maintain: Option[(DataFrame => DataFrame, String, String, Boolean)] = cfg.indexType match {
-        case IndexType.IvfFlat =>
-          loadedIvfOpt(coll).map(m =>
-            ((df: DataFrame) => IvfIndex.assign(df, "vector", m),
-              ivfLayoutPath(coll), ivfLayoutPath(coll), true))
-        case IndexType.IvfPq =>
-          loadedPqOpt(coll).map(m =>
-            ((df: DataFrame) => IvfPq.encode(df, "vector", m),
-              pqLayoutPath(coll), pqLayoutPath(coll), true))
-        case IndexType.Opq =>
-          loadedOpqOpt(coll).map(m =>
-            ((df: DataFrame) => Opq.encode(df, "vector", m),
-              opqLayoutPath(coll), opqLayoutPath(coll), true))
-        case IndexType.Sq =>
-          loadedSqOpt(coll).map(m =>
-            ((df: DataFrame) => ScalarQuant.encode(df, "vector", m),
-              sqLayoutPath(coll), sqLayoutPath(coll), false))
-        case IndexType.Bq =>
-          loadedBqOpt(coll).map(m =>
-            ((df: DataFrame) => BinaryQuant.encode(df, "vector", m),
-              bqLayoutPath(coll), bqLayoutPath(coll), false))
-        case IndexType.Mrl =>
-          // no model to load — the prefix width comes from the config, so
-          // an mrl layout is maintainable from the first buildIndex on
-          Some(((df: DataFrame) => mrlEncode(df, mrlPrefixDim(cfg)),
-            mrlLayoutPath(coll), mrlLayoutPath(coll), false))
-        case IndexType.Hnsw =>
-          // delta rows carry their write version so a later tombstone can
-          // shadow superseded incarnations (update-through-delta)
-          Some(((df: DataFrame) => df.select(col("id"), col("vector"), col("version")),
-            hnswLayoutPath(coll), hnswDeltaPath(coll), false))
-        case _ => None
-      }
-      val maintainable = maintain.exists { case (_, checkPath, _, _) =>
-        currentLayoutStamp(coll, checkPath).isDefined // stamp check only — no schema inference
-      }
+      val tier = Tier(cfg.indexType)
+      val layoutOpt = tierLayout(coll, tier)
+      // stamp check only — no schema inference. mrl and hnsw have no model
+      // to load, so their layouts are maintainable from the first
+      // buildIndex on
+      val index = layoutOpt.filter(p => currentLayoutStamp(coll, p).isDefined)
+        .flatMap(_ => builtIndex(coll, cfg, tier))
+      val maintainable = index.isDefined
       // in-batch duplicate ids → stale path: the store resolves them by
       // arrival order, which a second evaluation of a nondeterministic
       // source cannot reproduce, and same-version layout rows cannot be
@@ -900,12 +830,10 @@ class Engine(
       // mark the layout current while missing an interleaved writer's rows.
       // With driverRows the commit goes through the Seq path (the local run
       // writer for small batches): same rows, same version protocol.
-      wlap("ingest: pre-commit checks")
       val v = driverRows match {
         case Some(docs) => store.upsert(coll, docs, cfg.dimension)
         case None => store.upsertDfVersioned(coll, batch)
       }
-      wlap("ingest: store commit")
       // resolve the overlap answer now that our commit version is known: a
       // caller-side probe is authoritative only when nothing interleaved
       // between the probe and this commit (versions are +1-per-write, so
@@ -924,7 +852,7 @@ class Engine(
       // the append here is also what keeps every delta dir
       // schema-homogeneous, which is what makes the footer probe sound.
       val legacyDeltaBlocks = uniqueInBatch &&
-        cfg.indexType == IndexType.Hnsw && !hasVersionedDelta(coll)
+        tier == Tier.Hnsw && !hasVersionedDelta(coll)
       def settleLedger(): Unit = batchId.foreach { bid =>
         atomicWrite(ledgerPath, s"$streamId\n$bid")
         cfs.deleteIfExists(intentPath)
@@ -935,7 +863,9 @@ class Engine(
         return
       }
       batchId.foreach(bid => atomicWrite(intentPath, s"$streamId\n$bid"))
-      val (encode, _, layoutPath, clustered) = maintain.get
+      val layoutPath = layoutOpt.get
+      // the graph tier appends to its `_delta` sidecar, not the adjacency
+      val appendPath = if (tier == Tier.Hnsw) s"$layoutPath/_delta" else layoutPath
       val localDocs = driverRows.filter(_.size <= LocalRunWriter.MaxLocalRows)
       // quantized/clustered tiers: a driver-sized batch encodes ON THE
       // DRIVER (LocalEncode — bit-identical twins of the codegen kernels;
@@ -944,10 +874,10 @@ class Engine(
       // Skipped while a bucketed table is current: its append is a Spark
       // bucketBy write by construction, and staling it per point write
       // would trade the batch-search tier for serving latency.
-      val localRows =
-        if (localDocs.isEmpty || bucketedPre.nonEmpty) None
-        else localLayoutRows(coll, cfg, localDocs.get)
-      if (localDocs.isDefined && cfg.indexType == IndexType.Hnsw) {
+      val localCode = index.collect {
+        case c: CodeIndex if localDocs.isDefined && bucketedPre.isEmpty => c
+      }
+      if (localDocs.isDefined && tier == Tier.Hnsw) {
         // ZERO-JOB append for driver-sized hnsw batches (the REST point
         // write): the graph tier's "encode" is a plain (id, vector,
         // version) projection, so the delta rows and tombstones land via
@@ -957,22 +887,25 @@ class Engine(
         // ordering and stamp guards are identical to the Spark branch;
         // hnsw collections have no bucketed table to maintain.
         val docs = driverRows.get
-        LocalRunWriter.writeDeltaRun(layoutPath,
+        LocalRunWriter.writeDeltaRun(appendPath,
           docs.map(d => (d.id, d.vector.toSeq)), v)
-        wlap("ingest: delta run")
-        if (needTombstones) {
-          LocalRunWriter.writeTombstoneRun(
-            tombstonesPath(maintain.get._2), docs.map(_.id), v)
-          wlap("ingest: tombstone run")
-        }
-      } else if (localRows.isDefined) {
+        if (needTombstones)
+          LocalRunWriter.writeTombstoneRun(tombstonesPath(layoutPath), docs.map(_.id), v)
+      } else if (localCode.isDefined) {
         // same write ordering as the Spark branch: layout rows first, then
         // the shadows, both before any stamp advance (a crash between them
-        // leaves the stamps behind → stale → fallback, never a lie)
-        LocalRunWriter.writeLayoutRuns(layoutPath, localRows.get, v)
+        // leaves the stamps behind → stale → fallback, never a lie). The
+        // rows are exactly what the Spark branch's encode would append
+        // (same columns, same order; `LocalEncodeSpec` pins bit identity,
+        // the TombstoneSpec REST cases pin results ≡ rebuild end-to-end)
+        val rows = localDocs.get.zipWithIndex.map { case (d, i) =>
+          val (cid, extra) = localCode.get.localRow(d.vector)
+          LocalRunWriter.LayoutRow(d.id, d.vector.toSeq, d.params, i.toLong, cid, extra)
+        }
+        LocalRunWriter.writeLayoutRuns(layoutPath, rows, v)
         if (needTombstones)
           LocalRunWriter.writeTombstoneRun(
-            tombstonesPath(maintain.get._2), localDocs.get.map(_.id), v)
+            tombstonesPath(layoutPath), localDocs.get.map(_.id), v)
       } else {
       // mirror upsertDf's stamping so layout rows carry the store schema
       // (insert-only + unique ids ⇒ seq never decides a winner)
@@ -980,12 +913,12 @@ class Engine(
         .withColumn("version", lit(v))
         .withColumn("seq", monotonically_increasing_id())
         .withColumn("is_deleted", lit(false))
-      val encoded = encode(stamped).cache()
+      val encoded = index.get.encode(stamped).cache()
       try {
-        if (clustered)
-          encoded.write.mode("append").partitionBy("cluster_id").parquet(layoutPath)
+        if (tier.clustered)
+          encoded.write.mode("append").partitionBy("cluster_id").parquet(appendPath)
         else
-          encoded.write.mode("append").parquet(layoutPath)
+          encoded.write.mode("append").parquet(appendPath)
         // update batches: tombstone every touched id at THIS batch's version —
         // the appended rows (version == v) survive the shadow rule, every
         // older incarnation of the ids dies at read time. Written before ANY
@@ -1002,7 +935,7 @@ class Engine(
         // would get no shadow and serve two incarnations
         if (needTombstones)
           encoded.select(col("id")).withColumn("ver", lit(v))
-            .write.mode("append").parquet(tombstonesPath(maintain.get._2))
+            .write.mode("append").parquet(tombstonesPath(layoutPath))
         // keep the bucketed table current too (streaming maintenance): append
         // the same encoded rows bucketed, then advance the meta stamp under the
         // same still-newest condition. A crash between the two appends leaves
@@ -1035,7 +968,6 @@ class Engine(
           !cfs.exists(compactIntentPath(coll)) &&
           layoutGen(coll) == genAtStart)
         atomicWrite(s"$root/$coll/index/layout_version", v.toString)
-      wlap("ingest: stamp advance")
       // size-triggered delta compaction (the LSM fold policy): once the hnsw
       // delta sidecar holds >= `deltaCompactRows` rows, fold it into fresh
       // adjacency RIGHT HERE — a stream that never sees a manual buildIndex
@@ -1044,7 +976,7 @@ class Engine(
       // protocol's: a crash mid-rebuild leaves the intent marker, the replay
       // stales the layout, and searches fall back until the next successful
       // build. (The count job runs only when the knob is configured.)
-      if (cfg.indexType == IndexType.Hnsw)
+      if (tier == Tier.Hnsw)
         cfg.params.get("deltaCompactRows").map(_.toLong).foreach { limit =>
           require(limit > 0, s"deltaCompactRows must be positive, got $limit")
           val deltaFiles = sidecarDataFiles(hnswDeltaPath(coll))
@@ -1052,7 +984,6 @@ class Engine(
               spark.read.parquet(deltaFiles: _*).count() >= limit)
             buildIndex(coll)
         }
-      wlap("ingest: delta-compact check")
       settleLedger()
       // small-files compaction for the APPENDED tiers (ivf/pq/opq/sq/bq): each
       // streamed batch adds ~one file per write task, so a long stream turns
@@ -1063,12 +994,12 @@ class Engine(
       // a crash mid-compaction leaves the batch fully applied and the layout
       // merely stale (searches fall back to the live corpus until the next
       // buildIndex), never partially served.
-      if (cfg.indexType != IndexType.Hnsw)
+      if (tier != Tier.Hnsw)
         cfg.params.get("layoutCompactFiles").map(_.toInt).foreach { limit =>
           require(limit > 0, s"layoutCompactFiles must be positive, got $limit")
-          if (countLayoutDataFiles(maintain.get._3) >= limit) compactLayout(coll)
+          if (countLayoutDataFiles(layoutPath) >= limit) compactLayout(coll)
         }
-      maybeFoldTombstones(coll, cfg, maintain.get._2)
+      maybeFoldTombstones(coll, cfg, layoutPath)
     } finally {
       if (batchCached != null) batchCached.unpersist(blocking = false)
     }
@@ -1182,80 +1113,72 @@ class Engine(
     */
   def compactLayout(coll: String): Boolean = {
     val cfg = configOf(coll)
-    val layout: Option[(String, Boolean, String)] = cfg.indexType match {
-      case IndexType.IvfFlat => Some((ivfLayoutPath(coll), true, "ivf"))
-      case IndexType.IvfPq => Some((pqLayoutPath(coll), true, "pq"))
-      case IndexType.Opq => Some((opqLayoutPath(coll), true, "opq"))
-      case IndexType.Sq => Some((sqLayoutPath(coll), false, "sq"))
-      case IndexType.Bq => Some((bqLayoutPath(coll), false, "bq"))
-      case IndexType.Mrl => Some((mrlLayoutPath(coll), false, "mrl"))
-      case _ => None // flat has no layout; hnsw folds via deltaCompactRows
-    }
-    layout match {
-      case Some((layoutPath, clustered, tier)) =>
-        val stamp = store.currentVersion(coll)
-        if (currentLayoutStamp(coll, layoutPath).isEmpty) return false
-        val gen = layoutGen(coll)
-        val bucketedPre = currentBucketedMeta(coll)
-        val stampPath = s"$root/$coll/index/layout_version"
-        val hp = new org.apache.hadoop.fs.Path(layoutPath)
-        val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-        // intent marker FIRST (before the layout read): a maintained append
-        // racing into our read→flip window must decline to stamp — its rows
-        // land only in the generation being folded away (the generation
-        // fence in the append paths catches the same race from the other
-        // side). Cleared in the finally; a crash leaves it behind, which
-        // merely stales subsequent maintained writes until the next
-        // buildIndex clears it.
-        atomicWrite(compactIntentPath(coll), stamp.toString)
-        try {
-        // NO stale window: the current generation keeps serving every
-        // in-flight and newly-planned scan while the fold writes the NEXT
-        // generation (the old delete+rename-in-place swap destroyed files
-        // under running scans — the concurrency soak caught it)
-        val next = tierGenPath(coll, tier, gen + 1)
-        // fold the tombstone sidecar: rewrite only unshadowed rows — the
-        // compacted generation is then exactly what re-encoding the live
-        // corpus with the frozen model would produce; the sidecar retires
-        // with its generation at the flip
-        val rows = applyTombstones(layoutPath, stamp)(
-          spark.read.parquet(layoutPath))
-        if (clustered)
-          // hash-repartition on cluster_id: each cluster lands wholly in one
-          // task ⇒ exactly one file per cluster directory
-          rows.repartition(col("cluster_id"))
-            .write.mode("overwrite").partitionBy("cluster_id").parquet(next)
-        else {
-          // flat code layouts: file count from resident bytes, one file per
-          // target-sized chunk (same sizing rule as the scan side's
-          // maxPartitionBytes)
-          val bytes = fs.getContentSummary(hp).getLength
-          val targetBytes = spark.sessionState.conf.filesMaxPartitionBytes
-          val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-          rows.repartition(nFiles).write.mode("overwrite").parquet(next)
-        }
-        // THE flip: readers resolve the folded generation from here on;
-        // the superseded one is GC'd a cycle later (flipLayoutGen)
-        flipLayoutGen(coll, tier, gen)
-        // the bucketed table (if current) accumulated the same appended
-        // files — rebuild it from the compacted generation under the same
-        // stamp. Stale-first HERE (the bucketed table is one fixed
-        // location, not generation-versioned): with the meta gone,
-        // currentBucketedMeta returns None and searches fall back a tier
-        // until writeBucketedLayout's final atomicWrite restores it.
-        bucketedPre.foreach { case (_, _, _, _) =>
-          cfs.deleteIfExists(bucketedMetaPath(coll))
-          writeBucketedLayout(coll, cfg, spark.read.parquet(next), stamp, tier)
-        }
-        // a writer interleaved with the fold? its rows live only in the
-        // retired generation — the folded one must not serve as current
-        // (stale the stamp; searches fall back until the next buildIndex)
-        if (store.currentVersion(coll) != stamp)
-          cfs.deleteIfExists(stampPath)
-        true
-        } finally cfs.deleteIfExists(compactIntentPath(coll))
-      case None => false
-    }
+    val t = Tier(cfg.indexType)
+    // flat has no layout; hnsw folds via deltaCompactRows
+    if (t == Tier.Hnsw) return false
+    val layoutPath = tierLayout(coll, t).getOrElse(return false)
+    val (clustered, tier) = (t.clustered, t.key.get)
+    val stamp = store.currentVersion(coll)
+    if (currentLayoutStamp(coll, layoutPath).isEmpty) return false
+    val gen = layoutGen(coll)
+    val bucketedPre = currentBucketedMeta(coll)
+    val stampPath = s"$root/$coll/index/layout_version"
+    val hp = new org.apache.hadoop.fs.Path(layoutPath)
+    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    // intent marker FIRST (before the layout read): a maintained append
+    // racing into our read→flip window must decline to stamp — its rows
+    // land only in the generation being folded away (the generation
+    // fence in the append paths catches the same race from the other
+    // side). Cleared in the finally; a crash leaves it behind, which
+    // merely stales subsequent maintained writes until the next
+    // buildIndex clears it.
+    atomicWrite(compactIntentPath(coll), stamp.toString)
+    try {
+      // NO stale window: the current generation keeps serving every
+      // in-flight and newly-planned scan while the fold writes the NEXT
+      // generation (the old delete+rename-in-place swap destroyed files
+      // under running scans — the concurrency soak caught it)
+      val next = tierGenPath(coll, tier, gen + 1)
+      // fold the tombstone sidecar: rewrite only unshadowed rows — the
+      // compacted generation is then exactly what re-encoding the live
+      // corpus with the frozen model would produce; the sidecar retires
+      // with its generation at the flip
+      val rows = applyTombstones(layoutPath, stamp)(
+        spark.read.parquet(layoutPath))
+      if (clustered)
+        // hash-repartition on cluster_id: each cluster lands wholly in one
+        // task ⇒ exactly one file per cluster directory
+        rows.repartition(col("cluster_id"))
+          .write.mode("overwrite").partitionBy("cluster_id").parquet(next)
+      else {
+        // flat code layouts: file count from resident bytes, one file per
+        // target-sized chunk (same sizing rule as the scan side's
+        // maxPartitionBytes)
+        val bytes = fs.getContentSummary(hp).getLength
+        val targetBytes = spark.sessionState.conf.filesMaxPartitionBytes
+        val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+        rows.repartition(nFiles).write.mode("overwrite").parquet(next)
+      }
+      // THE flip: readers resolve the folded generation from here on;
+      // the superseded one is GC'd a cycle later (flipLayoutGen)
+      flipLayoutGen(coll, tier, gen)
+      // the bucketed table (if current) accumulated the same appended
+      // files — rebuild it from the compacted generation under the same
+      // stamp. Stale-first HERE (the bucketed table is one fixed
+      // location, not generation-versioned): with the meta gone,
+      // currentBucketedMeta returns None and searches fall back a tier
+      // until writeBucketedLayout's final atomicWrite restores it.
+      bucketedPre.foreach { case (_, _, _, _) =>
+        cfs.deleteIfExists(bucketedMetaPath(coll))
+        writeBucketedLayout(coll, cfg, spark.read.parquet(next), stamp, tier)
+      }
+      // a writer interleaved with the fold? its rows live only in the
+      // retired generation — the folded one must not serve as current
+      // (stale the stamp; searches fall back until the next buildIndex)
+      if (store.currentVersion(coll) != stamp)
+        cfs.deleteIfExists(stampPath)
+      true
+    } finally cfs.deleteIfExists(compactIntentPath(coll))
   }
 
   // ---- runtime search params (POST .../documents/setparams) ----
@@ -1263,42 +1186,27 @@ class Engine(
   def setParams(coll: String, params: Map[String, Int]): Unit = {
     val cfg = configOf(coll)
     require(params.nonEmpty, "empty params") // handlers_test.go:604
-    params.foreach {
-      case ("efsearch", v) =>
-        require(cfg.indexType == IndexType.Hnsw, s"efsearch not valid for ${cfg.indexType.name}")
-        require(v > 0, s"efsearch must be positive, got $v")
-      case ("nprobe", v) =>
-        require(cfg.indexType == IndexType.IvfFlat || cfg.indexType == IndexType.IvfPq
-            || cfg.indexType == IndexType.Opq,
-          s"nprobe not valid for ${cfg.indexType.name}")
-        // every index family that understands nprobe gets a snapshot
-        // fallback: a fresh engine must bound nprobe by the REAL nlist, not
-        // accept anything until the first search loads the model
-        val nlist = ivfModels.get(coll).map(_.nlist)
-          .orElse(graft.core.ModelStore.loadIvf(ivfSnapshotPath(coll)).map(_.nlist))
-          .orElse(pqModels.get(coll).map(_.nlist))
-          .orElse(graft.core.ModelStore.loadPq(pqSnapshotPath(coll)).map(_.coarse.nlist))
-          .orElse(opqModels.get(coll).map(_.pq.nlist))
-          .orElse(graft.core.ModelStore.loadOpq(opqSnapshotPath(coll)).map(_.pq.nlist))
-          .getOrElse(Int.MaxValue)
-        require(v > 0 && v <= nlist, s"nprobe must be in [1, $nlist], got $v") // ivf.go:407-413
-      case ("routeNprobe", v) =>
-        require(cfg.indexType == IndexType.Hnsw,
-          s"routeNprobe not valid for ${cfg.indexType.name}")
-        val nl = cfg.params.get("routeNlist").map(_.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            "routeNprobe requires a collection created with routeNlist (routed graph layout)"))
-        require(v > 0 && v <= nl, s"routeNprobe must be in [1, $nl], got $v")
-      case ("rerankFactor", v) =>
-        require(cfg.indexType == IndexType.Sq || cfg.indexType == IndexType.Bq
-            || cfg.indexType == IndexType.Mrl,
-          s"rerankFactor not valid for ${cfg.indexType.name}")
-        require(v > 0, s"rerankFactor must be positive, got $v")
-      case ("maxsimCandM", v) =>
-        require(isMultiVector(cfg),
-          "maxsimCandM is only valid for multivector collections")
-        require(v > 0, s"maxsimCandM must be positive, got $v")
-      case (k, _) => throw new IllegalArgumentException(s"unknown search param '$k'") // ivf.go:399-401
+    val t = Tier(cfg.indexType)
+    params.foreach { case (k, v) =>
+      if (k == "maxsimCandM")
+        require(isMultiVector(cfg), "maxsimCandM is only valid for multivector collections")
+      else if (Tier.runtimeKeys(k))
+        require(t.params(k), s"$k not valid for ${cfg.indexType.name}")
+      else throw new IllegalArgumentException(s"unknown search param '$k'") // ivf.go:399-401
+      k match {
+        case "nprobe" =>
+          // bounded by the REAL nlist: a fresh engine loads the model from
+          // its snapshot instead of accepting anything until the first search
+          val nlist = builtIndex(coll, cfg, t)
+            .collect { case c: CellIndex => c.coarse.nlist }.getOrElse(Int.MaxValue)
+          require(v > 0 && v <= nlist, s"nprobe must be in [1, $nlist], got $v") // ivf.go:407-413
+        case "routeNprobe" =>
+          val nl = cfg.params.get("routeNlist").map(_.toInt).getOrElse(
+            throw new IllegalArgumentException(
+              "routeNprobe requires a collection created with routeNlist (routed graph layout)"))
+          require(v > 0 && v <= nl, s"routeNprobe must be in [1, $nl], got $v")
+        case _ => require(v > 0, s"$k must be positive, got $v")
+      }
     }
     runtime.updateWith(coll)(old => Some(old.getOrElse(Map.empty) ++ params))
     paramsEpoch.incrementAndGet()
@@ -1308,8 +1216,9 @@ class Engine(
 
   // ---- index build (POST .../buildindex) ----
 
-  /** Actually trains (IVF coarse quantizer via distributed KMeans; Flat/LSH
-    * need no training) — fixing the reference's buildindex-batch-upserts
+  /** Actually trains (IVF coarse quantizer via distributed KMeans, PQ/OPQ
+    * codebooks, SQ/BQ ranges; flat, the hnsw graph and the mrl prefix need
+    * no training) — fixing the reference's buildindex-batch-upserts
     * quirk (`handlers.go:176`).
     */
   def buildIndex(coll: String, nlist: Int = 100): Unit = {
@@ -1348,119 +1257,41 @@ class Engine(
       cfs.deleteIfExists(compactIntentPath(coll))
       atomicWrite(s"$root/$coll/index/layout_version", stamp.toString)
     }
-    cfg.indexType match {
-      case IndexType.IvfFlat =>
+    Tier(cfg.indexType) match {
+      case t: CodeTier[_] =>
         val corpus = store.read(coll)
-        val n = corpus.count()
-        val k = math.min(nlist.toLong, n).toInt
-        require(k >= 1, "cannot train an index on an empty collection")
-        val model = IvfIndex.train(corpus, "vector", k, cfg.spaceType)
-        ivfModels(coll) = model
-        ModelStore.saveIvf(ivfSnapshotPath(coll), model) // S8 snapshot
-        // materialize the inverted-list layout: searches become physically
-        // partition-pruned scans of only the probed cluster directories
-        IvfIndex.write(corpus, "vector", model, nextPath("ivf"))
-        flip("ivf")
-        // optional BUCKETED layout (`bucketed_table` collection param): the
-        // repeated-KNN-join shape — the searchDistributed equi-join reads the
-        // corpus pre-hashed on cluster_id, so only the query frame shuffles.
-        // External table (files under the collection dir) + a meta file so a
-        // fresh session re-registers it (bucketedCorpus); the meta's stamp
-        // commits it to THIS build — any later write stales it exactly like
-        // the partitioned layout.
-        writeBucketedLayout(coll, cfg,
-          IvfIndex.assign(corpus, "vector", model), stamp, "ivf")
-        stampLayout()
-      case IndexType.IvfPq =>
-        // l2, ip, and cos (normalized-residual tables) have proper ADC
-        // formulations; hamming has none — hard error instead of a silently
-        // wrong ranking (the no-silent-fallback rule, SURVEY F5)
-        require(cfg.spaceType == SpaceType.L2 || cfg.spaceType == SpaceType.Ip
-            || cfg.spaceType == SpaceType.Cos,
-          s"ivfpq supports l2, ip, and cos spaces, got ${cfg.spaceType.name}")
-        val corpus = store.read(coll)
-        val n = corpus.count()
-        val k = math.min(nlist.toLong, n).toInt
-        require(k >= 1, "cannot train an index on an empty collection")
-        val m = cfg.params.get("m").map(_.toInt).getOrElse(8) // const.go:33-36
-        val pq = IvfPq.train(corpus, "vector", k, m = m, space = cfg.spaceType)
-        pqModels(coll) = pq
-        ivfModels(coll) = pq.coarse // so nprobe validation sees nlist
-        ModelStore.savePq(pqSnapshotPath(coll), pq) // S8 snapshot
-        // materialize the encoded layout (codes, not vectors, do the scan work)
-        val pqEnc = IvfPq.encode(corpus, "vector", pq).cache()
+        val index = t.train(corpus, nlist, cfg)
+        indexes(coll) = index
+        val tier = t.key.get
+        index.save(snapshotPath(coll, tier)) // S8 snapshot
+        // materialize the encoded layout: clustered tiers' searches become
+        // physically partition-pruned scans of only the probed cluster
+        // directories; code tiers scan codes, not vectors
+        val encoded = index.encode(corpus)
+        // optional BUCKETED layout (`bucketed_table` collection param, the
+        // clustered tiers): the repeated-KNN-join shape — the
+        // searchDistributed equi-join reads the corpus pre-hashed on
+        // cluster_id, so only the query frame shuffles. External table
+        // (files under the collection dir) + a meta file so a fresh session
+        // re-registers it (bucketedCorpus); the meta's stamp commits it to
+        // THIS build — any later write stales it exactly like the
+        // partitioned layout. Its rows are the layout's, encoded once.
+        val bucketed = t.clustered && cfg.params.contains("bucketed_table")
+        // the PQ-coded tiers write their encoded frame CACHED, as they always
+        // have: a cached plan runs without AQE's partition coalescing, so
+        // the layout keeps one file per (task, cluster). The coalesced
+        // layout (fewer, larger files) measured slower on the `serve`
+        // benchmark — wire GETs, writes and searches alike
+        val cached = bucketed || (t.clustered && t != Tier.IvfFlat)
+        if (cached) encoded.cache()
         try {
-          pqEnc.write.mode("overwrite").partitionBy("cluster_id")
-            .parquet(nextPath("pq"))
-          flip("pq")
-          writeBucketedLayout(coll, cfg, pqEnc, stamp, "pq")
-        } finally pqEnc.unpersist(blocking = false)
+          val w = encoded.write.mode("overwrite")
+          (if (t.clustered) w.partitionBy("cluster_id") else w).parquet(nextPath(tier))
+          flip(tier)
+          if (bucketed) writeBucketedLayout(coll, cfg, encoded, stamp, tier)
+        } finally if (cached) encoded.unpersist(blocking = false)
         stampLayout()
-      case IndexType.Opq =>
-        require(cfg.spaceType == SpaceType.L2 || cfg.spaceType == SpaceType.Ip
-            || cfg.spaceType == SpaceType.Cos,
-          s"opq supports l2, ip, and cos spaces, got ${cfg.spaceType.name}")
-        val corpus = store.read(coll)
-        val n = corpus.count()
-        val k = math.min(nlist.toLong, n).toInt
-        require(k >= 1, "cannot train an index on an empty collection")
-        val m = cfg.params.get("m").map(_.toInt).getOrElse(8)
-        // opq_full_cov=true: every Procrustes step aggregates the
-        // cross-covariance over the WHOLE corpus (treeAggregate) instead of
-        // the bounded driver sample — for corpora whose training distribution
-        // a sample can't represent
-        val opq = Opq.train(corpus, "vector", k, m = m, space = cfg.spaceType,
-          rotationFullCovariance = cfg.params.get("opq_full_cov").exists(_.toBoolean))
-        opqModels(coll) = opq
-        ivfModels(coll) = opq.pq.coarse // so nprobe validation sees nlist
-        ModelStore.saveOpq(opqSnapshotPath(coll), opq)
-        val opqEnc = Opq.encode(corpus, "vector", opq).cache()
-        try {
-          opqEnc.write.mode("overwrite").partitionBy("cluster_id")
-            .parquet(nextPath("opq"))
-          flip("opq")
-          writeBucketedLayout(coll, cfg, opqEnc, stamp, "opq")
-        } finally opqEnc.unpersist(blocking = false)
-        stampLayout()
-      case IndexType.Sq =>
-        require(cfg.spaceType == SpaceType.L2,
-          s"sq supports only the l2 space, got ${cfg.spaceType.name}") // no silent fallback
-        val corpus = store.read(coll)
-        require(corpus.limit(1).count() >= 1, "cannot train an index on an empty collection")
-        val sq = ScalarQuant.train(corpus, "vector")
-        sqModels(coll) = sq
-        ModelStore.saveSq(sqSnapshotPath(coll), sq)
-        ScalarQuant.encode(corpus, "vector", sq)
-          .write.mode("overwrite").parquet(nextPath("sq"))
-        flip("sq")
-        stampLayout()
-      case IndexType.Bq =>
-        // BQ serves every space: the Hamming shortlist is metric-agnostic
-        // candidate generation; the exact re-rank carries cfg.spaceType
-        val corpus = store.read(coll)
-        require(corpus.limit(1).count() >= 1, "cannot train an index on an empty collection")
-        val bq = BinaryQuant.train(corpus, "vector")
-        bqModels(coll) = bq
-        ModelStore.saveBq(bqSnapshotPath(coll), bq)
-        BinaryQuant.encode(corpus, "vector", bq)
-          .write.mode("overwrite").parquet(nextPath("bq"))
-        flip("bq")
-        stampLayout()
-      case IndexType.Mrl =>
-        // Matryoshka prefix tier (arXiv:2205.13147): NO trained model at
-        // all — buildIndex just materializes the dimension prefix as its
-        // own column so shortlist scans read prefixDim/dimension of the
-        // vector bytes (parquet column pruning); the exact re-rank reads
-        // the full vector column of the same layout. Every space works:
-        // the shortlist runs the SAME metric over the prefix, the re-rank
-        // is exact in cfg.spaceType.
-        val pd = mrlPrefixDim(cfg)
-        val corpus = store.read(coll)
-        require(corpus.limit(1).count() >= 1, "cannot build an index on an empty collection")
-        mrlEncode(corpus, pd).write.mode("overwrite").parquet(nextPath("mrl"))
-        flip("mrl")
-        stampLayout()
-      case IndexType.Hnsw =>
+      case Tier.Hnsw =>
         // materialize the per-partition HNSW graphs THEMSELVES (adjacency
         // export — the reference persists its hnswlib index the same way):
         // searches reconstruct from stored links instead of re-running beam
@@ -1497,15 +1328,16 @@ class Engine(
         flip("hnsw")
         atomicWrite(hnswEpochPath(coll), stamp.toString)
         stampLayout()
-      case _ => () // flat: nothing to train
+      case Tier.Flat => () // flat: nothing to train
     }
   }
 
   // ---- search (POST .../vectors/search, .../documents/search) ----
 
   /** Batch vector search: top-k ids+distances per query (SURVEY §3.1).
-    * Dispatches on index type: flat → exact; ivf_flat → nprobe-pruned;
-    * hnsw → LSH ANN tier (recall knob ≈ efsearch).
+    * Dispatches on the collection's tier: flat → exact; ivf_flat/ivfpq/opq
+    * → nprobe-pruned cells; sq/bq/mrl → code scan + exact re-rank; hnsw →
+    * the persisted NSW/HNSW graph (`GraphAnn`, recall knob efsearch).
     */
   def searchVectors(coll: String, queries: Seq[(String, Array[Float])], k: Int): DataFrame = {
     val cfg = configOf(coll)
@@ -1531,61 +1363,22 @@ class Engine(
     // lazy: layout-served branches (and searchOn's by-name corpus) must not
     // pay the store's parquet listing + schema inference
     lazy val corpus = store.read(coll)
-    cfg.indexType match {
-      case IndexType.IvfFlat =>
-        val model = loadedIvf(coll)
-        val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, model.nlist))
-        // bucketed table first (corpus-shuffle-free equi-join), then the
-        // partitioned layout, then live re-assignment — all three produce
-        // identical results; they differ only in how much work the plan skips
-        val assigned = bucketedCorpus(coll)
-          .orElse(currentLayout(coll, ivfLayoutPath(coll)).map(_._1))
-          .getOrElse(IvfIndex.assign(corpus, "vector", model))
-        IvfIndex.searchDistributed(assigned, queries, model, k, nprobe)
-      case IndexType.IvfPq =>
-        val pq = loadedPq(coll)
-        val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, pq.nlist))
-        val encoded = bucketedCorpus(coll)
-          .orElse(currentLayout(coll, pqLayoutPath(coll)).map(_._1))
-          .getOrElse(IvfPq.encode(corpus, "vector", pq))
-        IvfPq.searchDistributed(encoded, queries, pq, k, nprobe,
-          rerankVecCol = Some("vector"))
-      case IndexType.Opq =>
-        val opq = loadedOpq(coll)
-        val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, opq.pq.nlist))
-        val encoded = bucketedCorpus(coll)
-          .orElse(currentLayout(coll, opqLayoutPath(coll)).map(_._1))
-          .getOrElse(Opq.encode(corpus, "vector", opq))
-        Opq.searchDistributed(encoded, queries, opq, k, nprobe)
-      case IndexType.Sq =>
-        // SQ is a flat-scan tier: queries ride as a broadcast frame — not a
-        // driver collect, but a broadcast is still driver-materialized and
-        // capped by Spark, so the same row bound applies
-        guardQuerySetSize(queries, cfg)
-        val sq = loadedSq(coll)
-        val encoded = currentLayout(coll, sqLayoutPath(coll))
-          .map(_._1).getOrElse(ScalarQuant.encode(corpus, "vector", sq))
-        ScalarQuant.search(encoded, queries, sq, k, rerankVecCol = Some("vector"),
-          rerankFactor = getParams(coll).getOrElse("rerankFactor", 4))
-      case IndexType.Bq =>
-        // same flat-scan shape as SQ: broadcast queries, codes-only scan
-        guardQuerySetSize(queries, cfg)
-        val bq = loadedBq(coll)
-        val encoded = currentLayout(coll, bqLayoutPath(coll))
-          .map(_._1).getOrElse(BinaryQuant.encode(corpus, "vector", bq))
-        BinaryQuant.search(encoded, queries, bq, k, cfg.spaceType,
-          rerankVecCol = Some("vector"),
-          rerankFactor = getParams(coll).getOrElse("rerankFactor", 8))
-      case IndexType.Mrl =>
-        // same flat-scan shape as SQ/BQ: broadcast queries over the pruned
-        // (id, prefix) scan, id-equi-join re-rank from the vector column
-        guardQuerySetSize(queries, cfg)
-        requireMrlBuilt(coll)
-        val pd = mrlPrefixDim(cfg)
-        val encoded = currentLayout(coll, mrlLayoutPath(coll))
-          .map(_._1).getOrElse(mrlEncode(corpus, pd))
-        Matryoshka.searchEncoded(encoded, queries, pd, k, cfg.spaceType,
-          shortlistFactor = getParams(coll).getOrElse("rerankFactor", 4))
+    Tier(cfg.indexType) match {
+      case t: CodeTier[_] =>
+        // the flat-scan code tiers (sq/bq/mrl) ride queries as a broadcast
+        // frame — not a driver collect, but a broadcast is still
+        // driver-materialized and capped by Spark, so the same row bound
+        // applies
+        if (!t.clustered) guardQuerySetSize(queries, cfg)
+        val index = builtIndex(coll, cfg, t).getOrElse(notBuilt(coll))
+        // bucketed table first (clustered tiers; corpus-shuffle-free
+        // equi-join), then the current layout, then a live re-encode — all
+        // three produce identical results; they differ only in how much
+        // work the plan skips
+        val encoded = (if (t.clustered) bucketedCorpus(coll) else None)
+          .orElse(currentLayout(coll, tierLayout(coll, t).get).map(_._1))
+          .getOrElse(index.encode(corpus))
+        index.search(encoded, queries, k, getParams(coll), distributed = true)
       case _ =>
         // flat/hnsw query paths collect the query set; fail fast with a
         // routing hint instead of letting a 10⁸-row frame OOM the driver
@@ -1689,17 +1482,16 @@ class Engine(
     * delete racing the request; the distributed plan re-plans instead).
     */
   private def localPqSearch(coll: String, path: String,
-      stamp: Long, pq: IvfPq.Model, queries: Seq[(String, Array[Float])],
+      stamp: Long, pq: graft.operators.IvfPq.Model, queries: Seq[(String, Array[Float])],
       k: Int, nprobe: Int, eligible: Option[Set[Any]],
-      shortQueries: Seq[(String, Array[Float])] = Seq.empty): Option[DataFrame] = {
+      shortQueries: Seq[(String, Array[Float])]): Option[DataFrame] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-    // `shortQueries` = queries in INDEX space when that differs from the
-    // re-rank space (OPQ shortlists in rotated space, re-ranks original)
-    val sq = if (shortQueries.nonEmpty) shortQueries else queries
+    // `shortQueries` = queries in INDEX space (OPQ shortlists in rotated
+    // space, re-ranks original)
     val short = graft.operators.LocalPqServe.adcShortlistLocalRows(spark, path,
-      stamp, pq, sq.map { case (q, v) => (q: Any, v) },
-      k * IvfPq.DefaultRerankFactor, nprobe, eligible)
+      stamp, pq, shortQueries.map { case (q, v) => (q: Any, v) },
+      k * graft.operators.IvfPq.DefaultRerankFactor, nprobe, eligible)
     if (short.isEmpty) return None
     val ids = short.get.map(r => String.valueOf(r._2)).distinct
     // AT the layout stamp: skips the second counter read (one LIST per
@@ -1745,7 +1537,7 @@ class Engine(
       // shadowed by an update/delete tombstone — exclude them here exactly
       // like the partitioned layout (the sidecar lives under the tier's
       // layout dir; both views must agree row-for-row)
-      tierLayoutPath(coll) match {
+      layoutDir(coll) match {
         case Some(lp) => applyTombstones(lp, stamp)(spark.table(table))
         case None => spark.table(table)
       }
@@ -1756,132 +1548,27 @@ class Engine(
     * of assuming the generation-0 name (every full rewrite flips to a new
     * generation dir).
     */
-  def layoutDir(coll: String): Option[String] = tierLayoutPath(coll)
+  def layoutDir(coll: String): Option[String] =
+    tierLayout(coll, Tier(configOf(coll).indexType))
 
-  /** The collection's index-layout directory for its configured tier, if
-    * the tier materializes one (flat does not).
+  /** The built index of `coll`'s tier: the cached one, else recovered from
+    * its snapshot (SURVEY S7/S8) — or, on the model-free tiers, from the
+    * config once a layout dir exists (probed through `cfs`, so a non-local
+    * root answers too). None = never built: the code tiers' searches raise
+    * notBuilt instead of silently serving re-encodes of the live corpus.
     */
-  private def tierLayoutPath(coll: String): Option[String] =
-    configOf(coll).indexType match {
-      case IndexType.IvfFlat => Some(ivfLayoutPath(coll))
-      case IndexType.IvfPq => Some(pqLayoutPath(coll))
-      case IndexType.Opq => Some(opqLayoutPath(coll))
-      case IndexType.Sq => Some(sqLayoutPath(coll))
-      case IndexType.Bq => Some(bqLayoutPath(coll))
-      case IndexType.Hnsw => Some(hnswLayoutPath(coll))
-      case IndexType.Mrl => Some(mrlLayoutPath(coll))
-      case _ => None
-    }
-
-
-  private def notBuilt(coll: String): Nothing =
-    throw new IllegalStateException(s"index for '$coll' not built — call buildIndex")
-
-  /** The mrl tier's prefix width: `prefixDim` collection param, default ¼
-    * of the dimension (min 1) — validated against the dimension wherever
-    * read (create accepts params unvalidated, reference parity).
-    */
-  private def mrlPrefixDim(cfg: CollectionConfig): Int = {
-    val pd = cfg.params.get("prefixDim").map(_.toInt)
-      .getOrElse(math.max(1, cfg.dimension / 4))
-    require(pd >= 1 && pd <= cfg.dimension,
-      s"prefixDim must be in [1, ${cfg.dimension}], got $pd")
-    pd
-  }
-
-  /** The mrl tier's "encode": materialize the dimension prefix as its own
-    * column, so layout shortlist scans read prefixDim/dimension of the
-    * vector bytes (parquet column pruning) — no trained model at all.
-    */
-  private def mrlEncode(df: DataFrame, prefixDim: Int): DataFrame =
-    df.withColumn("mrl_prefix",
-      slice(col("vector").cast("array<float>"), 1, prefixDim))
-
-  /** The mrl tier has no model snapshot, so "ever built" = its current
-    * layout dir exists. Built-then-STALED keeps the dir (staling deletes
-    * only the stamp) and serves through the live-corpus fallback like every
-    * tier; NEVER-built throws the same notBuilt the model tiers raise via
-    * their missing snapshots — without this, a forgotten buildIndex would
-    * silently serve worse-than-flat re-slices forever.
-    */
-  private def requireMrlBuilt(coll: String): Unit = {
-    // probe through the Hadoop FileSystem like flipLayoutGen/compactLayout —
-    // a java.nio local-FS probe would always report not-built on a non-local
-    // root (HDFS/object store)
-    val p = new org.apache.hadoop.fs.Path(mrlLayoutPath(coll))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) notBuilt(coll)
-  }
-
-  /** Driver-side encoded layout rows for a driver-sized maintained batch —
-    * the per-tier composition of `LocalEncode`'s kernel twins, mirroring
-    * exactly what the Spark branch's `encode(stamped)` frame would append
-    * (same columns, same order; `LocalEncodeSpec` pins bit identity, the
-    * TombstoneSpec REST cases pin results ≡ rebuild end-to-end). None for
-    * tiers without a local encode (hnsw takes its own delta branch).
-    */
-  private def localLayoutRows(coll: String, cfg: CollectionConfig,
-      docs: Seq[Document]): Option[Seq[LocalRunWriter.LayoutRow]] = {
-    import graft.operators.LocalEncode
-    import LocalRunWriter.{BytesCol, FloatsCol, IntsCol, LayoutRow}
-    def rows(f: Document => (Option[Int], Seq[(String, LocalRunWriter.LayoutCol)])) =
-      Some(docs.zipWithIndex.map { case (d, i) =>
-        val (cid, extra) = f(d)
-        LayoutRow(d.id, d.vector.toSeq, d.params, i.toLong, cid, extra)
-      })
-    cfg.indexType match {
-      case IndexType.IvfFlat => loadedIvfOpt(coll).flatMap(m =>
-        rows(d => (Some(LocalEncode.ivfAssign(d.vector, m)), Nil)))
-      case IndexType.IvfPq => loadedPqOpt(coll).flatMap(m =>
-        rows { d =>
-          val (cid, codes) = LocalEncode.pqRow(d.vector, m)
-          (Some(cid), Seq("codes" -> IntsCol(codes)))
-        })
-      case IndexType.Opq => loadedOpqOpt(coll).flatMap(m =>
-        rows { d =>
-          val (rvec, cid, codes) = LocalEncode.opqRow(d.vector, m)
-          (Some(cid), Seq("__rvec" -> FloatsCol(rvec), "codes" -> IntsCol(codes)))
-        })
-      case IndexType.Sq => loadedSqOpt(coll).flatMap(m =>
-        rows(d => (None, Seq("sq_code" -> BytesCol(LocalEncode.sqRow(d.vector, m))))))
-      case IndexType.Bq => loadedBqOpt(coll).flatMap(m =>
-        rows(d => (None, Seq("bq_code" -> BytesCol(LocalEncode.bqRow(d.vector, m))))))
-      case IndexType.Mrl =>
-        // driver twin of mrlEncode: `slice(v, 1, pd)` over a float array IS
-        // `v.take(pd)` — the same leading floats, bit for bit
-        val pd = mrlPrefixDim(cfg)
-        rows(d => (None, Seq("mrl_prefix" -> FloatsCol(d.vector.take(pd)))))
-      case _ => None
-    }
-  }
-
-  private def loadedIvfOpt(coll: String): Option[IvfIndex.Model] =
-    ivfModels.get(coll).orElse {
-      // recovery: reload the persisted snapshot (SURVEY S7/S8)
-      val loaded = ModelStore.loadIvf(ivfSnapshotPath(coll))
-      loaded.foreach(mm => ivfModels(coll) = mm)
+  private def builtIndex[I <: LayoutEncoder](coll: String, cfg: CollectionConfig,
+      t: Tier[I]): Option[I] =
+    indexes.get(coll).map(_.asInstanceOf[I]).orElse {
+      val loaded = t.key.flatMap(key => t.load(snapshotPath(coll, key), cfg).orElse(
+        if (cfs.exists(tierGenPath(coll, key, layoutGen(coll)))) t.modelFree(cfg) else None))
+      loaded.foreach(indexes(coll) = _)
       loaded
     }
 
-  private def loadedIvf(coll: String): IvfIndex.Model =
-    loadedIvfOpt(coll).getOrElse(notBuilt(coll))
+  private def snapshotPath(coll: String, key: String) = s"$root/$coll/index/$key.snapshot"
 
-  private def loadedPqOpt(coll: String): Option[IvfPq.Model] =
-    pqModels.get(coll).orElse {
-      val loaded = ModelStore.loadPq(pqSnapshotPath(coll))
-      loaded.foreach { mm => pqModels(coll) = mm; ivfModels(coll) = mm.coarse }
-      loaded
-    }
-
-  private def loadedPq(coll: String): IvfPq.Model =
-    loadedPqOpt(coll).getOrElse(notBuilt(coll))
-
-  private def loadedOpqOpt(coll: String): Option[Opq.Model] =
-    opqModels.get(coll).orElse {
-      val loaded = ModelStore.loadOpq(opqSnapshotPath(coll))
-      loaded.foreach { mm => opqModels(coll) = mm; ivfModels(coll) = mm.pq.coarse }
-      loaded
-    }
+  private def notBuilt(coll: String): Nothing = throw new Engine.NotBuilt(coll)
 
   /** Fail fast above the configurable query-row bound for paths that must
     * materialize the query set driver-side (collect or broadcast).
@@ -1900,31 +1587,6 @@ class Engine(
           "driver); route the join to an ivf_flat, ivfpq, or opq collection, " +
           "or raise spark.graft.maxCollectQueries")
   }
-
-  private def loadedOpq(coll: String): Opq.Model =
-    loadedOpqOpt(coll).getOrElse(notBuilt(coll))
-
-  private def loadedSqOpt(coll: String): Option[ScalarQuant.Model] =
-    sqModels.get(coll)
-      .orElse {
-        val loaded = ModelStore.loadSq(sqSnapshotPath(coll))
-        loaded.foreach(mm => sqModels(coll) = mm)
-        loaded
-      }
-
-  private def loadedSq(coll: String): ScalarQuant.Model =
-    loadedSqOpt(coll).getOrElse(notBuilt(coll))
-
-  private def loadedBqOpt(coll: String): Option[BinaryQuant.Model] =
-    bqModels.get(coll)
-      .orElse {
-        val loaded = ModelStore.loadBq(bqSnapshotPath(coll))
-        loaded.foreach(mm => bqModels(coll) = mm)
-        loaded
-      }
-
-  private def loadedBq(coll: String): BinaryQuant.Model =
-    loadedBqOpt(coll).getOrElse(notBuilt(coll))
 
   // `corpus` is BY-NAME: constructing the store frame eagerly costs a
   // parquet listing + schema inference (~100+ ms) per request, and the
@@ -1960,65 +1622,64 @@ class Engine(
     def corpusEff: DataFrame = eligible.map(p => corpus.filter(p)).getOrElse(corpus)
     val qDf = queries.toDF("query_id", "query_vec")
       .withColumn("query_vec", col("query_vec").cast("array<float>"))
-    cfg.indexType match {
-      case IndexType.IvfPq =>
-        val pq = loadedPq(coll)
-        val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, pq.nlist))
-        // prefer the encoded layout materialized at buildIndex (partition-
-        // pruned, no per-search re-encoding); re-encode only when stale
-        val stamp = if (corpusIsFull) currentLayoutStamp(coll, pqLayoutPath(coll)) else None
-        // point requests serve zero-job from driver-cached CODE cells
-        // (LocalPqServe ADC shortlist + exact re-rank through the local
-        // point reads) — same preconditions and fallback ladder as ivf_flat
-        localRoute(stamp, coll, queries, eligible, corpus) { (stamp, chunk, elig) =>
-          localPqSearch(coll, pqLayoutPath(coll), stamp, pq,
-            chunk, k, nprobe, elig)
-        }.getOrElse {
-          val encoded = stamp.map(s => restrict(layoutFrame(pqLayoutPath(coll), s)))
-            .getOrElse(IvfPq.encode(corpusEff, "vector", pq))
-          IvfPq.search(encoded, qDf, pq, k, nprobe, rerankVecCol = Some("vector"))
+    Tier(cfg.indexType) match {
+      case t: CodeTier[_] =>
+        val index = builtIndex(coll, cfg, t).getOrElse(notBuilt(coll))
+        val path = tierLayout(coll, t).get
+        // prefer the layout materialized at buildIndex (partition-pruned or
+        // codes-only, no per-search re-encoding); re-encode the live corpus
+        // only when it changed since
+        val stamp = if (corpusIsFull) currentLayoutStamp(coll, path) else None
+        val local = index match {
+          case c: CellIndex =>
+            // TRUE point requests over a current layout serve from
+            // driver-cached cells — ZERO Spark jobs, warm or cold (the graph
+            // tier's searchPointLocal architecture on the cell tiers; results
+            // ≡ the distributed search by construction: same probe, same
+            // kernels, same (distance, id) order, cells holding the rows of
+            // the SAME tombstone-applied frame, decoded on the driver at the
+            // stamp). ivf_flat cells hold vectors; ivfpq/opq cells hold codes
+            // (LocalPqServe ADC shortlist — opq's in rotated space — then the
+            // exact re-rank through the local point reads). Filtered requests
+            // serve locally too when the predicate's survivor set fits the
+            // driver budget (cached per (coll, stamp, predicate)); an
+            // over-budget set — or an oversized probed cell — falls back to
+            // the distributed pruned plan, never truncates.
+            val nprobe = c.nprobe(getParams(coll))
+            localRoute(stamp, coll, queries, eligible, corpus) { (stamp, chunk, elig) =>
+              c.pq match {
+                case Some(pq) => localPqSearch(coll, path, stamp, pq, chunk, k, nprobe,
+                  elig, chunk.map { case (qid, v) => (qid, c.rotate(v)) })
+                case None => graft.operators.LocalIvfServe.searchPointLocal(spark,
+                  path, stamp, c.coarse, chunk.map { case (qid, v) => (qid: Any, v) },
+                  k, nprobe, org.apache.spark.sql.types.StringType, elig)
+              }
+            }
+          case _ => None
         }
-      case IndexType.IvfFlat =>
-        val model = loadedIvf(coll)
-        val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, model.nlist))
-        // prefer the materialized partition-pruned layout; fall back when
-        // the corpus changed since buildIndex
-        val stamp = if (corpusIsFull) currentLayoutStamp(coll, ivfLayoutPath(coll)) else None
-        // TRUE point requests over a current layout serve from driver-cached
-        // cells — ZERO Spark jobs, warm or cold (the graph tier's
-        // searchPointLocal architecture on the ivf tier; results ≡
-        // IvfIndex.search by construction: same probe, same kernels, same
-        // (distance, id) order, cells holding the rows of the SAME
-        // tombstone-applied frame, decoded on the driver at the stamp).
-        // Filtered requests serve locally too when the predicate's survivor
-        // set fits the driver budget (cached per (coll, stamp, predicate));
-        // an over-budget set — or an oversized probed cell — falls back to
-        // the distributed pruned plan, never truncates.
-        localRoute(stamp, coll, queries, eligible, corpus) { (stamp, chunk, elig) =>
-          graft.operators.LocalIvfServe.searchPointLocal(spark,
-            ivfLayoutPath(coll), stamp, model,
-            chunk.map { case (qid, v) => (qid: Any, v) }, k, nprobe,
-            org.apache.spark.sql.types.StringType, elig)
-        }.getOrElse {
-          val assigned = stamp.map(s => restrict(layoutFrame(ivfLayoutPath(coll), s)))
-            .getOrElse(IvfIndex.assign(corpusEff, "vector", model))
-          IvfIndex.search(assigned, qDf, model, k, nprobe)
+        local.getOrElse {
+          val encoded = stamp.map(s => restrict(layoutFrame(path, s)))
+            .getOrElse(index.encode(corpusEff))
+          index.search(encoded, qDf, k, getParams(coll), distributed = false)
         }
-      case IndexType.Hnsw =>
-        // graph-ANN tier: per-partition NSW beam search; efsearch IS the
-        // beam width, exactly the reference's knob (hnsw.go:171-204).
-        // Batch-first by design (BASELINE: "not online ANN serving"): the
-        // per-partition graphs are rebuilt per batch of queries — amortized
-        // over the query set, not per single request. An online deployment
-        // would pin graphs in an executor-level cache keyed by
-        // (collection, write-version, partition).
+      case Tier.Hnsw =>
+        // graph-ANN tier: per-partition NSW/HNSW beam search over the
+        // persisted adjacency (`GraphAnn`); efsearch IS the beam width,
+        // exactly the reference's knob (hnsw.go:171-204). Graphs stay
+        // pinned per layout: executors cache reconstructed cells
+        // (`GraphAnn.GraphCache`, keyed by layout path and graph epoch) and
+        // routed point requests beam on driver-cached cells
+        // (`searchPointLocal`); only the live-corpus fallback builds graphs
+        // per batch of queries.
         val ef = getParams(coll).getOrElse("efsearch", 40)
+        // one generation for the whole request
+        val lp = tierLayout(coll, Tier.Hnsw).get
         // prefer the PERSISTED graph layout (adjacency reload + executor
         // cache — no beam re-insertion); fall back to building over the
         // live corpus when stale or pre-filtered. User M/efConstruction are
         // honored at build (the reference accepts then silently drops them,
         // collection.go:64-67 + hnsw.go:25-39 — §7.4).
-        val layout = if (corpusIsFull) currentLayoutStamp(coll, hnswLayoutPath(coll)) else None
+        val layout = if (corpusIsFull) currentLayoutStamp(coll, lp) else None
         // live-corpus fallback (stale layout, pre-filtered corpus, or a
         // tombstone sidecar too large to serve through — see below)
         def liveGraphSearch(): DataFrame =
@@ -2036,7 +1697,7 @@ class Engine(
         // the next fold instead (correct, unpruned — the pre-change
         // behavior for ALL mutations).
         val tombMap = layout.map(stamp =>
-          GraphAnn.localTombstones(hnswLayoutPath(coll), stamp)).getOrElse(Map.empty)
+          GraphAnn.localTombstones(lp, stamp)).getOrElse(Map.empty)
         layout match {
           case Some(_) if tombMap.size > maxServedTombstones =>
             liveGraphSearch()
@@ -2089,7 +1750,7 @@ class Engine(
               // knobs: same reconstruction, same beams, same (distance, id)
               // merge; delta rows exact-scanned with the kernels' exact
               // arithmetic and merged the same way.
-              val delta = GraphAnn.localDeltaRows(hnswDeltaPath(coll), stamp)
+              val delta = GraphAnn.localDeltaRows(s"$lp/_delta", stamp)
                 .filter { case (id, _, ver) => tombMap.get(id).forall(_ <= ver) }
                 .filter { case (id, _, _) => localElig.forall(_.contains(id)) }
                 .map { case (id, vec, _) => (id, vec) }
@@ -2099,11 +1760,11 @@ class Engine(
               // one call; chunk 1 warms the probed cells, later chunks beam
               // job-free against the same held graphs
               val chunkFrames = localChunks(queries).map { chunk =>
-                GraphAnn.searchPointLocal(spark, hnswLayoutPath(coll),
+                GraphAnn.searchPointLocal(spark, lp,
                   chunk.toDF("query_id", "query_vec")
                     .withColumn("query_vec", col("query_vec").cast("array<float>")),
                   kEff, cfg.spaceType, ef = efEff, routeNprobe = routeP.get,
-                  cacheKey = Some((hnswLayoutPath(coll), epoch)),
+                  cacheKey = Some((lp, epoch)),
                   deltaRows = delta, excludeIds = exIds, eligible = localElig)
               }.toSeq
               val res = concatLocalFrames(chunkFrames)
@@ -2113,9 +1774,9 @@ class Engine(
             } else {
               val graphHits = routeP match {
                 case Some(p) if queries.size <= 64 && eligible.isEmpty =>
-                  GraphAnn.searchRoutedPruned(spark, hnswLayoutPath(coll), qDf, kEff,
+                  GraphAnn.searchRoutedPruned(spark, lp, qDf, kEff,
                     cfg.spaceType, ef = efEff, routeNprobe = p,
-                    cacheKey = Some((hnswLayoutPath(coll), epoch)),
+                    cacheKey = Some((lp, epoch)),
                     excludeIds = exIds)
                 case _ =>
                   // filtered requests run FULL fan-out (routeNprobe dropped):
@@ -2125,9 +1786,9 @@ class Engine(
                   // return under-k/zero hits the pre-eligibility fallback
                   // (full live rebuild) never missed. Full fan-out over the
                   // persisted layout is a recall superset at in-beam cost.
-                  GraphAnn.searchFromLayout(spark, hnswLayoutPath(coll), qDf, kEff,
+                  GraphAnn.searchFromLayout(spark, lp, qDf, kEff,
                     cfg.spaceType, ef = efEff,
-                    cacheKey = Some((hnswLayoutPath(coll), epoch)),
+                    cacheKey = Some((lp, epoch)),
                     routeNprobe = if (eligible.isDefined) None else routeP,
                     excludeIds = exIds, eligibleIds = eligIds)
               }
@@ -2138,7 +1799,7 @@ class Engine(
               // construction and cached per (path, stamp) so steady serving
               // never re-reads it; buildIndex folds it back into the
               // adjacency.
-              cachedDeltaVectors(hnswDeltaPath(coll), stamp, hnswLayoutPath(coll)) match {
+              cachedDeltaVectors(s"$lp/_delta", stamp, lp) match {
                 case Some(delta) =>
                   // delta rows are filtered by eligibility BEFORE the exact
                   // scan — post-rank filtering could drop eligible rows that
@@ -2156,52 +1817,7 @@ class Engine(
             }
           case _ => liveGraphSearch()
         }
-      case IndexType.Opq =>
-        val opq = loadedOpq(coll)
-        val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, opq.pq.nlist))
-        val stamp = if (corpusIsFull) currentLayoutStamp(coll, opqLayoutPath(coll)) else None
-        // zero-job point serve: rotate the query with QuantKernels.matVecMul
-        // (the kernel the codegen MatVecMul calls), shortlist in
-        // rotated space through the PQ code-cell cache, exact re-rank in
-        // ORIGINAL space (the distributed Opq.search shape exactly)
-        localRoute(stamp, coll, queries, eligible, corpus) { (stamp, chunk, elig) =>
-          localPqSearch(coll, opqLayoutPath(coll), stamp, opq.pq,
-            chunk, k, nprobe, elig,
-            shortQueries = chunk.map { case (qid, v) =>
-              (qid, graft.kernels.QuantKernels.matVecMul(v, opq.rotation)) })
-        }.getOrElse {
-          val encoded = stamp.map(s => restrict(layoutFrame(opqLayoutPath(coll), s)))
-            .getOrElse(Opq.encode(corpusEff, "vector", opq))
-          Opq.search(encoded, qDf, opq, k, nprobe)
-        }
-      case IndexType.Sq =>
-        val sq = loadedSq(coll)
-        val encoded = (if (corpusIsFull) currentLayout(coll, sqLayoutPath(coll)) else None)
-          .map(l => restrict(l._1)).getOrElse(ScalarQuant.encode(corpusEff, "vector", sq))
-        ScalarQuant.search(encoded, qDf, sq, k, rerankVecCol = Some("vector"),
-          rerankFactor = getParams(coll).getOrElse("rerankFactor", 4))
-      case IndexType.Bq =>
-        val bq = loadedBq(coll)
-        val encoded = (if (corpusIsFull) currentLayout(coll, bqLayoutPath(coll)) else None)
-          .map(l => restrict(l._1)).getOrElse(BinaryQuant.encode(corpusEff, "vector", bq))
-        BinaryQuant.search(encoded, qDf, bq, k, cfg.spaceType,
-          rerankVecCol = Some("vector"),
-          rerankFactor = getParams(coll).getOrElse("rerankFactor", 8))
-      case IndexType.Mrl =>
-        // prefix funnel: shortlist over the materialized (id, mrl_prefix)
-        // columns — the layout scan prunes the full-vector bytes — then
-        // exact full-dim re-rank from the same layout's vector column.
-        // Filtered requests semi-join the layout like the quantized tiers;
-        // stale layouts re-slice the live corpus (no model, so the
-        // fallback is just the flat scan plus a slice); never-built throws.
-        requireMrlBuilt(coll)
-        val pd = mrlPrefixDim(cfg)
-        val factor = getParams(coll).getOrElse("rerankFactor", 4)
-        val encoded = (if (corpusIsFull) currentLayout(coll, mrlLayoutPath(coll)) else None)
-          .map(l => restrict(l._1)).getOrElse(mrlEncode(corpusEff, pd))
-        Matryoshka.searchEncoded(encoded, qDf, pd, k, cfg.spaceType,
-          shortlistFactor = factor)
-      case IndexType.Flat =>
+      case Tier.Flat =>
         ExactKnn.knn(corpusEff, qDf, k, cfg.spaceType)
     }
   }
@@ -2479,24 +2095,14 @@ class Engine(
       toks.zipWithIndex.map { case (v, i) => (s"$qid$MultiVectorSep$i": Any, v) }
     }
     if (tokQs.size > 256) return None
-    // phase timers (maxsim serve profiling): -Dgraft.profile.maxsim=true
-    val prof = java.lang.Boolean.getBoolean("graft.profile.maxsim")
-    var tMark = System.nanoTime()
-    def lap(tag: String): Unit = if (prof) {
-      val now = System.nanoTime()
-      System.err.println(f"[maxsim-prof] $tag ${(now - tMark) / 1e6}%.2f ms")
-      tMark = now
-    }
-    val lp = ivfLayoutPath(coll)
+    val lp = tierLayout(coll, Tier.IvfFlat).get
     val stamp = currentLayoutStamp(coll, lp).getOrElse(return None)
-    val model = loadedIvfOpt(coll).getOrElse(return None)
+    val index = builtIndex(coll, cfg, Tier.IvfFlat).getOrElse(return None)
     val m = getParams(coll).getOrElse("maxsimCandM", 16)
-    val nprobe = getParams(coll).getOrElse("nprobe", math.min(10, model.nlist))
-    lap("layout+model")
+    val nprobe = index.nprobe(getParams(coll))
     val short = graft.operators.LocalIvfServe.searchPointLocalRowsNtok(spark,
-      lp, stamp, model, tokQs, m, nprobe, maxQueries = 256)
+      lp, stamp, index.coarse, tokQs, m, nprobe, maxQueries = 256)
     if (short.isEmpty) return None
-    lap("shortlists")
     def before(s: String): String = {
       val i = s.indexOf(MultiVectorSep)
       if (i < 0) s else s.substring(0, i)
@@ -2541,7 +2147,6 @@ class Engine(
       }
     if (readVecs.nonEmpty) docCachePut(coll, stamp, readVecs)
     val docVecs: Map[String, Array[Array[Float]]] = cached ++ readVecs
-    lap(s"token vecs (${allDocs.size} docs, ${cached.size} cached)")
     val nTokens = queries.map(_._2.size).max
     val out = new scala.collection.mutable.ArrayBuffer[Row]()
     for ((qid, toks) <- queries) {
@@ -2573,14 +2178,11 @@ class Engine(
         out += Row(qid, d, (r + 1).toLong)
       }
     }
-    lap("score+rank")
     val schema = StructType(Seq(
       StructField("qid", StringType),
       StructField("doc_id", StringType),
       StructField("rnk", LongType)))
-    val res = Some(spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), schema))
-    lap("frame")
-    res
+    Some(spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), schema))
   }
 
   /** The distributed MaxSim plan (the batch/KNN-join shape; also the
@@ -2630,4 +2232,14 @@ class Engine(
 
   /** Cache stats for tests/ops. */
   def cacheSize: Int = cache.size
+}
+
+object Engine {
+
+  /** A search on a code tier whose index was never built: the caller's
+    * request is premature (the REST layer answers 400), unlike an
+    * `IllegalStateException` from an internal fault.
+    */
+  final class NotBuilt(coll: String)
+      extends IllegalStateException(s"index for '$coll' not built — call buildIndex")
 }

@@ -98,6 +98,7 @@ class Server(engine: Engine, port: Int = 0) {
       }
     } catch {
       case e: Server.BodyTooLarge => reply(ex, 413, err(e.getMessage))
+      case e: Engine.NotBuilt => reply(ex, 400, err(e.getMessage))
       case e: NoSuchElementException => reply(ex, 404, err(e.getMessage))
       case e: IllegalArgumentException => reply(ex, 400, err(e.getMessage))
       case e: Exception => reply(ex, 500, err(String.valueOf(e.getMessage)))

@@ -250,13 +250,6 @@ object LocalRunWriter {
 
   private def writeRun(dir: String, schema: MessageType, name: String)(
       emit: ((SimpleGroup => Unit) => Unit) => Unit): String = {
-    val prof = java.lang.Boolean.getBoolean("graft.profile.write")
-    var t = System.nanoTime()
-    def lap(tag: String): Unit = if (prof) {
-      val now = System.nanoTime()
-      System.err.println(f"[run-prof] $tag ${(now - t) / 1e6}%.2f ms")
-      t = now
-    }
     val local = ControlFs.isLocalRoot(dir)
     // the session's hadoop conf (spark.hadoop.* credentials/endpoints) —
     // the run must land on the SAME store the data plane resolves. The
@@ -295,7 +288,6 @@ object LocalRunWriter {
       .withPageSize(64 << 10)
       .withDictionaryPageSize(64 << 10)
       .build()
-    lap("builder")
     try {
       // populate-then-write per record: ParquetWriter.write serializes the
       // group's content at call time
@@ -304,7 +296,7 @@ object LocalRunWriter {
         fill(g)
         writer.write(g)
       }
-    } finally { lap("emit"); writer.close(); lap("close") }
+    } finally writer.close()
     if (local) {
       val dirPath = Paths.get(dir)
       Files.move(dirPath.resolve(tmpName), dirPath.resolve(name),
@@ -339,7 +331,6 @@ object LocalRunWriter {
     // harmless (dotfile) but pointless after the rename — drop it
     if (local) Files.deleteIfExists(Paths.get(dir).resolve(s".$tmpName.crc"))
     else hfs.delete(new Path(s"$dir/.$tmpName.crc"), false)
-    lap("rename+crc")
     s"$dir/$name"
   }
 }

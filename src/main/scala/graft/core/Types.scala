@@ -22,14 +22,15 @@ object SpaceType {
         s"unknown space type '$s' (expected one of ${all.map(_.name).mkString(", ")})"))
 }
 
-/** Index algorithm (reference `internal/index/const.go:10-15`, plus three
+/** Index algorithm (reference `internal/index/const.go:10-15`, plus four
   * tiers beyond the reference: `opq` — learned-rotation IVFPQ — `sq` —
-  * SQ8 scalar quantization — and `bq` — 1-bit binary quantization).
+  * SQ8 scalar quantization — `bq` — 1-bit binary quantization — and `mrl`
+  * — the Matryoshka prefix funnel).
   */
 sealed abstract class IndexType(val name: String) extends Serializable
 object IndexType {
   case object Flat extends IndexType("flat")
-  case object Hnsw extends IndexType("hnsw")   // capability parity via LSH/partitioned ANN
+  case object Hnsw extends IndexType("hnsw")   // persisted NSW/HNSW graph (GraphAnn)
   case object IvfFlat extends IndexType("ivf_flat")
   case object IvfPq extends IndexType("ivfpq")
   case object Opq extends IndexType("opq")     // beyond reference: rotated IVFPQ

@@ -17,20 +17,21 @@ class DistanceSpec extends SparkSpec {
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
 
+  /** `fn(a, b)` under generated code and interpreted eval; they must agree.
+    * The input is a cached frame: a `Seq(...).toDF` local relation would be
+    * folded by the interpreted evaluator under any codegen setting.
+    */
   private def eval(fn: String, a: Seq[Float], b: Seq[Float]): Any = {
     import spark.implicits._
     vfn.register(spark)
-    val df = Seq((a, b)).toDF("a", "b")
-    // codegen path
-    val cg = df.select(expr(s"$fn(a, b)")).collect()(0).get(0)
-    // interpreted path (wholestage off)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp = df.select(expr(s"$fn(a, b)")).collect()(0).get(0)
-    spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    assert(cg === interp, s"$fn codegen vs interpreted mismatch")
-    cg
+    val df = Seq((a, b)).toDF("a", "b").cache()
+    try {
+      // a fresh Dataset per path: a Dataset plans once and keeps that plan
+      val (cg, interp) = codegenAndInterpreted(
+        df.select(expr(s"$fn(a, b)")).collect()(0).get(0))
+      assert(cg === interp, s"$fn codegen vs interpreted mismatch")
+      cg
+    } finally df.unpersist()
   }
 
   test("l2_sq matches reference expected values (distance_test.go:26-33)") {

@@ -280,6 +280,84 @@ class EngineSpec extends SparkSpec {
     intercept[IllegalArgumentException](e.setParams("iv", Map("nprobe" -> 0)))
   }
 
+  test("per-tier contract over IndexType.all: setParams keys, layoutDir, compactLayout, search before and after buildIndex") {
+    // one row per tier: (layout-dir stem, runtime keys it accepts, needs a
+    // build before it serves)
+    val tiers: Map[IndexType, (Option[String], Set[String], Boolean)] = Map(
+      IndexType.Flat -> ((None, Set.empty, false)),
+      IndexType.Hnsw -> ((Some("hnsw"), Set("efsearch"), false)),
+      IndexType.IvfFlat -> ((Some("ivf"), Set("nprobe"), true)),
+      IndexType.IvfPq -> ((Some("pq"), Set("nprobe"), true)),
+      IndexType.Opq -> ((Some("opq"), Set("nprobe"), true)),
+      IndexType.Sq -> ((Some("sq"), Set("rerankFactor"), true)),
+      IndexType.Bq -> ((Some("bq"), Set("rerankFactor"), true)),
+      IndexType.Mrl -> ((Some("mrl"), Set("rerankFactor"), true)))
+    assert(tiers.keySet === IndexType.all.toSet)
+    val root = testRoot("tier-contract")
+    val e = new Engine(spark, root)
+    val docs = (0 until 60).map { i =>
+      val base = if (i % 2 == 0) 0f else 10f
+      Document(i.toString, Array.tabulate(8)(j => base + (i % 5) * 0.1f + j * 0.01f))
+    }
+    import spark.implicits._
+    val qDf = Seq(("q", docs.head.vector.toSeq)).toDF("query_id", "query_vec")
+    for (it <- IndexType.all) {
+      val (stem, keys, needsBuild) = tiers(it)
+      val c = s"t_${it.name}"
+      e.createCollection(CollectionConfig(c, 8, it))
+      e.batchUpsertDocuments(c, docs)
+      def accepts(k: String, v: Int): Boolean =
+        scala.util.Try(e.setParams(c, Map(k -> v))) match {
+          case scala.util.Success(_) => true
+          case scala.util.Failure(_: IllegalArgumentException) => false
+          case scala.util.Failure(x) => throw x
+        }
+      // values every tier that takes the key can serve with
+      for ((k, v) <- Seq("efsearch" -> 40, "nprobe" -> 1, "rerankFactor" -> 4))
+        assert(accepts(k, v) === keys(k), s"${it.name}: setParams $k")
+      for (k <- keys) assert(!accepts(k, 0), s"${it.name}: $k = 0 accepted")
+      // routeNprobe needs a routeNlist collection, maxsimCandM a multivector one
+      assert(!accepts("routeNprobe", 1), s"${it.name}: routeNprobe")
+      assert(!accepts("maxsimCandM", 4), s"${it.name}: maxsimCandM")
+      assert(!accepts("bogus", 1), s"${it.name}: unknown key")
+      assert(e.layoutDir(c) === stem.map(s => s"$root/$c/index/${s}_layout"),
+        s"${it.name}: layoutDir")
+      assert(!e.compactLayout(c), s"${it.name}: compactLayout before build")
+      if (needsBuild) {
+        intercept[IllegalStateException](e.searchVectors(c, Seq(("q", docs.head.vector)), 3))
+        intercept[IllegalStateException](e.searchVectorsDf(c, qDf, 3).collect())
+      } else {
+        assert(e.searchVectors(c, Seq(("q", docs.head.vector)), 3).count() === 3L)
+        assert(e.searchVectorsDf(c, qDf, 3).count() === 3L)
+      }
+      e.buildIndex(c, nlist = 2)
+      assert(e.layoutDir(c) === stem.map(s => s"$root/$c/index/${s}_layout_g1"),
+        s"${it.name}: layoutDir after build")
+      assert(e.searchVectors(c, Seq(("q", docs.head.vector)), 3).count() === 3L)
+      assert(e.searchVectorsDf(c, qDf, 3).count() === 3L)
+      // nprobe is bounded by the trained nlist, also on a fresh engine
+      // that knows the model only from its snapshot
+      if (keys("nprobe")) {
+        assert(accepts("nprobe", 2) && !accepts("nprobe", 3))
+        intercept[IllegalArgumentException](
+          new Engine(spark, root).setParams(c, Map("nprobe" -> 3)))
+      }
+      // the graph tier folds through its own rebuild, never compactLayout
+      assert(e.compactLayout(c) === (stem.isDefined && it != IndexType.Hnsw),
+        s"${it.name}: compactLayout after build")
+    }
+    // routeNprobe: hnsw with routeNlist only, bounded by it
+    e.createCollection(CollectionConfig("routed", 8, IndexType.Hnsw,
+      params = Map("routeNlist" -> "2")))
+    e.setParams("routed", Map("routeNprobe" -> 2))
+    intercept[IllegalArgumentException](e.setParams("routed", Map("routeNprobe" -> 3)))
+    // maxsimCandM: any multivector collection
+    e.createCollection(CollectionConfig("mv", 8, IndexType.Flat,
+      params = Map("multivector" -> "true")))
+    e.setParams("mv", Map("maxsimCandM" -> 4))
+    intercept[IllegalArgumentException](e.setParams("mv", Map("maxsimCandM" -> 0)))
+  }
+
   test("delete propagates to search; re-upsert resurrects") {
     val e = freshEngine()
     e.createCollection(CollectionConfig("c", 3, IndexType.Flat))

@@ -129,8 +129,8 @@ class LocalEncodeSpec extends SparkSpec {
     val vs = vecs
     e.batchUpsertDocuments("m",
       vs.zipWithIndex.map { case (v, i) => Document(i.toString, v) })
-    e.buildIndex("m") // Spark branch: mrlEncode's slice column
-    // driver point write: localLayoutRows' take(pd) twin appends this row
+    e.buildIndex("m") // Spark branch: the mrl tier's slice column
+    // driver point write: the mrl tier's take(pd) row twin appends this row
     val pw = Array.tabulate(dim)(i => if (i % 2 == 0) 1e-40f else -0f)
     e.batchUpsertDocuments("m", Seq(Document("pw", pw)))
     val got = spark.read.parquet(e.layoutDir("m").get)

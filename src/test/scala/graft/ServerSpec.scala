@@ -347,6 +347,23 @@ class ServerSpec extends SparkSpec {
     assert(p50 < 2000.0, f"warm maxsim wire p50 $p50%.0f ms exceeds the 2 s budget")
   }
 
+  test("search on a never-built ivf_flat index answers 400, then 200 after buildindex") {
+    req("POST", "/v1/collections", """{"name":"nb","dimension":2,"index_type":"ivf_flat"}""")
+    val docs = (0 until 20).map(i => s"""{"id":"$i","vector":[$i,${i % 3}]}""")
+      .mkString("[", ",", "]")
+    assert(req("POST", "/v1/collections/nb/documents/batchupsert",
+      s"""{"documents":$docs}""")._1 === 200)
+    val routes = Seq("/v1/collections/nb/documents/search", "/v1/collections/nb/vectors/search")
+    for (route <- routes) {
+      val (code, v) = req("POST", route, """{"vector":[1,1],"limit":3}""")
+      assert(code === 400, s"$route before buildindex: $code $v")
+      assert(v.asObj("error").asStr.contains("not built"))
+    }
+    assert(req("POST", "/v1/collections/nb/buildindex", "{}")._1 === 200)
+    for (route <- routes)
+      assert(req("POST", route, """{"vector":[1,1],"limit":3}""")._1 === 200, route)
+  }
+
   test("buildindex endpoint: accepts reference body AND actually trains (§7.4)") {
     req("POST", "/v1/collections", """{"name":"iv","dimension":2,"index_type":"ivf_flat"}""")
     val docs = (0 until 30).map { i =>

@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.core._
 
-/** Phase profile of the zero-job MaxSim serve (VERDICT r11 #3) — replicates
-  * RecallBench's serve_mv setup (sf0.01 embeddings, 4 tokens/doc, nlist 16,
-  * nprobe 4, maxsimCandM 16) and times `Engine.searchMaxSim` per query with
-  * `-Dgraft.profile.maxsim=true` phase laps on stderr.
+/** Latency profile of the zero-job MaxSim serve (VERDICT r11 #3) —
+  * replicates RecallBench's serve_mv setup (sf0.01 embeddings, 4 tokens/doc,
+  * nlist 16, nprobe 4, maxsimCandM 16), times `Engine.searchMaxSim` per
+  * query and prints the p50/p95. For a per-layer split of a serving run use
+  * the benchmark's trace mode (`perfbench/run.py --trace 1`, engine spans).
   *
-  *   sbt -batch -Dgraft.profile.maxsim=true 'Test/runMain graft.tools.MaxSimProfile'
+  *   sbt -batch 'Test/runMain graft.tools.MaxSimProfile'
   */
 object MaxSimProfile {
   def main(args: Array[String]): Unit = {
