@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -44,7 +44,8 @@ class Engine(
   private val runtime = collection.concurrent.TrieMap.empty[String, Map[String, Int]]
   private val indexes = collection.concurrent.TrieMap.empty[String, LayoutEncoder]
   private val cache = new ResultCache(capacity = 128)
-  // params epoch: bumped on setParams so cached results keyed on old params miss
+  // params epoch: bumped on setParams and on each buildIndex flip, so cached
+  // results keyed on old params or an old index build miss
   private val paramsEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
 
   // Index-layout directories are GENERATION-VERSIONED (the same snapshot
@@ -1249,7 +1250,12 @@ class Engine(
     // cycle after the flip (see layoutGenFile's contract)
     val gen = layoutGen(coll)
     def nextPath(tier: String): String = tierGenPath(coll, tier, gen + 1)
-    def flip(tier: String): Unit = { flipLayoutGen(coll, tier, gen); () }
+    def flip(tier: String): Unit = {
+      flipLayoutGen(coll, tier, gen)
+      // a rebuild changes answers without a store write: results cached
+      // against the superseded index must miss
+      paramsEpoch.incrementAndGet()
+    }
     def stampLayout(): Unit = {
       // a crashed compaction leaves its intent marker behind (harmless —
       // the un-flipped generation it was writing is simply orphaned); a
@@ -1337,16 +1343,12 @@ class Engine(
   /** Batch vector search: top-k ids+distances per query (SURVEY §3.1).
     * Dispatches on the collection's tier: flat → exact; ivf_flat/ivfpq/opq
     * → nprobe-pruned cells; sq/bq/mrl → code scan + exact re-rank; hnsw →
-    * the persisted NSW/HNSW graph (`GraphAnn`, recall knob efsearch).
+    * the persisted NSW/HNSW graph (`GraphAnn`, recall knob efsearch). A
+    * request the driver serves (`searchHits`) is one local frame over its
+    * rows; only a declined request plans the tier's Spark search.
     */
-  def searchVectors(coll: String, queries: Seq[(String, Array[Float])], k: Int): DataFrame = {
-    val cfg = configOf(coll)
-    queries.foreach { case (qid, v) =>
-      require(v.length == cfg.dimension,
-        s"query '$qid' dimension ${v.length} != collection dimension ${cfg.dimension}")
-    }
-    searchOn(store.read(coll), cfg, coll, queries, k, corpusIsFull = true)
-  }
+  def searchVectors(coll: String, queries: Seq[(String, Array[Float])], k: Int): DataFrame =
+    vectorsFrame(configOf(coll), coll, queries, k)
 
   /** DataFrame-in/DataFrame-out batch KNN — the KNN-JOIN surface: queries
     * stay distributed end to end, so a 10⁸-row query set never touches the
@@ -1360,9 +1362,6 @@ class Engine(
     */
   def searchVectorsDf(coll: String, queries: DataFrame, k: Int): DataFrame = {
     val cfg = configOf(coll)
-    // lazy: layout-served branches (and searchOn's by-name corpus) must not
-    // pay the store's parquet listing + schema inference
-    lazy val corpus = store.read(coll)
     Tier(cfg.indexType) match {
       case t: CodeTier[_] =>
         // the flat-scan code tiers (sq/bq/mrl) ride queries as a broadcast
@@ -1374,10 +1373,11 @@ class Engine(
         // bucketed table first (clustered tiers; corpus-shuffle-free
         // equi-join), then the current layout, then a live re-encode — all
         // three produce identical results; they differ only in how much
-        // work the plan skips
+        // work the plan skips. Lazy corpus: the layout-served branches must
+        // not pay the store's parquet listing + schema inference
         val encoded = (if (t.clustered) bucketedCorpus(coll) else None)
           .orElse(currentLayout(coll, tierLayout(coll, t).get).map(_._1))
-          .getOrElse(index.encode(corpus))
+          .getOrElse(index.encode(store.read(coll)))
         index.search(encoded, queries, k, getParams(coll), distributed = true)
       case _ =>
         // flat/hnsw query paths collect the query set; fail fast with a
@@ -1389,11 +1389,141 @@ class Engine(
           .map(r => (r.getString(0), r.getAs[scala.collection.Seq[Float]](1).toArray))
         // cast query_id back to the caller's type: the result schema of one
         // API must not depend on the collection's index type
-        searchOn(corpus, cfg, coll, collected.toSeq, k, corpusIsFull = true)
+        vectorsFrame(cfg, coll, collected.toSeq, k)
           .withColumn("query_id",
             col("query_id").cast(queries.schema("query_id").dataType))
     }
   }
+
+  /** `searchVectors` on a resolved config: the driver rows wrapped in one
+    * local frame, or the tier's Spark plan when the row search declines.
+    */
+  private def vectorsFrame(cfg: CollectionConfig, coll: String,
+      queries: Seq[(String, Array[Float])], k: Int): DataFrame =
+    hitsOn(cfg, coll, queries, k, None) match {
+      case Right(hits) => spark.createDataFrame(java.util.Arrays.asList(
+        hits.map(h => Row(h.queryId, h.id, h.distance, h.rank)): _*), Engine.HitSchema)
+      case Left(_) => searchOn(cfg, coll, queries, k)
+    }
+
+  /** The engine's point search as DRIVER ROWS — the reference's in-process
+    * `SearchResult` (PAPER.md §1.1): the tier's local serve answers from
+    * driver-held cells and no Catalyst plan sits between the index and the
+    * caller, or the search names why it declined (`Decline`) and the caller
+    * takes the distributed plan. Rows come k per query in (distance, id)
+    * order, queries in input order, exactly the rows the distributed plan
+    * returns. Every search surface validates here, once: the collection's
+    * dimension, k ≥ 1, and finite query components.
+    */
+  private[graft] def searchHits(coll: String, queries: Seq[(String, Array[Float])],
+      k: Int, eligible: Option[Column] = None): Either[Decline, Seq[SearchHit]] =
+    hitsOn(configOf(coll), coll, queries, k, eligible)
+
+  private def hitsOn(cfg: CollectionConfig, coll: String,
+      queries: Seq[(String, Array[Float])], k: Int,
+      eligible: Option[Column]): Either[Decline, Seq[SearchHit]] = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    queries.foreach { case (qid, v) =>
+      require(v.length == cfg.dimension,
+        s"query '$qid' dimension ${v.length} != collection dimension ${cfg.dimension}")
+      require(v.forall(f => !f.isNaN && !f.isInfinite),
+        s"query '$qid' has a non-finite component")
+    }
+    val res = Tier(cfg.indexType) match {
+      case t: CodeTier[_] =>
+        builtIndex(coll, cfg, t).getOrElse(notBuilt(coll)) match {
+          // TRUE point requests over a current layout serve from
+          // driver-cached cells — ZERO Spark jobs, warm or cold. Results ≡
+          // the distributed search by construction: same probe, same
+          // kernels, same (distance, id) order, cells holding the rows of
+          // the SAME tombstone-applied frame, decoded on the driver at the
+          // stamp. ivf_flat cells hold vectors; ivfpq/opq cells hold codes
+          // (LocalPqServe ADC shortlist — opq's in rotated space — then the
+          // exact re-rank through the local point reads).
+          case c: CellIndex =>
+            val path = tierLayout(coll, t).get
+            val nprobe = c.nprobe(getParams(coll))
+            localRoute(currentLayoutStamp(coll, path), coll, queries, eligible) {
+              (stamp, elig) => chunk => c.pq match {
+                case Some(pq) => localPqSearch(coll, path, stamp, pq, chunk, k, nprobe,
+                  elig, chunk.map { case (qid, v) => (qid, c.rotate(v)) })
+                case None => graft.operators.LocalIvfServe.searchPointLocalRows(path,
+                  stamp, c.coarse, chunk.map { case (qid, v) => (qid: Any, v) },
+                  k, nprobe, elig).flatMap(stringHits)
+              }
+            }
+          case _ => Left(Decline.NoLocalServe)
+        }
+      case Tier.Hnsw => graphHits(cfg, coll, queries, k, eligible)
+      case Tier.Flat => Left(Decline.NoLocalServe)
+    }
+    res match {
+      case Right(_) => localServed.incrementAndGet()
+      case Left(d) => localDeclined(d).incrementAndGet()
+    }
+    res
+  }
+
+  /** Routed-graph point requests beam on driver-cached cell graphs — a warm
+    * query launches ZERO Spark jobs. Results ≡ `searchRoutedPruned` at
+    * equal knobs: same reconstruction, same beams, same (distance, id)
+    * merge; delta rows exact-scanned with the kernels' arithmetic and
+    * merged the same way. Filtered requests beam in-beam-filtered with full
+    * fan-out (`searchPointLocal` mirrors `searchFromLayout`'s eligibleIds
+    * semantics bit for bit). Unrouted layouts have no driver serve.
+    */
+  private def graphHits(cfg: CollectionConfig, coll: String,
+      queries: Seq[(String, Array[Float])], k: Int,
+      eligible: Option[Column]): Either[Decline, Seq[SearchHit]] = {
+    val routeP = getParams(coll).get("routeNprobe")
+      .getOrElse(return Left(Decline.NoLocalServe))
+    val lp = tierLayout(coll, Tier.Hnsw).get
+    val stamp = currentLayoutStamp(coll, lp).getOrElse(return Left(Decline.StaleLayout))
+    // tombstoned nodes stay in the adjacency but never surface: the depth
+    // widens by the tombstone count, then trims back to k — past
+    // `maxServedTombstones` the widening would bloat every beam
+    val tombMap = GraphAnn.localTombstones(lp, stamp)
+    if (tombMap.size > maxServedTombstones) return Left(Decline.TombstonesOverBudget)
+    // cache under the GRAPH EPOCH, not the store version: streaming delta
+    // appends re-stamp the layout without touching the adjacency
+    val epoch = readLongSafe(hnswEpochPath(coll)).getOrElse(stamp)
+    val kEff = k + tombMap.size
+    val efEff = math.max(getParams(coll).getOrElse("efsearch", 40), kEff)
+    localRoute(Some(stamp), coll, queries, eligible) { (stamp, elig) =>
+      val delta = GraphAnn.localDeltaRows(s"$lp/_delta", stamp)
+        .filter { case (id, _, ver) => tombMap.get(id).forall(_ <= ver) }
+        .filter { case (id, _, _) => elig.forall(_.contains(id)) }
+        .map { case (id, vec, _) => (id, vec) }
+      chunk => stringHits(GraphAnn.searchPointLocalRows(spark, lp,
+        chunk.map { case (qid, v) => (qid: Any, v) }, kEff, cfg.spaceType,
+        ef = efEff, routeNprobe = routeP, cacheKey = Some((lp, epoch)),
+        deltaRows = delta, excludeIds = tombMap.keySet, eligible = elig)
+        // exclusion ran BEFORE ranking, so ranks are contiguous over valid
+        // hits — the widened depth just trims back
+        .filter(_._4 <= k))
+    }
+  }
+
+  /** Driver (qid, id, distance, rnk) rows as hits. Engine collections key
+    * documents by string id, so any other decoded id type declines.
+    */
+  private def stringHits(rows: Seq[(Any, Any, Double, Long)]): Either[Decline, Seq[SearchHit]] =
+    if (rows.exists(r => !r._2.isInstanceOf[String])) Left(Decline.UnsupportedIdType)
+    else Right(rows.map(r =>
+      SearchHit(r._1.asInstanceOf[String], r._2.asInstanceOf[String], r._3, r._4)))
+
+  // local-serve outcomes and result-cache lookups, reported by `/v1/metrics`
+  private val localServed = new java.util.concurrent.atomic.AtomicLong(0)
+  private val localDeclined =
+    Decline.all.map(_ -> new java.util.concurrent.atomic.AtomicLong(0)).toMap
+  private val cacheHits = new java.util.concurrent.atomic.AtomicLong(0)
+  private val cacheMisses = new java.util.concurrent.atomic.AtomicLong(0)
+
+  private[graft] def searchMetrics: Map[String, Long] = Map(
+    "search_local_served" -> localServed.get(),
+    "result_cache_hits" -> cacheHits.get(),
+    "result_cache_misses" -> cacheMisses.get()) ++
+    localDeclined.map { case (d, n) => s"search_local_declined_${d.key}" -> n.get() }
 
   /** Point-serve chunk size: the per-call bound of the zero-job serves.
     * Batches above it AUTO-SPLIT into cap-sized chunks over the same held
@@ -1407,68 +1537,47 @@ class Engine(
     spark.conf.getOption("spark.graft.maxLocalServeBatch")
       .map(_.toInt).getOrElse(1024)
 
-  /** Driver-side concatenation of per-chunk local-serve results: collect on
-    * a LocalTableScan is job-free, a `union` plan's collect is not — the
-    * zero-job property must survive the split.
+  /** Serve every chunk and concatenate the rows, SHORT-CIRCUITING on the
+    * first decline: once any chunk declines the whole request re-runs
+    * distributed, so serving the remaining chunks only to discard them is
+    * pure waste. Per-query results are independent, so the concatenation
+    * is row-identical to one oversized call (and to the distributed plan).
     */
-  private def concatLocalFrames(frames: Seq[DataFrame]): DataFrame =
-    if (frames.size == 1) frames.head
-    else spark.createDataFrame(
-      java.util.Arrays.asList(frames.flatMap(_.collect()): _*),
-      frames.head.schema)
-
-  /** Chunks for the local-serve split. An EMPTY query set yields one empty
-    * chunk (`grouped` yields none), so the serve path returns its empty
-    * frame with the right schema instead of `concatLocalFrames` dying on a
-    * headless sequence.
-    */
-  private def localChunks[T](queries: Seq[T]): Iterator[Seq[T]] =
-    if (queries.isEmpty) Iterator(queries)
-    else queries.grouped(LocalServeChunk)
-
-  /** Serve every chunk, SHORT-CIRCUITING on the first decline: once any
-    * chunk returns None the whole request re-runs distributed, so paying
-    * the remaining chunks' collects only to discard them is pure waste.
-    */
-  private def serveChunked[T](queries: Seq[T])(
-      serve: Seq[T] => Option[DataFrame]): Option[DataFrame] = {
-    val acc = Seq.newBuilder[DataFrame]
-    val it = localChunks(queries)
+  private def serveChunked[T, D, R](queries: Seq[T])(
+      serve: Seq[T] => Either[D, Seq[R]]): Either[D, Seq[R]] = {
+    val acc = Seq.newBuilder[R]
+    val it = queries.grouped(LocalServeChunk)
     while (it.hasNext) serve(it.next()) match {
-      case Some(f) => acc += f
-      case None => return None
+      case Right(rows) => acc ++= rows
+      case Left(d) => return Left(d)
     }
-    Some(concatLocalFrames(acc.result()))
+    Right(acc.result())
   }
 
-  /** Shared local-route guard of the cell-serving tiers: point-request
-    * size (chunk-split up to `maxLocalServeBatch`), unique qids (the window
-    * plans merge a duplicated id's rows into ONE k-row group; a per-query
-    * local loop would emit k rows per entry — the knnAggFused rule),
-    * current layout (its stamp), and driver-budget eligibility. `serve`
-    * runs once per ≤`LocalServeChunk` chunk only when every precondition
-    * holds; a None anywhere falls back to the distributed plan for the
-    * WHOLE request.
+  /** Shared local-route guard of the driver-served tiers: current layout
+    * (its stamp), point-request size (chunk-split up to
+    * `maxLocalServeBatch`), unique qids (the window plans merge a
+    * duplicated id's rows into ONE k-row group; a per-query local loop
+    * would emit k rows per entry — the knnAggFused rule), and a filter's
+    * survivor set within the driver budget (cached per (coll, stamp,
+    * predicate); an over-budget set declines, never truncates). `serve`
+    * gets the stamp and the survivor set once and returns the per-chunk
+    * serve; the first decline anywhere declines the WHOLE request.
     */
   private def localRoute(stamp: Option[Long], coll: String,
-      queries: Seq[(String, Array[Float])], eligible: Option[Column],
-      corpus: => DataFrame)(
-      serve: (Long, Seq[(String, Array[Float])], Option[Set[Any]]) => Option[DataFrame]): Option[DataFrame] =
-    stamp match {
-      case Some(stamp) if queries.size <= maxLocalServeBatch &&
-          queries.map(_._1).distinct.size == queries.size =>
-        lazy val localElig: Option[Set[Any]] =
-          if (eligible.isEmpty) None
-          else localEligibleSet(coll, stamp, eligible.get, corpus)
-        if (eligible.nonEmpty && localElig.isEmpty) None
-        else
-          // chunked serving: per-query results are independent, so the
-          // concatenation is row-identical to one oversized call (and to
-          // the distributed plan); the first chunk warms the probed cells,
-          // later chunks serve job-free from the same held references
-          serveChunked(queries)(chunk => serve(stamp, chunk, localElig))
-      case _ => None
+      queries: Seq[(String, Array[Float])], eligible: Option[Column])(
+      serve: (Long, Option[Set[Any]]) => Seq[(String, Array[Float])] => Either[Decline, Seq[SearchHit]])
+      : Either[Decline, Seq[SearchHit]] = {
+    val s = stamp.getOrElse(return Left(Decline.StaleLayout))
+    if (queries.size > maxLocalServeBatch) return Left(Decline.OverBatch)
+    if (queries.map(_._1).distinct.size != queries.size) return Left(Decline.DuplicateQids)
+    val elig = eligible match {
+      case None => None
+      case Some(p) => Some(localEligibleSet(coll, s, p, store.read(coll))
+        .getOrElse(return Left(Decline.EligibleOverBudget)))
     }
+    serveChunked(queries)(serve(s, elig))
+  }
 
   /** Zero-job IVFPQ point search: `LocalPqServe` ADC shortlist over
     * driver-cached code cells, then the exact re-rank the distributed
@@ -1477,30 +1586,30 @@ class Engine(
     * same `VecKernels` arithmetic, (exact asc, id asc UTF-8) rank, top-k.
     * The re-rank result depends only on the shortlist SET, so equality with
     * the distributed plan needs only shortlist-set + scoring parity
-    * (`LocalPqParitySpec`). None — fall back distributed — on an oversized
-    * cell or a shortlisted id the point reads cannot resolve (a concurrent
-    * delete racing the request; the distributed plan re-plans instead).
+    * (`LocalPqParitySpec`). Declines on an oversized cell or a shortlisted
+    * id the point reads cannot resolve (a concurrent delete racing the
+    * request; the distributed plan re-plans instead).
     */
   private def localPqSearch(coll: String, path: String,
       stamp: Long, pq: graft.operators.IvfPq.Model, queries: Seq[(String, Array[Float])],
       k: Int, nprobe: Int, eligible: Option[Set[Any]],
-      shortQueries: Seq[(String, Array[Float])]): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+      shortQueries: Seq[(String, Array[Float])]): Either[Decline, Seq[SearchHit]] = {
     // `shortQueries` = queries in INDEX space (OPQ shortlists in rotated
     // space, re-ranks original)
-    val short = graft.operators.LocalPqServe.adcShortlistLocalRows(spark, path,
+    val short = graft.operators.LocalPqServe.adcShortlistLocalRows(path,
       stamp, pq, shortQueries.map { case (q, v) => (q: Any, v) },
-      k * graft.operators.IvfPq.DefaultRerankFactor, nprobe, eligible)
-    if (short.isEmpty) return None
-    val ids = short.get.map(r => String.valueOf(r._2)).distinct
+      k * graft.operators.IvfPq.DefaultRerankFactor, nprobe, eligible) match {
+      case Right(rows) => rows
+      case Left(d) => return Left(d)
+    }
+    val ids = short.map(r => String.valueOf(r._2)).distinct
     // AT the layout stamp: skips the second counter read (one LIST per
     // request on a remote root) and reads a snapshot consistent with the
     // shortlist even against a racing writer
     val docs = store.getManyAt(coll, ids, stamp)
-    if (!ids.forall(docs.contains)) return None
-    val byQid = short.get.groupBy(_._1.toString)
-    val out = new scala.collection.mutable.ArrayBuffer[Row]()
+    if (!ids.forall(docs.contains)) return Left(Decline.UnresolvedShortlist)
+    val byQid = short.groupBy(_._1.toString)
+    val out = Seq.newBuilder[SearchHit]
     for ((qid, qv) <- queries) {
       val ranked = byQid.getOrElse(qid, Seq.empty)
         .map { case (_, id, _, _) =>
@@ -1511,15 +1620,10 @@ class Engine(
           (a._2 == b._2 && graft.operators.GraphAnn.idLt(a._1, b._1)))
         .take(k)
       ranked.zipWithIndex.foreach { case ((id, d), r) =>
-        out += Row(qid, id, d, (r + 1).toLong)
+        out += SearchHit(qid, id, d, (r + 1).toLong)
       }
     }
-    val schema = StructType(Seq(
-      StructField("query_id", StringType),
-      StructField("id", StringType),
-      StructField("distance", DoubleType),
-      StructField("rnk", LongType)))
-    Some(spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), schema))
+    Right(out.result())
   }
 
   /** The collection's bucketed inverted-list table, if built AND current
@@ -1588,10 +1692,10 @@ class Engine(
           "or raise spark.graft.maxCollectQueries")
   }
 
-  // `corpus` is BY-NAME: constructing the store frame eagerly costs a
-  // parquet listing + schema inference (~100+ ms) per request, and the
-  // layout-backed serving branches never touch it — only the stale-layout
-  // fallbacks and the flat tier do.
+  // The DECLINED path: the tier's Spark search over the current layout (or
+  // the live corpus when the layout is stale). The store frame is read at
+  // most once and only by the branches that touch it — constructing it
+  // costs a parquet listing + schema inference.
   //
   // `eligible`: a metadata predicate composed into EVERY tier without
   // giving up its layout — quantized/ivf tiers semi-join their code tables
@@ -1600,12 +1704,11 @@ class Engine(
   // (NswIndex.searchFiltered), flat filters the scan. Pre-eligibility, a
   // filtered request re-encoded/re-assigned/rebuilt over the filtered
   // corpus every time — correct, but a full fallback per request.
-  private def searchOn(corpusThunk: => DataFrame, cfg: CollectionConfig, coll: String,
+  private def searchOn(cfg: CollectionConfig, coll: String,
       queries: Seq[(String, Array[Float])], k: Int,
-      corpusIsFull: Boolean = false,
       eligible: Option[Column] = None): DataFrame = {
     import spark.implicits._
-    lazy val corpus = corpusThunk // force at most once, only on branches that read it
+    lazy val corpus = store.read(coll)
     // eligible ids off the live store (LWW-folded): when the layout is
     // CURRENT its id set equals the store's, so a semi-join restricts the
     // layout to exactly the predicate's survivors
@@ -1629,59 +1732,28 @@ class Engine(
         // prefer the layout materialized at buildIndex (partition-pruned or
         // codes-only, no per-search re-encoding); re-encode the live corpus
         // only when it changed since
-        val stamp = if (corpusIsFull) currentLayoutStamp(coll, path) else None
-        val local = index match {
-          case c: CellIndex =>
-            // TRUE point requests over a current layout serve from
-            // driver-cached cells — ZERO Spark jobs, warm or cold (the graph
-            // tier's searchPointLocal architecture on the cell tiers; results
-            // ≡ the distributed search by construction: same probe, same
-            // kernels, same (distance, id) order, cells holding the rows of
-            // the SAME tombstone-applied frame, decoded on the driver at the
-            // stamp). ivf_flat cells hold vectors; ivfpq/opq cells hold codes
-            // (LocalPqServe ADC shortlist — opq's in rotated space — then the
-            // exact re-rank through the local point reads). Filtered requests
-            // serve locally too when the predicate's survivor set fits the
-            // driver budget (cached per (coll, stamp, predicate)); an
-            // over-budget set — or an oversized probed cell — falls back to
-            // the distributed pruned plan, never truncates.
-            val nprobe = c.nprobe(getParams(coll))
-            localRoute(stamp, coll, queries, eligible, corpus) { (stamp, chunk, elig) =>
-              c.pq match {
-                case Some(pq) => localPqSearch(coll, path, stamp, pq, chunk, k, nprobe,
-                  elig, chunk.map { case (qid, v) => (qid, c.rotate(v)) })
-                case None => graft.operators.LocalIvfServe.searchPointLocal(spark,
-                  path, stamp, c.coarse, chunk.map { case (qid, v) => (qid: Any, v) },
-                  k, nprobe, org.apache.spark.sql.types.StringType, elig)
-              }
-            }
-          case _ => None
-        }
-        local.getOrElse {
-          val encoded = stamp.map(s => restrict(layoutFrame(path, s)))
-            .getOrElse(index.encode(corpusEff))
-          index.search(encoded, qDf, k, getParams(coll), distributed = false)
-        }
+        val encoded = currentLayoutStamp(coll, path)
+          .map(s => restrict(layoutFrame(path, s)))
+          .getOrElse(index.encode(corpusEff))
+        index.search(encoded, qDf, k, getParams(coll), distributed = false)
       case Tier.Hnsw =>
         // graph-ANN tier: per-partition NSW/HNSW beam search over the
         // persisted adjacency (`GraphAnn`); efsearch IS the beam width,
         // exactly the reference's knob (hnsw.go:171-204). Graphs stay
         // pinned per layout: executors cache reconstructed cells
-        // (`GraphAnn.GraphCache`, keyed by layout path and graph epoch) and
-        // routed point requests beam on driver-cached cells
-        // (`searchPointLocal`); only the live-corpus fallback builds graphs
-        // per batch of queries.
+        // (`GraphAnn.GraphCache`, keyed by layout path and graph epoch);
+        // only the live-corpus fallback builds graphs per batch of queries.
         val ef = getParams(coll).getOrElse("efsearch", 40)
         // one generation for the whole request
         val lp = tierLayout(coll, Tier.Hnsw).get
         // prefer the PERSISTED graph layout (adjacency reload + executor
         // cache — no beam re-insertion); fall back to building over the
-        // live corpus when stale or pre-filtered. User M/efConstruction are
-        // honored at build (the reference accepts then silently drops them,
+        // live corpus when stale. User M/efConstruction are honored at
+        // build (the reference accepts then silently drops them,
         // collection.go:64-67 + hnsw.go:25-39 — §7.4).
-        val layout = if (corpusIsFull) currentLayoutStamp(coll, lp) else None
-        // live-corpus fallback (stale layout, pre-filtered corpus, or a
-        // tombstone sidecar too large to serve through — see below)
+        val layout = currentLayoutStamp(coll, lp)
+        // live-corpus fallback (stale layout, or a tombstone sidecar too
+        // large to serve through — see below)
         def liveGraphSearch(): DataFrame =
           GraphAnn.search(corpusEff, qDf, k, cfg.spaceType, ef = ef,
             m = cfg.params.get("M").map(_.toInt).getOrElse(16),
@@ -1704,13 +1776,12 @@ class Engine(
           case Some(stamp) =>
             // routeNprobe (setparams; only settable on routeNlist-built
             // collections) narrows the beam to the query's nearest cells;
-            // the stale-layout fallback below ignores it — full fan-out is
+            // the stale-layout fallback above ignores it — full fan-out is
             // a recall superset, never a correctness change. SMALL routed
-            // query sets take the partition-pruned point-serve path (scan
-            // only the probed cells' directories — the single-request REST
-            // case); batches amortize the co-located shuffle instead.
-            // Both paths share executor cache entries, so mixing them
-            // never rebuilds a cell twice.
+            // query sets take the partition-pruned path (scan only the
+            // probed cells' directories); batches amortize the co-located
+            // shuffle instead. Both paths share executor cache entries, so
+            // mixing them never rebuilds a cell twice.
             val routeP = getParams(coll).get("routeNprobe")
             // cache under the GRAPH EPOCH, not the store version: streaming
             // delta appends advance layout_version (the layout IS current)
@@ -1721,104 +1792,91 @@ class Engine(
             val exIds: Set[Any] = tombMap.keySet
             val kEff = k + tombMap.size
             val efEff = math.max(ef, kEff)
-            // FILTERED point requests serve locally too, when the eligible
-            // set fits the driver budget: the predicate's survivors are
-            // collected ONCE per (collection, stamp, predicate) — a warm
-            // repeated filter launches zero jobs, beams run in-beam-filtered
-            // on the driver-cached cells with full fan-out (the same
-            // geometry-vs-eligibility reasoning as the batch path below —
-            // searchPointLocal mirrors searchFromLayout's eligibleIds
-            // semantics bit-for-bit). An over-budget eligible set memoizes
-            // as None and requests take the batch layout path (correct,
-            // job-priced) — never a silently truncated filter.
-            lazy val localElig: Option[Set[Any]] =
-              if (eligible.isEmpty) None
-              else localEligibleSet(coll, stamp, eligible.get, corpus)
-            // same gate as localRoute: bounded batch, distinct qids (the
-            // distributed window plans merge a duplicated qid's rows into
-            // ONE k-group; the per-query local loop emits k rows per
-            // OCCURRENCE — dup-qid requests must take the distributed plan
-            // or the two paths disagree), batches past one chunk auto-split
-            val localServable = queries.size <= maxLocalServeBatch &&
-              queries.map(_._1).distinct.size == queries.size
-            if (routeP.isDefined && localServable &&
-                (eligible.isEmpty || localElig.isDefined)) {
-              // TRUE point requests: serve from driver-cached cell graphs —
-              // a warm query launches ZERO Spark jobs (the ~100-300 ms
-              // job-scheduling floor the latency harness measures on the
-              // pruned path is gone). Results ≡ searchRoutedPruned at equal
-              // knobs: same reconstruction, same beams, same (distance, id)
-              // merge; delta rows exact-scanned with the kernels' exact
-              // arithmetic and merged the same way.
-              val delta = GraphAnn.localDeltaRows(s"$lp/_delta", stamp)
-                .filter { case (id, _, ver) => tombMap.get(id).forall(_ <= ver) }
-                .filter { case (id, _, _) => localElig.forall(_.contains(id)) }
-                .map { case (id, vec, _) => (id, vec) }
-              // chunked like localRoute: per-query results are independent,
-              // so the driver-side concatenation (collect on LocalTableScan
-              // is job-free; a `union` plan's is not) is row-identical to
-              // one call; chunk 1 warms the probed cells, later chunks beam
-              // job-free against the same held graphs
-              val chunkFrames = localChunks(queries).map { chunk =>
-                GraphAnn.searchPointLocal(spark, lp,
-                  chunk.toDF("query_id", "query_vec")
-                    .withColumn("query_vec", col("query_vec").cast("array<float>")),
-                  kEff, cfg.spaceType, ef = efEff, routeNprobe = routeP.get,
+            val graphHits = routeP match {
+              case Some(p) if queries.size <= 64 && eligible.isEmpty =>
+                GraphAnn.searchRoutedPruned(spark, lp, qDf, kEff,
+                  cfg.spaceType, ef = efEff, routeNprobe = p,
                   cacheKey = Some((lp, epoch)),
-                  deltaRows = delta, excludeIds = exIds, eligible = localElig)
-              }.toSeq
-              val res = concatLocalFrames(chunkFrames)
-              // exclusion ran BEFORE ranking, so ranks are contiguous over
-              // valid hits — the widened depth just trims back
-              if (kEff == k) res else res.filter(col("rnk") <= k)
-            } else {
-              val graphHits = routeP match {
-                case Some(p) if queries.size <= 64 && eligible.isEmpty =>
-                  GraphAnn.searchRoutedPruned(spark, lp, qDf, kEff,
-                    cfg.spaceType, ef = efEff, routeNprobe = p,
-                    cacheKey = Some((lp, epoch)),
-                    excludeIds = exIds)
-                case _ =>
-                  // filtered requests run FULL fan-out (routeNprobe dropped):
-                  // routing prunes cells by vector geometry, but eligibility
-                  // can be uncorrelated with geometry — a selective predicate
-                  // whose survivors live outside the probed cells would
-                  // return under-k/zero hits the pre-eligibility fallback
-                  // (full live rebuild) never missed. Full fan-out over the
-                  // persisted layout is a recall superset at in-beam cost.
-                  GraphAnn.searchFromLayout(spark, lp, qDf, kEff,
-                    cfg.spaceType, ef = efEff,
-                    cacheKey = Some((lp, epoch)),
-                    routeNprobe = if (eligible.isDefined) None else routeP,
-                    excludeIds = exIds, eligibleIds = eligIds)
-              }
-              // streaming-insert delta: rows ingested since buildIndex live
-              // as (id, vector, version) under `_delta` — exact-scan them
-              // (exact ≥ graph recall for those rows), tombstone-filtered,
-              // and merge top-k. The delta is micro-batch-sized by
-              // construction and cached per (path, stamp) so steady serving
-              // never re-reads it; buildIndex folds it back into the
-              // adjacency.
-              cachedDeltaVectors(s"$lp/_delta", stamp, lp) match {
-                case Some(delta) =>
-                  // delta rows are filtered by eligibility BEFORE the exact
-                  // scan — post-rank filtering could drop eligible rows that
-                  // ranked below ineligible ones inside the delta's own top-k
-                  val deltaHits = ExactKnn.knn(restrict(delta), qDf, k, cfg.spaceType)
-                  graft.functions.vfn.topKHits(
-                    graphHits.select(col("query_id"), col("id"), col("distance"))
-                      .union(deltaHits.select(col("query_id"), col("id"), col("distance"))),
-                    col("distance"), "query_id", "id", k)
-                case None =>
-                  if (kEff == k) graphHits else graft.functions.vfn.topKHits(
-                    graphHits.select(col("query_id"), col("id"), col("distance")),
-                    col("distance"), "query_id", "id", k)
-              }
+                  excludeIds = exIds)
+              case _ =>
+                // filtered requests run FULL fan-out (routeNprobe dropped):
+                // routing prunes cells by vector geometry, but eligibility
+                // can be uncorrelated with geometry — a selective predicate
+                // whose survivors live outside the probed cells would
+                // return under-k/zero hits the pre-eligibility fallback
+                // (full live rebuild) never missed. Full fan-out over the
+                // persisted layout is a recall superset at in-beam cost.
+                GraphAnn.searchFromLayout(spark, lp, qDf, kEff,
+                  cfg.spaceType, ef = efEff,
+                  cacheKey = Some((lp, epoch)),
+                  routeNprobe = if (eligible.isDefined) None else routeP,
+                  excludeIds = exIds, eligibleIds = eligIds)
+            }
+            // streaming-insert delta: rows ingested since buildIndex live
+            // as (id, vector, version) under `_delta` — exact-scan them
+            // (exact ≥ graph recall for those rows), tombstone-filtered,
+            // and merge top-k. The delta is micro-batch-sized by
+            // construction and cached per (path, stamp) so steady serving
+            // never re-reads it; buildIndex folds it back into the
+            // adjacency.
+            cachedDeltaVectors(s"$lp/_delta", stamp, lp) match {
+              case Some(delta) =>
+                // delta rows are filtered by eligibility BEFORE the exact
+                // scan — post-rank filtering could drop eligible rows that
+                // ranked below ineligible ones inside the delta's own top-k
+                val deltaHits = ExactKnn.knn(restrict(delta), qDf, k, cfg.spaceType)
+                graft.functions.vfn.topKHits(
+                  graphHits.select(col("query_id"), col("id"), col("distance"))
+                    .union(deltaHits.select(col("query_id"), col("id"), col("distance"))),
+                  col("distance"), "query_id", "id", k)
+              case None =>
+                if (kEff == k) graphHits else graft.functions.vfn.topKHits(
+                  graphHits.select(col("query_id"), col("id"), col("distance")),
+                  col("distance"), "query_id", "id", k)
             }
           case _ => liveGraphSearch()
         }
       case Tier.Flat =>
         ExactKnn.knn(corpusEff, qDf, k, cfg.spaceType)
+    }
+  }
+
+  /** One query's hits: the driver rows, or — declined — the collected
+    * distributed plan, in rank order.
+    */
+  private def pointHits(cfg: CollectionConfig, coll: String, query: Array[Float],
+      k: Int, eligible: Option[Column]): Seq[SearchHit] = {
+    val queries = Seq(("q", query))
+    hitsOn(cfg, coll, queries, k, eligible) match {
+      case Right(hits) => hits
+      case Left(_) => collectHits(searchOn(cfg, coll, queries, k, eligible))
+    }
+  }
+
+  private def collectHits(df: DataFrame): Seq[SearchHit] =
+    df.select(col("query_id"), col("id"), col("distance"), col("rnk"))
+      .collect()
+      .map(r => SearchHit(r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3)))
+      .sortBy(_.rank).toSeq
+
+  /** One unfiltered query through the result cache — what the REST
+    * `vectors/search` and `documents/search` routes answer (the reference
+    * LRU-caches both, `handlers.go:36-74`). Keyed on (collection, store
+    * version, params epoch, query bits, k): any write, setParams or index
+    * build misses. The DataFrame `searchVectors` stays uncached.
+    */
+  private[graft] def searchCached(coll: String, query: Array[Float], k: Int): Seq[SearchHit] = {
+    val cfg = configOf(coll)
+    val key = cache.key(coll, store.currentVersion(coll), paramsEpoch.get(), query, k)
+    cache.get(key) match {
+      case Some(hits) =>
+        cacheHits.incrementAndGet()
+        hits
+      case None =>
+        cacheMisses.incrementAndGet()
+        val hits = pointHits(cfg, coll, query, k, None)
+        cache.put(key, hits)
+        hits
     }
   }
 
@@ -1829,46 +1887,28 @@ class Engine(
     */
   def searchDocuments(coll: String, query: Array[Float], k: Int,
       filter: Option[Column] = None, preFilter: Boolean = true): Seq[SearchHit] = {
-    val cfg = configOf(coll)
-    require(query.length == cfg.dimension,
-      s"query dimension ${query.length} != collection dimension ${cfg.dimension}")
-    val cacheKey = filter match {
-      case None => Some(cache.key(coll, store.currentVersion(coll), paramsEpoch.get(), query, k))
-      case _ => None
-    }
-    cacheKey.flatMap(cache.get).foreach(cached => return cached)
-    // lazy: the unfiltered path hands this to searchOn by name — a
-    // layout-served request never pays the store's schema inference
-    lazy val corpus = store.read(coll)
-    val hits = filter match {
+    val out = filter match {
+      case None => searchCached(coll, query, k)
       case Some(pred) if preFilter =>
         // the predicate travels SEPARATELY from the corpus so every tier
         // keeps its layout serving (semi-join / in-beam eligibility);
         // pre-eligibility this passed corpus.filter(pred) and every tier
         // re-encoded or rebuilt over the filtered corpus per request
-        searchOn(corpus, cfg, coll, Seq(("q", query)), k,
-          corpusIsFull = true, eligible = Some(pred))
+        pointHits(configOf(coll), coll, query, k, Some(pred))
       case Some(pred) =>
         // re-rank after the filter join so ranks are contiguous 1..k (the
         // pre-filter path and the reference's positional results), not the
         // surviving subset of the 2k-wide ranks (e.g. 2,5,9)
-        val wide = searchOn(corpus, cfg, coll, Seq(("q", query)), 2 * k, corpusIsFull = true)
+        val wide = vectorsFrame(configOf(coll), coll, Seq(("q", query)), 2 * k)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("query_id")).orderBy(col("rnk"))
-        wide.join(corpus.filter(pred).select(col("id")), "id")
+        collectHits(wide.join(store.read(coll).filter(pred).select(col("id")), "id")
           .withColumn("rnk", row_number().over(w).cast("long"))
-          .orderBy(col("rnk")).limit(k)
-      case None =>
-        searchOn(corpus, cfg, coll, Seq(("q", query)), k, corpusIsFull = true)
+          .orderBy(col("rnk")).limit(k))
     }
-    val out = hits.select(col("query_id"), col("id"), col("distance"), col("rnk"))
-      .collect()
-      .map(r => SearchHit(r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3)))
-      .sortBy(_.rank)
     if (out.isEmpty)
       throw new NoSuchElementException("no satisfied results found") // document.go:222-225
-    cacheKey.foreach(cache.put(_, out.toSeq))
-    out.toSeq
+    out
   }
 
   // ---- multi-vector (late-interaction / ColBERT MaxSim) collections ----
@@ -1995,7 +2035,18 @@ class Engine(
     * hamming optimizes an unrelated neighborhood and is rejected.
     */
   def searchMaxSim(coll: String,
-      queries: Seq[(String, Seq[Array[Float]])], k: Int): DataFrame = {
+      queries: Seq[(String, Seq[Array[Float]])], k: Int): DataFrame =
+    maxSimLocal(coll, queries, k) match {
+      case Some(rows) => spark.createDataFrame(java.util.Arrays.asList(
+        rows.map(r => Row(r._1, r._2, r._3)): _*), Engine.MaxSimSchema)
+      case None => searchMaxSimDistributed(coll, queries, k)
+    }
+
+  /** The zero-job MaxSim serve over the whole request, or None when any
+    * chunk misses a precondition (the distributed plan then serves it).
+    */
+  private def maxSimLocal(coll: String,
+      queries: Seq[(String, Seq[Array[Float]])], k: Int): Option[Seq[(String, String, Long)]] = {
     val cfg = validateMaxSimQueries(coll, queries)
     require(cfg.spaceType != SpaceType.Hamming,
       "maxsim scores by inner product; a hamming-space shortlist optimizes " +
@@ -2008,11 +2059,20 @@ class Engine(
     // bounded total.
     val localServable = queries.size <= maxLocalServeBatch &&
       queries.map(_._1).distinct.size == queries.size
-    val local =
-      if (!localServable) None
-      else serveChunked(queries)(chunk => searchMaxSimLocal(coll, cfg, chunk, k))
-    local.getOrElse(searchMaxSimDistributed(coll, queries, k))
+    if (!localServable) None
+    else serveChunked(queries)(chunk => searchMaxSimLocal(coll, cfg, chunk, k).toRight(()))
+      .toOption
   }
+
+  /** `searchMaxSim` as driver rows (qid, doc_id, rnk) — the
+    * multivectors/search answer; only a declined request plans (and
+    * collects) the distributed MaxSim.
+    */
+  private[graft] def searchMaxSimRows(coll: String,
+      queries: Seq[(String, Seq[Array[Float]])], k: Int): Seq[(String, String, Long)] =
+    maxSimLocal(coll, queries, k).getOrElse(
+      searchMaxSimDistributed(coll, queries, k).collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))))
 
   /** Driver-resident candidate token-vector cache for the zero-job MaxSim
     * serve — the ColBERT doc-embedding cache with the engine's standard
@@ -2070,9 +2130,10 @@ class Engine(
 
   /** ZERO-JOB MaxSim point serving: for small query sets on an ivf_flat
     * multivector collection with a current layout, the whole request runs
-    * on the driver — per-token shortlists from `LocalIvfServe` (same cells,
-    * same kernels, same ranks as `IvfIndex.searchDistributed`), candidate
-    * docs' token vectors through the zero-job `getMany` point reads, and
+    * on the driver and answers (qid, doc_id, rnk) rows — per-token
+    * shortlists from `LocalIvfServe` (same cells, same kernels, same ranks
+    * as `IvfIndex.searchDistributed`), candidate docs' token vectors
+    * through the zero-job `getMany` point reads, and
     * the exact MaxSim score as the SAME fixed-order add chain over
     * per-token maxes the distributed `rankTail` builds (sim through the
     * identical `VecKernels.negDot` accumulation, missing tokens +0.0 in
@@ -2083,9 +2144,7 @@ class Engine(
     * distributed plan serves — never a silent semantic fork.
     */
   private[graft] def searchMaxSimLocal(coll: String, cfg: CollectionConfig,
-      queries: Seq[(String, Seq[Array[Float]])], k: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+      queries: Seq[(String, Seq[Array[Float]])], k: Int): Option[Seq[(String, String, Long)]] = {
     if (cfg.indexType != IndexType.IvfFlat) return None
     if (queries.size > 16) return None
     // duplicate qids conflate in the distributed groupBy into ONE row set;
@@ -2100,8 +2159,8 @@ class Engine(
     val index = builtIndex(coll, cfg, Tier.IvfFlat).getOrElse(return None)
     val m = getParams(coll).getOrElse("maxsimCandM", 16)
     val nprobe = index.nprobe(getParams(coll))
-    val short = graft.operators.LocalIvfServe.searchPointLocalRowsNtok(spark,
-      lp, stamp, index.coarse, tokQs, m, nprobe, maxQueries = 256)
+    val short = graft.operators.LocalIvfServe.searchPointLocalRowsNtok(
+      lp, stamp, index.coarse, tokQs, m, nprobe, maxQueries = 256).toOption
     if (short.isEmpty) return None
     def before(s: String): String = {
       val i = s.indexOf(MultiVectorSep)
@@ -2148,7 +2207,7 @@ class Engine(
     if (readVecs.nonEmpty) docCachePut(coll, stamp, readVecs)
     val docVecs: Map[String, Array[Array[Float]]] = cached ++ readVecs
     val nTokens = queries.map(_._2.size).max
-    val out = new scala.collection.mutable.ArrayBuffer[Row]()
+    val out = Seq.newBuilder[(String, String, Long)]
     for ((qid, toks) <- queries) {
       val scored = pairs.getOrElse(qid, Nil).flatMap { d =>
         // a doc deleted between shortlist and fetch has no token rows and
@@ -2175,14 +2234,10 @@ class Engine(
       val ranked = scored.sortWith((a, b) =>
         a._2 > b._2 || (a._2 == b._2 && graft.operators.GraphAnn.idLt(a._1, b._1))).take(k)
       ranked.zipWithIndex.foreach { case ((d, _), r) =>
-        out += Row(qid, d, (r + 1).toLong)
+        out += ((qid, d, (r + 1).toLong))
       }
     }
-    val schema = StructType(Seq(
-      StructField("qid", StringType),
-      StructField("doc_id", StringType),
-      StructField("rnk", LongType)))
-    Some(spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), schema))
+    Some(out.result())
   }
 
   /** The distributed MaxSim plan (the batch/KNN-join shape; also the
@@ -2235,6 +2290,20 @@ class Engine(
 }
 
 object Engine {
+  import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+
+  /** The point-search result schema: one row per hit. */
+  private[api] val HitSchema = StructType(Seq(
+    StructField("query_id", StringType),
+    StructField("id", StringType),
+    StructField("distance", DoubleType),
+    StructField("rnk", LongType)))
+
+  /** The MaxSim result schema: one row per ranked document. */
+  private[api] val MaxSimSchema = StructType(Seq(
+    StructField("qid", StringType),
+    StructField("doc_id", StringType),
+    StructField("rnk", LongType)))
 
   /** A search on a code tier whose index was never built: the caller's
     * request is premature (the REST layer answers 400), unlike an

@@ -86,13 +86,15 @@ class Server(engine: Engine, port: Int = 0) {
         // beyond the reference's table: serving observability — the
         // driver-local cell cache's residency/hit-rate counters plus the
         // point reader's bloom ledger (run opens vs bloom-pruned skips,
-        // bloom residency vs budget)
+        // bloom residency vs budget), and the engine's local-serve outcomes
+        // (served, declined per reason) and result-cache hits/misses
         case ("GET", List("v1", "metrics")) =>
           reply(ex, 200, Obj((graft.operators.GraphAnn.localServeMetrics ++
             graft.operators.LocalIvfServe.metrics ++
             graft.operators.LocalPqServe.metrics ++
             graft.core.LocalPointReader.metrics ++
-            engine.maxSimDocCacheMetrics)
+            engine.maxSimDocCacheMetrics ++
+            engine.searchMetrics)
             .map { case (k, v) => k -> (Num(v.toDouble): Value) }))
         case _ => reply(ex, 404, err("route not found"))
       }
@@ -251,16 +253,12 @@ class Server(engine: Engine, port: Int = 0) {
     val o = body(ex).asObj
     val vec = vectorOf(req(o, "vector"))
     val limit = o.get("limit").orElse(o.get("top_k")).map(_.asInt).getOrElse(10)
-    // rank-sort DRIVER-side: .orderBy over the serving path's local result
-    // relation would plan a Sort node Catalyst can't collapse, turning the
-    // zero-job point-serve response into one Spark job per request
-    val hits = engine.searchVectors(name, Seq(("q", vec)), limit)
-      .collect()
-      .sortBy(r => r.getLong(r.fieldIndex("rnk")))
-      .map(r => (r.getString(r.fieldIndex("id")), r.getDouble(r.fieldIndex("distance"))))
+    // driver rows in rank order, through the result cache (documents/search
+    // shares it): a local serve plans no DataFrame at all
+    val hits = engine.searchCached(name, vec, limit)
     reply(ex, 200, Obj.of(
-      "ids" -> Arr(hits.toSeq.map(h => Str(h._1))),
-      "distances" -> Arr(hits.toSeq.map(h => Num(h._2)))))
+      "ids" -> Arr(hits.map(h => Str(h.id))),
+      "distances" -> Arr(hits.map(h => Num(h.distance)))))
   }
 
   // ---- multi-vector (MaxSim) documents ----
@@ -293,11 +291,8 @@ class Server(engine: Engine, port: Int = 0) {
     val o = body(ex).asObj
     val vecs = vectorsOf(req(o, "vectors"))
     val limit = o.get("limit").orElse(o.get("top_k")).map(_.asInt).getOrElse(10)
-    // rank-sort driver-side, same reasoning as searchVectors
-    val hits = engine.searchMaxSim(name, Seq(("q", vecs)), limit)
-      .collect()
-      .sortBy(_.getLong(2))
-      .map(r => (r.getString(1), r.getLong(2)))
+    val hits = engine.searchMaxSimRows(name, Seq(("q", vecs)), limit)
+      .sortBy(_._3).map(r => (r._2, r._3))
     if (hits.isEmpty) // document.go:222-225 parity with the search routes
       throw new NoSuchElementException("no satisfied results found")
     reply(ex, 200, Obj.of(

@@ -73,3 +73,34 @@ case class Document(
   * (reference returns parallel arrays, `internal/index/index.go:16-19`).
   */
 case class SearchHit(queryId: String, id: String, distance: Double, rank: Long)
+
+/** Why a point search declined its driver-row serve (the request then
+  * takes the distributed plan). `key` names the reason's `/v1/metrics`
+  * counter, `search_local_declined_<key>`.
+  */
+sealed abstract class Decline(val key: String)
+
+object Decline {
+  /** The layout is missing or older than the store (a write since the build). */
+  case object StaleLayout extends Decline("stale_layout")
+  /** More queries than `spark.graft.maxLocalServeBatch`. */
+  case object OverBatch extends Decline("over_batch")
+  /** A query id repeats: the distributed plans merge its rows into one group. */
+  case object DuplicateQids extends Decline("duplicate_qids")
+  /** The filter's survivor set is over `spark.graft.maxLocalEligibleIds`. */
+  case object EligibleOverBudget extends Decline("eligible_over_budget")
+  /** A probed cell's files cannot fit the driver cell budget. */
+  case object OversizedCell extends Decline("oversized_cell")
+  /** A shortlisted id has no row at the layout's stamp (a racing delete). */
+  case object UnresolvedShortlist extends Decline("unresolved_shortlist")
+  /** The layout's ids are of a type the driver decode does not map. */
+  case object UnsupportedIdType extends Decline("unsupported_id_type")
+  /** The graph layout's tombstone sidecar is over `spark.graft.maxServedTombstones`. */
+  case object TombstonesOverBudget extends Decline("tombstones_over_budget")
+  /** The tier has no driver serve (flat, sq, bq, mrl, unrouted hnsw). */
+  case object NoLocalServe extends Decline("no_local_serve")
+
+  val all: Seq[Decline] = Seq(StaleLayout, OverBatch, DuplicateQids,
+    EligibleOverBudget, OversizedCell, UnresolvedShortlist, UnsupportedIdType,
+    TombstonesOverBudget, NoLocalServe)
+}

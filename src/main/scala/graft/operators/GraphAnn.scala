@@ -566,13 +566,62 @@ object GraphAnn {
       deltaRows: Array[(Any, Array[Float])] = Array.empty,
       excludeIds: Set[Any] = Set.empty,
       eligible: Option[Set[Any]] = None): DataFrame = {
+    val qRows = queries.select(col(queryId), col(queryVec)).collect().toSeq
+      .map(r => (r.get(0), r.getAs[scala.collection.Seq[Float]](1).toArray))
+    val rows = searchPointLocalRows(spark, path, qRows, k, space, ef, routeNprobe,
+      cacheKey, maxQueries, deltaRows, excludeIds, eligible)
+    val schema = StructType(Seq(
+      StructField(queryId, queries.schema(queryId).dataType),
+      StructField(corpusIdName, localIdType(spark, path, cacheKey)),
+      StructField("distance", DoubleType),
+      StructField("rnk", LongType)))
+    spark.createDataFrame(java.util.Arrays.asList(
+      rows.map(r => Row(r._1, r._2, r._3, r._4)): _*), schema)
+  }
+
+  /** The id type of the layout at `path`, memoized per (layout id,
+    * version): from a data file's footer on the driver, not a job — and
+    * counted separately so cell loads and misses stay reconcilable.
+    */
+  private def localIdType(spark: org.apache.spark.sql.SparkSession, path: String,
+      cacheKey: Option[(String, Long)]): DataType = {
+    val (layoutId, version) = cacheKey.getOrElse((path, 0L))
+    localIdTypes.getOrElse((layoutId, version), {
+      localIdTypeRefreshes.incrementAndGet()
+      val t = try localFiles.idType(path) catch {
+        case _: graft.core.LayoutFiles.UnsupportedIdType =>
+          readLayoutGraph(spark, path).schema("id").dataType
+      }
+      localIdTypes.keys.filter(kk => kk._1 == layoutId && kk._2 != version)
+        .foreach(localIdTypes.remove) // superseded epochs must not pile up
+      localIdTypes.putIfAbsent((layoutId, version), t)
+      t
+    })
+  }
+
+  /** Driver-rows core of `searchPointLocal`: (qid, id, distance, rnk)
+    * tuples, k per query in (distance, id) order, with no DataFrame built
+    * on the way in or out — the engine's point searches answer from these.
+    */
+  def searchPointLocalRows(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      queries: Seq[(Any, Array[Float])],
+      k: Int,
+      space: SpaceType,
+      ef: Int = 40,
+      routeNprobe: Int = 4,
+      cacheKey: Option[(String, Long)] = None,
+      maxQueries: Int = 64,
+      deltaRows: Array[(Any, Array[Float])] = Array.empty,
+      excludeIds: Set[Any] = Set.empty,
+      eligible: Option[Set[Any]] = None): Seq[(Any, Any, Double, Long)] = {
     require(routeNprobe >= 1, s"routeNprobe must be >= 1, got $routeNprobe")
     val (layoutId, version) = cacheKey.getOrElse((path, 0L))
     val cents = loadRouteCentroids(path, cacheKey)
     val effNprobe = math.min(routeNprobe, cents.length)
     val mdl = IvfIndex.Model(cents, space)
-    val qRows = queries.select(col(queryId), col(queryVec)).collect()
-      .map(r => (r.get(0), r.getAs[scala.collection.Seq[Float]](1).toArray))
+    val qRows = queries.toArray
     require(qRows.length <= maxQueries,
       s"searchPointLocal is the driver-serve path (${qRows.length} queries > " +
         s"$maxQueries); use searchRoutedPruned/searchFromLayout for batches")
@@ -604,19 +653,6 @@ object GraphAnn {
     // (≤ queries × k rows back, same reconstruction + beam, executor
     // GraphCache amortizes the rebuild).
     lazy val graphAll = readLayoutGraph(spark, path)
-    var idTypeOpt = localIdTypes.get((layoutId, version))
-    if (idTypeOpt.isEmpty) {
-      // the id type comes from a data file's footer on the driver, not a
-      // job — and it is counted separately so loads/misses stay
-      // reconcilable
-      localIdTypeRefreshes.incrementAndGet()
-      idTypeOpt = Some(try localFiles.idType(path) catch {
-        case _: graft.core.LayoutFiles.UnsupportedIdType => graphAll.schema("id").dataType
-      })
-      localIdTypes.keys.filter(kk => kk._1 == layoutId && kk._2 != version)
-        .foreach(localIdTypes.remove) // superseded epochs must not pile up
-      localIdTypes.putIfAbsent((layoutId, version), idTypeOpt.get)
-    }
     val (held, oversized) = LocalCellResolve.resolveSplit[NswIndex](
       localCellCache, localFiles, layoutId, version, path, "part",
       needed, maxLocalServeBytes, CellCols, parts => {
@@ -687,9 +723,8 @@ object GraphAnn {
         // broadcast pair each time until ContextCleaner catches up
         } finally { bcQ.destroy(); bcRoute.destroy() }
     }
-    val idType = idTypeOpt.get
     val idOrd: (Any, Any) => Boolean = idLt
-    val out = new scala.collection.mutable.ArrayBuffer[Row]()
+    val out = Seq.newBuilder[(Any, Any, Double, Long)]
     var qi = 0
     while (qi < qRows.length) {
       val (qid, qv) = qRows(qi)
@@ -727,17 +762,12 @@ object GraphAnn {
         .take(k)
       var r = 0
       while (r < ranked.length) {
-        out += Row(qid, ranked(r)._1, ranked(r)._2, (r + 1).toLong)
+        out += ((qid, ranked(r)._1, ranked(r)._2, (r + 1).toLong))
         r += 1
       }
       qi += 1
     }
-    val schema = StructType(Seq(
-      StructField(queryId, queries.schema(queryId).dataType),
-      StructField(corpusIdName, idType),
-      StructField("distance", DoubleType),
-      StructField("rnk", LongType)))
-    spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), schema)
+    out.result()
   }
 
   /** A layout's graph table in canonical column order, with the links

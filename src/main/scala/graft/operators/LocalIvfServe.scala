@@ -1,9 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
-
-import graft.core.{LayoutFile, LayoutFiles, SpaceType}
+import graft.core.{Decline, LayoutFile, LayoutFiles}
 import graft.kernels.VecKernels
 
 /** Shared plumbing of the zero-job cell-serving tiers: resolve a request's
@@ -70,27 +67,28 @@ private[graft] object LocalCellResolve {
 
   /** The probed cells of the layout at `path` as of `stamp`: its
     * `cluster_id=N` dirs, rows with `version ≤ stamp` less those its
-    * `_tombstones` sidecar shadows at that stamp. None = a probed cell's
+    * `_tombstones` sidecar shadows at that stamp. Left = a probed cell's
     * disk footprint exceeds the whole byte budget, or its ids are of a type
     * the driver decode does not map — the caller declines the REQUEST to
     * the distributed plan (nothing is decoded on the decline path).
     */
   def resolve[C](cache: LocalCellCache[C], files: LayoutFiles, path: String,
       stamp: Long, needed: Seq[Int], maxBytes: Long, columns: Seq[String],
-      build: Seq[(LayoutFile, Array[Int])] => C): Option[collection.Map[Int, Option[C]]] = {
+      build: Seq[(LayoutFile, Array[Int])] => C)
+      : Either[Decline, collection.Map[Int, Option[C]]] = {
     val (held, missing) = probe(cache, path, stamp, needed)
     if (missing.nonEmpty) {
       val (oversized, loadable) = listCells(path, "cluster_id", missing, maxBytes)
       if (oversized.nonEmpty) {
-        cache.oversizedDeclines.incrementAndGet(); return None
+        cache.oversizedDeclines.incrementAndGet(); return Left(Decline.OversizedCell)
       }
       try {
         val tombs = files.tombstones(s"$path/_tombstones", stamp)
         load(cache, files, path, stamp, loadable, columns,
           Some((stamp, tombs)), build, held)
-      } catch { case _: LayoutFiles.UnsupportedIdType => return None }
+      } catch { case _: LayoutFiles.UnsupportedIdType => return Left(Decline.UnsupportedIdType) }
     }
-    Some(held)
+    Right(held)
   }
 
   /** The graph tier's PER-CELL variant: loadable misses are built and
@@ -147,7 +145,7 @@ private[graft] object LocalCellResolve {
   * (dim-aware) and entry count with insertion-order eviction, and the
   * decoded-file memo under the same byte budget; a cell whose parquet
   * footprint says it cannot fit the whole budget is never decoded — the
-  * request declines (returns None) and the caller serves it through the
+  * request declines (returns Left) and the caller serves it through the
   * distributed partition-pruned plan instead. In-flight requests hold
   * direct references, so concurrent eviction is a reload cost, never a
   * correctness event.
@@ -208,43 +206,14 @@ object LocalIvfServe {
   /** Serve `queries` (driver pairs of (qid, vector)) from driver-cached
     * cells of the layout at `path` as of `stamp` — cold cells are decoded
     * from the layout's files, warm ones are held; neither launches a job.
-    * `eligible` mirrors the distributed semi-join restriction (probe lists
-    * stay geometry-pruned, rows filter by id — the ivf tier's filtered
-    * semantics, unlike the graph tier's full fan-out). Returns None —
-    * caller falls back to the distributed plan — when a probed cell's disk
-    * footprint says it cannot fit the byte budget.
-    */
-  def searchPointLocal(
-      spark: SparkSession,
-      path: String,
-      stamp: Long,
-      model: IvfIndex.Model,
-      queries: Seq[(Any, Array[Float])],
-      k: Int,
-      nprobe: Int,
-      qidType: DataType,
-      eligible: Option[Set[Any]] = None,
-      maxQueries: Int = 64): Option[DataFrame] = {
-    val rows = searchPointLocalRows(spark, path, stamp, model, queries, k,
-      nprobe, eligible, maxQueries).getOrElse(return None)
-    val idType = try files.idType(path)
-      catch { case _: LayoutFiles.UnsupportedIdType => return None }
-    val schema = StructType(Seq(
-      StructField("query_id", qidType),
-      StructField("id", idType),
-      StructField("distance", DoubleType),
-      StructField("rnk", LongType)))
-    Some(spark.createDataFrame(java.util.Arrays.asList(
-      rows.map(r => Row(r._1, r._2, r._3, r._4)): _*), schema))
-  }
-
-  /** Driver-rows twin of `searchPointLocal` — (qid, id, distance, rnk)
-    * tuples with no DataFrame wrapper, for driver-side consumers (the local
-    * MaxSim serve composes per-token shortlists from it without ever
-    * constructing a plan).
+    * Returns (qid, id, distance, rnk) driver rows. `eligible` mirrors the
+    * distributed semi-join restriction (probe lists stay geometry-pruned,
+    * rows filter by id — the ivf tier's filtered semantics, unlike the
+    * graph tier's full fan-out). Left — the caller falls back to the
+    * distributed plan — when a probed cell's disk footprint says it cannot
+    * fit the byte budget, or its ids are of an unmapped type.
     */
   def searchPointLocalRows(
-      spark: SparkSession,
       path: String,
       stamp: Long,
       model: IvfIndex.Model,
@@ -252,8 +221,8 @@ object LocalIvfServe {
       k: Int,
       nprobe: Int,
       eligible: Option[Set[Any]] = None,
-      maxQueries: Int = 64): Option[Seq[(Any, Any, Double, Long)]] =
-    searchPointLocalRowsNtok(spark, path, stamp, model, queries,
+      maxQueries: Int = 64): Either[Decline, Seq[(Any, Any, Double, Long)]] =
+    searchPointLocalRowsNtok(path, stamp, model, queries,
       k, nprobe, eligible, maxQueries)
       .map(_.map(t => (t._1, t._2, t._3, t._4)))
 
@@ -261,7 +230,6 @@ object LocalIvfServe {
     * absent) — the multivector serve's token-count channel.
     */
   def searchPointLocalRowsNtok(
-      spark: SparkSession,
       path: String,
       stamp: Long,
       model: IvfIndex.Model,
@@ -269,20 +237,21 @@ object LocalIvfServe {
       k: Int,
       nprobe: Int,
       eligible: Option[Set[Any]] = None,
-      maxQueries: Int = 64): Option[Seq[(Any, Any, Double, Long, Int)]] = {
+      maxQueries: Int = 64): Either[Decline, Seq[(Any, Any, Double, Long, Int)]] = {
     require(k > 0, s"k must be positive, got $k")
     require(queries.length <= maxQueries,
-      s"searchPointLocal is the driver-serve path (${queries.length} queries > " +
+      s"searchPointLocalRows is the driver-serve path (${queries.length} queries > " +
         s"$maxQueries); use IvfIndex.search/searchDistributed for batches")
     // validation lives in Model.probe (same require as every distributed
     // path — the two must reject identical inputs identically)
     val probed: Array[Seq[Int]] =
       queries.toArray.map(q => model.probe(q._2, nprobe))
     val needed = probed.flatten.distinct.sorted
-    val heldOpt = LocalCellResolve.resolve[Cell](cache, files, path, stamp,
-      needed, maxLocalIvfBytes, CellCols, cellOf)
-    if (heldOpt.isEmpty) return None
-    val held = heldOpt.get
+    val held = LocalCellResolve.resolve[Cell](cache, files, path, stamp,
+      needed, maxLocalIvfBytes, CellCols, cellOf) match {
+      case Right(h) => h
+      case Left(d) => return Left(d)
+    }
     val out = Seq.newBuilder[(Any, Any, Double, Long, Int)]
     var qi = 0
     while (qi < queries.length) {
@@ -312,7 +281,7 @@ object LocalIvfServe {
       }
       qi += 1
     }
-    Some(out.result())
+    Right(out.result())
   }
 }
 
@@ -370,11 +339,10 @@ object LocalPqServe {
   /** The ADC SHORTLIST — (qid, id, adcDistance, rnk) rows, `shortlistK` per
     * query — from driver-cached code cells. The exact re-rank (and with it
     * the final result) is the caller's: it owns the point-read path to the
-    * true vectors. None = fall back to the distributed plan (oversized
-    * probed cell).
+    * true vectors. Left = fall back to the distributed plan (oversized
+    * probed cell, unmapped id type).
     */
   def adcShortlistLocalRows(
-      spark: SparkSession,
       path: String,
       stamp: Long,
       model: IvfPq.Model,
@@ -382,7 +350,7 @@ object LocalPqServe {
       shortlistK: Int,
       nprobe: Int,
       eligible: Option[Set[Any]] = None,
-      maxQueries: Int = 64): Option[Seq[(Any, Any, Double, Long)]] = {
+      maxQueries: Int = 64): Either[Decline, Seq[(Any, Any, Double, Long)]] = {
     require(shortlistK > 0, s"shortlistK must be positive, got $shortlistK")
     require(queries.length <= maxQueries,
       s"adcShortlistLocalRows is the driver-serve path (${queries.length} " +
@@ -394,10 +362,11 @@ object LocalPqServe {
     val probed: Array[Seq[Int]] =
       qvs.map(q => model.coarse.probe(q._2, nprobe))
     val needed = probed.flatten.distinct.sorted
-    val heldOpt = LocalCellResolve.resolve[Cell](cache, files, path, stamp,
-      needed, maxLocalPqBytes, CellCols, cellOf)
-    if (heldOpt.isEmpty) return None
-    val held = heldOpt.get
+    val held = LocalCellResolve.resolve[Cell](cache, files, path, stamp,
+      needed, maxLocalPqBytes, CellCols, cellOf) match {
+      case Right(h) => h
+      case Left(d) => return Left(d)
+    }
     val out = Seq.newBuilder[(Any, Any, Double, Long)]
     var qi = 0
     while (qi < qvs.length) {
@@ -433,6 +402,6 @@ object LocalPqServe {
       }
       qi += 1
     }
-    Some(out.result())
+    Right(out.result())
   }
 }

@@ -71,10 +71,17 @@ class DistanceSpec extends SparkSpec {
     import spark.implicits._
     vfn.register(spark)
     val pairs = samples(vecGen, 20)
-    val df = pairs.map { case (v, _) => (v, v.map(_ + 1f)) }.toDF("a", "b")
-    val rows = df.select(expr("l2_sq(a,b)"), expr("l2_sq(b,a)"), expr("l2_sq(a,a)")).collect()
-    rows.foreach { case Row(ab: Double, ba: Double, aa: Double) =>
-      assert(ab === ba && ab >= 0.0 && aa === 0.0)
-    }
+    // cached, like `eval`: a local relation would fold to interpreted eval
+    val df = pairs.map { case (v, _) => (v, v.map(_ + 1f)) }.toDF("a", "b").cache()
+    try {
+      val (cg, interp) = codegenAndInterpreted(
+        df.select(expr("l2_sq(a,b)"), expr("l2_sq(b,a)"), expr("l2_sq(a,a)")).collect())
+      for (rows <- Seq(cg, interp)) {
+        assert(rows.length === pairs.size)
+        rows.foreach { case Row(ab: Double, ba: Double, aa: Double) =>
+          assert(ab === ba && ab >= 0.0 && aa === 0.0)
+        }
+      }
+    } finally df.unpersist()
   }
 }

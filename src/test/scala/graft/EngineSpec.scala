@@ -689,4 +689,50 @@ class EngineSpec extends SparkSpec {
         s"warm 200-query auto-split batch launched ${jobs.get()} Spark job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("a rebuild invalidates cached documents/search results") {
+    // two well-separated clusters: one cell holds both, two cells split
+    // them, and with nprobe 1 the rebuilt index answers from cluster A only
+    val e = freshEngine(2)
+    e.createCollection(CollectionConfig("c", 2, IndexType.IvfFlat, SpaceType.L2))
+    val docs = (0 until 8).map(i => Document(s"a$i", Array(i * 0.1f, 0f))) ++
+      (0 until 8).map(i => Document(s"b$i", Array(100f + i * 0.1f, 0f)))
+    e.batchUpsertDocuments("c", docs)
+    e.buildIndex("c", nlist = 1)
+    e.setParams("c", Map("nprobe" -> 1))
+    val q = Array(0.05f, 0f)
+    val before = e.searchDocuments("c", q, 10)
+    assert(before.count(_.id.startsWith("b")) === 2, s"one cell holds both clusters: $before")
+    e.buildIndex("c", nlist = 2)
+    val after = e.searchDocuments("c", q, 10)
+    val uncached = e.searchVectors("c", Seq(("q", q)), 10).collect()
+      .map(r => (r.getString(1), r.getDouble(2), r.getLong(3))).sortBy(_._3).toSeq
+    assert(uncached.forall(_._1.startsWith("a")) && uncached.size === 8,
+      s"the rebuilt index probes cluster A only: $uncached")
+    assert(after.map(h => (h.id, h.distance, h.rank)) === uncached,
+      "a search after the rebuild served the result cached against the old index")
+  }
+
+  test("searchHits: driver rows on a current layout, a named decline otherwise; validates once") {
+    val e = freshEngine(2)
+    e.createCollection(CollectionConfig("c", 2, IndexType.IvfFlat, SpaceType.L2))
+    e.batchUpsertDocuments("c", (0 until 12).map(i => Document(s"d$i", Array(i.toFloat, 1f))))
+    e.createCollection(CollectionConfig("f", 2, IndexType.Flat, SpaceType.L2))
+    e.upsertDocument("f", Document("x", Array(1f, 1f)))
+    e.buildIndex("c", nlist = 3)
+    e.setParams("c", Map("nprobe" -> 3))
+    val q = Seq(("q", Array(4.2f, 1f)))
+    val hits = e.searchHits("c", q, 3).toOption.get
+    assert(hits.map(_.id) === Seq("d4", "d5", "d3") && hits.map(_.rank) === Seq(1L, 2L, 3L))
+    val rows = e.searchVectors("c", q, 3).collect()
+      .map(r => SearchHit(r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3))).toSeq
+    assert(rows === hits)
+    assert(e.searchHits("c", Seq.empty, 3) === Right(Seq.empty))
+    assert(e.searchHits("c", q ++ q, 3) === Left(Decline.DuplicateQids))
+    assert(e.searchHits("f", q, 3) === Left(Decline.NoLocalServe))
+    for ((k, v) <- Seq((0, Array(1f, 1f)), (-1, Array(1f, 1f)),
+        (3, Array(Float.PositiveInfinity, 1f)), (3, Array(1f, Float.NaN)), (3, Array(1f))))
+      for (coll <- Seq("c", "f"))
+        intercept[IllegalArgumentException](e.searchHits(coll, Seq(("q", v)), k))
+  }
 }

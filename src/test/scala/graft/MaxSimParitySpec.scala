@@ -26,8 +26,11 @@ class MaxSimParitySpec extends SparkSpec {
   }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Long)] =
-    df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._3)).toSeq
+    rows(df.collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
+
+  /** The local serve's driver rows, in the same canonical order. */
+  private def rows(local: Seq[(String, String, Long)]): Seq[(String, String, Long)] =
+    local.sortBy(t => (t._1, t._3))
 
   private def parity(e: Engine, queries: Seq[(String, Seq[Array[Float]])],
       k: Int, clue: String): Seq[(String, String, Long)] = {

@@ -6,7 +6,7 @@ import java.nio.file.Files
 
 import graft.api.{Engine, Server}
 import graft.core.Json
-import graft.core.{IndexType, SpaceType}
+import graft.core.{Decline, IndexType, SpaceType}
 
 /** e2e HTTP wire-parity tests over real sockets — the scenarios of the
   * reference's `internal/server/handlers_test.go` (create/dup/get/list/
@@ -15,11 +15,12 @@ import graft.core.{IndexType, SpaceType}
   */
 class ServerSpec extends SparkSpec {
 
-  private lazy val (server, port, root) = {
+  private lazy val (server, port, root, engine) = {
     val root = Files.createTempDirectory("server").toString
-    val s = new Server(new Engine(spark, root))
+    val e = new Engine(spark, root)
+    val s = new Server(e)
     val p = s.start()
-    (s, p, root)
+    (s, p, root, e)
   }
   private val client = HttpClient.newHttpClient()
 
@@ -230,6 +231,28 @@ class ServerSpec extends SparkSpec {
     assert(o5("ivf_local_file_decodes").asDouble > o4("ivf_local_file_decodes").asDouble,
       s"the written run must be decoded: $o5")
     assert(o5("ivf_local_file_bytes").asDouble <= o5("ivf_local_max_bytes").asDouble)
+    // local-serve outcomes: a warm search is served from driver rows; a
+    // duplicate-qid request and a stale layout each decline under their key
+    for (k <- Seq("search_local_served", "result_cache_hits", "result_cache_misses") ++
+        Decline.all.map(d => s"search_local_declined_${d.key}"))
+      assert(o5.contains(k), s"metrics missing $k: $o5")
+    def metric(k: String): Double = req("GET", "/v1/metrics")._2.asObj(k).asDouble
+    val served0 = metric("search_local_served")
+    assert(req("POST", "/v1/collections/metivf/vectors/search",
+      """{"vector":[0.5,0.5],"limit":2}""")._1 === 200)
+    assert(metric("search_local_served") === served0 + 1)
+    val dup0 = metric("search_local_declined_duplicate_qids")
+    engine.searchVectors("metivf",
+      Seq(("a", Array(1f, 1f)), ("a", Array(2f, 2f))), 2).collect()
+    assert(metric("search_local_declined_duplicate_qids") === dup0 + 1)
+    assert(metric("search_local_served") === served0 + 1)
+    // a store write outside the engine leaves the layout behind the store
+    new graft.core.DocStore(spark, root)
+      .upsert("metivf", Seq(graft.core.Document("raw", Array(3f, 3f))), 2)
+    val stale0 = metric("search_local_declined_stale_layout")
+    assert(req("POST", "/v1/collections/metivf/vectors/search",
+      """{"vector":[0.5,0.5],"limit":2}""")._1 === 200)
+    assert(metric("search_local_declined_stale_layout") === stale0 + 1)
   }
 
   test("an oversized request body gets 413 without being read") {
@@ -362,6 +385,100 @@ class ServerSpec extends SparkSpec {
     assert(req("POST", "/v1/collections/nb/buildindex", "{}")._1 === 200)
     for (route <- routes)
       assert(req("POST", route, """{"vector":[1,1],"limit":3}""")._1 === 200, route)
+  }
+
+  test("vectors/search reads and fills the result cache: a repeat hits, a write in between misses") {
+    req("POST", "/v1/collections", """{"name":"rc","dimension":2,"index_type":"ivf_flat"}""")
+    val docs = (0 until 20).map(i => s"""{"id":"r$i","vector":[$i,${i % 4}]}""")
+      .mkString("[", ",", "]")
+    assert(req("POST", "/v1/collections/rc/buildindex", s"""{"documents":$docs}""")._1 === 200)
+    def metric(k: String): Double = req("GET", "/v1/metrics")._2.asObj(k).asDouble
+    val search = """{"vector":[3.2,1.1],"limit":3}"""
+    val (h0, m0) = (metric("result_cache_hits"), metric("result_cache_misses"))
+    val (c1, v1) = req("POST", "/v1/collections/rc/vectors/search", search)
+    assert(c1 === 200)
+    assert(metric("result_cache_misses") === m0 + 1 && metric("result_cache_hits") === h0)
+    val (c2, v2) = req("POST", "/v1/collections/rc/vectors/search", search)
+    assert(c2 === 200 && v2 === v1, "a cache hit must answer the same body")
+    assert(metric("result_cache_hits") === h0 + 1 && metric("result_cache_misses") === m0 + 1)
+    // documents/search with the same vector and limit shares the entry
+    assert(req("POST", "/v1/collections/rc/documents/search", search)._1 === 200)
+    assert(metric("result_cache_hits") === h0 + 2)
+    // a write moves the store version: the next search misses and sees it
+    assert(req("POST", "/v1/collections/rc/documents",
+      """{"id":"new","vector":[3.2,1.1]}""")._1 === 200)
+    val (c3, v3) = req("POST", "/v1/collections/rc/vectors/search", search)
+    assert(c3 === 200 && v3.asObj("ids").asArr.head.asStr === "new", s"stale cached answer: $v3")
+    assert(metric("result_cache_misses") === m0 + 2 && metric("result_cache_hits") === h0 + 2)
+  }
+
+  test("search routes answer 400, never 500, on limit 0, limit -1 and an infinite component") {
+    req("POST", "/v1/collections", """{"name":"edge","dimension":2,"index_type":"ivf_flat"}""")
+    val docs = (0 until 12).map(i => s"""{"id":"e$i","vector":[$i,1]}""").mkString("[", ",", "]")
+    assert(req("POST", "/v1/collections/edge/buildindex", s"""{"documents":$docs}""")._1 === 200)
+    // 1e39 overflows float: the component arrives as +Infinity
+    val bodies = Seq(
+      """{"vector":[1,1],"limit":0}""" -> "k must be",
+      """{"vector":[1,1],"limit":-1}""" -> "k must be",
+      """{"vector":[1e39,1],"limit":3}""" -> "non-finite",
+      """{"vector":[1,-1e39],"limit":3}""" -> "non-finite")
+    for (route <- Seq("vectors/search", "documents/search"); (b, why) <- bodies) {
+      val (code, v) = req("POST", s"/v1/collections/edge/$route", b)
+      assert(code === 400 && v.asObj("error").asStr.contains(why), s"$route $b: $code $v")
+    }
+    assert(req("POST", "/v1/collections/edge/vectors/search",
+      """{"vector":[1,1],"top_k":0}""")._1 === 400)
+    assert(req("POST", "/v1/collections/edge/vectors/search", """{"vector":[1,1],"limit":1}""")._1 === 200)
+  }
+
+  /** A warm vectors/search and documents/search on `coll`, and the first
+    * search after a maintained upsert, each run no Catalyst query
+    * execution and no Spark job. Every measured request is a new vector,
+    * so none is a result-cache hit.
+    */
+  private def assertPlanFree(coll: String, create: String, setParams: String): Unit = {
+    assert(req("POST", "/v1/collections", create)._1 === 200)
+    val rnd = new scala.util.Random(7)
+    val docs = (0 until 60).map(i =>
+      s"""{"id":"p$i","vector":[${rnd.nextInt(50)},${rnd.nextInt(50)},${i % 7},1]}""")
+      .mkString("[", ",", "]")
+    assert(req("POST", s"/v1/collections/$coll/buildindex", s"""{"documents":$docs}""")._1 === 200)
+    assert(req("POST", s"/v1/collections/$coll/documents/setparams", setParams)._1 === 200)
+    def body(i: Int) = s"""{"vector":[${i * 3 % 50},${i * 7 % 50},${i % 7},1],"limit":5}"""
+    // warm every probed cell (full fan-out) and the driver code paths
+    for (route <- Seq("vectors/search", "documents/search"))
+      assert(req("POST", s"/v1/collections/$coll/$route", body(0))._1 === 200)
+    def measure(route: String, i: Int, what: String): Unit = {
+      val (((code, v), jobs), qes) = queryExecutionsDuring(jobsDuring(
+        req("POST", s"/v1/collections/$coll/$route", body(i))))
+      assert(code === 200, s"$coll $what: $code $v")
+      assert(qes === 0, s"$coll $what ran $qes query execution(s)")
+      assert(jobs === 0, s"$coll $what launched $jobs Spark job(s)")
+    }
+    measure("vectors/search", 1, "warm vectors/search")
+    measure("documents/search", 2, "warm documents/search")
+    assert(req("POST", s"/v1/collections/$coll/documents",
+      """{"id":"w","vector":[9,9,3,1]}""")._1 === 200)
+    measure("vectors/search", 3, "first search after a maintained upsert")
+    measure("documents/search", 4, "documents/search after the upsert")
+  }
+
+  test("ivf_flat: warm searches and the first search after an upsert plan nothing") {
+    assertPlanFree("pfivf",
+      """{"name":"pfivf","dimension":4,"index_type":"ivf_flat"}""",
+      """{"parameters":{"nprobe":10}}""")
+  }
+
+  test("ivfpq: warm searches and the first search after an upsert plan nothing") {
+    assertPlanFree("pfpq",
+      """{"name":"pfpq","dimension":4,"index_type":"ivfpq","parameters":{"m":"2"}}""",
+      """{"parameters":{"nprobe":10}}""")
+  }
+
+  test("routed hnsw: warm searches and the first search after an upsert plan nothing") {
+    assertPlanFree("pfhnsw",
+      """{"name":"pfhnsw","dimension":4,"index_type":"hnsw","parameters":{"routeNlist":"4"}}""",
+      """{"parameters":{"routeNprobe":4}}""")
   }
 
   test("buildindex endpoint: accepts reference body AND actually trains (§7.4)") {

@@ -45,6 +45,30 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** `body`'s result and the number of Catalyst query executions (Dataset
+    * actions: collect, count, write, ...) this session finished while it
+    * ran, failed ones included. Drained like `jobsDuring`. A plan that runs
+    * no Spark job — a collect over a local relation — still counts.
+    */
+  def queryExecutionsDuring[T](body: => T): (T, Int) = {
+    val runs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        runs.incrementAndGet()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
+        runs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.Bridge.waitListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.Bridge.waitListenerBus(spark)
+      (out, runs.get())
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** `body` run twice: under whole-stage codegen with generated code only
     * (a compile failure fails instead of falling back to interpreted eval),
     * then interpreted (`NO_CODEGEN`). Callers feed a non-local input (e.g. a
