@@ -354,9 +354,10 @@ class Engine(
   private val eligSetCache = scala.collection.concurrent.TrieMap
     .empty[(String, Long, String), Option[Set[Any]]]
 
+  // knobs read per search with a default: an unset key read through
+  // getOption builds and catches a config-not-found error on every call
   private def maxLocalEligibleIds: Int =
-    spark.conf.getOption("spark.graft.maxLocalEligibleIds")
-      .map(_.toInt).getOrElse(100000)
+    spark.conf.get("spark.graft.maxLocalEligibleIds", "100000").toInt
 
   private def localEligibleSet(coll: String, stamp: Long, pred: Column,
       corpus: => DataFrame): Option[Set[Any]] = {
@@ -381,7 +382,7 @@ class Engine(
     * the live corpus (correct, unpruned) until the next buildIndex folds.
     */
   private def maxServedTombstones: Int =
-    spark.conf.getOption("spark.graft.maxServedTombstones").map(_.toInt).getOrElse(1024)
+    spark.conf.get("spark.graft.maxServedTombstones", "1024").toInt
 
   /** Crash-tolerant marker-file IO (ControlFs-routed): writes go through
     * tmp + atomic rename (a reader never observes a half-written file),
@@ -629,10 +630,11 @@ class Engine(
     val v = store.deleteVersioned(coll, ids, cfg.dimension)
     if (wasCurrent && versionedDelta) {
       // driver-sized deletes write their sidecar run locally (zero jobs)
-      if (ids.size <= LocalRunWriter.MaxLocalRows)
-        LocalRunWriter.writeTombstoneRun(
-          tombstonesPath(layoutOpt.get), ids.distinct, v)
-      else {
+      if (ids.size <= LocalRunWriter.MaxLocalRows) {
+        val distinct = ids.distinct
+        registerTombstoneRun(coll, cfg, LocalRunWriter.writeTombstoneRun(
+          tombstonesPath(layoutOpt.get), distinct, v), distinct, v)
+      } else {
         import spark.implicits._
         ids.distinct.toDF("id").withColumn("ver", lit(v))
           .write.mode("append").parquet(tombstonesPath(layoutOpt.get))
@@ -888,10 +890,13 @@ class Engine(
         // ordering and stamp guards are identical to the Spark branch;
         // hnsw collections have no bucketed table to maintain.
         val docs = driverRows.get
-        LocalRunWriter.writeDeltaRun(appendPath,
-          docs.map(d => (d.id, d.vector.toSeq)), v)
-        if (needTombstones)
-          LocalRunWriter.writeTombstoneRun(tombstonesPath(layoutPath), docs.map(_.id), v)
+        val delta = docs.map(d => (d.id, d.vector.toSeq))
+        GraphAnn.registerDeltaRun(LocalRunWriter.writeDeltaRun(appendPath, delta, v), delta, v)
+        if (needTombstones) {
+          val ids = docs.map(_.id)
+          registerTombstoneRun(coll, cfg,
+            LocalRunWriter.writeTombstoneRun(tombstonesPath(layoutPath), ids, v), ids, v)
+        }
       } else if (localCode.isDefined) {
         // same write ordering as the Spark branch: layout rows first, then
         // the shadows, both before any stamp advance (a crash between them
@@ -903,10 +908,16 @@ class Engine(
           val (cid, extra) = localCode.get.localRow(d.vector)
           LocalRunWriter.LayoutRow(d.id, d.vector.toSeq, d.params, i.toLong, cid, extra)
         }
-        LocalRunWriter.writeLayoutRuns(layoutPath, rows, v)
-        if (needTombstones)
-          LocalRunWriter.writeTombstoneRun(
-            tombstonesPath(layoutPath), localDocs.get.map(_.id), v)
+        // the written runs are held decoded by the driver serve that reads
+        // them, so the next search decodes none of them
+        LocalRunWriter.writeLayoutRuns(layoutPath, rows, v).foreach { case (f, rs) =>
+          cellServe(localCode.get).foreach(_.registerLayoutRun(f, rs, v))
+        }
+        if (needTombstones) {
+          val ids = localDocs.get.map(_.id)
+          registerTombstoneRun(coll, cfg,
+            LocalRunWriter.writeTombstoneRun(tombstonesPath(layoutPath), ids, v), ids, v)
+        }
       } else {
       // mirror upsertDf's stamping so layout rows carry the store schema
       // (insert-only + unique ids ⇒ seq never decides a winner)
@@ -1178,6 +1189,7 @@ class Engine(
       // (stale the stamp; searches fall back until the next buildIndex)
       if (store.currentVersion(coll) != stamp)
         cfs.deleteIfExists(stampPath)
+      else builtIndex(coll, cfg, t).foreach(preloadCells(coll, _, next, stamp))
       true
     } finally cfs.deleteIfExists(compactIntentPath(coll))
   }
@@ -1209,11 +1221,30 @@ class Engine(
         case _ => require(v > 0, s"$k must be positive, got $v")
       }
     }
-    runtime.updateWith(coll)(old => Some(old.getOrElse(Map.empty) ++ params))
+    val merged = runtime.updateWith(coll)(old =>
+      Some(old.getOrElse(storedParams(coll)) ++ params)).get
+    cfs.mkdirs(s"$root/$coll/index")
+    atomicWrite(paramsPath(coll), merged.map { case (k, v) => s"$k=$v" }.mkString("\n"))
     paramsEpoch.incrementAndGet()
   }
 
-  def getParams(coll: String): Map[String, Int] = runtime.getOrElse(coll, Map.empty)
+  /** The collection's runtime params: set through `setParams` by this
+    * engine or, after a reopen, read back from the collection's control
+    * file.
+    */
+  def getParams(coll: String): Map[String, Int] =
+    runtime.getOrElseUpdate(coll, storedParams(coll))
+
+  private def paramsPath(coll: String) = s"$root/$coll/index/runtime_params"
+
+  // a corrupt line reads as absent: the key falls back to its default
+  private def storedParams(coll: String): Map[String, Int] =
+    cfs.readLinesSafe(paramsPath(coll)).getOrElse(Vector.empty).flatMap { line =>
+      line.split('=') match {
+        case Array(k, v) => v.trim.toIntOption.map(k.trim -> _)
+        case _ => None
+      }
+    }.toMap
 
   // ---- index build (POST .../buildindex) ----
 
@@ -1283,20 +1314,18 @@ class Engine(
         // THIS build — any later write stales it exactly like the
         // partitioned layout. Its rows are the layout's, encoded once.
         val bucketed = t.clustered && cfg.params.contains("bucketed_table")
-        // the PQ-coded tiers write their encoded frame CACHED, as they always
-        // have: a cached plan runs without AQE's partition coalescing, so
-        // the layout keeps one file per (task, cluster). The coalesced
-        // layout (fewer, larger files) measured slower on the `serve`
-        // benchmark — wire GETs, writes and searches alike
-        val cached = bucketed || (t.clustered && t != Tier.IvfFlat)
-        if (cached) encoded.cache()
+        // cached only for the bucketed table's second write: an uncached
+        // plan keeps AQE's partition coalescing, so the layout holds about
+        // one file per cell, not one per (task, cell)
+        if (bucketed) encoded.cache()
         try {
           val w = encoded.write.mode("overwrite")
           (if (t.clustered) w.partitionBy("cluster_id") else w).parquet(nextPath(tier))
           flip(tier)
           if (bucketed) writeBucketedLayout(coll, cfg, encoded, stamp, tier)
-        } finally if (cached) encoded.unpersist(blocking = false)
+        } finally if (bucketed) encoded.unpersist(blocking = false)
         stampLayout()
+        preloadCells(coll, index, nextPath(tier), stamp)
       case Tier.Hnsw =>
         // materialize the per-partition HNSW graphs THEMSELVES (adjacency
         // export — the reference persists its hnswlib index the same way):
@@ -1334,9 +1363,40 @@ class Engine(
         flip("hnsw")
         atomicWrite(hnswEpochPath(coll), stamp.toString)
         stampLayout()
+        // the routed layout's cells serve on the driver: load them now
+        if (cfg.params.contains("routeNlist") &&
+            currentLayoutStamp(coll, nextPath("hnsw")).contains(stamp))
+          GraphAnn.preloadLocal(nextPath("hnsw"), stamp, cfg.spaceType)
       case Tier.Flat => () // flat: nothing to train
     }
   }
+
+  /** The zero-job cell serve that reads `index`'s layout, if any. */
+  private def cellServe(index: LayoutEncoder): Option[graft.operators.LocalCellServe] =
+    index match {
+      case c: CellIndex => Some(if (c.pq.isDefined) graft.operators.LocalPqServe
+        else graft.operators.LocalIvfServe)
+      case _ => None
+    }
+
+  /** Hold a `_tombstones` run just written for `coll` decoded, in the
+    * driver serve that reads its layout.
+    */
+  private def registerTombstoneRun(coll: String, cfg: CollectionConfig, f: String,
+      ids: Seq[String], ver: Long): Unit = {
+    val t = Tier(cfg.indexType)
+    if (t == Tier.Hnsw) GraphAnn.registerTombstoneRun(f, ids, ver)
+    else builtIndex(coll, cfg, t).flatMap(cellServe).foreach(_.registerTombstoneRun(f, ids, ver))
+  }
+
+  /** Load the driver serve's cells of the layout generation at `path`,
+    * just stamped current at `stamp`, so the first searches decode nothing.
+    * A write since the stamp leaves the layout stale, and nothing is loaded.
+    */
+  private def preloadCells(coll: String, index: LayoutEncoder, path: String,
+      stamp: Long): Unit =
+    if (currentLayoutStamp(coll, path).contains(stamp))
+      cellServe(index).foreach(_.preload(path, stamp))
 
   // ---- search (POST .../vectors/search, .../documents/search) ----
 
@@ -1534,8 +1594,7 @@ class Engine(
     */
   private val LocalServeChunk = 16
   private def maxLocalServeBatch: Int =
-    spark.conf.getOption("spark.graft.maxLocalServeBatch")
-      .map(_.toInt).getOrElse(1024)
+    spark.conf.get("spark.graft.maxLocalServeBatch", "1024").toInt
 
   /** Serve every chunk and concatenate the rows, SHORT-CIRCUITING on the
     * first decline: once any chunk declines the whole request re-runs
@@ -1678,8 +1737,7 @@ class Engine(
     * materialize the query set driver-side (collect or broadcast).
     */
   private def guardQuerySetSize(queries: DataFrame, cfg: CollectionConfig): Unit = {
-    val maxCollect = spark.conf.getOption("spark.graft.maxCollectQueries")
-      .map(_.toLong).getOrElse(100000L)
+    val maxCollect = spark.conf.get("spark.graft.maxCollectQueries", "100000").toLong
     // a bound at or above Int.MaxValue-1 can't overflow limit(): collect
     // returns a JVM array, so counts beyond Int.MaxValue are moot anyway
     val probe =

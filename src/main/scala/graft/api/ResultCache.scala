@@ -30,11 +30,15 @@ final class ResultCache(capacity: Int = 128) {
     val bb = java.nio.ByteBuffer.allocate(4 * query.length)
     query.foreach(bb.putFloat)
     md.update(bb.array())
-    md.digest().map("%02x".format(_)).mkString
+    ResultCache.Hex.formatHex(md.digest())
   }
 
   def get(k: String): Option[Seq[SearchHit]] = synchronized(Option(map.get(k)))
   def put(k: String, v: Seq[SearchHit]): Unit = synchronized { map.put(k, v); () }
   def size: Int = synchronized(map.size())
   def clear(): Unit = synchronized(map.clear())
+}
+
+object ResultCache {
+  private val Hex = java.util.HexFormat.of()
 }

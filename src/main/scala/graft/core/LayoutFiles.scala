@@ -56,7 +56,9 @@ private[graft] final class LayoutFile(
   * configuration), and decoded column-projected on the driver. Layout files
   * are immutable (maintained writes add files; rebuilds and compactions
   * write a new generation directory), so each decoded file is memoized by
-  * path and a layout re-stamp re-reads only the files it added.
+  * path for as long as it lives, across every stamp of its generation. The
+  * runs the engine writes itself are `register`ed already decoded, from the
+  * rows it just wrote, so a maintained write costs its readers no decode.
   *
   * One instance per serving tier. The memo is bounded by the tier's own
   * byte budget (`maxBytes`, the knob its cell cache uses) with
@@ -64,13 +66,15 @@ private[graft] final class LayoutFile(
   * decoded for its caller but not kept. Cells built from these files share
   * their vector and code arrays, so the payload is held once.
   *
-  * Snapshot rule (`cellRows`, `tombstones`, `deltaRows`): the layout at
-  * stamp `s` is its rows with `version ≤ s`, less every row shadowed by a
+  * Snapshot rule (`cell`, `tombstones`, `deltaRows`): the layout at stamp
+  * `s` is its rows with `version ≤ s`, less every row shadowed by a
   * tombstone with `ver ≤ s` and `ver > row.version` — `applyTombstones`'
   * rule, read at the stamp's snapshot. Rows of a racing write (files landed
   * before its stamp advance) are thus invisible at the older stamp.
-  * Sidecars are re-listed on every call: a `buildIndex`/`compactLayout`
-  * fold removes them without advancing the stamp.
+  * Sidecars are re-listed on every call — a `buildIndex`/`compactLayout`
+  * fold removes them without advancing the stamp — and each dir's
+  * aggregate is extended by the files it has not folded yet, rather than
+  * re-folded, whenever that equals a fold from scratch.
   */
 private[graft] final class LayoutFiles(maxBytes: () => Long) {
 
@@ -78,11 +82,10 @@ private[graft] final class LayoutFiles(maxBytes: () => Long) {
   private val memo = new java.util.LinkedHashMap[(String, Seq[String]), LayoutFile](64, 0.75f, true)
   private var memoBytes = 0L // guarded by `memo`
   private val decodes = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val registered = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  // the last aggregate per sidecar dir, keyed by (stamp, listing): a
-  // repeated call at the same stamp over the same files reuses it
-  private val sidecars = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, Vector[String], AnyRef)]
+  // the last aggregate per sidecar dir
+  private val sidecars = scala.collection.concurrent.TrieMap.empty[String, LayoutFiles.Folded]
   private val idTypes = scala.collection.concurrent.TrieMap.empty[String, DataType]
 
   /** The Spark type of the ids under a layout dir, from one data file's
@@ -92,12 +95,13 @@ private[graft] final class LayoutFiles(maxBytes: () => Long) {
   def idType(dir: String): DataType =
     idTypes.getOrElseUpdate(dir, LayoutFiles.footerIdType(dir))
 
-  /** Driver file decodes since process start, and the bytes of decoded
-    * files held (against the tier's budget), under `prefix`
-    * (GET /v1/metrics shape).
+  /** Driver file decodes and registrations since process start, and the
+    * bytes of decoded files held (against the tier's budget), under
+    * `prefix` (GET /v1/metrics shape).
     */
   def metrics(prefix: String): Map[String, Long] =
     Map(s"${prefix}_file_decodes" -> decodes.get(),
+      s"${prefix}_files_registered" -> registered.get(),
       s"${prefix}_file_bytes" -> memo.synchronized(memoBytes))
 
   /** Drop every memoized file and sidecar aggregate under a path prefix. */
@@ -115,64 +119,91 @@ private[graft] final class LayoutFiles(maxBytes: () => Long) {
 
   def clear(): Unit = drop("")
 
-  /** `f` decoded under `columns`, from the memo or read now. */
-  def file(f: String, columns: Seq[String]): LayoutFile = {
-    val key = (f, columns)
+  /** Hold `d` under (key, columns) if it fits the budget: with `evict`,
+    * least-recently-used files make room; without, a file that does not
+    * fit as the memo stands is not kept.
+    */
+  private def keep(key: (String, Seq[String]), d: LayoutFile, evict: Boolean): Unit = {
+    val bound = maxBytes()
+    if (d.bytes <= bound) memo.synchronized {
+      if (evict || memoBytes + d.bytes <= bound) {
+        val prev = memo.put(key, d)
+        if (prev != null) memoBytes -= prev.bytes
+        memoBytes += d.bytes
+        val it = memo.entrySet.iterator
+        while (memoBytes > bound && it.hasNext) {
+          memoBytes -= it.next().getValue.bytes
+          it.remove()
+        }
+      }
+    }
+  }
+
+  /** `f` decoded under `columns`, from the memo or read now; `evict` = false
+    * keeps a fresh decode only where it fits without evicting.
+    */
+  def file(f: String, columns: Seq[String], evict: Boolean = true): LayoutFile = {
+    val key = (LayoutFiles.fileKey(f), columns)
     val held = memo.synchronized(memo.get(key))
     if (held != null) return held
     val decoded = LayoutFiles.decode(f, columns)
     decodes.incrementAndGet()
-    val bound = maxBytes()
-    if (decoded.bytes <= bound) memo.synchronized {
-      val prev = memo.put(key, decoded)
-      if (prev != null) memoBytes -= prev.bytes
-      memoBytes += decoded.bytes
-      val it = memo.entrySet.iterator
-      while (memoBytes > bound && it.hasNext) {
-        memoBytes -= it.next().getValue.bytes
-        it.remove()
-      }
-    }
+    keep(key, decoded, evict)
     decoded
+  }
+
+  /** Hold `d` as `f` decoded under `columns`: the file was just written
+    * from the rows `d` carries (the `LayoutFiles.of*` builders project them
+    * exactly as `decode` reads the file).
+    */
+  def register(f: String, columns: Seq[String], d: LayoutFile): Unit = {
+    registered.incrementAndGet()
+    keep((LayoutFiles.fileKey(f), columns), d, evict = true)
   }
 
   /** The rows of a cell's data files visible in `snapshot` — (stamp, the
     * tombstone map at that stamp), or None to keep every row (the graph
-    * adjacency, versionless by construction) — as (file, row indices).
+    * adjacency, versionless by construction) — as (file, row indices),
+    * with the distinct row versions above the stamp (rows a later stamp
+    * may show). `evict` as in `file`.
     */
-  def cellRows(files: Seq[String], columns: Seq[String],
-      snapshot: Option[(Long, Map[Any, Long])]): Seq[(LayoutFile, Array[Int])] =
-    files.map { f =>
-      val d = file(f, columns)
+  def cell(files: Seq[String], columns: Seq[String],
+      snapshot: Option[(Long, Map[Any, Long])],
+      evict: Boolean = true): (Seq[(LayoutFile, Array[Int])], Array[Long]) = {
+    val above = scala.collection.mutable.SortedSet.empty[Long]
+    val rows = files.map { f =>
+      val d = file(f, columns, evict)
       val keep = snapshot match {
         case None => Array.range(0, d.rows)
         case Some((stamp, tombs)) =>
           (0 until d.rows).filter { i =>
             // a versionless file predates every tombstone and every stamp
             val v = if (d.versions == null) Long.MinValue else d.versions(i)
+            if (v > stamp) above += v
             v <= stamp && tombs.get(d.ids(i)).forall(_ <= v)
           }.toArray
       }
       (d, keep)
     }.filter(_._2.nonEmpty)
+    (rows, above.toArray)
+  }
 
   /** The `_tombstones` sidecar at `dir` as id → max `ver`, over tombstones
     * with `ver ≤ stamp`. Zero committed files (absent dir, or one holding
     * only a racing append's staging) read as no tombstones.
     */
   def tombstones(dir: String, stamp: Long): Map[Any, Long] =
-    sidecar(dir, stamp, Map.empty[Any, Long]) { files =>
-      val m = scala.collection.mutable.HashMap.empty[Any, Long]
-      files.foreach { f =>
-        val d = file(f, LayoutFiles.TombCols)
+    sidecar(dir, stamp, Map.empty[Any, Long], LayoutFiles.TombCols) { (m0, files) =>
+      var m = m0
+      files.foreach { d =>
         var i = 0
         while (i < d.rows) {
           val v = d.versions(i)
-          if (v <= stamp && m.get(d.ids(i)).forall(_ < v)) m(d.ids(i)) = v
+          if (v <= stamp && m.get(d.ids(i)).forall(_ < v)) m = m.updated(d.ids(i), v)
           i += 1
         }
       }
-      m.toMap
+      m
     }
 
   /** The `_delta` sidecar at `dir` as (id, vector, version) rows with
@@ -181,28 +212,40 @@ private[graft] final class LayoutFiles(maxBytes: () => Long) {
     * so its rows read as version `Long.MaxValue` and are always visible.
     */
   def deltaRows(dir: String, stamp: Long): Array[(Any, Array[Float], Long)] =
-    sidecar(dir, stamp, Array.empty[(Any, Array[Float], Long)]) { files =>
-      files.iterator.flatMap { f =>
-        val d = file(f, LayoutFiles.DeltaCols)
-        (0 until d.rows).iterator.flatMap { i =>
-          if (d.versions == null) Some((d.ids(i), d.vectors(i), Long.MaxValue))
-          else if (d.versions(i) <= stamp) Some((d.ids(i), d.vectors(i), d.versions(i)))
-          else None
+    sidecar(dir, stamp, Array.empty[(Any, Array[Float], Long)], LayoutFiles.DeltaCols) {
+      (rows, files) =>
+        rows ++ files.iterator.flatMap { d =>
+          (0 until d.rows).iterator.flatMap { i =>
+            if (d.versions == null) Some((d.ids(i), d.vectors(i), Long.MaxValue))
+            else if (d.versions(i) <= stamp) Some((d.ids(i), d.vectors(i), d.versions(i)))
+            else None
+          }
         }
-      }.toArray
     }
 
-  private def sidecar[T <: AnyRef](dir: String, stamp: Long, empty: T)(
-      build: Vector[String] => T): T = {
-    val files = LayoutFiles.listSidecar(dir)
-    if (files.isEmpty) { sidecars.remove(dir); return empty }
-    sidecars.get(dir) match {
-      case Some((s, fs, v)) if s == stamp && fs == files => v.asInstanceOf[T]
-      case _ =>
-        val v = build(files)
-        sidecars.put(dir, (stamp, files, v))
-        v
-    }
+  /** The aggregate of `dir`'s files at `stamp`: the cached one when its
+    * stamp and files match; else the cached one folded with only the files
+    * it has not seen, when none of its rows is above its own stamp (so a
+    * newer stamp shows none of them anew) and the stamp has not gone back;
+    * else a fold of every file. Both extensions equal a fold from scratch.
+    */
+  private def sidecar[T <: AnyRef](dir: String, stamp: Long, empty: T,
+      columns: Seq[String])(fold: (T, Seq[LayoutFile]) => T): T = {
+    val listed = LayoutFiles.listSidecar(dir)
+    if (listed.isEmpty) { sidecars.remove(dir); return empty }
+    val files = listed.toSet
+    val prev = sidecars.get(dir)
+    if (prev.exists(p => p.stamp == stamp && p.files == files)) return prev.get.value.asInstanceOf[T]
+    val base = prev.filter(p => p.stamp <= stamp && p.maxVer <= p.stamp &&
+      p.files.subsetOf(files))
+    val todo = base.fold(listed)(p => listed.filterNot(p.files))
+    val decoded = todo.map(file(_, columns))
+    val value = fold(base.fold(empty)(_.value.asInstanceOf[T]), decoded)
+    val maxVer = (base.map(_.maxVer).iterator ++ decoded.iterator.flatMap(d =>
+      Option(d.versions).iterator.flatMap(_.iterator))).maxOption.getOrElse(Long.MinValue)
+    if (prev.forall(_.stamp <= stamp))
+      sidecars.put(dir, new LayoutFiles.Folded(stamp, files, maxVer, value))
+    value
   }
 }
 
@@ -210,6 +253,58 @@ private[graft] object LayoutFiles {
 
   val TombCols: Seq[String] = Seq("id", "ver")
   val DeltaCols: Seq[String] = Seq("id", "vector", "version")
+
+  /** A sidecar dir's aggregate at `stamp` over `files`, whose highest row
+    * version is `maxVer`.
+    */
+  private final class Folded(val stamp: Long, val files: Set[String],
+      val maxVer: Long, val value: AnyRef)
+
+  /** The memo key of a file: local paths normalized the way listings
+    * print them, so a registered run and its later listing meet.
+    */
+  private def fileKey(f: String): String =
+    if (ControlFs.isLocalRoot(f)) java.nio.file.Paths.get(f).toString else f
+
+  private def ntokOf(params: Map[String, String]): Int =
+    Option(params).flatMap(_.get("__ntok")).flatMap(Option(_))
+      .flatMap(_.toIntOption).getOrElse(-1)
+
+  /** A run `LocalRunWriter.writeLayoutRuns` wrote from `rows` at `version`,
+    * as `decode` reads it under `columns`.
+    */
+  def ofLayoutRows(rows: Seq[LocalRunWriter.LayoutRow], version: Long,
+      columns: Seq[String]): LayoutFile = {
+    def has(c: String) = columns.contains(c)
+    val codes = rows.map(_.extra.collectFirst {
+      case ("codes", LocalRunWriter.IntsCol(v)) => v
+    })
+    new LayoutFile(StringType,
+      rows.map(r => r.id: Any).toArray,
+      if (has("version")) Array.fill(rows.length)(version) else null,
+      if (has("vector")) rows.map(_.vector.toArray).toArray else null,
+      if (has("codes") && codes.forall(_.isDefined)) codes.map(_.get).toArray else null,
+      if (has("params")) rows.map(r => ntokOf(r.params)).toArray else null,
+      null, null)
+  }
+
+  /** A run `LocalRunWriter.writeTombstoneRun` wrote, as read under `TombCols`. */
+  def ofTombstones(ids: Seq[String], ver: Long): LayoutFile =
+    new LayoutFile(StringType, ids.map(id => id: Any).toArray,
+      Array.fill(ids.length)(ver), null, null, null, null, null)
+
+  /** A run `LocalRunWriter.writeDeltaRun` wrote, as read under `DeltaCols`. */
+  def ofDelta(rows: Seq[(String, Seq[Float])], version: Long): LayoutFile =
+    new LayoutFile(StringType, rows.map(r => r._1: Any).toArray,
+      Array.fill(rows.length)(version), rows.map(_._2.toArray).toArray,
+      null, null, null, null)
+
+  /** The cell numbers of a partitioned layout's `<partCol>=N` dirs. */
+  def partitions(dir: String, partCol: String): Vector[Int] =
+    childDirs(dir).flatMap { d =>
+      val n = d.substring(d.lastIndexOf('/') + 1)
+      if (n.startsWith(s"$partCol=")) n.substring(partCol.length + 1).toIntOption else None
+    }.sorted
 
   /** A layout's ids are of a type the driver decode does not map (Spark
     * writes other id types; no layout this engine builds has them) — the
@@ -241,28 +336,31 @@ private[graft] object LayoutFiles {
       rows.result()
     }.sortBy(_._1).map(_._2).toArray
 
+  /** The directories directly under `dir` (none when it is absent). */
+  private def childDirs(dir: String): Vector[String] =
+    if (ControlFs.isLocalRoot(dir)) {
+      val p = java.nio.file.Paths.get(dir)
+      if (!java.nio.file.Files.isDirectory(p)) Vector.empty
+      else {
+        val s = java.nio.file.Files.list(p)
+        try s.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
+          .map(_.toString).toVector
+        finally s.close()
+      }
+    } else {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = p.getFileSystem(ControlFs.servingConf())
+      if (!fs.exists(p)) Vector.empty
+      else fs.listStatus(p).iterator.filter(_.isDirectory)
+        .map(_.getPath.toString).toVector
+    }
+
   /** The id type of the first data file under `dir` — directly in it (a
     * flat layout) or in one of its partition dirs; `StringType` when the
     * layout holds no file yet.
     */
   private def footerIdType(dir: String): DataType = {
-    val partDirs: Iterator[String] =
-      if (ControlFs.isLocalRoot(dir)) {
-        val p = java.nio.file.Paths.get(dir)
-        if (!java.nio.file.Files.isDirectory(p)) Iterator.empty
-        else {
-          val s = java.nio.file.Files.list(p)
-          try s.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
-            .map(_.toString).toVector.iterator
-          finally s.close()
-        }
-      } else {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(ControlFs.servingConf())
-        if (!fs.exists(p)) Iterator.empty
-        else fs.listStatus(p).iterator.filter(_.isDirectory)
-          .map(_.getPath.toString).toVector.iterator
-      }
+    val partDirs = childDirs(dir).iterator
     val isPart = (d: String) => {
       val n = d.substring(d.lastIndexOf('/') + 1)
       n.contains('=') && !n.startsWith("_") && !n.startsWith(".")

@@ -124,9 +124,11 @@ object LocalRunWriter {
     path
   }
 
-  /** One delta run: (id, vector) rows stamped `version`. */
+  /** One delta run: (id, vector) rows stamped `version`. Returns the
+    * published path.
+    */
   def writeDeltaRun(deltaDir: String, rows: Seq[(String, Seq[Float])],
-      version: Long): Unit =
+      version: Long): String =
     writeRun(deltaDir, deltaSchema, freshName()) { record =>
       rows.foreach { case (id, vec) =>
         record { r =>
@@ -165,11 +167,13 @@ object LocalRunWriter {
     * is_deleted, then the encode columns; cluster_id lives in the directory
     * name, not the file, exactly like `partitionBy`). One run file per
     * touched partition — a point write touches one or a few cells.
+    * Returns each published path with the rows it holds.
     */
-  def writeLayoutRuns(layoutDir: String, rows: Seq[LayoutRow], version: Long): Unit = {
-    if (rows.isEmpty) return
+  def writeLayoutRuns(layoutDir: String, rows: Seq[LayoutRow],
+      version: Long): Seq[(String, Seq[LayoutRow])] = {
+    if (rows.isEmpty) return Nil
     val schema = layoutSchema(rows.head.extra)
-    rows.groupBy(_.clusterId).foreach { case (cidOpt, group) =>
+    rows.groupBy(_.clusterId).toSeq.map { case (cidOpt, group) =>
       val dir = cidOpt.fold(layoutDir)(cid => s"$layoutDir/cluster_id=$cid")
       writeRun(dir, schema, freshName()) { record =>
         group.foreach { row =>
@@ -200,7 +204,7 @@ object LocalRunWriter {
             }
           }
         }
-      }
+      } -> group
     }
   }
 
@@ -234,8 +238,8 @@ object LocalRunWriter {
          |}""".stripMargin)
   }
 
-  /** One tombstone-sidecar run: (id, ver) rows. */
-  def writeTombstoneRun(tombDir: String, ids: Seq[String], ver: Long): Unit =
+  /** One tombstone-sidecar run: (id, ver) rows. Returns the published path. */
+  def writeTombstoneRun(tombDir: String, ids: Seq[String], ver: Long): String =
     writeRun(tombDir, tombSchema, freshName()) { record =>
       ids.foreach { id =>
         record { r =>

@@ -441,11 +441,12 @@ object GraphAnn {
   private[graft] def spaceDist(a: Array[Float], b: Array[Float],
       space: SpaceType): Double = graft.kernels.VecKernels.dist(a, b, space)
 
-  /** Driver-resident cell graphs for the ZERO-JOB point-serve path:
-    * (layout id, version, cell) → reconstructed graph, or None for a cell
-    * the layout holds no rows for (cached too — probing an empty cell must
-    * not re-scan parquet every request). Bounded (`MaxLocalCells`,
-    * insertion order) and version-evicted like the executor GraphCache.
+  /** Driver-resident cell graphs for the ZERO-JOB point-serve path: one
+    * reconstructed graph per (layout id, cell) at the graph epoch, or None
+    * for a cell the layout holds no rows for (cached too — probing an empty
+    * cell must not re-scan parquet every request). `buildIndex` preloads a
+    * routed layout's cells (`preloadLocal`); maintained writes leave the
+    * adjacency and its epoch alone, so the cells stay held across them.
     */
   // the bound that actually protects the driver heap: resident BYTES
   // (dim- and degree-aware, NswIndex.residentBytes), not entries or rows —
@@ -456,7 +457,7 @@ object GraphAnn {
 
   // ONE cell-cache implementation across all zero-job tiers (LocalCellCache,
   // shared with LocalIvfServe/LocalPqServe): same byte/entry budgets,
-  // insertion-order eviction, generation-stem superseded-eviction, and
+  // insertion-order eviction, retirement of older generations, and
   // metric counters — the graph tier's id-type memo and ephemeral call ids
   // stay here as its typed extras.
   private val localCellCache = new LocalCellCache[NswIndex](64,
@@ -480,6 +481,31 @@ object GraphAnn {
   private[graft] def localDeltaRows(deltaPath: String,
       stamp: Long): Array[(Any, Array[Float], Long)] =
     localFiles.deltaRows(deltaPath, stamp)
+
+  /** `f`, one `_tombstones` run `LocalRunWriter.writeTombstoneRun` wrote. */
+  private[graft] def registerTombstoneRun(f: String, ids: Seq[String], ver: Long): Unit =
+    localFiles.register(f, graft.core.LayoutFiles.TombCols,
+      graft.core.LayoutFiles.ofTombstones(ids, ver))
+
+  /** `f`, one `_delta` run `LocalRunWriter.writeDeltaRun` wrote. */
+  private[graft] def registerDeltaRun(f: String, rows: Seq[(String, Seq[Float])],
+      version: Long): Unit =
+    localFiles.register(f, graft.core.LayoutFiles.DeltaCols,
+      graft.core.LayoutFiles.ofDelta(rows, version))
+
+  /** Preload a routed layout's route centroids and cell graphs under
+    * (path, epoch), up to the cache bounds as they stand (no eviction).
+    */
+  private[graft] def preloadLocal(path: String, epoch: Long, space: SpaceType): Unit = {
+    loadRouteCentroids(path, Some((path, epoch)))
+    LocalCellResolve.preload[NswIndex](localCellCache, localFiles, path, epoch,
+      path, "part", maxLocalServeBytes, CellCols, cellGraph(space), None)
+  }
+
+  private def cellGraph(space: SpaceType)(parts: Seq[(graft.core.LayoutFile, Array[Int])]): NswIndex =
+    reconstruct(parts.flatMap { case (f, rs) =>
+      rs.iterator.map(i => (f.ords(i), f.ids(i), f.vectors(i), f.links(i)))
+    }, space)
 
   private[operators] def dropLocalCells(layoutIdPrefix: String): Unit = {
     localCellCache.drop(layoutIdPrefix)
@@ -531,7 +557,9 @@ object GraphAnn {
     "local_serve_misses" -> localCellMisses.get(),
     "local_serve_evictions" -> localCellEvictions.get(),
     "local_serve_idtype_refreshes" -> localIdTypeRefreshes.get(),
-    "local_serve_oversized" -> localCellOversized.get()) ++
+    "local_serve_oversized" -> localCellOversized.get(),
+    "local_serve_cells_preloaded" -> localCellCache.preloaded.get(),
+    "local_serve_cells_carried" -> localCellCache.carried.get()) ++
     localFiles.metrics("local_serve")
 
   /** ZERO-SPARK-JOB point serving over a routed layout: beams run on the
@@ -655,12 +683,7 @@ object GraphAnn {
     lazy val graphAll = readLayoutGraph(spark, path)
     val (held, oversized) = LocalCellResolve.resolveSplit[NswIndex](
       localCellCache, localFiles, layoutId, version, path, "part",
-      needed, maxLocalServeBytes, CellCols, parts => {
-        val rows = parts.flatMap { case (f, rs) =>
-          rs.iterator.map(i => (f.ords(i), f.ids(i), f.vectors(i), f.links(i)))
-        }
-        reconstruct(rows, space)
-      })
+      needed, maxLocalServeBytes, CellCols, cellGraph(space))
     // per-query hits from cells too big to decode locally (filled below)
     var oversizedHits = Map.empty[Int, Array[(Any, Double)]]
     if (oversized.nonEmpty) {

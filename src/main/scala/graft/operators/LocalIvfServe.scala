@@ -1,68 +1,115 @@
 package graft.operators
 
-import graft.core.{Decline, LayoutFile, LayoutFiles}
+import graft.core.{Decline, LayoutFile, LayoutFiles, LocalPointReader, LocalRunWriter}
 import graft.kernels.VecKernels
 
 /** Shared plumbing of the zero-job cell-serving tiers: resolve a request's
-  * probed cells against a `LocalCellCache`. Cache hits are held by direct
-  * reference. Misses are listed (driver-side, no job), checked against the
-  * byte budget by their parquet footprint, and built from the tier's
-  * `LayoutFiles` reader: each cell is its partition dir's rows at the
-  * layout stamp, decoded on the driver from immutable files that are
-  * memoized across stamps — a re-stamp after a write re-reads only the
-  * files the write added, and no cell load launches a Spark job.
+  * probed cells against a `LocalCellCache`, and fill the cache for a new
+  * layout generation. Each cell is its partition dir's rows at the layout
+  * stamp, built on the driver from the tier's `LayoutFiles` (no Spark job).
+  *
+  * A probed cell is, in order: held at the request's stamp (a hit, by
+  * direct reference); held at an older stamp and CARRIED to this one
+  * unchanged, when the maintained writes between the two stamps left it
+  * alone; or built from its files, most of them already decoded (the
+  * generation's files stay memoized, and the runs a write added were
+  * registered decoded). A cell that would not fit the byte budget by its
+  * parquet footprint is never decoded.
+  *
+  * Carry rule (a carried cell equals a cold build at the new stamp): its
+  * dir lists the same files it was built from, none of them holds a row
+  * with version in (old stamp, new stamp], and every id the cell shows has
+  * the same tombstone entry at both stamps. Under `LayoutFiles`' snapshot
+  * rule those are exactly the rows that could differ.
   */
 private[graft] object LocalCellResolve {
 
-  /** Cache probe: cells already held (by direct reference) and the probe's
-    * misses, with the hit/miss counters advanced.
+  /** The data files of each cell's partition dir, split into (oversized,
+    * loadable) by their parquet footprint: a cell whose estimated RESIDENT
+    * size exceeds the whole byte budget must never be decoded on the driver.
     */
-  private def probe[C](cache: LocalCellCache[C], keyPath: String, stamp: Long,
-      needed: Seq[Int]): (scala.collection.mutable.Map[Int, Option[C]], Seq[Int]) = {
-    val held = scala.collection.mutable.Map.empty[Int, Option[C]]
-    needed.foreach { c =>
-      cache.get((keyPath, stamp, c)).foreach(v => held(c) = v)
-    }
-    val missing = needed.filterNot(held.contains)
-    cache.hits.addAndGet(held.size.toLong)
-    cache.misses.addAndGet(missing.length.toLong)
-    (held, missing)
-  }
-
-  /** The data files of each missing cell's partition dir, split into
-    * (oversized, loadable) by their parquet footprint: a cell whose
-    * estimated RESIDENT size exceeds the whole byte budget must never be
-    * decoded on the driver.
-    */
-  private def listCells(fsPath: String, partCol: String, missing: Seq[Int],
+  private def listCells(fsPath: String, partCol: String, cells: Seq[Int],
       maxBytes: Long): (Seq[Int], Seq[(Int, Vector[String])]) = {
-    val listed = missing.map { c =>
-      (c, graft.core.LocalPointReader.listRunSizes(s"$fsPath/$partCol=$c"))
+    val listed = cells.map { c =>
+      (c, LocalPointReader.listRunSizes(s"$fsPath/$partCol=$c"))
     }
     val (over, ok) = listed.partition { case (_, files) =>
       files.map(_._2).sum * GraphAnn.LocalServeDiskExpansion > maxBytes
     }
-    (over.map(_._1), ok.map { case (c, files) => (c, files.map(_._1)) })
+    (over.map(_._1), ok.map { case (c, files) => (c, files.map(_._1).sorted) })
   }
 
-  /** Build and insert every cell of `toLoad` under (keyPath, stamp, cell)
-    * from its files' rows visible in `snapshot`; cells without rows cache
-    * as None. One load per request with misses.
+  /** The cache entry of cell files `fs` built at `stamp` under `tombs`
+    * (None = versionless rows, every one kept).
     */
-  private def load[C](cache: LocalCellCache[C], files: LayoutFiles,
-      keyPath: String, stamp: Long, toLoad: Seq[(Int, Vector[String])],
-      columns: Seq[String], snapshot: Option[(Long, Map[Any, Long])],
-      build: Seq[(LayoutFile, Array[Int])] => C,
-      held: scala.collection.mutable.Map[Int, Option[C]]): Unit = {
-    val built = toLoad.map { case (c, fs) =>
-      val rows = files.cellRows(fs, columns, snapshot)
-      c -> (if (rows.isEmpty) None else Some(build(rows)))
+  private def build[C](cache: LocalCellCache[C], files: LayoutFiles, stamp: Long,
+      fs: Vector[String], columns: Seq[String], tombs: Option[Map[Any, Long]],
+      make: Seq[(LayoutFile, Array[Int])] => C, evict: Boolean): LocalCellCache.Entry[C] = {
+    val (rows, above) = files.cell(fs, columns, tombs.map(t => (stamp, t)), evict)
+    cache.entryOf(stamp, if (rows.isEmpty) None else Some(make(rows)), fs, above,
+      tombs.getOrElse(Map.empty))
+  }
+
+  /** Ids whose tombstone entry differs between two tombstone maps. */
+  private def changedIds(a: Map[Any, Long], b: Map[Any, Long]): Set[Any] =
+    (b.iterator.filter { case (id, v) => !a.get(id).contains(v) }.map(_._1) ++
+      a.keysIterator.filterNot(b.contains)).toSet
+
+  /** Probe, carry and build: the probed cells of `keyPath` at `stamp` and
+    * the oversized ones. `tombDir` = the layout's `_tombstones` sidecar
+    * (None: versionless rows, every one kept). `declineOversized` stops
+    * before any decode when a probed cell is oversized.
+    */
+  private def cellsAt[C](cache: LocalCellCache[C], files: LayoutFiles,
+      keyPath: String, stamp: Long, fsPath: String, partCol: String,
+      needed: Seq[Int], maxBytes: Long, columns: Seq[String],
+      make: Seq[(LayoutFile, Array[Int])] => C, ids: C => Array[Any],
+      tombDir: Option[String], declineOversized: Boolean)
+      : (scala.collection.mutable.Map[Int, Option[C]], Seq[Int]) = {
+    val held = scala.collection.mutable.Map.empty[Int, Option[C]]
+    val stale = scala.collection.mutable.Map.empty[Int, LocalCellCache.Entry[C]]
+    needed.foreach { c =>
+      cache.entry(keyPath, c).foreach { e =>
+        if (e.stamp == stamp) held(c) = e.cell
+        else if (e.stamp < stamp) stale(c) = e
+      }
     }
-    cache.loads.incrementAndGet()
-    built.foreach { case (c, cell) =>
-      held(c) = cell
-      cache.insert((keyPath, stamp, c), cell)
+    val missing = needed.filterNot(held.contains)
+    if (missing.isEmpty) { cache.hits.addAndGet(held.size.toLong); return (held, Nil) }
+    val (oversized, listed) = listCells(fsPath, partCol, missing, maxBytes)
+    if (declineOversized && oversized.nonEmpty) {
+      cache.hits.addAndGet(held.size.toLong)
+      cache.misses.addAndGet(missing.length.toLong)
+      return (held, oversized)
     }
+    lazy val tombs = tombDir.map(files.tombstones(_, stamp))
+    val changed = new java.util.IdentityHashMap[Map[Any, Long], Set[Any]]()
+    def unchanged(e: LocalCellCache.Entry[C], fs: Vector[String]): Boolean =
+      e.files == fs && !e.above.exists(_ <= stamp) && tombs.forall { t =>
+        (t eq e.tombs) || {
+          val ch = changed.computeIfAbsent(e.tombs, changedIds(_, t))
+          ch.isEmpty || e.cell.forall(cell => !ids(cell).exists(ch.contains))
+        }
+      }
+    val toLoad = listed.filterNot { case (c, fs) =>
+      val carried = stale.get(c).exists(e => unchanged(e, fs) && cache.carry(keyPath, c, e, stamp))
+      if (carried) held(c) = stale(c).cell
+      carried
+    }
+    cache.hits.addAndGet((needed.length - toLoad.length - oversized.length).toLong)
+    cache.misses.addAndGet((toLoad.length + oversized.length).toLong)
+    if (toLoad.nonEmpty) {
+      val built = try toLoad.map { case (c, fs) =>
+        c -> build(cache, files, stamp, fs, columns, tombs, make, evict = true)
+      } catch {
+        // the per-cell variant serves these cells distributed instead
+        case _: LayoutFiles.UnsupportedIdType if !declineOversized =>
+          return (held, oversized ++ toLoad.map(_._1))
+      }
+      cache.loads.incrementAndGet()
+      built.foreach { case (c, e) => held(c) = e.cell; cache.insert(keyPath, c, e) }
+    }
+    (held, oversized)
   }
 
   /** The probed cells of the layout at `path` as of `stamp`: its
@@ -74,22 +121,15 @@ private[graft] object LocalCellResolve {
     */
   def resolve[C](cache: LocalCellCache[C], files: LayoutFiles, path: String,
       stamp: Long, needed: Seq[Int], maxBytes: Long, columns: Seq[String],
-      build: Seq[(LayoutFile, Array[Int])] => C)
-      : Either[Decline, collection.Map[Int, Option[C]]] = {
-    val (held, missing) = probe(cache, path, stamp, needed)
-    if (missing.nonEmpty) {
-      val (oversized, loadable) = listCells(path, "cluster_id", missing, maxBytes)
+      make: Seq[(LayoutFile, Array[Int])] => C, ids: C => Array[Any])
+      : Either[Decline, collection.Map[Int, Option[C]]] =
+    try {
+      val (held, oversized) = cellsAt(cache, files, path, stamp, path, "cluster_id",
+        needed, maxBytes, columns, make, ids, Some(s"$path/_tombstones"), declineOversized = true)
       if (oversized.nonEmpty) {
-        cache.oversizedDeclines.incrementAndGet(); return Left(Decline.OversizedCell)
-      }
-      try {
-        val tombs = files.tombstones(s"$path/_tombstones", stamp)
-        load(cache, files, path, stamp, loadable, columns,
-          Some((stamp, tombs)), build, held)
-      } catch { case _: LayoutFiles.UnsupportedIdType => return Left(Decline.UnsupportedIdType) }
-    }
-    Right(held)
-  }
+        cache.oversizedDeclines.incrementAndGet(); Left(Decline.OversizedCell)
+      } else Right(held)
+    } catch { case _: LayoutFiles.UnsupportedIdType => Left(Decline.UnsupportedIdType) }
 
   /** The graph tier's PER-CELL variant: loadable misses are built and
     * cached, the rest are returned for the caller to serve through a
@@ -104,30 +144,65 @@ private[graft] object LocalCellResolve {
   def resolveSplit[C](cache: LocalCellCache[C], files: LayoutFiles,
       keyPath: String, stamp: Long, fsPath: String, partCol: String,
       needed: Seq[Int], maxBytes: Long, columns: Seq[String],
-      build: Seq[(LayoutFile, Array[Int])] => C)
-      : (scala.collection.mutable.Map[Int, Option[C]], Seq[Int]) = {
-    val (held, missing) = probe(cache, keyPath, stamp, needed)
-    if (missing.isEmpty) return (held, Nil)
-    val (oversized, loadable) = listCells(fsPath, partCol, missing, maxBytes)
+      make: Seq[(LayoutFile, Array[Int])] => C)
+      : (scala.collection.mutable.Map[Int, Option[C]], Seq[Int]) =
+    cellsAt(cache, files, keyPath, stamp, fsPath, partCol, needed, maxBytes,
+      columns, make, (_: C) => Array.empty[Any], None, declineOversized = false)
+
+  /** Fill the cache with the cells of a new layout generation at `stamp`,
+    * in cell order, up to the cache's entry and byte bounds as they stand:
+    * nothing is evicted but the retired generations, and decoded files are
+    * memoized only where they fit. Oversized cells and cells already held
+    * are skipped. Returns the cells cached.
+    */
+  def preload[C](cache: LocalCellCache[C], files: LayoutFiles, keyPath: String,
+      stamp: Long, fsPath: String, partCol: String, maxBytes: Long,
+      columns: Seq[String], make: Seq[(LayoutFile, Array[Int])] => C,
+      tombDir: Option[String]): Int =
     try {
-      if (loadable.nonEmpty)
-        load(cache, files, keyPath, stamp, loadable, columns, None, build, held)
-      (held, oversized)
-    } catch { case _: LayoutFiles.UnsupportedIdType => (held, missing) }
-  }
+      val tombs = tombDir.map(files.tombstones(_, stamp))
+      val cells = LayoutFiles.partitions(fsPath, partCol)
+        .filterNot(c => cache.entry(keyPath, c).exists(_.stamp >= stamp))
+      val (_, loadable) = listCells(fsPath, partCol, cells, maxBytes)
+      loadable.iterator.map { case (c, fs) =>
+        cache.preload(keyPath, c, build(cache, files, stamp, fs, columns, tombs, make, evict = false))
+      }.takeWhile(identity).size
+    } catch { case _: LayoutFiles.UnsupportedIdType => 0 }
+}
+
+/** What Engine needs of a zero-job cell serve besides its searches: fill
+  * the cache when a build or compaction stamps a new layout generation,
+  * and hold the runs a maintained write adds as already decoded.
+  */
+private[graft] trait LocalCellServe {
+  protected def files: LayoutFiles
+  protected def cellColumns: Seq[String]
+
+  /** Preload the cells of the layout at `path`, current at `stamp`. */
+  def preload(path: String, stamp: Long): Unit
+
+  /** `f`, one run `LocalRunWriter.writeLayoutRuns` wrote at `version`. */
+  def registerLayoutRun(f: String, rows: Seq[LocalRunWriter.LayoutRow], version: Long): Unit =
+    files.register(f, cellColumns, LayoutFiles.ofLayoutRows(rows, version, cellColumns))
+
+  /** `f`, one run `LocalRunWriter.writeTombstoneRun` wrote. */
+  def registerTombstoneRun(f: String, ids: Seq[String], ver: Long): Unit =
+    files.register(f, LayoutFiles.TombCols, LayoutFiles.ofTombstones(ids, ver))
 }
 
 /** ZERO-SPARK-JOB point serving over the IVF inverted-list layout — the
   * `GraphAnn.searchPointLocal` architecture applied to the ivf_flat tier
   * (reference `internal/index/ivf.go` Search semantics, served like the
   * driver-local tiers): probe lists come from the driver-resident coarse
-  * centroids, probed CELLS are built once per (layout, stamp) into a
-  * budget-bounded driver cache, and single/few-query requests rank
-  * entirely in-JVM. Neither a warm request nor a cold cell launches a
-  * Spark job: cells are decoded on the driver from the layout's parquet
-  * files (`LayoutFiles`), so the first search after a maintained write
-  * costs a directory listing and the decode of the files that write added,
-  * not the ~100–300 ms per-job scheduling floor of the distributed plan.
+  * centroids, and single/few-query requests rank entirely in-JVM over
+  * driver-resident cells. The cells are resident per layout GENERATION,
+  * as the reference's index is loaded once and appended in place:
+  * `buildIndex`/`compactLayout` preload the new generation's cells right
+  * after the stamp, and a maintained write leaves every cell it did not
+  * touch to be carried to the new stamp unchanged (`LocalCellResolve`'s
+  * carry rule), the cells it touched rebuilt from files already decoded —
+  * the runs the write added are registered decoded. Neither a warm request
+  * nor a cold cell launches a Spark job.
   *
   * Results are IDENTICAL to `IvfIndex.search`/`searchDistributed` at equal
   * knobs, by construction: the same `Model.probe` (same coarse metric and
@@ -141,16 +216,16 @@ private[graft] object LocalCellResolve {
   * `LocalIvfParitySpec` gates equality, including ties, maintained
   * upserts, overwrites, deletes, and filtered serving.
   *
-  * Scale: the cache holds probed cells only, bounded by resident BYTES
-  * (dim-aware) and entry count with insertion-order eviction, and the
-  * decoded-file memo under the same byte budget; a cell whose parquet
-  * footprint says it cannot fit the whole budget is never decoded — the
-  * request declines (returns Left) and the caller serves it through the
-  * distributed partition-pruned plan instead. In-flight requests hold
-  * direct references, so concurrent eviction is a reload cost, never a
-  * correctness event.
+  * Scale: the cache holds cells up to a bound in resident BYTES (dim-aware)
+  * and an entry count, with insertion-order eviction (a preload stops at
+  * the bounds instead), and the decoded-file memo under the same byte
+  * budget; a cell whose parquet footprint says it cannot fit the whole
+  * budget is never decoded — the request declines (returns Left) and the
+  * caller serves it through the distributed partition-pruned plan instead.
+  * In-flight requests hold direct references, so concurrent eviction is a
+  * reload cost, never a correctness event.
   */
-object LocalIvfServe {
+object LocalIvfServe extends LocalCellServe {
 
   /** One cached cell: the cell's rows as parallel driver arrays. `ntoks`
     * carries each row's `__ntok` param (-1 when absent) so a MULTIVECTOR
@@ -191,11 +266,15 @@ object LocalIvfServe {
 
   private val cache = new LocalCellCache[Cell](256, _.residentBytes,
     () => maxLocalIvfBytes)
-  private val files = new LayoutFiles(() => maxLocalIvfBytes)
-  private val CellCols = Seq("id", "version", "vector", "params")
+  protected val files = new LayoutFiles(() => maxLocalIvfBytes)
+  protected val cellColumns: Seq[String] = Seq("id", "version", "vector", "params")
 
   def metrics: Map[String, Long] =
     cache.metrics("ivf_local", maxLocalIvfBytes) ++ files.metrics("ivf_local")
+
+  def preload(path: String, stamp: Long): Unit =
+    LocalCellResolve.preload[Cell](cache, files, path, stamp, path, "cluster_id",
+      maxLocalIvfBytes, cellColumns, cellOf, Some(s"$path/_tombstones"))
 
   private[graft] def dropCells(layoutIdPrefix: String): Unit = {
     cache.drop(layoutIdPrefix); files.drop(layoutIdPrefix)
@@ -203,9 +282,9 @@ object LocalIvfServe {
 
   private[graft] def clearCells(): Unit = { cache.clear(); files.clear() }
 
-  /** Serve `queries` (driver pairs of (qid, vector)) from driver-cached
-    * cells of the layout at `path` as of `stamp` — cold cells are decoded
-    * from the layout's files, warm ones are held; neither launches a job.
+  /** Serve `queries` (driver pairs of (qid, vector)) from driver-resident
+    * cells of the layout at `path` as of `stamp` — held, carried from an
+    * earlier stamp, or built from the layout's files; none launches a job.
     * Returns (qid, id, distance, rnk) driver rows. `eligible` mirrors the
     * distributed semi-join restriction (probe lists stay geometry-pruned,
     * rows filter by id — the ivf tier's filtered semantics, unlike the
@@ -248,7 +327,7 @@ object LocalIvfServe {
       queries.toArray.map(q => model.probe(q._2, nprobe))
     val needed = probed.flatten.distinct.sorted
     val held = LocalCellResolve.resolve[Cell](cache, files, path, stamp,
-      needed, maxLocalIvfBytes, CellCols, cellOf) match {
+      needed, maxLocalIvfBytes, cellColumns, cellOf, _.ids) match {
       case Right(h) => h
       case Left(d) => return Left(d)
     }
@@ -297,11 +376,11 @@ object LocalIvfServe {
   * codegen `AdcLookupSum`, and rank (distance asc, id asc UTF-8). The
   * caller (Engine) re-ranks the tiny shortlist exactly against true vectors
   * fetched through the zero-job point reads — `LocalPqParitySpec` gates the
-  * end-to-end equality with `IvfPq.search`. Code cells are decoded on the
-  * driver from the layout's files at the layout stamp, exactly like
+  * end-to-end equality with `IvfPq.search`. Code cells are resident per
+  * layout generation, preloaded, carried and rebuilt exactly like
   * `LocalIvfServe`'s vector cells: no cell load launches a Spark job.
   */
-object LocalPqServe {
+object LocalPqServe extends LocalCellServe {
 
   /** One cached cell: ids + PQ codes as parallel driver arrays. */
   private final case class Cell(ids: Array[Any], codes: Array[Array[Int]]) {
@@ -324,11 +403,15 @@ object LocalPqServe {
 
   private val cache = new LocalCellCache[Cell](256, _.residentBytes,
     () => maxLocalPqBytes)
-  private val files = new LayoutFiles(() => maxLocalPqBytes)
-  private val CellCols = Seq("id", "version", "codes")
+  protected val files = new LayoutFiles(() => maxLocalPqBytes)
+  protected val cellColumns: Seq[String] = Seq("id", "version", "codes")
 
   def metrics: Map[String, Long] =
     cache.metrics("pq_local", maxLocalPqBytes) ++ files.metrics("pq_local")
+
+  def preload(path: String, stamp: Long): Unit =
+    LocalCellResolve.preload[Cell](cache, files, path, stamp, path, "cluster_id",
+      maxLocalPqBytes, cellColumns, cellOf, Some(s"$path/_tombstones"))
 
   private[graft] def dropCells(layoutIdPrefix: String): Unit = {
     cache.drop(layoutIdPrefix); files.drop(layoutIdPrefix)
@@ -363,7 +446,7 @@ object LocalPqServe {
       qvs.map(q => model.coarse.probe(q._2, nprobe))
     val needed = probed.flatten.distinct.sorted
     val held = LocalCellResolve.resolve[Cell](cache, files, path, stamp,
-      needed, maxLocalPqBytes, CellCols, cellOf) match {
+      needed, maxLocalPqBytes, cellColumns, cellOf, _.ids) match {
       case Right(h) => h
       case Left(d) => return Left(d)
     }

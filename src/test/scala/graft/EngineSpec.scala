@@ -86,10 +86,11 @@ class EngineSpec extends SparkSpec {
     val exactEligible = docs.filter(_.params("tag") == "a")
       .map(d => (d.id, l2(q, d.vector)))
       .sortBy { case (id, d) => (d, id.toInt) }.take(5).map(_._1)
-    // driver decodes of layout files by the zero-job cell tiers
+    // driver reads of the layout by the zero-job cell tiers: file decodes,
+    // or cells served from the layout's resident (preloaded) cells
     def layoutDecodes: Long = (graft.operators.LocalIvfServe.metrics ++
         graft.operators.LocalPqServe.metrics ++ graft.operators.GraphAnn.localServeMetrics)
-      .collect { case (k, v) if k.endsWith("_file_decodes") => v }.sum
+      .collect { case (k, v) if k.endsWith("_file_decodes") || k.endsWith("_hits") => v }.sum
     // record every file scan's root paths, so "the layout served" is a
     // plan-level fact, not an inference from results
     val scans = java.util.Collections.synchronizedList(
@@ -132,8 +133,8 @@ class EngineSpec extends SparkSpec {
         // paths added more async QE events mid-poll). 30 s: a co-tenant
         // stall burst (documented 3x multipliers) can delay the event.
         // The zero-job cell tiers read their layout with no plan at all: the
-        // driver decoding this fresh layout's files is the same fact (a
-        // fallback to the live corpus decodes no layout file)
+        // driver decoding this fresh layout's files, or serving its resident
+        // cells, is the same fact (a fallback to the live corpus does neither)
         def sawIndexScan: Boolean = scans.toArray(new Array[String](0))
           .exists(_.contains(s"/$name/index/")) || layoutDecodes > decodes0
         val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
@@ -734,5 +735,34 @@ class EngineSpec extends SparkSpec {
         (3, Array(Float.PositiveInfinity, 1f)), (3, Array(1f, Float.NaN)), (3, Array(1f))))
       for (coll <- Seq("c", "f"))
         intercept[IllegalArgumentException](e.searchHits(coll, Seq(("q", v)), k))
+  }
+
+  test("runtime params survive a reopen: the first search returns the same hits with no Spark job") {
+    val dir = testRoot("params-reopen")
+    val e = new Engine(spark, dir)
+    val rnd = new scala.util.Random(5)
+    val docs = (0 until 60).map(i => Document(s"d$i", Array.fill(4)(rnd.nextFloat())))
+    e.createCollection(CollectionConfig("g", 4, IndexType.Hnsw, SpaceType.L2,
+      params = Map("routeNlist" -> "4")))
+    e.createCollection(CollectionConfig("v", 4, IndexType.IvfFlat, SpaceType.L2))
+    for (c <- Seq("g", "v")) { e.batchUpsertDocuments(c, docs); e.buildIndex(c, nlist = 8) }
+    e.setParams("g", Map("routeNprobe" -> 3))
+    e.setParams("g", Map("efsearch" -> 64))
+    e.setParams("v", Map("nprobe" -> 3)) // the default would probe all 8 cells
+    val q = Seq(("q", docs(7).vector))
+    val before = Seq("g", "v").map(c => e.searchHits(c, q, 5))
+    assert(before.forall(_.isRight), s"a search declined before the reopen: $before")
+    // reopen as a restarted server: a new engine, the serving caches dropped
+    graft.operators.GraphAnn.GraphCache.clear()
+    graft.operators.LocalIvfServe.clearCells()
+    graft.core.LocalPointReader.invalidateUnder("")
+    val e2 = new Engine(spark, dir)
+    assert(e2.getParams("g") === Map("routeNprobe" -> 3, "efsearch" -> 64))
+    assert(e2.getParams("v") === Map("nprobe" -> 3))
+    for ((c, hits) <- Seq("g", "v").zip(before)) {
+      val (after, jobs) = jobsDuring(e2.searchHits(c, q, 5))
+      assert(after === hits, s"$c answered differently after the reopen")
+      assert(jobs === 0, s"the first search on $c after the reopen launched $jobs Spark job(s)")
+    }
   }
 }

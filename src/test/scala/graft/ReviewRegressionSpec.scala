@@ -103,9 +103,11 @@ class ReviewRegressionSpec extends SparkSpec {
   test("LocalCellCache: a rebuild's new generation evicts the dead generation's cells") {
     val cache = new graft.operators.LocalCellCache[Array[Int]](
       maxCells = 256, bytesOf = _.length.toLong * 4, maxBytes = () => 1L << 20)
+    def insert(key: (String, Long, Int), cell: Some[Array[Int]]): Unit = cache.insert(key._1,
+      key._3, cache.entryOf(key._2, cell, Vector.empty, Array.emptyLongArray, Map.empty))
     // generation g1 of a layout: two cells resident
-    cache.insert(("/r/c/index/ivf_layout_g1", 7L, 0), Some(Array(1, 2)))
-    cache.insert(("/r/c/index/ivf_layout_g1", 7L, 1), Some(Array(3)))
+    insert(("/r/c/index/ivf_layout_g1", 7L, 0), Some(Array(1, 2)))
+    insert(("/r/c/index/ivf_layout_g1", 7L, 1), Some(Array(3)))
     assert(cache.size === 2)
     val before = cache.residentBytes
     assert(before > 0)
@@ -114,14 +116,14 @@ class ReviewRegressionSpec extends SparkSpec {
     // a buildIndex flip: new _g2 path AND new stamp — the whole g1
     // generation must die on insert (it previously stranded in the byte
     // budget because eviction matched the exact path only)
-    cache.insert(("/r/c/index/ivf_layout_g2", 9L, 0), Some(Array(4, 5, 6)))
+    insert(("/r/c/index/ivf_layout_g2", 9L, 0), Some(Array(4, 5, 6)))
     assert(cache.size === 1)
     assert(cache.get(("/r/c/index/ivf_layout_g1", 7L, 0)).isEmpty)
     assert(cache.get(("/r/c/index/ivf_layout_g1", 7L, 1)).isEmpty)
     assert(cache.get(("/r/c/index/ivf_layout_g2", 9L, 0)).isDefined)
     assert(cache.residentBytes === 12L)
     // a DIFFERENT tier's layout is untouched by the flip
-    cache.insert(("/r/c/index/pq_layout_g1", 7L, 0), Some(Array(9)))
+    insert(("/r/c/index/pq_layout_g1", 7L, 0), Some(Array(9)))
     assert(cache.get(("/r/c/index/ivf_layout_g2", 9L, 0)).isDefined)
     assert(cache.size === 2)
   }

@@ -204,22 +204,27 @@ class ServerSpec extends SparkSpec {
     assert(o3("point_runs_resident").asDouble > 0 && o3("point_resident_bytes").asDouble > 0,
       s"the residency ledger must show the runs read: $o3")
     assert(o3("point_resident_bytes").asDouble <= o3("point_resident_max_bytes").asDouble)
-    // a search right after a maintained write reloads its cells (the
-    // `*_loads` count moves) from layout files decoded on the driver, and
-    // launches no Spark job
-    for (k <- Seq("ivf_local_file_decodes", "ivf_local_file_bytes",
-        "pq_local_file_decodes", "pq_local_file_bytes",
-        "local_serve_file_decodes", "local_serve_file_bytes"))
-      assert(o3.contains(k), s"metrics missing $k: $o3")
+    // a build preloads its cells; a search right after a maintained write
+    // carries the cells the write left alone, reloads the one it touched
+    // (the `*_loads` count moves) from the run the write registered
+    // decoded, and launches no Spark job
+    for (p <- Seq("ivf_local", "pq_local", "local_serve");
+        k <- Seq("file_decodes", "file_bytes", "files_registered", "cells_preloaded", "cells_carried"))
+      assert(o3.contains(s"${p}_$k"), s"metrics missing ${p}_$k: $o3")
     req("POST", "/v1/collections", """{"name":"metivf","dimension":2,"index_type":"ivf_flat"}""")
     val ivfDocs = (0 until 24).map(i => s"""{"id":"v$i","vector":[${i % 6},${i / 6}]}""")
       .mkString("[", ",", "]")
     assert(req("POST", "/v1/collections/metivf/buildindex", s"""{"documents":$ivfDocs}""")._1 === 200)
+    val oBuilt = req("GET", "/v1/metrics")._2.asObj
+    assert(oBuilt("ivf_local_cells_preloaded").asDouble > o3("ivf_local_cells_preloaded").asDouble,
+      s"the build must preload its cells: $oBuilt")
     val search = """{"vector":[1.2,1.1],"limit":3}"""
     assert(req("POST", "/v1/collections/metivf/vectors/search", search)._1 === 200)
     assert(req("POST", "/v1/collections/metivf/documents",
       """{"id":"w","vector":[1.2,1.1]}""")._1 === 200)
     val o4 = req("GET", "/v1/metrics")._2.asObj
+    assert(o4("ivf_local_files_registered").asDouble > oBuilt("ivf_local_files_registered").asDouble,
+      s"the write must register its run decoded: $o4")
     val ((cs, vs), jobs) = jobsDuring(
       req("POST", "/v1/collections/metivf/vectors/search", search))
     assert(cs === 200 && vs.asObj("ids").asArr.head.asStr === "w",
@@ -227,9 +232,11 @@ class ServerSpec extends SparkSpec {
     assert(jobs === 0, s"the search after a write launched $jobs Spark job(s)")
     val o5 = req("GET", "/v1/metrics")._2.asObj
     assert(o5("ivf_local_loads").asDouble > o4("ivf_local_loads").asDouble,
-      s"the search after a write must load cells: $o5")
-    assert(o5("ivf_local_file_decodes").asDouble > o4("ivf_local_file_decodes").asDouble,
-      s"the written run must be decoded: $o5")
+      s"the search after a write must load the cell it touched: $o5")
+    assert(o5("ivf_local_cells_carried").asDouble > o4("ivf_local_cells_carried").asDouble,
+      s"the search after a write must carry the cells it left alone: $o5")
+    assert(o5("ivf_local_file_decodes").asDouble === o4("ivf_local_file_decodes").asDouble,
+      s"the written run was registered, so nothing is decoded: $o5")
     assert(o5("ivf_local_file_bytes").asDouble <= o5("ivf_local_max_bytes").asDouble)
     // local-serve outcomes: a warm search is served from driver rows; a
     // duplicate-qid request and a stale layout each decline under their key
