@@ -80,16 +80,6 @@ class Engine(
     */
   private def tierLayout(coll: String, t: Tier[_]): Option[String] =
     t.key.map(tierGenPath(coll, _, layoutGen(coll)))
-  // bucketed data dirs ride the SAME generation counter (writeBucketedLayout
-  // runs after the flip, so a rebuild lands in a fresh dir and in-flight
-  // scans of the previous table keep their files; the meta records the
-  // concrete path, so appends and re-registration never recompute it)
-  private def bucketedDataPath(coll: String, tier: String): String = {
-    val g = layoutGen(coll)
-    if (g == 0L) s"$root/$coll/index/${tier}_bucketed"
-    else s"$root/$coll/index/${tier}_bucketed_g$g"
-  }
-  private def bucketedMetaPath(coll: String) = s"$root/$coll/index/bucketed_meta"
   // compaction-in-progress marker: written by compactLayout BEFORE it reads
   // the layout, removed after the swap settles (or by the next buildIndex).
   // Concurrent ingest stamp-writers check it — an append that raced into
@@ -100,76 +90,6 @@ class Engine(
   // back until the next buildIndex.
   private def compactIntentPath(coll: String) = s"$root/$coll/index/compact_intent"
 
-  /** Materialize `frame` (which carries cluster_id) as the collection's
-    * EXTERNAL bucketed table — the repeated-KNN-join layout: the
-    * searchDistributed equi-join reads it pre-hashed on cluster_id, so only
-    * the query frame shuffles. The meta file (table, buckets, stamp, data
-    * path) lets a fresh session re-register the same files and commits the
-    * table to THIS build — any later write stales it exactly like the
-    * partitioned layout.
-    */
-  private def writeBucketedLayout(coll: String, cfg: CollectionConfig,
-      frame: DataFrame, stamp: Long, tier: String): Unit =
-    cfg.params.get("bucketed_table").foreach { table =>
-      val buckets = cfg.params.get("buckets").map(_.toInt).getOrElse(64)
-      val path = bucketedDataPath(coll, tier)
-      frame.write.mode("overwrite").option("path", path)
-        .bucketBy(buckets, "cluster_id").sortBy("cluster_id")
-        .saveAsTable(table)
-      atomicWrite(bucketedMetaPath(coll), s"$table\n$buckets\n$stamp\n$path")
-    }
-
-  /** (table, buckets, dataPath, stamp) when the bucketed table exists, is
-    * CURRENT (meta stamp == live store version), is registered in this
-    * session's catalog (re-registering external files if needed), and still
-    * points at this collection's data directory.
-    */
-  private def currentBucketedMeta(coll: String): Option[(String, Int, String, Long)] = {
-    // corrupt meta (disk fault, pre-atomicWrite crash) reads as "no bucketed
-    // layout" — searches fall back one tier, never throw
-    val parsed = cfs.readLinesSafe(bucketedMetaPath(coll)).flatMap(lines =>
-      scala.util.Try(
-        (lines(0), lines(1).toInt, lines(2).toLong, lines(3))).toOption)
-    if (parsed.isEmpty) return None
-    val (table, buckets, stamp, path) = parsed.get
-    if (stamp != store.currentVersion(coll)) return None
-    if (!spark.catalog.tableExists(table)) {
-      if (!cfs.exists(path)) return None
-      val ddl = spark.read.parquet(path).schema.toDDL
-      spark.sql(s"""CREATE TABLE `$table` ($ddl) USING PARQUET
-        CLUSTERED BY (cluster_id) SORTED BY (cluster_id) INTO $buckets BUCKETS
-        LOCATION '$path'""")
-    }
-    // the catalog entry must still point at THIS collection's files: another
-    // collection (or engine root) reusing the same table name repoints it at
-    // its own corpus on build — serving that table here would silently
-    // return the wrong collection's neighbors. Compare FULL location
-    // identity (scheme, authority, path) — two roots on different stores
-    // can hold identical path parts
-    val loc = scala.util.Try(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location.toString).toOption
-    if (!loc.exists(l => canonLoc(l) == canonLoc(path))) return None
-    Some((table, buckets, path, stamp))
-  }
-
-  /** Canonical (scheme, authority, absolute path) of a table/data location,
-    * for equality checks across plain-local, `file:`, and remote-scheme'd
-    * spellings of the same files. Plain and `file:` locations canonicalize
-    * identically; unparsable locations canonicalize to themselves (an
-    * equality check can then only fail closed — treat as not-ours).
-    */
-  private def canonLoc(s: String): (String, String, String) =
-    if (graft.core.ControlFs.isLocalRoot(s))
-      ("file", "", java.nio.file.Paths.get(s).toAbsolutePath.normalize.toString)
-    else scala.util.Try {
-      val u = new java.net.URI(s)
-      val scheme = if (u.getScheme == null || u.getScheme == "file") "file"
-        else u.getScheme
-      val p = Option(u.getPath).getOrElse(s)
-      (scheme, Option(u.getAuthority).getOrElse(""),
-        java.nio.file.Paths.get(p).normalize.toString)
-    }.getOrElse(("", "", s))
   /** Flip to generation `gen + 1` of `tier`'s layout (the new dir must be
     * fully written first), GC generations older than the superseded one,
     * and drop path-keyed driver/executor caches of retired dirs. Returns
@@ -183,10 +103,6 @@ class Engine(
       val p = new org.apache.hadoop.fs.Path(oldPath)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       fs.delete(p, true)
-      // the generation's bucketed data dir retires on the same schedule
-      fs.delete(new org.apache.hadoop.fs.Path(
-        if (old == 0L) s"$root/$coll/index/${tier}_bucketed"
-        else s"$root/$coll/index/${tier}_bucketed_g$old"), true)
       // retire path-keyed caches with the dir (they would otherwise pin
       // persisted frames for dirs that no longer exist)
       GraphAnn.GraphCache.invalidate(oldPath)
@@ -462,20 +378,6 @@ class Engine(
 
   def dropCollection(name: String): Boolean = {
     runtime.remove(name); indexes.remove(name)
-    // unregister the collection's bucketed table (external — dropping the
-    // table leaves the files; they go with the collection dir). Only drop a
-    // table that still points at THIS collection's files: another collection
-    // reusing the name has repointed it at its own corpus, which must survive
-    cfs.readLinesSafe(bucketedMetaPath(name)).foreach { lines =>
-      scala.util.Try((lines(0), lines(3))).toOption.foreach { case (table, path) =>
-        val loc = scala.util.Try(spark.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-          .location.toString).toOption
-        if (loc.exists(l => canonLoc(l) == canonLoc(path)))
-          spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      }
-      cfs.deleteIfExists(bucketedMetaPath(name))
-    }
     // the version counter resets if the collection is recreated, so caches
     // keyed on the old incarnation must not survive the drop
     cache.clear()
@@ -519,7 +421,7 @@ class Engine(
   def upsertDocument(coll: String, doc: Document): Unit =
     batchUpsertDocuments(coll, Seq(doc))
 
-  /** All-or-nothing batch upsert with dimension validation
+  /** All-or-nothing batch upsert with dimension and finiteness validation
     * (`document.go:280-285`); docs with `embedText` resolved through the
     * embedding provider (`document.go:54-68`).
     *
@@ -542,6 +444,16 @@ class Engine(
   def batchUpsertDocuments(coll: String, docs: Seq[Document]): Unit = {
     val cfg = configOf(coll)
     require(docs.nonEmpty, "empty batch")
+    // all-or-nothing validation (document.go:280-285), before either write
+    // path: the collection's dimension, and finite components — a NaN or
+    // ±Inf row would poison every distance it takes part in
+    docs.foreach { d =>
+      if (d.vector == null || d.vector.length != cfg.dimension)
+        throw new IllegalArgumentException(s"document '${d.id}': vector dimension " +
+          s"${Option(d.vector).map(_.length).getOrElse(0)} != collection dimension ${cfg.dimension}")
+      require(d.vector.forall(f => !f.isNaN && !f.isInfinite),
+        s"document '${d.id}' has a non-finite vector component")
+    }
     // a multivector collection's rows MUST carry the doc-key param — a plain
     // single-vector upsert would plant rows MaxSim search can't attribute to
     // any document (hard error, the no-silent-fallback rule)
@@ -551,12 +463,6 @@ class Engine(
     val maintained = tierLayout(coll, Tier(cfg.indexType))
       .exists(p => currentLayoutStamp(coll, p).isDefined)
     if (!maintained) { store.upsert(coll, docs, cfg.dimension); return }
-    // all-or-nothing dimension validation (document.go:280-285) — the
-    // DataFrame commit below bypasses the store's Seq-side check
-    docs.find(d => d.vector == null || d.vector.length != cfg.dimension).foreach { d =>
-      throw new IllegalArgumentException(
-        s"document '${d.id}': vector dimension ${Option(d.vector).map(_.length).getOrElse(0)} != collection dimension ${cfg.dimension}")
-    }
     val collapsed =
       if (docs.map(_.id).distinct.size == docs.size) docs
       else docs.zipWithIndex.groupBy(_._1.id).valuesIterator
@@ -626,7 +532,6 @@ class Engine(
     val wasCurrent = layoutOpt.exists(p => currentLayoutStamp(coll, p).isDefined)
     // delete-through-delta needs versioned delta rows (see ingest's guard)
     val versionedDelta = cfg.indexType != IndexType.Hnsw || hasVersionedDelta(coll)
-    val bucketedPre = if (wasCurrent) currentBucketedMeta(coll) else None
     val v = store.deleteVersioned(coll, ids, cfg.dimension)
     if (wasCurrent && versionedDelta) {
       // driver-sized deletes write their sidecar run locally (zero jobs)
@@ -646,12 +551,8 @@ class Engine(
       // same never-lie guards as ingest
       if (store.currentVersion(coll) == v &&
           !cfs.exists(compactIntentPath(coll)) &&
-          layoutGen(coll) == genAtStart) {
-        bucketedPre.foreach { case (table, buckets, path, _) =>
-          atomicWrite(bucketedMetaPath(coll), s"$table\n$buckets\n$v\n$path")
-        }
+          layoutGen(coll) == genAtStart)
         atomicWrite(s"$root/$coll/index/layout_version", v.toString)
-      }
       maybeFoldTombstones(coll, cfg, layoutOpt.get)
     }
   }
@@ -825,10 +726,6 @@ class Engine(
       // (the re-upsert below bumps the store version past any stamp the
       // crashed attempt could have written)
       val replayAfterPartialAppend = batchId.isDefined && cfs.exists(intentPath)
-      // capture bucketed-table currency BEFORE the upsert bumps the version:
-      // "current" here means it reflects every row up to this batch's
-      // predecessor — exactly the state an append of THIS batch keeps current
-      val bucketedPre = if (maintainable) currentBucketedMeta(coll) else None
       // v is OUR batch's committed version — stamping any later version would
       // mark the layout current while missing an interleaved writer's rows.
       // With driverRows the commit goes through the Seq path (the local run
@@ -874,12 +771,7 @@ class Engine(
       // DRIVER (LocalEncode — bit-identical twins of the codegen kernels;
       // the models are tiny and already loaded) and appends via the local
       // run writer — the same zero-job path the hnsw branch below takes.
-      // Skipped while a bucketed table is current: its append is a Spark
-      // bucketBy write by construction, and staling it per point write
-      // would trade the batch-search tier for serving latency.
-      val localCode = index.collect {
-        case c: CodeIndex if localDocs.isDefined && bucketedPre.isEmpty => c
-      }
+      val localCode = index.collect { case c: CodeIndex if localDocs.isDefined => c }
       if (localDocs.isDefined && tier == Tier.Hnsw) {
         // ZERO-JOB append for driver-sized hnsw batches (the REST point
         // write): the graph tier's "encode" is a plain (id, vector,
@@ -887,8 +779,7 @@ class Engine(
         // the local run writer — store commit, delta append, and shadows
         // all come from the SAME driver Seq (no plan evaluation at all,
         // the strongest form of the single-evaluation rule above). Write
-        // ordering and stamp guards are identical to the Spark branch;
-        // hnsw collections have no bucketed table to maintain.
+        // ordering and stamp guards are identical to the Spark branch.
         val docs = driverRows.get
         val delta = docs.map(d => (d.id, d.vector.toSeq))
         GraphAnn.registerDeltaRun(LocalRunWriter.writeDeltaRun(appendPath, delta, v), delta, v)
@@ -933,13 +824,13 @@ class Engine(
           encoded.write.mode("append").parquet(appendPath)
         // update batches: tombstone every touched id at THIS batch's version —
         // the appended rows (version == v) survive the shadow rule, every
-        // older incarnation of the ids dies at read time. Written before ANY
-        // stamp advance (including the bucketed meta below): a stamp written
-        // first would open a window where a concurrent search reads the
-        // layout as CURRENT without the shadows and serves superseded
-        // incarnations beside the new ones. Crash after this write is
-        // harmless (stamps still old → stale → fallback); duplicate tombstone
-        // rows from a replay are harmless too (max-per-id aggregation).
+        // older incarnation of the ids dies at read time. Written before the
+        // stamp advance: a stamp written first would open a window where a
+        // concurrent search reads the layout as CURRENT without the shadows
+        // and serves superseded incarnations beside the new ones. Crash
+        // after this write is harmless (stamps still old → stale →
+        // fallback); duplicate tombstone rows from a replay are harmless
+        // too (max-per-id aggregation).
         // ids come from the CACHED encoded frame, not a re-evaluation of the
         // caller's plan: a nondeterministically re-evaluated source could
         // otherwise tombstone a different id set than was committed and
@@ -948,21 +839,6 @@ class Engine(
         if (needTombstones)
           encoded.select(col("id")).withColumn("ver", lit(v))
             .write.mode("append").parquet(tombstonesPath(layoutPath))
-        // keep the bucketed table current too (streaming maintenance): append
-        // the same encoded rows bucketed, then advance the meta stamp under the
-        // same still-newest condition. A crash between the two appends leaves
-        // the intent marker in place → the replay stales everything; a crash
-        // before the meta update leaves the meta stale → searches fall back
-        // (the extra table rows are unread until the next buildIndex rewrite)
-        bucketedPre.foreach { case (table, buckets, path, _) =>
-          encoded.write.mode("append").option("path", path)
-            .bucketBy(buckets, "cluster_id").sortBy("cluster_id")
-            .saveAsTable(table)
-          if (store.currentVersion(coll) == v &&
-              !cfs.exists(compactIntentPath(coll)) &&
-              layoutGen(coll) == genAtStart)
-            atomicWrite(bucketedMetaPath(coll), s"$table\n$buckets\n$v\n$path")
-        }
       } finally encoded.unpersist(blocking = false)
       }
       // advance the stamp only if our write is still the newest (a racer
@@ -1133,7 +1009,6 @@ class Engine(
     val stamp = store.currentVersion(coll)
     if (currentLayoutStamp(coll, layoutPath).isEmpty) return false
     val gen = layoutGen(coll)
-    val bucketedPre = currentBucketedMeta(coll)
     val stampPath = s"$root/$coll/index/layout_version"
     val hp = new org.apache.hadoop.fs.Path(layoutPath)
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1174,16 +1049,6 @@ class Engine(
       // THE flip: readers resolve the folded generation from here on;
       // the superseded one is GC'd a cycle later (flipLayoutGen)
       flipLayoutGen(coll, tier, gen)
-      // the bucketed table (if current) accumulated the same appended
-      // files — rebuild it from the compacted generation under the same
-      // stamp. Stale-first HERE (the bucketed table is one fixed
-      // location, not generation-versioned): with the meta gone,
-      // currentBucketedMeta returns None and searches fall back a tier
-      // until writeBucketedLayout's final atomicWrite restores it.
-      bucketedPre.foreach { case (_, _, _, _) =>
-        cfs.deleteIfExists(bucketedMetaPath(coll))
-        writeBucketedLayout(coll, cfg, spark.read.parquet(next), stamp, tier)
-      }
       // a writer interleaved with the fold? its rows live only in the
       // retired generation — the folded one must not serve as current
       // (stale the stamp; searches fall back until the next buildIndex)
@@ -1303,27 +1168,12 @@ class Engine(
         index.save(snapshotPath(coll, tier)) // S8 snapshot
         // materialize the encoded layout: clustered tiers' searches become
         // physically partition-pruned scans of only the probed cluster
-        // directories; code tiers scan codes, not vectors
-        val encoded = index.encode(corpus)
-        // optional BUCKETED layout (`bucketed_table` collection param, the
-        // clustered tiers): the repeated-KNN-join shape — the
-        // searchDistributed equi-join reads the corpus pre-hashed on
-        // cluster_id, so only the query frame shuffles. External table
-        // (files under the collection dir) + a meta file so a fresh session
-        // re-registers it (bucketedCorpus); the meta's stamp commits it to
-        // THIS build — any later write stales it exactly like the
-        // partitioned layout. Its rows are the layout's, encoded once.
-        val bucketed = t.clustered && cfg.params.contains("bucketed_table")
-        // cached only for the bucketed table's second write: an uncached
-        // plan keeps AQE's partition coalescing, so the layout holds about
-        // one file per cell, not one per (task, cell)
-        if (bucketed) encoded.cache()
-        try {
-          val w = encoded.write.mode("overwrite")
-          (if (t.clustered) w.partitionBy("cluster_id") else w).parquet(nextPath(tier))
-          flip(tier)
-          if (bucketed) writeBucketedLayout(coll, cfg, encoded, stamp, tier)
-        } finally if (bucketed) encoded.unpersist(blocking = false)
+        // directories; code tiers scan codes, not vectors. Written uncached:
+        // the plan keeps AQE's partition coalescing, so the layout holds
+        // about one file per cell, not one per (task, cell)
+        val w = index.encode(corpus).write.mode("overwrite")
+        (if (t.clustered) w.partitionBy("cluster_id") else w).parquet(nextPath(tier))
+        flip(tier)
         stampLayout()
         preloadCells(coll, index, nextPath(tier), stamp)
       case Tier.Hnsw =>
@@ -1395,8 +1245,11 @@ class Engine(
     */
   private def preloadCells(coll: String, index: LayoutEncoder, path: String,
       stamp: Long): Unit =
-    if (currentLayoutStamp(coll, path).contains(stamp))
-      cellServe(index).foreach(_.preload(path, stamp))
+    index match {
+      case c: CellIndex if currentLayoutStamp(coll, path).contains(stamp) =>
+        cellServe(c).foreach(_.preload(path, stamp, c.coarse.nlist))
+      case _ => ()
+    }
 
   // ---- search (POST .../vectors/search, .../documents/search) ----
 
@@ -1430,13 +1283,11 @@ class Engine(
         // applies
         if (!t.clustered) guardQuerySetSize(queries, cfg)
         val index = builtIndex(coll, cfg, t).getOrElse(notBuilt(coll))
-        // bucketed table first (clustered tiers; corpus-shuffle-free
-        // equi-join), then the current layout, then a live re-encode — all
-        // three produce identical results; they differ only in how much
-        // work the plan skips. Lazy corpus: the layout-served branches must
-        // not pay the store's parquet listing + schema inference
-        val encoded = (if (t.clustered) bucketedCorpus(coll) else None)
-          .orElse(currentLayout(coll, tierLayout(coll, t).get).map(_._1))
+        // the current layout, else a live re-encode — both produce
+        // identical results; they differ only in how much work the plan
+        // skips. Lazy corpus: the layout-served branch must not pay the
+        // store's parquet listing + schema inference
+        val encoded = currentLayout(coll, tierLayout(coll, t).get).map(_._1)
           .getOrElse(index.encode(store.read(coll)))
         index.search(encoded, queries, k, getParams(coll), distributed = true)
       case _ =>
@@ -1685,27 +1536,6 @@ class Engine(
     Right(out.result())
   }
 
-  /** The collection's bucketed inverted-list table, if built AND current
-    * (meta stamp == live store version — a streaming append or upsert since
-    * the build stales it, exactly like the partitioned layout; searches then
-    * fall back one tier, never serve missing rows). If the files exist but
-    * the table is absent from THIS session's catalog (fresh session after a
-    * restart — the in-memory catalog died with the old one), it is
-    * re-registered as an external bucketed table over the same files, so the
-    * corpus-shuffle-free join shape survives engine restarts.
-    */
-  private def bucketedCorpus(coll: String): Option[DataFrame] =
-    currentBucketedMeta(coll).map { case (table, _, _, stamp) =>
-      // the bucketed files carry every appended row, including ones later
-      // shadowed by an update/delete tombstone — exclude them here exactly
-      // like the partitioned layout (the sidecar lives under the tier's
-      // layout dir; both views must agree row-for-row)
-      layoutDir(coll) match {
-        case Some(lp) => applyTombstones(lp, stamp)(spark.table(table))
-        case None => spark.table(table)
-      }
-    }
-
   /** The collection's CURRENT index-layout directory (generation-resolved),
     * if its tier materializes one — the path tests/tools must use instead
     * of assuming the generation-0 name (every full rewrite flips to a new
@@ -1835,11 +1665,10 @@ class Engine(
             // routeNprobe (setparams; only settable on routeNlist-built
             // collections) narrows the beam to the query's nearest cells;
             // the stale-layout fallback above ignores it — full fan-out is
-            // a recall superset, never a correctness change. SMALL routed
-            // query sets take the partition-pruned path (scan only the
-            // probed cells' directories); batches amortize the co-located
-            // shuffle instead. Both paths share executor cache entries, so
-            // mixing them never rebuilds a cell twice.
+            // a recall superset, never a correctness change. A routed
+            // unfiltered request reaches this plan only when the driver
+            // serve declined it (a batch over `maxLocalServeBatch`, or
+            // duplicate qids).
             val routeP = getParams(coll).get("routeNprobe")
             // cache under the GRAPH EPOCH, not the store version: streaming
             // delta appends advance layout_version (the layout IS current)
@@ -1850,26 +1679,18 @@ class Engine(
             val exIds: Set[Any] = tombMap.keySet
             val kEff = k + tombMap.size
             val efEff = math.max(ef, kEff)
-            val graphHits = routeP match {
-              case Some(p) if queries.size <= 64 && eligible.isEmpty =>
-                GraphAnn.searchRoutedPruned(spark, lp, qDf, kEff,
-                  cfg.spaceType, ef = efEff, routeNprobe = p,
-                  cacheKey = Some((lp, epoch)),
-                  excludeIds = exIds)
-              case _ =>
-                // filtered requests run FULL fan-out (routeNprobe dropped):
-                // routing prunes cells by vector geometry, but eligibility
-                // can be uncorrelated with geometry — a selective predicate
-                // whose survivors live outside the probed cells would
-                // return under-k/zero hits the pre-eligibility fallback
-                // (full live rebuild) never missed. Full fan-out over the
-                // persisted layout is a recall superset at in-beam cost.
-                GraphAnn.searchFromLayout(spark, lp, qDf, kEff,
-                  cfg.spaceType, ef = efEff,
-                  cacheKey = Some((lp, epoch)),
-                  routeNprobe = if (eligible.isDefined) None else routeP,
-                  excludeIds = exIds, eligibleIds = eligIds)
-            }
+            // filtered requests run FULL fan-out (routeNprobe dropped):
+            // routing prunes cells by vector geometry, but eligibility can
+            // be uncorrelated with geometry — a selective predicate whose
+            // survivors live outside the probed cells would return
+            // under-k/zero hits the pre-eligibility fallback (full live
+            // rebuild) never missed. Full fan-out over the persisted layout
+            // is a recall superset at in-beam cost.
+            val graphHits = GraphAnn.searchFromLayout(spark, lp, qDf, kEff,
+              cfg.spaceType, ef = efEff,
+              cacheKey = Some((lp, epoch)),
+              routeNprobe = if (eligible.isDefined) None else routeP,
+              excludeIds = exIds, eligibleIds = eligIds)
             // streaming-insert delta: rows ingested since buildIndex live
             // as (id, vector, version) under `_delta` — exact-scan them
             // (exact ≥ graph recall for those rows), tombstone-filtered,

@@ -53,8 +53,7 @@ private[api] abstract class CellIndex extends CodeIndex {
   *  - `key`: the layout-dir stem (`<key>_layout[_g<n>]`) and snapshot name
   *    (`<key>.snapshot`) — the names every store was written with; None =
   *    flat, no layout.
-  *  - `clustered`: the layout is partitioned by `cluster_id` (and may carry
-  *    the bucketed table).
+  *  - `clustered`: the layout is partitioned by `cluster_id`.
   *  - `params`: the runtime keys `setParams` accepts for the tier.
   */
 private[api] sealed abstract class Tier[+I <: LayoutEncoder](

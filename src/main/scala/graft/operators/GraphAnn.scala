@@ -497,9 +497,9 @@ object GraphAnn {
     * (path, epoch), up to the cache bounds as they stand (no eviction).
     */
   private[graft] def preloadLocal(path: String, epoch: Long, space: SpaceType): Unit = {
-    loadRouteCentroids(path, Some((path, epoch)))
+    val cells = loadRouteCentroids(path, Some((path, epoch))).length
     LocalCellResolve.preload[NswIndex](localCellCache, localFiles, path, epoch,
-      path, "part", maxLocalServeBytes, CellCols, cellGraph(space), None)
+      path, "part", cells, maxLocalServeBytes, CellCols, cellGraph(space), None)
   }
 
   private def cellGraph(space: SpaceType)(parts: Seq[(graft.core.LayoutFile, Array[Int])]): NswIndex =

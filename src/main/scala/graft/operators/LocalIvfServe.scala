@@ -153,18 +153,22 @@ private[graft] object LocalCellResolve {
     * in cell order, up to the cache's entry and byte bounds as they stand:
     * nothing is evicted but the retired generations, and decoded files are
     * memoized only where they fit. Oversized cells and cells already held
-    * are skipped. Returns the cells cached.
+    * are skipped. Each of the model's `nCells` cells without a partition
+    * dir (k-means left it without rows) is held as empty, unlisted, so its
+    * first probe is a hit. Returns the cells cached.
     */
   def preload[C](cache: LocalCellCache[C], files: LayoutFiles, keyPath: String,
-      stamp: Long, fsPath: String, partCol: String, maxBytes: Long,
+      stamp: Long, fsPath: String, partCol: String, nCells: Int, maxBytes: Long,
       columns: Seq[String], make: Seq[(LayoutFile, Array[Int])] => C,
       tombDir: Option[String]): Int =
     try {
       val tombs = tombDir.map(files.tombstones(_, stamp))
-      val cells = LayoutFiles.partitions(fsPath, partCol)
+      val onDisk = LayoutFiles.partitions(fsPath, partCol).toSet
+      val cells = (onDisk ++ (0 until nCells)).toSeq.sorted
         .filterNot(c => cache.entry(keyPath, c).exists(_.stamp >= stamp))
-      val (_, loadable) = listCells(fsPath, partCol, cells, maxBytes)
-      loadable.iterator.map { case (c, fs) =>
+      val (_, loadable) = listCells(fsPath, partCol, cells.filter(onDisk), maxBytes)
+      val empty = cells.filterNot(onDisk).map((_, Vector.empty[String]))
+      (loadable ++ empty).sortBy(_._1).iterator.map { case (c, fs) =>
         cache.preload(keyPath, c, build(cache, files, stamp, fs, columns, tombs, make, evict = false))
       }.takeWhile(identity).size
     } catch { case _: LayoutFiles.UnsupportedIdType => 0 }
@@ -178,8 +182,8 @@ private[graft] trait LocalCellServe {
   protected def files: LayoutFiles
   protected def cellColumns: Seq[String]
 
-  /** Preload the cells of the layout at `path`, current at `stamp`. */
-  def preload(path: String, stamp: Long): Unit
+  /** Preload the `nCells` cells of the layout at `path`, current at `stamp`. */
+  def preload(path: String, stamp: Long, nCells: Int): Unit
 
   /** `f`, one run `LocalRunWriter.writeLayoutRuns` wrote at `version`. */
   def registerLayoutRun(f: String, rows: Seq[LocalRunWriter.LayoutRow], version: Long): Unit =
@@ -272,9 +276,9 @@ object LocalIvfServe extends LocalCellServe {
   def metrics: Map[String, Long] =
     cache.metrics("ivf_local", maxLocalIvfBytes) ++ files.metrics("ivf_local")
 
-  def preload(path: String, stamp: Long): Unit =
+  def preload(path: String, stamp: Long, nCells: Int): Unit =
     LocalCellResolve.preload[Cell](cache, files, path, stamp, path, "cluster_id",
-      maxLocalIvfBytes, cellColumns, cellOf, Some(s"$path/_tombstones"))
+      nCells, maxLocalIvfBytes, cellColumns, cellOf, Some(s"$path/_tombstones"))
 
   private[graft] def dropCells(layoutIdPrefix: String): Unit = {
     cache.drop(layoutIdPrefix); files.drop(layoutIdPrefix)
@@ -409,9 +413,9 @@ object LocalPqServe extends LocalCellServe {
   def metrics: Map[String, Long] =
     cache.metrics("pq_local", maxLocalPqBytes) ++ files.metrics("pq_local")
 
-  def preload(path: String, stamp: Long): Unit =
+  def preload(path: String, stamp: Long, nCells: Int): Unit =
     LocalCellResolve.preload[Cell](cache, files, path, stamp, path, "cluster_id",
-      maxLocalPqBytes, cellColumns, cellOf, Some(s"$path/_tombstones"))
+      nCells, maxLocalPqBytes, cellColumns, cellOf, Some(s"$path/_tombstones"))
 
   private[graft] def dropCells(layoutIdPrefix: String): Unit = {
     cache.drop(layoutIdPrefix); files.drop(layoutIdPrefix)

@@ -85,6 +85,28 @@ class CellResidencySpec extends SparkSpec {
     }
   }
 
+  for (t <- served) test(s"${t.name}: a trained cell k-means left empty is held at the build; " +
+      "a search probing it loads and lists nothing") {
+    val e = new Engine(spark, testRoot("resident-empty"))
+    // three distinct vectors for four cells: the trainer pads its start with
+    // a repeat, whose cell the (distance, index) tie-break leaves without rows
+    val corners = Seq(Array(0f, 0f, 0f, 0f), Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f))
+    e.createCollection(CollectionConfig("c", 4, t.indexType, SpaceType.L2, params = t.create))
+    e.batchUpsertDocuments("c", (0 until 30).map(i => Document(s"d$i", corners(i % 3))))
+    def m(k: String): Long = t.metrics()(s"${t.prefix}_$k")
+    t.cold()
+    e.buildIndex("c", nlist = 4)
+    e.setParams("c", t.params) // every cell probed
+    assert(partitionDirs(e.layoutDir("c").get) === 3, "k-means left no cell empty")
+    val (hits, misses, loads) = (m("hits"), m("misses"), m("loads"))
+    val got = e.searchHits("c", Seq(("q", Array(0.1f, 0.1f, 0f, 0f))), 3)
+      .fold(d => fail(s"${t.name} declined: $d"), identity)
+    assert(got.size === 3)
+    assert(m("misses") === misses && m("loads") === loads,
+      "probing the empty cell listed or loaded it")
+    assert(m("hits") === hits + 4, "every probed cell, the empty one too, must be a hit")
+  }
+
   test("a cell file holding rows above the stamp (a racing writer) shows them only once " +
       "the stamp covers them, carried or cold alike") {
     val dir = testRoot("resident-race") + "/index/ivf_flat_layout_g1"

@@ -343,9 +343,32 @@ class EngineSpec extends SparkSpec {
         intercept[IllegalArgumentException](
           new Engine(spark, root).setParams(c, Map("nprobe" -> 3)))
       }
+      // a fresh engine (a restart) answers searchVectorsDf the same
+      def rowsOf(eng: Engine) = eng.searchVectorsDf(c, qDf, 3)
+        .select("query_id", "id", "rnk").as[(String, String, Long)].collect().toSet
+      assert(rowsOf(new Engine(spark, root)) === rowsOf(e), s"${it.name}: searchVectorsDf after a reopen")
+      // writes after the build: a point upsert is visible to searchDocuments,
+      // it and an ingested batch to searchVectorsDf, before and after a
+      // compaction folds them in; k is deep enough that every tier's
+      // candidate set holds the whole corpus
+      val p1 = Array.tabulate(8)(j => if (j % 2 == 0) 10f else 0f)
+      val p2 = Array.tabulate(8)(j => if (j % 2 == 0) 0f else 10f)
+      val deep = docs.size + 2
+      e.upsertDocument(c, Document("new", p1))
+      e.ingestBatchIndexed(c, Seq(("new2", p2.toSeq, Map.empty[String, String]))
+        .toDF("id", "vector", "params"), assumeNewIds = true)
+      assert(e.searchDocuments(c, p1, deep).head.id === "new",
+        s"${it.name}: a write after the build is not served")
+      def tops(): Seq[(String, String)] = e.searchVectorsDf(c,
+          Seq(("q1", p1.toSeq), ("q2", p2.toSeq)).toDF("query_id", "query_vec"), deep)
+        .filter(col("rnk") === 1).select("query_id", "id").as[(String, String)]
+        .collect().toSeq.sorted
+      assert(tops() === Seq("q1" -> "new", "q2" -> "new2"), s"${it.name}: searchVectorsDf")
       // the graph tier folds through its own rebuild, never compactLayout
       assert(e.compactLayout(c) === (stem.isDefined && it != IndexType.Hnsw),
         s"${it.name}: compactLayout after build")
+      assert(tops() === Seq("q1" -> "new", "q2" -> "new2"),
+        s"${it.name}: searchVectorsDf after compactLayout")
     }
     // routeNprobe: hnsw with routeNlist only, bounded by it
     e.createCollection(CollectionConfig("routed", 8, IndexType.Hnsw,
@@ -357,6 +380,26 @@ class EngineSpec extends SparkSpec {
       params = Map("multivector" -> "true")))
     e.setParams("mv", Map("maxsimCandM" -> 4))
     intercept[IllegalArgumentException](e.setParams("mv", Map("maxsimCandM" -> 0)))
+  }
+
+  test("routed hnsw: a duplicated qid answers one k-row group per qid") {
+    val e = freshEngine(dim = 8)
+    e.createCollection(CollectionConfig("rq", 8, IndexType.Hnsw,
+      params = Map("routeNlist" -> "4")))
+    val rnd = new scala.util.Random(11)
+    val docs = (0 until 80).map(i => Document(i.toString, Array.fill(8)(rnd.nextFloat())))
+    e.batchUpsertDocuments("rq", docs)
+    e.buildIndex("rq", nlist = 4)
+    e.setParams("rq", Map("routeNprobe" -> 2))
+    val qs = Seq(("a", docs(3).vector), ("a", docs(40).vector), ("b", docs(40).vector))
+    // the driver serve declines the request; the distributed plan answers it
+    assert(e.searchHits("rq", qs, 5) === Left(Decline.DuplicateQids))
+    val rows = e.searchVectors("rq", qs, 5).select("query_id", "rnk").collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    for (q <- Seq("a", "b"))
+      assert(rows.filter(_._1 == q).map(_._2).sorted.toSeq === (1L to 5L),
+        s"qid $q: ${rows.toSeq}")
+    assert(rows.length === 10)
   }
 
   test("delete propagates to search; re-upsert resurrects") {

@@ -436,6 +436,23 @@ class ServerSpec extends SparkSpec {
     assert(req("POST", "/v1/collections/edge/vectors/search",
       """{"vector":[1,1],"top_k":0}""")._1 === 400)
     assert(req("POST", "/v1/collections/edge/vectors/search", """{"vector":[1,1],"limit":1}""")._1 === 200)
+    // writes check the same components, on a collection whose layout the
+    // write maintains (edge) and on one the store alone takes (flat); a
+    // rejected write commits nothing, so the store version stays put
+    req("POST", "/v1/collections", """{"name":"edgeflat","dimension":2,"index_type":"flat"}""")
+    val store = new graft.core.DocStore(spark, root)
+    val writes = Seq(
+      "documents" -> """{"id":"inf","vector":[1e39,1]}""",
+      "documents/batchupsert" ->
+        """{"documents":[{"id":"ok","vector":[1,1]},{"id":"inf","vector":[1,-1e39]}]}""")
+    for (coll <- Seq("edge", "edgeflat")) {
+      val v0 = store.currentVersion(coll)
+      for ((route, b) <- writes) {
+        val (code, v) = req("POST", s"/v1/collections/$coll/$route", b)
+        assert(code === 400 && v.asObj("error").asStr.contains("non-finite"), s"$coll $route $b: $code $v")
+      }
+      assert(store.currentVersion(coll) === v0, s"$coll: a rejected write moved the store version")
+    }
   }
 
   /** A warm vectors/search and documents/search on `coll`, and the first
