@@ -167,20 +167,13 @@ object RecallBench {
         queryId = "qid", queryVec = "qv", cacheKey = Some((servePath, 0L)),
         corpusIdName = "vec_id", routeNprobe = Some(2))
     }
-    // partition-pruned point-serve: reads only the probed cells' dirs —
-    // the cold-single-query shape (scan bytes ∝ routeNprobe/nlist)
-    serveLatency("graph_routed_pruned") { q =>
-      GraphAnn.searchRoutedPruned(spark, servePath, q, k, SpaceType.L2, ef = 80,
-        routeNprobe = 2, queryId = "qid", queryVec = "qv",
-        cacheKey = Some((servePath, 0L)), corpusIdName = "vec_id")
-    }
     // driver-local point serve: warm queries launch ZERO Spark jobs — beams
     // run on the driver against cached cell graphs, so this row isolates
-    // the pure in-memory serving cost the two rows above bury under the
+    // the pure in-memory serving cost the rows above bury under the
     // per-job scheduling floor. Pre-warm with the full query set once (the
     // per-query warm-up below only heats ONE query's cells; a steady
-    // serving loop is warm by definition — cold-cell cost is the
-    // `graph_routed_pruned` row above).
+    // serving loop is warm by definition). Cold cells are counted, not
+    // timed: `local_serve_loads` / `local_serve_misses` in /v1/metrics.
     GraphAnn.searchPointLocal(spark, servePath,
       spark.createDataFrame(java.util.Arrays.asList(qRows: _*), queries.schema),
       k, SpaceType.L2, ef = 80, routeNprobe = 2, queryId = "qid",
@@ -213,8 +206,8 @@ object RecallBench {
 
     // ---- REST wire floor -------------------------------------------------
     // The numbers above time the ENGINE call; a serving caller pays the full
-    // wire: HTTP parse → Engine dispatch (small routed query sets take the
-    // partition-pruned point path) → JSON response. Same p50/p95 protocol,
+    // wire: HTTP parse → Engine dispatch (a routed query serves on the
+    // driver, zero jobs) → JSON response. Same p50/p95 protocol,
     // one POST vectors/search per query against an in-process Server —
     // quantifies the whole REST floor, not just the Spark job.
     {

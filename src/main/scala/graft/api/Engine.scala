@@ -563,14 +563,6 @@ class Engine(
     store.read(coll)
   }
 
-  /** Typed view of the collection (compile-time field checks; the engine
-    * currency stays DataFrame — SURVEY §1.4).
-    */
-  def documentsAs(coll: String): org.apache.spark.sql.Dataset[Document] = {
-    import spark.implicits._
-    documents(coll).select(col("id"), col("vector"), col("params")).as[Document]
-  }
-
   def compact(coll: String): Unit = { configOf(coll); store.compact(coll) }
 
   /** Micro-batch upsert that MAINTAINS the partitioned index layout
@@ -1376,8 +1368,8 @@ class Engine(
   }
 
   /** Routed-graph point requests beam on driver-cached cell graphs — a warm
-    * query launches ZERO Spark jobs. Results ≡ `searchRoutedPruned` at
-    * equal knobs: same reconstruction, same beams, same (distance, id)
+    * query launches ZERO Spark jobs. Results ≡ `GraphAnn.searchFromLayout`
+    * at equal knobs: same reconstruction, same beams, same (distance, id)
     * merge; delta rows exact-scanned with the kernels' arithmetic and
     * merged the same way. Filtered requests beam in-beam-filtered with full
     * fan-out (`searchPointLocal` mirrors `searchFromLayout`'s eligibleIds
@@ -1398,7 +1390,7 @@ class Engine(
     // cache under the GRAPH EPOCH, not the store version: streaming delta
     // appends re-stamp the layout without touching the adjacency
     val epoch = readLongSafe(hnswEpochPath(coll)).getOrElse(stamp)
-    val kEff = k + tombMap.size
+    val kEff = math.min(k.toLong + tombMap.size, Int.MaxValue.toLong).toInt
     val efEff = math.max(getParams(coll).getOrElse("efsearch", 40), kEff)
     localRoute(Some(stamp), coll, queries, eligible) { (stamp, elig) =>
       val delta = GraphAnn.localDeltaRows(s"$lp/_delta", stamp)
@@ -1508,7 +1500,8 @@ class Engine(
     // space, re-ranks original)
     val short = graft.operators.LocalPqServe.adcShortlistLocalRows(path,
       stamp, pq, shortQueries.map { case (q, v) => (q: Any, v) },
-      k * graft.operators.IvfPq.DefaultRerankFactor, nprobe, eligible) match {
+      graft.operators.IvfPq.shortlistDepth(k, graft.operators.IvfPq.DefaultRerankFactor),
+      nprobe, eligible) match {
       case Right(rows) => rows
       case Left(d) => return Left(d)
     }
@@ -1677,7 +1670,7 @@ class Engine(
             val epoch = readLongSafe(
               hnswEpochPath(coll)).getOrElse(stamp)
             val exIds: Set[Any] = tombMap.keySet
-            val kEff = k + tombMap.size
+            val kEff = math.min(k.toLong + tombMap.size, Int.MaxValue.toLong).toInt
             val efEff = math.max(ef, kEff)
             // filtered requests run FULL fan-out (routeNprobe dropped):
             // routing prunes cells by vector geometry, but eligibility can

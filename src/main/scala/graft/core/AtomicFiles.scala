@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 
 /** Shared crash-safe marker-file IO: every on-disk control file in the
   * engine (DocStore's `_version` counter, Engine's layout stamps, streaming
-  * replay ledger/intent markers, bucketed-table meta) commits via
+  * replay ledger/intent markers) commits via
   * tmp + atomic rename, so a reader never observes a truncated file.
   *
   * Read-side policies differ by file AUTHORITY and stay at the call sites:

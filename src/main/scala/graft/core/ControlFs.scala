@@ -22,7 +22,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * `AtomicFiles` documents:
   *
   *  - RECOVERABLE MARKERS (`atomicWrite`/`readLongSafe`/`readLinesSafe`):
-  *    layout stamps, intents, ledgers, epochs, bucketed meta. Writers go
+  *    layout stamps, intents, ledgers, epochs. Writers go
   *    tmp + rename (atomic on POSIX/HDFS); readers degrade corrupt/absent
   *    to "marker absent" → fall back / rebuild. On object stores, where
   *    rename is copy+delete, a torn write reads as absent-or-old — every
@@ -48,13 +48,6 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *    (Iceberg/Delta) use for their root pointers.
   */
 trait ControlFs {
-
-  /** True when the root is a plain local path (java.nio-addressable).
-    * Gates nothing functionally — the driver-direct parquet fast paths
-    * (LocalPointReader/LocalRunWriter) are scheme-aware themselves — but
-    * lets callers pick latency-sensitive defaults.
-    */
-  def isLocal: Boolean
 
   // ---- recoverable markers ----
   def atomicWrite(path: String, content: String): Unit
@@ -172,8 +165,6 @@ object ControlFs {
   * read and advance unchanged).
   */
 object NioControlFs extends ControlFs {
-  override def isLocal: Boolean = true
-
   override def atomicWrite(path: String, content: String): Unit =
     AtomicFiles.atomicWrite(Paths.get(path), content)
 
@@ -328,8 +319,6 @@ object NioControlFs extends ControlFs {
 final class HadoopControlFs(conf: Configuration) extends ControlFs {
 
   private def fsOf(path: String): FileSystem = new HPath(path).getFileSystem(conf)
-
-  override def isLocal: Boolean = false
 
   /** tmp + rename through the `FileSystem` API (NOT `FileContext`: that
     * requires an `AbstractFileSystem` binding which object-store schemes

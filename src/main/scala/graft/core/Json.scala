@@ -23,7 +23,15 @@ object Json {
       case Num(n) => n
       case v => throw new IllegalArgumentException(s"expected number, got $v")
     }
-    def asInt: Int = asDouble.toInt
+    /** An integral number in Int range: 2.5 or 1e12 is rejected, never
+      * truncated or clamped.
+      */
+    def asInt: Int = {
+      val d = asDouble
+      if (d != math.rint(d) || d < Int.MinValue || d > Int.MaxValue)
+        throw new IllegalArgumentException(s"expected an integer, got $d")
+      d.toInt
+    }
   }
   case class Obj(fields: Map[String, Value]) extends Value
   case class Arr(values: Seq[Value]) extends Value

@@ -105,7 +105,7 @@ object BinaryQuant {
     val q = queries.select(col(queryId),
       Bridge.column(BqEncode(
         Bridge.expression(col(queryVec).cast("array<float>")), thrLit)).as("__qcode"))
-    val shortlistK = rerankVecCol.fold(kTop)(_ => kTop * rerankFactor)
+    val shortlistK = rerankVecCol.fold(kTop)(_ => IvfPq.shortlistDepth(kTop, rerankFactor))
     val shortlist = vfn.topKHits(
       encoded
         .crossJoin(broadcast(q))

@@ -941,24 +941,18 @@ object Dedup {
     }
   }
 
-  /** Duplicate-cluster resolution: connected components over near-dup pairs
-    * via iterative min-label propagation (each node adopts the smallest label
-    * reachable in one hop; converges in O(cluster diameter) rounds — dup
-    * clusters are near-cliques, so 2-4 rounds in practice). Output:
-    * (node, component) where component = smallest member id, i.e. the
-    * survivor a keep-one-per-cluster policy retains.
+  /** Duplicate-cluster resolution: connected components over near-dup pairs.
+    * Output: (node, component) where component = smallest member id, i.e.
+    * the survivor a keep-one-per-cluster policy retains.
     *
-    * Scale: each round is one equi-join + min aggregation over the edge set
-    * (both shuffles on node id); no driver-side graph. For adversarial
-    * long-chain graphs the large-star/small-star variant bounds rounds —
-    * dedup graphs don't need it.
+    * Hybrid (like the quantizer trainer): a bounded pair set resolves with
+    * driver-side union-find in one pass (union-find tolerates duplicate and
+    * undirected edges, so no union/distinct pre-shuffle). A pair set past
+    * the bound, or with an id type the driver cannot order like Spark does,
+    * runs `connectedComponentsStars`, whose round count grows with log² of
+    * the node count rather than with the graph's diameter.
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    // Hybrid (like the quantizer trainer): a bounded pair set resolves with
-    // driver-side union-find in one pass (union-find tolerates duplicate and
-    // undirected edges, so no union/distinct pre-shuffle) — the iterative
-    // join loop pays O(rounds) Spark jobs and only wins when the edge set
-    // doesn't fit one machine.
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val cached = pairs.select(col("ia"), col("ib")).cache()
     val edgeCount = cached.count()
     // the local path must be generic over the id type: the engine uses string
@@ -970,108 +964,67 @@ object Dedup {
         Some(Ordering.by((x: Any) => x.asInstanceOf[Number].longValue))
       case org.apache.spark.sql.types.StringType =>
         // UTF8String binary order, NOT String.compareTo (UTF-16 code units):
-        // the distributed loop's least()/min() compare UTF-8 bytes, and the
+        // the star rounds' least()/min() compare UTF-8 bytes, and the
         // elected component label must not depend on which path ran
         Some(Ordering.by((x: Any) =>
           org.apache.spark.unsafe.types.UTF8String.fromString(x.asInstanceOf[String])))
-      case _ => None // exotic id type: the join loop below handles it via least()
+      case _ => None // exotic id type: the star rounds handle it via least()
     }
-    if (edgeCount <= 1000000L && localOrd.isDefined) {
-      val ord = localOrd.get
-      val spark = pairs.sparkSession
-      val localEdges = cached.collect().map(r => (r.get(0), r.get(1)))
-      cached.unpersist()
-      val parent = scala.collection.mutable.Map.empty[Any, Any]
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      localEdges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb) // min label wins
-      }
-      val nodes = localEdges.flatMap(e => Seq(e._1, e._2)).distinct
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        nodes.map(n => org.apache.spark.sql.Row(n, find(n))).toSeq.asJava
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", idType),
-        org.apache.spark.sql.types.StructField("component", idType)))
-      return spark.createDataFrame(rows, schema)
+    localOrd match {
+      case Some(ord) if edgeCount <= 1000000L => unionFindComponents(cached, ord)
+      case _ => try connectedComponentsStars(cached) finally cached.unpersist()
     }
-    val edges = cached.select(col("ia").as("a"), col("ib").as("b"))
-      .union(cached.select(col("ib").as("a"), col("ia").as("b")))
-      .distinct()
-      .cache()
-    edges.count()
+  }
+
+  /** `connectedComponents`' driver branch over the cached (ia, ib) pairs,
+    * which it releases; `ord` must order ids the way Spark's min() does.
+    */
+  private def unionFindComponents(cached: DataFrame, ord: Ordering[Any]): DataFrame = {
+    val idType = cached.schema.head.dataType
+    val localEdges = cached.collect().map(r => (r.get(0), r.get(1)))
     cached.unpersist()
-    var labels = edges.select(col("a").as("node"))
-      .distinct()
-      .withColumn("component", col("node"))
-      .cache()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val neighborMin = edges
-        .join(labels, edges("b") === labels("node"))
-        .groupBy(col("a")).agg(min(col("component")).as("nbr_min"))
-      // EAGER localCheckpoint, not cache: caching does not truncate the
-      // logical plan, so each round's frame nests every previous round's —
-      // analysis + per-job plan rendering grow with the round count until
-      // they dominate wall-clock (measured on a 6.8M-edge graph: the
-      // driver spent its time in generateTreeString, ~2 cores busy).
-      // Checkpointing pins the round's ROWS and restarts the lineage flat.
-      val next = labels
-        .join(neighborMin, labels("node") === neighborMin("a"), "left_outer")
-        .select(col("node"),
-          least(col("component"), coalesce(col("nbr_min"), col("component")))
-            .as("component"))
-        .localCheckpoint()
-      val changed = next.as("n").join(labels.as("o"), "node")
-        .filter(col("n.component") =!= col("o.component")).count()
-      labels.unpersist()
-      labels = next
-      converged = changed == 0
-      round += 1
+    val parent = scala.collection.mutable.Map.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
     }
-    edges.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connected components did not converge in $maxRounds rounds " +
-          "(graph diameter too large) — raise maxRounds; refusing to return " +
-          "partially-propagated labels")
-    // hand the caller a checkpointed copy (one row per dup-graph node) and
-    // release the loop's cache — cached relations outlive the call otherwise
-    released(labels, labels)
+    localEdges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb) // min label wins
+    }
+    val nodes = localEdges.flatMap(e => Seq(e._1, e._2)).distinct
+    val rows: java.util.List[org.apache.spark.sql.Row] =
+      nodes.map(n => org.apache.spark.sql.Row(n, find(n))).toSeq.asJava
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("node", idType),
+      org.apache.spark.sql.types.StructField("component", idType)))
+    cached.sparkSession.createDataFrame(rows, schema)
   }
 
   /** Connected components via alternating large-star/small-star rounds
-    * (the MapReduce CC algorithm with O(log²·n) round convergence) — the
-    * variant for ADVERSARIAL graph shapes: a path graph of 10⁵ nodes needs
-    * 10⁵ min-label-propagation rounds but only ~log² star rounds. Dup
-    * graphs are near-cliques where plain propagation wins on constant
-    * factors, so this is the fallback for deep graphs, not the default.
+    * (the MapReduce CC algorithm with O(log²·n) round convergence): a path
+    * graph of 10⁵ nodes, which min-label propagation would need 10⁵ rounds
+    * for, contracts in ~log² rounds.
     *
     * Each round is two rounds of (groupBy-min + join) over the edge set —
     * all shuffles on node id, no driver-side graph. Output: (node,
     * component) with component = min member id, matching
-    * `connectedComponents`.
+    * `connectedComponents`' union-find branch.
     */
   def connectedComponentsStars(pairs: DataFrame, maxRounds: Int = 40): DataFrame = {
-    val spark = pairs.sparkSession
-    // canonical undirected edges, self-loops dropped
-    var edges = pairs
+    // canonical undirected edges
+    val canon = pairs
       .select(least(col("ia"), col("ib")).as("u"), greatest(col("ia"), col("ib")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .cache()
-    // remember every node up front: star rounds contract edges away, and
-    // isolated-after-contraction nodes must still get a label row
-    val allNodes = edges.select(col("u").as("node"))
-      .union(edges.select(col("v").as("node"))).distinct().cache()
+    // remember every node up front, a self-loop's included: star rounds
+    // contract edges away, and a node left without an edge must still get a
+    // label row
+    val allNodes = canon.select(col("u").as("node"))
+      .union(canon.select(col("v").as("node"))).distinct().cache()
     allNodes.count()
+    var edges = canon.filter(col("u") =!= col("v")).distinct().cache()
 
     // large-star: every neighbor LARGER than u links to min(Γ(u) ∪ {u})
     def largeStar(e: DataFrame): DataFrame = {

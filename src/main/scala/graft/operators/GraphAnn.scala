@@ -565,15 +565,15 @@ object GraphAnn {
   /** ZERO-SPARK-JOB point serving over a routed layout: beams run on the
     * DRIVER against cached cell graphs, so a warm single-query request
     * launches no job at all — the ~100–300 ms Spark job-scheduling floor
-    * the latency harness measures on the pruned path disappears, leaving
+    * the latency harness measures on `searchFromLayout` disappears, leaving
     * in-memory beam cost (µs–ms). Cold cells load once per (layout,
     * version), decoded on the driver from the probed cells' partition dirs
     * (`LayoutFiles`; no job either) — only a cell too large for the byte
     * budget is served by a bounded distributed job. This is the
     * architecture serving deployments actually run: Spark
     * builds/maintains the layout, a thin reader serves points from it.
-    * Results are IDENTICAL to `searchRoutedPruned` at equal knobs (same
-    * reconstruction, same beams, same (distance, id) merge order);
+    * Results are IDENTICAL to `searchFromLayout(routeNprobe)` at equal knobs
+    * (same reconstruction, same beams, same (distance, id) merge order);
     * `deltaRows` (streaming inserts since buildIndex, read by the caller —
     * `localDeltaRows`) are exact-scanned with the codegen kernels' exact
     * arithmetic and merged, mirroring the distributed delta union.
@@ -652,7 +652,7 @@ object GraphAnn {
     val qRows = queries.toArray
     require(qRows.length <= maxQueries,
       s"searchPointLocal is the driver-serve path (${qRows.length} queries > " +
-        s"$maxQueries); use searchRoutedPruned/searchFromLayout for batches")
+        s"$maxQueries); use searchFromLayout for batches")
     // `eligible` (a driver-resident id set — the caller caches it per layout
     // stamp) mirrors searchFromLayout's eligibleIds semantics EXACTLY so the
     // two paths stay bit-interchangeable: FULL fan-out (routing prunes cells
@@ -1153,8 +1153,8 @@ object GraphAnn {
       }
     }
     val idType = corpus.schema(corpusId).dataType
-    // dir-partitioned by cell: point-serve reads prune to the probed cells'
-    // directories (scan bytes ∝ routeNprobe/nlist — searchRoutedPruned)
+    // dir-partitioned by cell: point-serve reads decode only the probed
+    // cells' directories (`LayoutFiles`; bytes ∝ routeNprobe/nlist)
     spark.createDataFrame(rows, StructType(Seq(
         StructField("part", IntegerType, nullable = false),
         StructField("ord", IntegerType, nullable = false),
@@ -1453,8 +1453,9 @@ object GraphAnn {
     val effNprobe = routeModel.map(m => math.min(routeNprobe.get, m.nlist))
     // the executor cache key must name the CELL STRUCTURE, not the observed
     // data partition count: a routed layout with empty trailing cells has
-    // maxPart+1 < nlist, and the point-serve path keys with nlist — one key
-    // convention or cells cached by one path miss for the other
+    // maxPart+1 < nlist, and the point-serve path's oversized-cell job keys
+    // with nlist — one key convention or cells cached by one path miss for
+    // the other
     val cacheParts = routeModel.map(_.nlist).getOrElse(numParts)
 
     def batchRdd(qRows: Array[(Any, Array[Float])],
@@ -1553,89 +1554,6 @@ object GraphAnn {
     val index = new NswIndex(sorted.head._3.length, 16, 200, space) // never inserts
     sorted.foreach { case (_, id, v, links) => index.loadRaw(id, v, links) }
     index
-  }
-
-  /** Cold point-serve over a dir-partitioned ROUTED layout: reads ONLY the
-    * probed cells' directories (partition pruning — `part IN (...)` lands
-    * in the scan's PartitionFilters, so scan bytes are ∝ routeNprobe/nlist
-    * of the layout, the property that matters when the layout is 100 TB
-    * and the caller has ONE query). The batch path (`searchFromLayout`)
-    * instead pays one full co-located shuffle and amortizes it across
-    * every query batch via the driver/executor caches; this path skips
-    * that machinery entirely, so it stays cheap when the caller would
-    * never amortize it. Results are identical to the batch path at the
-    * same routeNprobe (same cells, same reconstruction, same beams).
-    */
-  def searchRoutedPruned(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      queries: DataFrame,
-      k: Int,
-      space: SpaceType,
-      ef: Int = 40,
-      routeNprobe: Int = 4,
-      queryId: String = "query_id",
-      queryVec: String = "query_vec",
-      cacheKey: Option[(String, Long)] = None,
-      corpusIdName: String = "id",
-      maxQueries: Int = 1000,
-      probeCounter: Option[org.apache.spark.util.LongAccumulator] = None,
-      excludeIds: Set[Any] = Set.empty): DataFrame = {
-    import graft.functions.vfn
-    require(routeNprobe >= 1, s"routeNprobe must be >= 1, got $routeNprobe")
-    val cents = loadRouteCentroids(path, cacheKey)
-    // clamp like the batch path: nprobe beyond the trained cell count is
-    // full fan-out, not an error (trained count < configured nlist happens
-    // whenever k-means saw fewer points than k)
-    val effNprobe = math.min(routeNprobe, cents.length)
-    val mdl = IvfIndex.Model(cents, space)
-    val qRows = queries.select(col(queryId), col(queryVec)).collect()
-      .map(r => (r.get(0), r.getAs[scala.collection.Seq[Float]](1).toArray))
-    require(qRows.length <= maxQueries,
-      s"searchRoutedPruned is the point-serve path (${qRows.length} queries > " +
-        s"$maxQueries); use searchFromLayout(routeNprobe) for batches")
-    val routing = routingFor(qRows, mdl, effNprobe)
-    val cells = routing.indices.filter(routing(_).nonEmpty).map(Int.box)
-    val qidType = queries.schema(queryId).dataType
-    val graph = readLayoutGraph(spark, path)
-      .filter(col("part").isin(cells: _*)) // partition pruning: probed dirs only
-    val idType = graph.schema("id").dataType
-    val schema = StructType(Seq(
-      StructField(queryId, qidType),
-      StructField(corpusIdName, idType),
-      StructField("distance", DoubleType)))
-    val spaceVal = space; val efVal = ef; val kVal = k
-    val nCells = cents.length
-    val bcQ = spark.sparkContext.broadcast(qRows)
-    val bcRoute = spark.sparkContext.broadcast(routing)
-    val counter = probeCounter
-    val eff = cacheKey
-    val exVal = excludeIds
-    val local = graph.repartition(math.max(1, cells.length), col("part")).rdd
-      .mapPartitions { it =>
-        val groups = it.toArray.groupBy(_.getInt(0))
-        groups.iterator.flatMap { case (cell, rs) =>
-          val qIdx = bcRoute.value(cell)
-          if (qIdx.isEmpty) Iterator.empty
-          else {
-            counter.foreach(_.add(qIdx.length))
-            def rebuild: NswIndex = reconstructCell(rs, spaceVal)
-            val index = eff match {
-              case Some((layoutId, version)) =>
-                GraphCache.getOrBuild(layoutId, version, nCells, cell, rs.length)(rebuild)
-              case None => rebuild
-            }
-            qIdx.iterator.flatMap { qi =>
-              val (qid, qv) = bcQ.value(qi)
-              index.search(qv, kVal, efVal)
-                .filter(h => !exVal.contains(h._1))
-                .map { case (id, d) => Row(qid, id, d) }
-            }
-          }
-        }
-      }
-    vfn.topKHits(spark.createDataFrame(local, schema),
-      col("distance"), queryId, corpusIdName, k)
   }
 
   /** Approximate batch KNN: per-partition NSW graphs, queries broadcast,

@@ -118,26 +118,6 @@ object IvfIndex {
     assign(corpus, vecCol, model)
       .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
 
-  /** BUCKETED inverted-list layout (`bucketBy(cluster_id)` + saveAsTable):
-    * the co-location strategy for repeated huge KNN joins — the equi-join in
-    * `searchDistributed` then reads the corpus pre-hashed on cluster_id and
-    * ONLY the probe frame shuffles (at 100 TB, re-shuffling the corpus per
-    * query batch is the dominant cost; the bucketed layout pays it once at
-    * build). `searchDistributed(spark.table(table), …)` uses it directly;
-    * the directory-partitioned `write` remains the right layout for
-    * partition-pruned single-query serving.
-    */
-  def writeBucketed(corpus: DataFrame, vecCol: String, model: Model,
-      table: String, buckets: Int = 64, path: Option[String] = None): Unit = {
-    // an explicit path makes the table EXTERNAL: the bucketed files live
-    // with their collection and survive the session catalog — a fresh
-    // session re-registers the same files (Engine.bucketedCorpus)
-    val w = assign(corpus, vecCol, model).write.mode("overwrite")
-    path.fold(w)(p => w.option("path", p))
-      .bucketBy(buckets, "cluster_id").sortBy("cluster_id")
-      .saveAsTable(table)
-  }
-
   /** nprobe-pruned batch KNN over an assigned (or partitioned-loaded) corpus.
     * Queries (small) are collected driver-side to compute probe lists; the
     * candidate restriction is an equi-join on cluster_id, so only probed

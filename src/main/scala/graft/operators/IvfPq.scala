@@ -33,6 +33,12 @@ object IvfPq {
     */
   val DefaultRerankFactor = 8
 
+  /** The re-rank shortlist depth `k`·`factor`, saturated at Int.MaxValue:
+    * a product that overflows would turn negative, not deep.
+    */
+  def shortlistDepth(k: Int, factor: Int): Int =
+    math.min(k.toLong * factor, Int.MaxValue.toLong).toInt
+
   case class Model(
       coarse: IvfIndex.Model,
       codebooks: Array[Array[Array[Float]]], // [m][k][subDim]
@@ -214,7 +220,7 @@ object IvfPq {
     val allProbed = probePairs.map(_._2).distinct
     val w = Window.partitionBy(col("__qid")).orderBy(col("distance").asc, col(corpusId).asc)
     // ADC shortlist (kTop, or rerankFactor×kTop when re-ranking)
-    val shortlistK = rerankVecCol.fold(kTop)(_ => kTop * rerankFactor)
+    val shortlistK = rerankVecCol.fold(kTop)(_ => shortlistDepth(kTop, rerankFactor))
     val shortlist = encoded
       .filter(col("cluster_id").isin(allProbed: _*)) // partition pruning
       .join(broadcast(probeDf), col("cluster_id") === col("__cid"))
@@ -295,7 +301,7 @@ object IvfPq {
         Bridge.expression(col("__qv")), Bridge.expression(col("__cid")),
         centsLit, cbLit, model.adcMode)))
       .select(col(queryId), col("__cid"), col("__tab"))
-    val shortlistK = rerankVecCol.fold(kTop)(_ => kTop * rerankFactor)
+    val shortlistK = rerankVecCol.fold(kTop)(_ => shortlistDepth(kTop, rerankFactor))
     // equi-join on the cluster id (corpus stays partitioned by cluster_id,
     // probe rows shuffle to their target lists), ADC-score, bounded-heap
     // topK. The CORPUS is never the broadcast build side (a compacted

@@ -62,9 +62,6 @@ object Layout {
   private[operators] def span(min: Long, max: Long): BigInt =
     BigInt(max) - BigInt(min)
 
-  private[operators] def normDivisor(min: Long, max: Long): Long =
-    normDivisorB(min, max, BitsPerDim)
-
   /** Divisor mapping [min, max] into [0, 2^bits−1] — same construction for
     * any per-dimension resolution.
     */
@@ -96,25 +93,12 @@ object Layout {
       idiv(shiftright(v, 1) - lit(min >> 1), normDivisorB(min, max, bits))
     else idiv(v - lit(min), normDivisorB(min, max, bits))
 
-  private def normSql(v: String, min: Long, max: Long,
-      bits: Int = BitsPerDim): String =
-    if (span(min, max) > Long.MaxValue)
-      s"((($v >> 1) - (${min >> 1})) // ${normDivisorB(min, max, bits)})"
-    else s"(($v - ($min)) // ${normDivisorB(min, max, bits)})"
-
   /** The 2-D Morton key of (c1, c2) over the given inclusive domains:
     * interleaved bits, c1 on even positions. Inputs must be integral.
     */
   def zkey2(c1: Column, d1: (Long, Long), c2: Column, d2: (Long, Long)): Column =
     spread16(normCol(c1, d1._1, d1._2))
       .bitwiseOR(shiftleft(spread16(normCol(c2, d2._1, d2._2)), 1))
-
-  /** The same key as DuckDB SQL (`//` = floor division; operands are
-    * non-negative after the min subtraction, so floor ≡ integral).
-    */
-  def zkey2Sql(c1: String, d1: (Long, Long), c2: String, d2: (Long, Long)): String =
-    s"(${spread16Sql(normSql(c1, d1._1, d1._2))} | " +
-      s"(${spread16Sql(normSql(c2, d2._1, d2._2))} << 1))"
 
   /** SQL variant with the domain endpoints as SQL EXPRESSIONS (e.g. columns
     * of a min/max CTE) instead of precomputed constants — the oracle's
@@ -229,36 +213,5 @@ object Layout {
         s"z-order column '$c' has no non-NULL values")
       (r.getLong(mi), r.getLong(ma))
     }
-  }
-
-  /** Persist `df` as a bucketed (+ per-file sorted) managed table — the
-    * co-located-join layout: two tables bucketed on their join key with the
-    * same bucket count join with NO shuffle on either side (Spark maps
-    * bucket i ⋈ bucket i directly), and with `sortCols` = join key the
-    * sort-merge join's sort is satisfied by the file order too. This is the
-    * "pre-shuffle once at write time, join forever for free" trade every
-    * 100 TB star-schema pipeline makes for its fact↔fact joins.
-    *
-    * The repartition BEFORE the write aligns write tasks with buckets
-    * (`repartition(n, key)` and bucketing share Murmur3 hashing), so each
-    * bucket is exactly ONE file — without it, every write task can emit a
-    * file into every bucket (tasks × buckets small files), and multi-file
-    * buckets forfeit the sort elision.
-    *
-    * Read side: the shuffle elision is automatic; to ALSO elide the
-    * sort-merge join's sorts, set
-    * `spark.sql.legacy.bucketedTableScan.outputOrdering=true` (off by
-    * default since Spark 3.0 because multi-file buckets make the check
-    * costly — this writer's one-file-per-bucket layout is the case it
-    * exists for).
-    */
-  def writeBucketed(df: DataFrame, table: String, keyCol: String,
-      buckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val w = df.repartition(buckets, col(keyCol))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, keyCol)
-    val ws = if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
-    ws.saveAsTable(table)
   }
 }

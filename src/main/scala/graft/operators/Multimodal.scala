@@ -665,13 +665,6 @@ object Multimodal {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** Typed metadata for an opaque payload column: byte length + digest
-    * (pure built-in expressions — stays in whole-stage codegen).
-    */
-  def withMetadata(df: DataFrame, binCol: String): DataFrame =
-    df.withColumn("n_bytes", octet_length(col(binCol)).cast("long"))
-      .withColumn("digest", md5(col(binCol)))
-
   /** Partition-batched decode+featurize: adds `features ARRAY<FLOAT>(dim)`.
     * mapPartitions (not a per-row UDF) so a real codec initializes once per
     * task; rows stream through in arrival order — no shuffle.

@@ -302,7 +302,7 @@ object Opq {
       queryId: String = "query_id", queryVec: String = "query_vec",
       rerank: Boolean = true, rerankFactor: Int = IvfPq.DefaultRerankFactor): DataFrame = {
     val rq = rotate(queries, queryVec, model.rotation, "__rq")
-    val shortlistK = if (rerank) kTop * rerankFactor else kTop
+    val shortlistK = if (rerank) IvfPq.shortlistDepth(kTop, rerankFactor) else kTop
     val shortlist = IvfPq.search(encoded, rq, model.pq, shortlistK, nprobe,
       corpusId, queryId, "__rq", None)
     if (!rerank) shortlist
@@ -319,7 +319,7 @@ object Opq {
       queryVec: String = "query_vec", rerank: Boolean = true,
       rerankFactor: Int = IvfPq.DefaultRerankFactor): DataFrame = {
     val rq = rotate(queries, queryVec, model.rotation, "__rq")
-    val shortlistK = if (rerank) kTop * rerankFactor else kTop
+    val shortlistK = if (rerank) IvfPq.shortlistDepth(kTop, rerankFactor) else kTop
     val shortlist = IvfPq.searchDistributed(encoded, rq, model.pq, shortlistK,
       nprobe, corpusId, queryId, "__rq", None)
     if (!rerank) shortlist

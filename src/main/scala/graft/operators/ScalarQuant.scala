@@ -90,7 +90,7 @@ object ScalarQuant {
     val minsLit = Literal.create(model.mins.toSeq, ArrayType(FloatType))
     val invsLit = Literal.create(model.invScales.toSeq, ArrayType(FloatType))
     val q = queries.select(col(queryId), col(queryVec).cast("array<float>").as("__qv"))
-    val shortlistK = rerankVecCol.fold(kTop)(_ => kTop * rerankFactor)
+    val shortlistK = rerankVecCol.fold(kTop)(_ => IvfPq.shortlistDepth(kTop, rerankFactor))
     val shortlist = vfn.topKHits(
       encoded
         .crossJoin(broadcast(q))

@@ -12,18 +12,24 @@ import org.apache.spark.unsafe.types.UTF8String
 /** One-pass bounded top-k accumulator: keeps the k smallest (distance, id)
   * pairs, ties broken by id ascending.
   *
-  * Max-heap of size k: push when better than the current worst, else drop —
-  * O(log k) per row, O(k) memory, and crucially a *partial-aggregatable*
-  * shape: each map task ships at most k entries per group to the exchange
-  * instead of its whole candidate set (SURVEY A1's "custom Aggregator"
-  * alternative to the WindowGroupLimit plan; the reference sorts the whole
-  * candidate array and truncates, `flat.go:125-135`).
+  * Max-heap of at most k: push when better than the current worst, else
+  * drop — O(log k) per row, O(min(k, rows seen)) memory, and crucially a
+  * *partial-aggregatable* shape: each map task ships at most k entries per
+  * group to the exchange instead of its whole candidate set (SURVEY A1's
+  * "custom Aggregator" alternative to the WindowGroupLimit plan; the
+  * reference sorts the whole candidate array and truncates,
+  * `flat.go:125-135`).
   */
 final class TopKBuffer(val k: Int) {
-  // parallel arrays as a binary max-heap ordered by (distance desc, id desc)
-  val dists = new Array[Double](k)
-  val ids = new Array[Any](k)
+  // parallel arrays as a binary max-heap ordered by (distance desc, id desc).
+  // They start at min(k, 16) slots and double up to k: a group never holds
+  // more entries than it has seen, so a large k reserves nothing up front.
+  private var ds = new Array[Double](math.min(k, 16))
+  private var is = new Array[Any](ds.length)
   var size = 0
+
+  def dists: Array[Double] = ds
+  def ids: Array[Any] = is
 
   @inline private def worse(d1: Double, id1: Any, d2: Double, id2: Any,
       ord: Ordering[Any]): Boolean =
@@ -31,20 +37,28 @@ final class TopKBuffer(val k: Int) {
 
   def insert(d: Double, id: Any, ord: Ordering[Any]): Unit = {
     if (size < k) {
-      dists(size) = d; ids(size) = id; size += 1
+      if (size == ds.length) grow()
+      ds(size) = d; is(size) = id; size += 1
       var i = size - 1 // sift up
-      while (i > 0 && worse(dists(i), ids(i), dists((i - 1) / 2), ids((i - 1) / 2), ord)) {
+      while (i > 0 && worse(ds(i), is(i), ds((i - 1) / 2), is((i - 1) / 2), ord)) {
         swap(i, (i - 1) / 2); i = (i - 1) / 2
       }
-    } else if (worse(dists(0), ids(0), d, id, ord)) {
-      dists(0) = d; ids(0) = id
+    } else if (worse(ds(0), is(0), d, id, ord)) {
+      ds(0) = d; is(0) = id
       siftDown(0, ord)
     }
   }
 
+  private def grow(): Unit = {
+    val n = math.min(k.toLong, 2L * ds.length).toInt
+    val nd = new Array[Double](n); System.arraycopy(ds, 0, nd, 0, size)
+    val ni = new Array[Any](n); System.arraycopy(is, 0, ni, 0, size)
+    ds = nd; is = ni
+  }
+
   private def swap(a: Int, b: Int): Unit = {
-    val td = dists(a); dists(a) = dists(b); dists(b) = td
-    val ti = ids(a); ids(a) = ids(b); ids(b) = ti
+    val td = ds(a); ds(a) = ds(b); ds(b) = td
+    val ti = is(a); is(a) = is(b); is(b) = ti
   }
 
   private def siftDown(start: Int, ord: Ordering[Any]): Unit = {
@@ -53,15 +67,15 @@ final class TopKBuffer(val k: Int) {
     while (!done) {
       val l = 2 * i + 1; val r = 2 * i + 2
       var m = i
-      if (l < size && worse(dists(l), ids(l), dists(m), ids(m), ord)) m = l
-      if (r < size && worse(dists(r), ids(r), dists(m), ids(m), ord)) m = r
+      if (l < size && worse(ds(l), is(l), ds(m), is(m), ord)) m = l
+      if (r < size && worse(ds(r), is(r), ds(m), is(m), ord)) m = r
       if (m == i) done = true else { swap(i, m); i = m }
     }
   }
 
   /** Entries sorted ascending by (distance, id). */
   def sorted(ord: Ordering[Any]): Array[(Double, Any)] =
-    (0 until size).map(i => (dists(i), ids(i))).toArray
+    (0 until size).map(i => (ds(i), is(i))).toArray
       .sortWith((a, b) =>
         a._1 < b._1 || (a._1 == b._1 && ord.compare(a._2, b._2) < 0))
 }

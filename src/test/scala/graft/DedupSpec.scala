@@ -185,6 +185,26 @@ class DedupSpec extends SparkSpec {
       "every path node must resolve to component 0")
   }
 
+  test("connected components: a 30-node path with decimal(20,0) ids resolves to the min id") {
+    // decimal ids skip the driver union-find, so the distributed branch runs
+    // (min-label propagation would need 29 rounds here, one per hop);
+    // the ids sit past Long.MaxValue, where a decimal id is the honest type
+    val base = new java.math.BigDecimal("10000000000000000000")
+    val path = spark.range(29).select(
+      (lit(base) + col("id")).cast("decimal(20,0)").as("ia"),
+      (lit(base) + col("id") + 1).cast("decimal(20,0)").as("ib"))
+    val got = Dedup.connectedComponents(path)
+    assert(got.schema("component").dataType ===
+      org.apache.spark.sql.types.DecimalType(20, 0))
+    val labels = got.as[(java.math.BigDecimal, java.math.BigDecimal)].collect()
+      .map { case (n, c) => (n.toBigInteger, c.toBigInteger) }
+    val min = base.toBigInteger
+    assert(labels.map(_._1).toSet ===
+      (0 to 29).map(i => min.add(java.math.BigInteger.valueOf(i))).toSet)
+    assert(labels.length === 30 && labels.forall(_._2 == min),
+      s"every path node must resolve to the min id: ${labels.toSeq}")
+  }
+
   test("stars CC ≡ hybrid CC on random graphs (same labels)") {
     val rnd = new scala.util.Random(5)
     val edges = (0 until 2000)

@@ -179,22 +179,12 @@ class EngineSpec extends SparkSpec {
     val warm = e.searchDocuments("fp", q, 5, filter = Some(pred))
     assert(warm.map(_.id) === expected)
     // warm repeat: the eligible set and the cells are driver-cached — the
-    // whole request must run without launching a single Spark job
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val hits = e.searchDocuments("fp", q, 5, filter = Some(pred))
-      assert(hits.map(_.id) === expected)
-      // listener events post async — give the bus a beat before reading
-      Thread.sleep(500)
-      assert(jobs.get() === 0,
-        s"warm filtered point request launched ${jobs.get()} Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // whole request must run without launching a single Spark job.
+    // jobsDuring drains the listener bus first, so a job of the first
+    // request that is still queued there is not counted against this one
+    val (hits, jobs) = jobsDuring(e.searchDocuments("fp", q, 5, filter = Some(pred)))
+    assert(hits.map(_.id) === expected)
+    assert(jobs === 0, s"warm filtered point request launched $jobs Spark job(s)")
   }
 
   test("multivector collection e2e: upsert / maxsim search / shrink-update / delete") {

@@ -324,21 +324,21 @@ class GraphAnnSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(prunedPlan.contains("PartitionFilters") && prunedPlan.contains("part"),
       s"probed-cells read did not plan a partition prune:\n$prunedPlan")
-    val probes = spark.sparkContext.longAccumulator("pointProbes")
-    val point = GraphAnn.searchRoutedPruned(spark, path, queries, 10, SpaceType.L2,
+    val probes = spark.sparkContext.longAccumulator("batchProbes")
+    val point = GraphAnn.searchPointLocal(spark, path, queries, 10, SpaceType.L2,
         ef = 80, routeNprobe = 3, queryId = "qid", queryVec = "qv",
-        corpusIdName = "vec_id", probeCounter = Some(probes))
+        corpusIdName = "vec_id")
       .select("qid", "vec_id", "rnk").as[(Long, Long, Long)].collect().toSet
     val batch = GraphAnn.searchFromLayout(spark, path, queries, 10, SpaceType.L2,
         ef = 80, queryId = "qid", queryVec = "qv", corpusIdName = "vec_id",
-        routeNprobe = Some(3))
+        routeNprobe = Some(3), probeCounter = Some(probes))
       .select("qid", "vec_id", "rnk").as[(Long, Long, Long)].collect().toSet
     assert(point === batch,
       "point-serve diverged from the batch routed path over the same layout")
     assert(probes.value <= queries.count() * 3)
     // the guard that keeps this the POINT path
     intercept[IllegalArgumentException](
-      GraphAnn.searchRoutedPruned(spark, path, queries, 10, SpaceType.L2,
+      GraphAnn.searchPointLocal(spark, path, queries, 10, SpaceType.L2,
         queryId = "qid", queryVec = "qv", maxQueries = 5))
   }
 
@@ -493,7 +493,7 @@ class GraphAnnSpec extends SparkSpec {
         routeNprobe = Some(2)))
     assert(ex.getMessage.contains("buildRoutedLayout"), ex.getMessage)
     val ex2 = intercept[IllegalArgumentException](
-      GraphAnn.searchRoutedPruned(spark, path, queries, 10, SpaceType.L2,
+      GraphAnn.searchPointLocal(spark, path, queries, 10, SpaceType.L2,
         routeNprobe = 2, queryId = "qid", queryVec = "qv", corpusIdName = "vec_id"))
     assert(ex2.getMessage.contains("buildRoutedLayout"), ex2.getMessage)
   }
@@ -519,9 +519,18 @@ class GraphAnnSpec extends SparkSpec {
       SpaceType.L2, ef = 80, queryId = "qid", queryVec = "qv",
       corpusIdName = "vec_id", routeNprobe = Some(2), cacheKey = key))
     val builds = GraphAnn.GraphCache.builds.get()
-    val point = collectSet(GraphAnn.searchRoutedPruned(spark, path, queries, 10,
-      SpaceType.L2, ef = 80, routeNprobe = 2, queryId = "qid", queryVec = "qv",
-      corpusIdName = "vec_id", cacheKey = key))
+    // a 1-byte budget makes every probed cell oversized, so the point path
+    // searches them in its executor job, through the shared GraphCache
+    val oldBudget = GraphAnn.maxLocalServeBytes
+    val over0 = GraphAnn.localCellOversized.get()
+    val point = try {
+      GraphAnn.maxLocalServeBytes = 1L
+      collectSet(GraphAnn.searchPointLocal(spark, path, queries, 10,
+        SpaceType.L2, ef = 80, routeNprobe = 2, queryId = "qid", queryVec = "qv",
+        corpusIdName = "vec_id", cacheKey = key))
+    } finally GraphAnn.maxLocalServeBytes = oldBudget
+    assert(GraphAnn.localCellOversized.get() > over0,
+      "test setup: the probed cells were supposed to serve oversized")
     assert(point === batch)
     assert(GraphAnn.GraphCache.builds.get() === builds,
       "point-serve rebuilt cells the batch path had already cached")
@@ -535,14 +544,14 @@ class GraphAnnSpec extends SparkSpec {
     def collectSet(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "vec_id", "rnk").as[(Long, Long, Long)].collect().toSet
     val q3 = queries.limit(3)
-    val pruned = collectSet(GraphAnn.searchRoutedPruned(spark, path, q3, 10,
-      SpaceType.L2, ef = 80, routeNprobe = 3, queryId = "qid", queryVec = "qv",
-      corpusIdName = "vec_id", cacheKey = key))
+    val pruned = collectSet(GraphAnn.searchFromLayout(spark, path, q3, 10,
+      SpaceType.L2, ef = 80, queryId = "qid", queryVec = "qv",
+      corpusIdName = "vec_id", routeNprobe = Some(3), cacheKey = key))
     val local = collectSet(GraphAnn.searchPointLocal(spark, path, q3, 10,
       SpaceType.L2, ef = 80, routeNprobe = 3, queryId = "qid", queryVec = "qv",
       corpusIdName = "vec_id", cacheKey = key))
     assert(local === pruned,
-      "driver-local serving diverged from the distributed pruned path")
+      "driver-local serving diverged from the distributed routed path")
     // warm repeat: every probed cell cached driver-side — no further loads
     val loads = GraphAnn.localCellLoads.get()
     val again = collectSet(GraphAnn.searchPointLocal(spark, path, q3, 10,
@@ -632,9 +641,9 @@ class GraphAnnSpec extends SparkSpec {
     def serveLocal() = collectSet(GraphAnn.searchPointLocal(spark, path, q3, 10,
       SpaceType.L2, ef = 80, routeNprobe = 8, queryId = "qid", queryVec = "qv",
       corpusIdName = "vec_id", cacheKey = key))
-    val truth = collectSet(GraphAnn.searchRoutedPruned(spark, path, q3, 10,
-      SpaceType.L2, ef = 80, routeNprobe = 8, queryId = "qid", queryVec = "qv",
-      corpusIdName = "vec_id", cacheKey = key))
+    val truth = collectSet(GraphAnn.searchFromLayout(spark, path, q3, 10,
+      SpaceType.L2, ef = 80, queryId = "qid", queryVec = "qv",
+      corpusIdName = "vec_id", routeNprobe = Some(8), cacheKey = key))
     val oldBudget = GraphAnn.maxLocalServeBytes
     val evict0 = GraphAnn.localCellEvictions.get()
     // a budget just above the largest single cell's oversize threshold (so
@@ -690,9 +699,9 @@ class GraphAnnSpec extends SparkSpec {
     def collectSet(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "vec_id", "rnk").as[(Long, Long, Long)].collect().toSet
     val q3 = queries.limit(3)
-    val truth = collectSet(GraphAnn.searchRoutedPruned(spark, path, q3, 10,
-      SpaceType.L2, ef = 80, routeNprobe = 3, queryId = "qid", queryVec = "qv",
-      corpusIdName = "vec_id", cacheKey = key))
+    val truth = collectSet(GraphAnn.searchFromLayout(spark, path, q3, 10,
+      SpaceType.L2, ef = 80, queryId = "qid", queryVec = "qv",
+      corpusIdName = "vec_id", routeNprobe = Some(3), cacheKey = key))
     val oldBudget = GraphAnn.maxLocalServeBytes
     try {
       // budget below the giant cell's oversize threshold: the local path
@@ -704,7 +713,7 @@ class GraphAnnSpec extends SparkSpec {
         SpaceType.L2, ef = 80, routeNprobe = 3, queryId = "qid", queryVec = "qv",
         corpusIdName = "vec_id", cacheKey = key))
       assert(local === truth,
-        "oversized-cell distributed fallback diverged from the pruned path")
+        "oversized-cell distributed fallback diverged from the routed batch path")
       assert(GraphAnn.localCellOversized.get() > over0,
         "the giant cell was not routed through the oversized path")
       assert(GraphAnn.localServeMetrics("local_serve_bytes") <= GraphAnn.maxLocalServeBytes,

@@ -24,7 +24,7 @@ class HadoopControlPlaneSpec extends SparkSpec {
   test("manifest counters: init / strict read / commit / GC / same-value collision is loud") {
     val root = graftRoot("cfs-counter")
     val cfs = ControlFs.forRoot(root)
-    assert(!cfs.isLocal)
+    assert(cfs.isInstanceOf[HadoopControlFs])
     val c = s"$root/x/_version"
     assert(cfs.counterRead(c) === None) // never initialized
     cfs.counterInit(c)

@@ -132,36 +132,6 @@ class IvfSpec extends SparkSpec {
     assigned.unpersist()
   }
 
-  /** The bucketed layout makes the distributed KNN-join corpus-shuffle-free:
-    * the equi-join on cluster_id reads the corpus pre-hashed, only the probe
-    * frame exchanges — the plan shape a 100 TB corpus needs when query
-    * batches arrive repeatedly.
-    */
-  test("searchDistributed over a bucketed layout never shuffles the corpus side") {
-    spark.sql("DROP TABLE IF EXISTS ivf_bucketed")
-    val pts = (0 until 300).map(i => (i.toString, Seq.tabulate(8)(j =>
-      (if (j == i % 4 * 2) 5f else 0.2f) + (i % 7) * 0.01f)))
-    val corpus = pts.toDF("id", "vector")
-    val model = IvfIndex.train(corpus, "vector", nlist = 4)
-    IvfIndex.writeBucketed(corpus, "vector", model, "ivf_bucketed", buckets = 8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the shuffle-join regime
-    try {
-      val bigQ = spark.range(2000).select(col("id").cast("string").as("query_id"),
-        array((0 until 8).map(j => (rand(j) * 5).cast("float")): _*).as("query_vec"))
-      val res = IvfIndex.searchDistributed(spark.table("ivf_bucketed"), bigQ, model,
-        k = 3, nprobe = 2)
-      val corpusShuffled = res.queryExecution.executedPlan
-        .collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
-        .exists(_.treeString.contains("ivf_bucketed"))
-      assert(!corpusShuffled,
-        "bucketed corpus side must feed the KNN-join without an Exchange")
-      assert(res.groupBy("query_id").count().count() === 2000L)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS ivf_bucketed")
-    }
-  }
-
   /** nprobe is the recall knob: recall non-decreasing in nprobe on the real
     * (diffuse) embeddings, exact at nprobe = nlist.
     */

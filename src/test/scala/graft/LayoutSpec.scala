@@ -189,30 +189,4 @@ class LayoutSpec extends SparkSpec {
     assert(back.columns.toSeq === df.columns.toSeq)
     assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
   }
-
-  test("bucketed tables join with no shuffle and no sort on either side") {
-    val left = (0 until 4000).map(i => (i.toLong % 500, s"l$i")).toDF("k", "lv")
-    val right = (0 until 3000).map(i => (i.toLong % 500, s"r$i")).toDF("k", "rv")
-    Layout.writeBucketed(left, "bkt_left", "k", 8, Seq("k"))
-    Layout.writeBucketed(right, "bkt_right", "k", 8, Seq("k"))
-    // report file order from one-file-per-bucket sorted scans (off by
-    // default since 3.0 because multi-file buckets made it costly to check;
-    // writeBucketed guarantees one file per bucket)
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    try {
-      val joined = spark.table("bkt_left")
-        .hint("merge") // pin SMJ: a broadcast would trivially skip the shuffle
-        .join(spark.table("bkt_right"), "k")
-      assert(joined.count() === (0 until 4000).map(_ % 500).groupBy(identity)
-        .map { case (k, ls) => ls.size.toLong * (0 until 3000).count(_ % 500 == k) }.sum)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
-      assert(!plan.contains("Sort "), s"single-file sorted buckets should elide the sort:\n$plan")
-    } finally {
-      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
-      spark.sql("DROP TABLE IF EXISTS bkt_left")
-      spark.sql("DROP TABLE IF EXISTS bkt_right")
-    }
-  }
 }

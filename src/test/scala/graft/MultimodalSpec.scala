@@ -16,15 +16,6 @@ class MultimodalSpec extends SparkSpec {
     (3L, "fake-jpeg-payload-AAAA".getBytes))
     .toDF("media_id", "payload")
 
-  test("metadata: byte length + digest; identical payloads share digests") {
-    val out = Multimodal.withMetadata(media, "payload")
-      .select("media_id", "n_bytes", "digest")
-      .as[(Long, Long, String)].collect().sortBy(_._1)
-    assert(out.forall(_._2 === 22L))
-    assert(out(0)._3 === out(2)._3)
-    assert(out(0)._3 !== out(1)._3)
-  }
-
   test("decodeFeatures: fixed-dim deterministic features per payload") {
     val out = Multimodal.decodeFeatures(media, "payload", dim = 16)
     assert(out.schema("features").dataType.typeName === "array")

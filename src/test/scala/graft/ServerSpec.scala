@@ -428,7 +428,10 @@ class ServerSpec extends SparkSpec {
       """{"vector":[1,1],"limit":0}""" -> "k must be",
       """{"vector":[1,1],"limit":-1}""" -> "k must be",
       """{"vector":[1e39,1],"limit":3}""" -> "non-finite",
-      """{"vector":[1,-1e39],"limit":3}""" -> "non-finite")
+      """{"vector":[1,-1e39],"limit":3}""" -> "non-finite",
+      // neither truncated to k=2 nor clamped to Int.MaxValue
+      """{"vector":[1,1],"limit":2.5}""" -> "expected an integer",
+      """{"vector":[1,1],"limit":1e12}""" -> "expected an integer")
     for (route <- Seq("vectors/search", "documents/search"); (b, why) <- bodies) {
       val (code, v) = req("POST", s"/v1/collections/edge/$route", b)
       assert(code === 400 && v.asObj("error").asStr.contains(why), s"$route $b: $code $v")
@@ -436,6 +439,15 @@ class ServerSpec extends SparkSpec {
     assert(req("POST", "/v1/collections/edge/vectors/search",
       """{"vector":[1,1],"top_k":0}""")._1 === 400)
     assert(req("POST", "/v1/collections/edge/vectors/search", """{"vector":[1,1],"limit":1}""")._1 === 200)
+    // a valid but huge limit on an unrouted hnsw collection (every search
+    // declines to the Spark plan and its top-k aggregate) answers the n hits
+    // there are, without reserving k slots per group up front
+    req("POST", "/v1/collections", """{"name":"edgehnsw","dimension":2,"index_type":"hnsw"}""")
+    assert(req("POST", "/v1/collections/edgehnsw/buildindex", s"""{"documents":$docs}""")._1 === 200)
+    val (bigCode, big) = req("POST", "/v1/collections/edgehnsw/vectors/search",
+      """{"vector":[1,1],"limit":100000000}""")
+    assert(bigCode === 200, s"large limit: $bigCode $big")
+    assert(big.asObj("ids").asArr.size <= 12, s"more hits than documents: $big")
     // writes check the same components, on a collection whose layout the
     // write maintains (edge) and on one the store alone takes (flat); a
     // rejected write commits nothing, so the store version stays put

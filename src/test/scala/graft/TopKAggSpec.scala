@@ -39,6 +39,30 @@ class TopKAggSpec extends SparkSpec {
     assert(got.toSeq === Seq(("7", 0.0), ("6", 1.0), ("8", 1.0), ("5", 4.0), ("9", 4.0)))
   }
 
+  test("lazily grown buffers ≡ sort-and-take at k ∈ {1, 15, 16, 17, 1000}") {
+    import org.apache.spark.sql.graft.TopKBuffer
+    val rnd = new scala.util.Random(11)
+    // coarse distances force ties, so the id tie-break is exercised too
+    val rows = (0 until 1500).map(i => (rnd.nextInt(3), rnd.nextInt(200) / 4.0, i.toLong))
+    val ord = Ordering.Long.on[Any](_.asInstanceOf[Long])
+    val df = rows.toDF("g", "distance", "id").repartition(4)
+    for (k <- Seq(1, 15, 16, 17, 1000)) {
+      def want(g: Int) = rows.filter(_._1 == g).map(r => (r._2, r._3))
+        .sortBy(identity).take(k)
+      // the buffer alone: inserts past each doubling keep the heap exact
+      val buf = new TopKBuffer(k)
+      rows.filter(_._1 == 0).foreach(r => buf.insert(r._2, r._3, ord))
+      assert(buf.sorted(ord).toSeq.map(e => (e._1, e._2.asInstanceOf[Long])) === want(0),
+        s"k=$k: driver buffer")
+      // through the aggregate: partial buffers serialized, merged, evaluated
+      val got = graft.functions.vfn.topKHits(df, col("distance"), "g", "id", k)
+        .as[(Int, Long, Double, Long)].collect().groupBy(_._1)
+      for (g <- 0 until 3)
+        assert(got(g).sortBy(_._4).toSeq.map(r => (r._3, r._2)) === want(g),
+          s"k=$k group $g: aggregate")
+    }
+  }
+
   test("partial aggregation: plan shows partial_topk before the exchange") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
